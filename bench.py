@@ -98,7 +98,8 @@ def main() -> None:
     # single-shot build timed through one host-steal burst measures the
     # host, not the engine (a throttled window has recorded 905 docs/sec
     # where clean windows reproduce ~2850 on identical code).
-    build_trials = int(os.environ.get("SPARK_GRAFT_BENCH_BUILD_TRIALS", "3"))
+    # at least one trial: 0 would leave no timing to report
+    build_trials = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_BUILD_TRIALS", "3")))
     synth_out = f"/tmp/solr_spark_bench_synth_{n_synth}"
     corpus = synth_corpus(spark, n_synth).persist()
     n = corpus.count()  # materialize datagen outside the timed window
@@ -138,7 +139,7 @@ def main() -> None:
     # partly that). Each trial uses a FRESH SearchEngine so the memoized
     # term-stats path never hides the fresh-query cost; the index handle
     # (parquet listings) is shared, as it would be in a real server.
-    n_trials = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3"))
+    n_trials = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "3")))
 
     from solr_spark.plans import execute_query
     from solr_spark.query.phrase import phrase_topk

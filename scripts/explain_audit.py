@@ -49,13 +49,13 @@ def main() -> None:
     # 1. pruned posting-block scan for a query term
     terms = eng.analyze_query("spark merge")
     blocks = eng._blocks_for(terms)
-    p = plan_of(blocks.select("term", "doc_ids_enc"))
+    p = plan_of(blocks.select("term", "doc_offsets"))
     sections.append((
         "Posting-block scan (term lookup)", p,
         [
             ("partition pruning on term_bucket", "term_bucket" in p and "PartitionFilters" in p),
             ("term filter pushed to parquet", bool(re.search(r"PushedFilters:.*term", p))),
-            ("only needed columns read", "tfs_enc" not in re.search(r"ReadSchema: [^\n]*", p).group(0)),
+            ("only needed columns read", "tfs" not in re.search(r"ReadSchema: [^\n]*", p).group(0)),
         ],
     ))
 
@@ -100,8 +100,8 @@ def main() -> None:
         ],
     ))
 
-    # 7. vectorized phrase path: flat decode + doc-repartitioned verify,
-    #    no per-doc Python groups
+    # 7. vectorized phrase path: JVM flat decode (Generate) + one
+    #    doc-repartitioned Python verify, no per-doc Python groups
     from solr_spark.query.phrase import phrase_topk
 
     p = plan_of(phrase_topk(eng, "batch stream", k=10))
@@ -109,7 +109,8 @@ def main() -> None:
         "Phrase top-k (positional, vectorized)", p,
         [
             ("no per-doc applyInPandas groups", "FlatMapGroupsInPandas" not in p),
-            ("decode+verify are Arrow mapInPandas stages", p.count("MapInPandas") >= 2),
+            ("decode is a JVM Generate, verify the one mapInPandas",
+             "Generate" in p and len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) == 1),
             ("single doc_id repartition between them", "hashpartitioning(doc_id" in p),
         ],
     ))
@@ -171,7 +172,8 @@ def main() -> None:
           "LeftSemi" in p and ("BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p))],
     ))
 
-    # 12. payload_score: pruned scan → reduceat decode → one aggregation
+    # 12. payload_score: pruned scan → JVM decode with per-doc payload
+    #     lists reduced by array functions → one aggregation
     from solr_spark.query.payload import payload_score
 
     peng = entry._engine_payload(spark, SF)
@@ -179,8 +181,9 @@ def main() -> None:
     sections.append((
         "payload_score (per-occurrence payload aggregate)", p,
         [
-            ("payload decode is one Arrow mapInPandas stage", "MapInPandas" in p),
-            ("no per-occurrence rows (reduceat inside the kernel)", "Explode" not in p),
+            ("payload decode is a JVM Generate (no Python)",
+             "Generate" in p and "MapInPandas" not in p),
+            ("no per-occurrence rows (lists reduced by array functions)", "Explode" not in p),
             ("global top-k via TakeOrderedAndProject", "TakeOrderedAndProject" in p),
         ],
     ))
@@ -291,14 +294,22 @@ def main() -> None:
     ))
 
     # 20. queryResultCache hit: served as a driver-local relation —
-    #     no parquet scan, no exchange
+    #     no parquet scan, no exchange, and collecting it runs no job
     eng.search("spark merge", k=10).collect()  # populate
-    p = plan_of(eng.search("spark merge", k=10))  # hit
+    hit = eng.search("spark merge", k=10)
+    p = plan_of(hit)
+    sc = spark.sparkContext
+    sc.setJobGroup("audit_cache_hit", "cache-hit collect")
+    hit.collect()
+    sc.setJobGroup("idle", "idle")
+    hit_jobs = sc.statusTracker().getJobIdsForGroup("audit_cache_hit")
     sections.append((
         "queryResultCache hit (cached top-k window)", p,
         [
             ("no index scan on a cache hit", "parquet" not in p.lower()),
             ("no exchange on a cache hit", "Exchange" not in p),
+            ("local relation (LocalTableScan)", "LocalTableScan" in p),
+            ("collecting a cache hit runs no job", len(hit_jobs) == 0),
         ],
     ))
 

@@ -18,9 +18,12 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    The analog of Solr's distributed exact stats cache
    (``search/stats/ExactStatsCache.java:62,192``) — global by
    construction, so every partition scores with identical IDF.
-4. ``blocks``    — the merged, compressed index: fixed-size posting
-   blocks per (term, salt) with delta+varint docID gaps, varint tf/dl,
-   and stats-independent pruning metadata (per-block max_tf / min_dl —
+4. ``blocks``    — the merged index: fixed-size posting blocks per
+   (term, salt) stored as Parquet-native int arrays (doc ids as offsets
+   from the block's min_doc_id, tf, dl, and per-doc position/payload
+   lists), which Parquet's own encodings compress and the query side
+   decodes in the JVM with ``inline(arrays_zip(...))``, plus
+   stats-independent pruning metadata (per-block max_tf / min_dl —
    Block-Max WAND bounds derived at query time, so blocks survive
    global-stat drift between incremental commits). Hot terms
    (df > threshold) are salted into sub-streams so no single reducer
@@ -47,11 +50,13 @@ Scale notes (100 TB / 10^12 docs):
   assigned, so runs of a group cover disjoint doc ranges — the reducer
   sorts O(runs) rows by (term, salt, min_doc) and CONCATENATES instead
   of sorting O(postings) rows, then decodes all runs of a region in one
-  vectorized codec pass and re-blocks. Measured at 240k docs/local[4]:
-  shuffle bytes 1070 MB → 247 MB (4.3x), wall 15-25% faster locally;
-  on a real cluster the 4.3x is network traffic off the build's only
-  wide exchange. Byte-identical blocks to the row-level exchange
-  (tested, positions+payloads included).
+  vectorized codec pass and cuts them into array blocks. The varint
+  packing is an exchange format only; the written blocks are int
+  arrays. Measured at 240k docs/local[4]: shuffle bytes 1070 MB →
+  247 MB (4.3x), wall 15-25% faster locally; on a real cluster the 4.3x
+  is network traffic off the build's only wide exchange. Identical
+  blocks to the row-level exchange (tested, positions+payloads
+  included).
 - the term_dict↔segments join is keyed on term: Catalyst/AQE broadcasts
   it when small, else it folds into the same exchange.
 - blocks land partitioned by ``term_bucket = pmod(xxhash64(term), B)``
@@ -85,7 +90,7 @@ from solr_spark.analysis import (
     TEXT_CHAIN,
     AnalyzerChain,
 )
-from solr_spark.index.codec import delta_varint_encode, positions_encode, varint_encode
+from solr_spark.session import local_frame
 
 CHAINS: dict[str, AnalyzerChain] = {
     "code": CODE_CHAIN,
@@ -113,8 +118,9 @@ class IndexConfig:
                                     # mod 8 — the DelimitedPayload
                                     # TokenFilter analog for a corpus
                                     # with no delimited payload source)
-    format_version: int = 2         # v2: stats-independent block metadata
-                                    # (max_tf/min_dl) + stored_text field
+    format_version: int = 3         # v2: stats-independent block metadata
+                                    # (max_tf/min_dl) + stored_text field;
+                                    # v3: int-array blocks (no varint)
 
     def chain(self) -> AnalyzerChain:
         return CHAINS[self.analyzer]
@@ -203,7 +209,9 @@ def _clear_stage(out_dir: str, stage: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def assign_doc_ids(df: DataFrame, sort_cols: list[str], partitions: int | None = None) -> DataFrame:
+def assign_doc_ids(
+    df: DataFrame, sort_cols: list[str], partitions: int | None = None
+) -> tuple[DataFrame, DataFrame]:
     """Deterministic global doc_id = rank over ``sort_cols`` (a unique key).
 
     Scalable two-phase ranking (no single-partition global window).
@@ -215,6 +223,10 @@ def assign_doc_ids(df: DataFrame, sort_cols: list[str], partitions: int | None =
     in-partition sort (Catalyst does not push nondeterministic projections
     through sorts), normalized per partition by its min id; global offsets
     are a tiny driver-side cumulative sum broadcast-joined back.
+
+    Returns ``(with_ids, held)``: ``held`` is the persisted frame the ids
+    are read from. The caller unpersists it once every consumer of
+    ``with_ids`` has run; until then the ids stay frozen.
     """
     spark = df.sparkSession
     if partitions is None:
@@ -250,32 +262,34 @@ def assign_doc_ids(df: DataFrame, sort_cols: list[str], partitions: int | None =
     for r in sorted(stats, key=lambda r: r["_pid"]):
         rows.append((int(r["_pid"]), int(acc), int(r["min_mid"])))
         acc += r["cnt"]
-    off_df = spark.createDataFrame(rows, "_pid int, _offset long, _min_mid long")
+    off_df = local_frame(spark, rows, "_pid int, _offset long, _min_mid long")
 
     out = (
         part.join(F.broadcast(off_df), "_pid")
         .withColumn("doc_id", (F.col("_offset") + F.col("_mid") - F.col("_min_mid")).cast("long"))
         .drop("_pid", "_mid", "_offset", "_min_mid")
     )
-    return out
+    return out, part
 
 
-def analyze_docs(
-    corpus_df: DataFrame,
-    config: IndexConfig,
-    text_col: str,
-    id_col: str | None,
-    sort_cols: list[str],
-) -> DataFrame:
+def with_doc_ids(
+    corpus_df: DataFrame, id_col: str | None, sort_cols: list[str]
+) -> tuple[DataFrame, DataFrame | None]:
+    """``corpus_df`` with a long ``doc_id``: taken from ``id_col`` when
+    given, else assigned by :func:`assign_doc_ids`. Returns the frame and
+    the persisted frame to release after use (None for ``id_col``)."""
+    if id_col is None:
+        return assign_doc_ids(corpus_df, sort_cols)
+    with_ids = corpus_df.withColumn("doc_id", F.col(id_col).cast("long"))
+    if id_col != "doc_id":
+        with_ids = with_ids.drop(id_col)
+    return with_ids, None
+
+
+def analyze_docs(with_ids: DataFrame, config: IndexConfig, text_col: str) -> DataFrame:
     """(doc_id, meta…, content_sha256, doc_len, tokens) — the analyzed
-    form of the corpus (lazy plan)."""
+    form of an id-bearing corpus frame (lazy plan)."""
     chain = config.chain()
-    if id_col is not None:
-        with_ids = corpus_df.withColumn("doc_id", F.col(id_col).cast("long"))
-        if id_col != "doc_id":
-            with_ids = with_ids.drop(id_col)
-    else:
-        with_ids = assign_doc_ids(corpus_df, sort_cols)
     meta_cols = [c for c in with_ids.columns if c not in (text_col, "doc_id")]
     return (
         with_ids.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
@@ -310,13 +324,16 @@ def _stage_analyze_and_segments(
     anchored one level down: rank-assigned doc ids are frozen by the
     persisted frame inside ``assign_doc_ids`` (or come from ``id_col``),
     so both recomputes see identical ids (outputs verified
-    checksum-identical against the cached formulation)."""
-    analyzed = analyze_docs(corpus_df, config, text_col, id_col, sort_cols)
+    checksum-identical against the cached formulation). That frame is
+    the only cache this stage makes, and the only one it releases."""
+    ids, held = with_doc_ids(corpus_df, id_col, sort_cols)
+    analyzed = analyze_docs(ids, config, text_col)
     analyzed.drop("tokens").write.mode("overwrite").parquet(_stage_dir(out_dir, "analyzed"))
     build_postings(analyzed, config).write.mode("overwrite").parquet(
         _stage_dir(out_dir, "segments")
     )
-    spark.catalog.clearCache()  # release the doc-id assignment persist
+    if held is not None:
+        held.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -476,6 +493,8 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig) -> 
 # stage 4: compressed posting blocks (the merged index)
 # ---------------------------------------------------------------------------
 
+_INTS = T.ArrayType(T.IntegerType(), False)
+
 _BLOCK_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType(), False),
@@ -493,33 +512,37 @@ _BLOCK_SCHEMA = T.StructType(
         # postings ever need rewriting (TieredMergePolicy analog).
         T.StructField("max_tf", T.IntegerType(), False),
         T.StructField("min_dl", T.IntegerType(), False),
-        T.StructField("doc_ids_enc", T.BinaryType(), False),
-        T.StructField("tfs_enc", T.BinaryType(), False),
-        T.StructField("dls_enc", T.BinaryType(), False),
-        T.StructField("pos_enc", T.BinaryType(), True),
-        # per-occurrence payload stream (varint, runs framed by the tf
-        # array like pos_enc) — NULL unless built with_payloads
-        # (ref: PayloadScoreQParserPlugin.java / DelimitedPayloadTokenFilter)
-        T.StructField("payloads_enc", T.BinaryType(), True),
+        # the postings, one element per doc: doc id minus min_doc_id
+        # (small ints Parquet packs tightly; a block is cut early rather
+        # than let an offset pass 2^31-1), tf, doc length
+        T.StructField("doc_offsets", _INTS, False),
+        T.StructField("tfs", _INTS, False),
+        T.StructField("dls", _INTS, False),
+        # one inner list per doc (length tf) — NULL unless built
+        # with_positions / with_payloads (per-occurrence payloads, ref:
+        # PayloadScoreQParserPlugin.java / DelimitedPayloadTokenFilter)
+        T.StructField("positions", T.ArrayType(_INTS, False), True),
+        T.StructField("payloads", T.ArrayType(_INTS, False), True),
     ]
 )
 
 
 _BLOCK_COLS = [f.name for f in _BLOCK_SCHEMA.fields]
+_INT32_MAX = np.iinfo(np.int32).max
 
 
 def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads: bool):
-    """Vectorized block encode over ONE Arrow table of (term, salt,
-    doc_id)-sorted postings: every varint stream for the whole batch is
-    produced by a single :func:`varint_encode_segmented` pass and sliced
-    per block — byte-identical to the per-block encoders (delta framing:
-    docID gaps reset absolute at block starts; position runs reset at
-    doc starts, exactly ``positions_encode``). Replaces the per-block
-    Python loop (tens of thousands of tiny numpy calls per batch)."""
+    """Vectorized block cut over ONE Arrow table of (term, salt,
+    doc_id)-sorted postings: a block starts at every group start and every
+    ``block_size`` postings into a group, and every array column is a
+    ListArray framed at those boundaries over whole-batch value buffers —
+    the per-doc position and payload lists are reused as they arrive
+    (zero-copy). No per-block Python loop, except to cut the rare block
+    whose doc ids span more than an int32 offset holds (sparse explicit
+    ids): such a block is cut again wherever the next offset would
+    overflow."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    from solr_spark.index.codec import varint_encode_segmented
 
     n = tbl.num_rows
     tcol = tbl.column("term").combine_chunks()
@@ -529,68 +552,57 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
         tcodes = np.asarray(pc.dictionary_encode(tcol).indices)
     s = np.asarray(tbl.column("salt"))
     doc = np.asarray(tbl.column("doc_id")).astype(np.int64)
-    tf = np.asarray(tbl.column("tf")).astype(np.int64)
-    dl = np.asarray(tbl.column("doc_len")).astype(np.int64)
+    tf = np.asarray(tbl.column("tf")).astype(np.int32)
+    dl = np.asarray(tbl.column("doc_len")).astype(np.int32)
     change = np.empty(n, dtype=bool)
     change[0] = True
     change[1:] = (tcodes[1:] != tcodes[:-1]) | (s[1:] != s[:-1])
     g_id = np.cumsum(change) - 1
     g_starts = np.flatnonzero(change)
     idx_in_group = np.arange(n) - g_starts[g_id]
-    blk_change = change | (idx_in_group % block_size == 0)
-    blk_starts = np.flatnonzero(blk_change)
+    blk_starts = np.flatnonzero(change | (idx_in_group % block_size == 0))
     blk_ends = np.append(blk_starts[1:], n)
+    wide = np.flatnonzero(doc[blk_ends - 1] - doc[blk_starts] > _INT32_MAX)
+    if len(wide):
+        cuts = []
+        for b in wide:
+            base = doc[blk_starts[b]]
+            for i in range(blk_starts[b] + 1, blk_ends[b]):
+                if doc[i] - base > _INT32_MAX:
+                    cuts.append(i)
+                    base = doc[i]
+        blk_starts = np.union1d(blk_starts, cuts)
+        blk_ends = np.append(blk_starts[1:], n)
     nb = len(blk_starts)
+    blk_group = g_id[blk_starts]
+    block_no = np.arange(nb) - np.searchsorted(blk_group, blk_group)
 
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = doc[0]
-    deltas[1:] = doc[1:] - doc[:-1]
-    deltas[blk_starts] = doc[blk_starts]
-    ids_buf, ids_off = varint_encode_segmented(deltas, blk_starts)
-    tfs_buf, tfs_off = varint_encode_segmented(tf, blk_starts)
-    dls_buf, dls_off = varint_encode_segmented(dl, blk_starts)
+    offsets = doc - np.repeat(doc[blk_starts], blk_ends - blk_starts)
+    blk_offs = pa.array(np.append(blk_starts, n).astype(np.int32))
 
-    def _slices(buf, off):
-        return [buf[off[i]:off[i + 1]] for i in range(nb)]
+    def _per_block(values):
+        return pa.ListArray.from_arrays(blk_offs, values)
 
-    pos_col = None
-    pay_col = None
-    if with_positions or with_payloads:
-        occ_row_starts = np.cumsum(tf) - tf  # first occurrence index per row
-        blk_occ_starts = occ_row_starts[blk_starts]
-    if with_positions:
-        pos_la = tbl.column("positions").combine_chunks()
-        flatp = np.asarray(pos_la.flatten()).astype(np.int64)
-        pdeltas = np.empty(len(flatp), dtype=np.int64)
-        if len(flatp):
-            pdeltas[0] = flatp[0]
-            pdeltas[1:] = flatp[1:] - flatp[:-1]
-            pdeltas[occ_row_starts] = flatp[occ_row_starts]  # doc runs absolute
-        pos_buf, pos_off = varint_encode_segmented(pdeltas, blk_occ_starts)
-        pos_col = pa.array(_slices(pos_buf, pos_off), type=pa.binary())
-    if with_payloads:
-        pay_la = tbl.column("payloads").combine_chunks()
-        flatpl = np.asarray(pay_la.flatten()).astype(np.int64)
-        pay_buf, pay_off = varint_encode_segmented(flatpl, blk_occ_starts)
-        pay_col = pa.array(_slices(pay_buf, pay_off), type=pa.binary())
-
+    nested = pa.list_(pa.list_(pa.int32()))
     term_out = tcol.take(pa.array(blk_starts))
     if pa.types.is_dictionary(term_out.type):
         term_out = term_out.cast(pa.string())
     arrays = [
         term_out,
         pa.array(s[blk_starts].astype(np.int32)),
-        pa.array((idx_in_group[blk_starts] // block_size).astype(np.int32)),
+        pa.array(block_no.astype(np.int32)),
         pa.array((blk_ends - blk_starts).astype(np.int32)),
         pa.array(doc[blk_starts]),
         pa.array(doc[blk_ends - 1]),
-        pa.array(np.maximum.reduceat(tf, blk_starts).astype(np.int32)),
-        pa.array(np.minimum.reduceat(dl, blk_starts).astype(np.int32)),
-        pa.array(_slices(ids_buf, ids_off), type=pa.binary()),
-        pa.array(_slices(tfs_buf, tfs_off), type=pa.binary()),
-        pa.array(_slices(dls_buf, dls_off), type=pa.binary()),
-        pos_col if pos_col is not None else pa.nulls(nb, pa.binary()),
-        pay_col if pay_col is not None else pa.nulls(nb, pa.binary()),
+        pa.array(np.maximum.reduceat(tf, blk_starts)),
+        pa.array(np.minimum.reduceat(dl, blk_starts)),
+        _per_block(pa.array(offsets.astype(np.int32))),
+        _per_block(pa.array(tf)),
+        _per_block(pa.array(dl)),
+        (_per_block(tbl.column("positions").combine_chunks().cast(pa.list_(pa.int32())))
+         if with_positions else pa.nulls(nb, nested)),
+        (_per_block(tbl.column("payloads").combine_chunks().cast(pa.list_(pa.int32())))
+         if with_payloads else pa.nulls(nb, nested)),
     ]
     return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLS)
 
@@ -631,98 +643,52 @@ def _encode_stream_arrow(block_size: int, with_positions: bool, with_payloads: b
     return enc
 
 
-
 def _encode_group_rows(pdf: pd.DataFrame, block_size: int, with_positions: bool, with_payloads: bool = False) -> pd.DataFrame:
-    """REFERENCE implementation (per-block loop) kept for the
-    byte-equivalence test against :func:`_encode_blocks_vec` — the
-    production path is the vectorized Arrow encoder above.
+    """REFERENCE implementation (per-block loop) kept for the equivalence
+    test against :func:`_encode_blocks_vec` — the production path is the
+    vectorized Arrow encoder above.
 
-    Encode a run of (term, salt, doc_id)-sorted postings into blocks.
-
-    ``pos_enc`` holds the per-doc delta-coded position runs (lengths =
-    the tf array, so decode needs no extra framing); NULL when the index
-    is built without positions.
+    Cut a run of (term, salt, doc_id)-sorted postings into blocks of
+    plain Python int lists: a new block every ``block_size`` docs into the
+    group, and also wherever the next doc offset would pass the int32
+    range.
+    ``positions``/``payloads`` hold one list per doc, None when the index
+    is built without them.
     """
     t = pdf["term"].to_numpy()
     s = pdf["salt"].to_numpy()
     doc = pdf["doc_id"].to_numpy()
-    tf = pdf["tf"].to_numpy().astype(np.int64)
-    dl = pdf["doc_len"].to_numpy().astype(np.int64)
-    pos = pdf["positions"].to_numpy() if with_positions else None
-    pay = pdf["payloads"].to_numpy() if with_payloads else None
+    tf = pdf["tf"].to_numpy()
+    dl = pdf["doc_len"].to_numpy()
     change = np.empty(len(t), dtype=bool)
     change[0] = True
     change[1:] = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
     g_starts = np.flatnonzero(change)
     g_ends = np.append(g_starts[1:], len(t))
+
+    def _lists(col, lo, hi):
+        return [[int(x) for x in v] for v in pdf[col].iloc[lo:hi]]
+
     rows = []
     for gs, ge in zip(g_starts, g_ends):
-        n_blocks = (ge - gs + block_size - 1) // block_size
-        for b in range(n_blocks):
-            lo = gs + b * block_size
-            hi = min(lo + block_size, ge)
-            ids = doc[lo:hi]
-            if with_positions:
-                flat = (
-                    np.concatenate([np.asarray(p, dtype=np.int64) for p in pos[lo:hi]])
-                    if hi > lo
-                    else np.empty(0, dtype=np.int64)
-                )
-                pos_enc = positions_encode(flat, tf[lo:hi])
-            else:
-                pos_enc = None
-            if with_payloads:
-                pay_flat = (
-                    np.concatenate([np.asarray(x, dtype=np.int64) for x in pay[lo:hi]])
-                    if hi > lo
-                    else np.empty(0, dtype=np.int64)
-                )
-                pay_enc = varint_encode(pay_flat)
-            else:
-                pay_enc = None
+        cuts = [gs]
+        for i in range(gs + 1, ge):
+            if (i - gs) % block_size == 0 or int(doc[i]) - int(doc[cuts[-1]]) > _INT32_MAX:
+                cuts.append(i)
+        for b, (lo, hi) in enumerate(zip(cuts, cuts[1:] + [ge])):
+            ids = [int(d) for d in doc[lo:hi]]
             rows.append(
                 (
-                    t[gs], int(s[gs]), b, hi - lo, int(ids[0]), int(ids[-1]),
+                    t[gs], int(s[gs]), b, hi - lo, ids[0], ids[-1],
                     int(tf[lo:hi].max()), int(dl[lo:hi].min()),
-                    delta_varint_encode(ids),
-                    varint_encode(tf[lo:hi]),
-                    varint_encode(dl[lo:hi]),
-                    pos_enc,
-                    pay_enc,
+                    [d - ids[0] for d in ids],
+                    [int(x) for x in tf[lo:hi]],
+                    [int(x) for x in dl[lo:hi]],
+                    _lists("positions", lo, hi) if with_positions else None,
+                    _lists("payloads", lo, hi) if with_payloads else None,
                 )
             )
     return pd.DataFrame(rows, columns=_BLOCK_COLS)
-
-
-def _encode_stream_udf(block_size: int, with_positions: bool, with_payloads: bool = False):
-    """Streaming block encoder over (term, salt, doc_id)-sorted partition
-    input: ONE Arrow pass, no window function, no collect_list — groups
-    that span Arrow-batch boundaries are carried forward (carry size is
-    bounded by the largest (term, salt) group, which hot-term salting
-    bounds by design)."""
-
-    def enc(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            t = pdf["term"].to_numpy()
-            s = pdf["salt"].to_numpy()
-            change = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-            starts = np.flatnonzero(change)
-            if len(starts) == 0:
-                carry = pdf  # single (possibly incomplete) group
-                continue
-            last_start = int(starts[-1]) + 1
-            carry = pdf.iloc[last_start:]
-            yield _encode_group_rows(pdf.iloc[:last_start], block_size, with_positions, with_payloads)
-        if carry is not None and len(carry):
-            yield _encode_group_rows(carry, block_size, with_positions, with_payloads)
-
-    return enc
 
 
 # ---------------------------------------------------------------------------
@@ -799,9 +765,9 @@ def _pack_runs_arrow(with_positions: bool, with_payloads: bool):
     """Map-side packer: accumulate posting rows to ``_PACK_ROWS``-sized
     regions, then emit one row per (term, salt) run with the run's
     posting streams ALREADY delta+varint-packed (docID gaps reset
-    absolute at run start; position runs reset at doc starts — the exact
-    framing the blocks codec uses, so the reducer decodes with the same
-    :mod:`codec` kernels). The exchange therefore ships ~1-2 bytes per
+    absolute at run start; position runs reset at doc starts — the
+    framing :func:`codec.positions_decode` inverts on the reducer). The
+    exchange therefore ships ~1-2 bytes per
     posting value instead of 8-byte ints in per-posting rows.
     The stable lexsort keeps each run's postings in input order, which is
     doc-ascending within a region (segments rows are emitted doc-major)."""
@@ -1124,8 +1090,14 @@ def _stage_blocks(
         )
     )
     bdir = _stage_dir(out_dir, "blocks")
+    # zstd, not the session's snappy: the blocks are plain int arrays (no
+    # varint packing of their own), and zstd's entropy stage packs the
+    # small offsets/positions that snappy's byte matching leaves as is
+    # (perfbench 400-doc corpus: snappy blocks 5% larger than the old
+    # varint blocks, zstd blocks 6% smaller)
+    writer = blocks.write.option("compression", "zstd").partitionBy("term_bucket")
     if only_buckets is None:
-        blocks.write.mode("overwrite").partitionBy("term_bucket").parquet(bdir)
+        writer.mode("overwrite").parquet(bdir)
     else:
         # clear the changed buckets' directories first (a bucket whose
         # postings were ALL deleted must end up empty), then append —
@@ -1133,7 +1105,7 @@ def _stage_blocks(
         for b in only_buckets:
             shutil.rmtree(os.path.join(bdir, f"term_bucket={int(b)}"), ignore_errors=True)
         if only_buckets:
-            blocks.write.mode("append").partitionBy("term_bucket").parquet(bdir)
+            writer.mode("append").parquet(bdir)
 
 
 # ---------------------------------------------------------------------------

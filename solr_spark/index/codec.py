@@ -1,18 +1,16 @@
-"""Posting-block compression: delta-coded docID gaps + LEB128 varint.
+"""Delta-coded docID gaps + LEB128 varint — the build's exchange codec.
 
 This is the public Lucene posting-list design (delta-coded monotone docIDs,
 variable-byte/FOR packing — see e.g. the Lucene postings format docs; the
 reference selects codecs per field via Solr ``core/SchemaCodecFactory.java:
-102-119``) re-derived from first principles for an Arrow/numpy world:
-postings live as ``BinaryType`` cells inside Parquet rows, one cell per
-(term, salt, block).
+102-119``) re-derived from first principles for an Arrow/numpy world. The
+index build packs each per-(term, salt) posting run it shuffles with it
+(``build._pack_runs_arrow``) and decodes the runs on the reducer; the
+written posting blocks are plain Parquet int arrays, not varint bytes.
 
 Everything here is numpy-vectorized — the encode/decode loops iterate over
 BYTE POSITIONS (≤10) not over values, so cost is O(10) numpy kernels per
-block regardless of block length. No per-row Python (input-hint mandate).
-
-Parquet then layers dictionary/zstd on top of the varint bytes, mirroring
-how Lucene's codec output still benefits from filesystem compression.
+run regardless of run length. No per-row Python (input-hint mandate).
 """
 
 from __future__ import annotations
@@ -98,31 +96,11 @@ def delta_varint_decode(buf: bytes) -> np.ndarray:
     return np.cumsum(deltas, dtype=np.uint64)
 
 
-def positions_encode(flat: np.ndarray, lens: np.ndarray) -> bytes:
-    """Encode concatenated per-doc position lists (Lucene ``.prx``-style).
-
-    ``flat`` = positions of doc0 ++ doc1 ++ …, each run ascending;
-    ``lens`` = run lengths (the tf array — the same array the block
-    already stores, so no extra length prefix is needed). Each run is
-    delta-coded independently (first position absolute), then the whole
-    stream is varint-packed. Fully vectorized (segmented delta).
-    """
-    flat = np.asarray(flat, dtype=np.uint64)
-    lens = np.asarray(lens, dtype=np.int64)
-    if len(flat) == 0:
-        return b""
-    deltas = np.empty(len(flat), dtype=np.uint64)
-    deltas[0] = flat[0]
-    np.subtract(flat[1:], flat[:-1], out=deltas[1:])
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    starts = starts[lens > 0]
-    deltas[starts] = flat[starts]  # run starts are absolute
-    return varint_encode(deltas)
-
-
 def positions_decode(buf: bytes, lens: np.ndarray) -> np.ndarray:
-    """Inverse of :func:`positions_encode` → the flat position array
-    (segmented cumsum; split by the caller with ``lens``)."""
+    """Decode concatenated per-run delta-coded values (Lucene ``.prx``
+    style: each of the ``lens``-long runs has its first value absolute,
+    the rest as gaps) → the flat absolute array (segmented cumsum; split
+    by the caller with ``lens``)."""
     deltas = varint_decode(buf)
     if len(deltas) == 0:
         return deltas

@@ -38,7 +38,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, _DECODED_SCHEMA, _decode_blocks_udf
+from solr_spark.query.engine import SearchEngine, decode_blocks
 from solr_spark.query.extras import _expansion_stats
 from solr_spark.query.parser import (
     BoolQ,
@@ -54,6 +54,7 @@ from solr_spark.query.parser import (
     WildQ,
     parse_lucene,
 )
+from solr_spark.session import local_frame
 
 # condition spec mini-algebra (evaluated over the matched-leaf flag set)
 _TRUE = ("true",)
@@ -379,19 +380,16 @@ def execute_ast(
     ctx = _Ctx(engine, max_expansions, [], [], [])
     spec = _compile(ctx, ast, 1.0)
 
-    empty = engine.spark.createDataFrame([], "doc_id long, score float")
+    empty = local_frame(engine.spark, [], "doc_id long, score float")
     if spec == _FALSE and not (ctx.term_rows or ctx.phrase_leaves or ctx.filter_leaves):
         return empty
 
     srcs: list[DataFrame] = []
     if ctx.term_rows:
         terms = sorted({t for t, _, _ in ctx.term_rows})
-        blocks = engine._blocks_for(terms)
-        decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-            _decode_blocks_udf(), schema=_DECODED_SCHEMA
-        )
-        wmap = engine.spark.createDataFrame(
-            ctx.term_rows, "term string, leaf_id int, wfactor double"
+        decoded = decode_blocks(engine._blocks_for(terms))
+        wmap = local_frame(
+            engine.spark, ctx.term_rows, "term string, leaf_id int, wfactor double"
         )
         tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
         contrib = F.col("wfactor") * tf / (

@@ -5,8 +5,10 @@ The Spark restatement of the reference's two-phase distributed search
 
 - phase 1 (GET_TOP_IDS analog): prune the block scan to the query terms'
   buckets (directory partition pruning + Parquet row-group pruning),
-  decode blocks with an Arrow UDF (numpy varint kernels), aggregate
-  per-doc scores, take the global top-k via ``orderBy(...).limit(k)``
+  decode the blocks' int arrays in the JVM (:func:`decode_blocks`:
+  ``inline(arrays_zip(...))``, a ``Generate`` under whole-stage codegen
+  — no Python worker on the BM25 path), aggregate per-doc scores, take
+  the global top-k via ``orderBy(...).limit(k)``
   (Spark's TakeOrderedAndProject = per-partition PQ then driver merge —
   exactly Solr's ``mergeIds`` shard priority queue,
   ``QueryComponent.java:971``).
@@ -53,64 +55,33 @@ import math
 from collections import Counter
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from solr_spark.functions.hashing import xxhash64_py
 from solr_spark.index.build import InvertedIndex
-from solr_spark.index.codec import delta_varint_decode, varint_decode
-
-_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-        T.StructField("dl", T.IntegerType(), False),
-    ]
-)
+from solr_spark.session import local_frame
 
 
-def _decode_blocks_udf():
-    """Arrow-batched block decoder: binary columns → exploded postings.
+def decode_blocks(blocks: DataFrame, *per_doc: str) -> DataFrame:
+    """Posting blocks → one row per posting (term, doc_id, tf, dl), plus
+    the per-doc list columns named in ``per_doc`` (``positions``,
+    ``payloads``) when a caller asks for them.
 
-    Vectorized across the WHOLE batch, not per block: the three varint
-    streams are concatenated and decoded in one pass each (LEB128 is
-    self-framing, so buffer concatenation composes), and the delta-coded
-    docIDs are rebuilt with a segmented cumsum that resets at block
-    starts (the ``n_docs`` column frames the segments — the same trick
-    as ``positions_decode``). A hot term at corpus scale decodes
-    hundreds of thousands of blocks per partition; per-block Python is
-    the wrong shape for that."""
-
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = pdf["n_docs"].to_numpy().astype(np.int64)
-            total_docs = int(n.sum())
-            if total_docs == 0:
-                continue
-            deltas = varint_decode(b"".join(pdf["doc_ids_enc"]))
-            starts = np.cumsum(n) - n
-            run = np.cumsum(deltas.astype(np.int64))
-            base = np.zeros(total_docs, dtype=np.int64)
-            nz = starts[starts > 0]
-            base[nz] = run[nz - 1]
-            np.maximum.accumulate(base, out=base)
-            doc_ids = run - base
-            yield pd.DataFrame(
-                {
-                    "term": np.repeat(pdf["term"].to_numpy(), n),
-                    "doc_id": doc_ids,
-                    "tf": varint_decode(b"".join(pdf["tfs_enc"])).astype(np.int32),
-                    "dl": varint_decode(b"".join(pdf["dls_enc"])).astype(np.int32),
-                }
-            )
-
-    return dec
+    The query side's one decoder, and it runs in the JVM: ``inline`` over
+    ``arrays_zip`` of the block's int arrays is a ``Generate`` that
+    whole-stage codegen fuses with the scan and the scoring projection.
+    doc_id = min_doc_id + offset. A block whose list column is NULL
+    (index built without it) yields no rows, so callers that need
+    positions or payloads check the index config first."""
+    arrays = ["doc_offsets", "tfs", "dls", *per_doc]
+    return blocks.select("term", "min_doc_id", F.inline(F.arrays_zip(*arrays))).select(
+        "term",
+        (F.col("min_doc_id") + F.col("doc_offsets")).alias("doc_id"),
+        F.col("tfs").alias("tf"),
+        F.col("dls").alias("dl"),
+        *per_doc,
+    )
 
 
 @dataclass
@@ -189,7 +160,7 @@ class SearchEngine:
             while len(cache) > self._QUERY_CACHE_SIZE:
                 cache.popitem(last=False)
             rows = rows[:k]
-        return self.spark.createDataFrame(rows, "doc_id long, score float")
+        return local_frame(self.spark, rows, "doc_id long, score float")
 
     def _term_stats(self, terms: list[str]) -> list[TermStats]:
         """Global stats for the query terms — the ExactStatsCache analog.
@@ -334,15 +305,10 @@ class SearchEngine:
         decode (optionally pre-pruned) blocks, sum per-doc contributions.
         """
         if not stats:  # no known terms → no scored docs
-            return self.spark.createDataFrame(
-                [], "doc_id long, score_raw double, n_terms long"
-            )
+            return local_frame(self.spark, [], "doc_id long, score_raw double, n_terms long")
         if blocks is None:
             blocks = self._blocks_for([s.term for s in stats])
-        decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-            _decode_blocks_udf(), schema=_DECODED_SCHEMA
-        )
-        scored = self._score_decoded(decoded, stats)
+        scored = self._score_decoded(decode_blocks(blocks), stats)
         if len(stats) == 1:
             # Single distinct term: a doc_id appears at most ONCE across
             # the term's posting streams (tf is per-doc aggregated at
@@ -379,7 +345,7 @@ class SearchEngine:
         ``exclude_doc`` drops one doc pre-limit (the MLT seed-doc filter,
         ``MoreLikeThisComponent``).
         """
-        empty = self.spark.createDataFrame([], "doc_id long, score float")
+        empty = local_frame(self.spark, [], "doc_id long, score float")
         n_required = len(stats)
         min_match = min(min_match, n_required) if n_required else min_match
         if n_query_terms is None:
@@ -495,11 +461,7 @@ class SearchEngine:
             .limit(self._N_SEED_BLOCKS)
             .select("term", "salt", "block_no")
         )
-        decoded = (
-            blocks.join(F.broadcast(seed), ["term", "salt", "block_no"])
-            .select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc")
-            .mapInPandas(_decode_blocks_udf(), schema=_DECODED_SCHEMA)
-        )
+        decoded = decode_blocks(blocks.join(F.broadcast(seed), ["term", "salt", "block_no"]))
         partial = (
             self._score_decoded(decoded, stats)
             .groupBy("doc_id")

@@ -36,7 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from solr_spark.query.engine import SearchEngine, TermStats
+from solr_spark.query.engine import SearchEngine, TermStats, decode_blocks
+from solr_spark.session import local_frame
 
 
 # ---------------------------------------------------------------------------
@@ -116,7 +117,7 @@ def graph_terms_docs(
         if s.df <= max_doc_freq
     ]
     if not stats:
-        return engine.spark.createDataFrame([], "doc_id long")
+        return local_frame(engine.spark, [], "doc_id long")
     return engine.score_all(stats).select("doc_id").orderBy("doc_id")
 
 
@@ -143,15 +144,10 @@ def maxscore_topk(engine: SearchEngine, query: str, k: int = 10) -> DataFrame:
     disjunction scored by the MAX per-term BM25 contribution instead of
     the sum (DisjunctionMaxQuery with tiebreak 0). Same pruned decode as
     the OR path; only the aggregate changes."""
-    from solr_spark.query.engine import _DECODED_SCHEMA, _decode_blocks_udf
-
     stats = engine._term_stats(engine.analyze_query(query))
     if not stats:
-        return engine.spark.createDataFrame([], "doc_id long, score float")
-    blocks = engine._blocks_for([s.term for s in stats])
-    decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-        _decode_blocks_udf(), schema=_DECODED_SCHEMA
-    )
+        return local_frame(engine.spark, [], "doc_id long, score float")
+    decoded = decode_blocks(engine._blocks_for([s.term for s in stats]))
     scored = engine._score_decoded(decoded, stats)
     return (
         scored.groupBy("doc_id")
@@ -239,7 +235,7 @@ def mlt_topk(engine: SearchEngine, seed_doc_id: int, k: int = 10, max_terms: int
         .collect()
     )
     if not seed_rows:
-        return engine.spark.createDataFrame([], "doc_id long, score float")
+        return local_frame(engine.spark, [], "doc_id long, score float")
     tf_by_term = Counter(engine.analyze_query(seed_rows[0]["stored_text"]))
     stats = engine._term_stats(list(tf_by_term))
     ranked = sorted(stats, key=lambda s: (-tf_by_term[s.term] * s.idf, s.term))[:max_terms]
@@ -495,8 +491,8 @@ def wordbreak_split(
     splits = [(i, w[:i], w[i:]) for i in range(min_part, len(w) - min_part + 1)]
     schema = "split_at int, left_part string, right_part string"
     if not splits:
-        return spark.createDataFrame([], schema + ", df_left long, df_right long")
-    sdf = F.broadcast(spark.createDataFrame(splits, schema))
+        return local_frame(spark, [], schema + ", df_left long, df_right long")
+    sdf = F.broadcast(local_frame(spark, splits, schema))
     td = engine.index.term_dict.select("term", "df")
     left = td.withColumnsRenamed({"term": "left_part", "df": "df_left"})
     right = td.withColumnsRenamed({"term": "right_part", "df": "df_right"})
@@ -520,8 +516,8 @@ def wordbreak_combine(
     pairs = [(i, lw[i], lw[i + 1], lw[i] + lw[i + 1]) for i in range(len(lw) - 1)]
     schema = "pos int, word1 string, word2 string, combined string"
     if not pairs:
-        return spark.createDataFrame([], schema + ", df long")
-    pdf = F.broadcast(spark.createDataFrame(pairs, schema))
+        return local_frame(spark, [], schema + ", df long")
+    pdf = F.broadcast(local_frame(spark, pairs, schema))
     td = engine.index.term_dict.select(
         F.col("term").alias("combined"), "df"
     )
@@ -707,8 +703,8 @@ def highlight_passages(
     """
     stats = engine._term_stats(engine.analyze_query(query))
     if not stats:
-        return engine.spark.createDataFrame(
-            [], f"{id_col} long, p_no int, passage string, score float"
+        return local_frame(
+            engine.spark, [], f"{id_col} long, p_no int, passage string, score float"
         )
     words = F.split(F.col(text_col), " ")
     n = F.size(words)
@@ -795,7 +791,7 @@ def spellcheck_collate(
     else:
         agg = engine.score_all(stats)
         n = agg.where(F.col("n_terms") == len(set(corrections))).count()
-        hits_df = engine.spark.createDataFrame([(int(n),)], "hits long")
+        hits_df = local_frame(engine.spark, [(int(n),)], "hits long")
     return hits_df.select(F.lit(" ".join(corrections)).alias("collation"), "hits")
 
 
@@ -809,8 +805,10 @@ def elevate_topk(
     Returns (doc_id, elevated, score) with score 0.0 for non-matching
     elevated docs."""
     scores = engine.score_all(engine._term_stats(engine.analyze_query(query)))
-    elev = engine.spark.createDataFrame(
-        [(int(d), i) for i, d in enumerate(elevated_ids)], "doc_id long, elev_rank int"
+    elev = local_frame(
+        engine.spark,
+        [(int(d), i) for i, d in enumerate(elevated_ids)],
+        "doc_id long, elev_rank int",
     )
     joined = scores.select(
         "doc_id", F.col("score_raw").cast("float").alias("score")
@@ -1259,7 +1257,7 @@ def mlt_interesting_terms(
     )
     schema = "term string, tf long, df long, tfidf double"
     if not seed_rows:
-        return engine.spark.createDataFrame([], schema)
+        return local_frame(engine.spark, [], schema)
     tf_by_term = Counter(engine.analyze_query(seed_rows[0]["stored_text"]))
     stats = engine._term_stats(list(tf_by_term))
     ranked = sorted(stats, key=lambda s: (-tf_by_term[s.term] * s.idf, s.term))[:max_terms]
@@ -1267,7 +1265,7 @@ def mlt_interesting_terms(
         (s.term, tf_by_term[s.term], s.df, round(tf_by_term[s.term] * s.idf, 4))
         for s in ranked
     ]
-    return engine.spark.createDataFrame(rows, schema)
+    return local_frame(engine.spark, rows, schema)
 
 
 def cluster_results(
@@ -1356,19 +1354,15 @@ def explain_scores(
     semi-join to the top-k ids — no second scoring pass and no driver
     work beyond the O(#terms) stats lookup.
     """
-    from solr_spark.query.engine import _DECODED_SCHEMA, _decode_blocks_udf
-
     terms = engine.analyze_query(query)
     stats = engine._term_stats(terms)
     if not stats:
-        return engine.spark.createDataFrame(
-            [], "doc_id long, term string, tf int, df long, idf double, contribution double"
+        return local_frame(
+            engine.spark,
+            [], "doc_id long, term string, tf int, df long, idf double, contribution double",
         )
     hits = engine.topk(query, k=k, mode=mode).select("doc_id")
-    blocks = engine._blocks_for([s.term for s in stats])
-    decoded = blocks.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-        _decode_blocks_udf(), schema=_DECODED_SCHEMA
-    )
+    decoded = decode_blocks(engine._blocks_for([s.term for s in stats]))
     scored = engine._score_decoded(decoded, stats)
     df_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.df))])
     idf_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.idf))])

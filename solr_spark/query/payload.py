@@ -10,76 +10,33 @@ payload source — see IndexConfig.with_payloads), and the query scores
 each matching doc with an aggregate (sum / max / min / avg) of the
 payloads at that term's positions.
 
-Execution: pruned block scan → one Arrow decode pass that REDUCES the
-payload runs per doc inside numpy (``np.add.reduceat`` over the tf-run
-framing — no per-occurrence rows ever materialize in the plan) → one
-hash aggregation → TakeOrderedAndProject. Payload bytes of other terms
-are never read (column pruning + the term filter).
+Execution: pruned block scan → the engine's JVM block decode
+(:func:`~solr_spark.query.engine.decode_blocks`) with each doc's payload
+list, REDUCED per doc by SQL array functions (``aggregate`` /
+``array_min`` / ``array_max``, ``filter`` for payload_check — no
+per-occurrence rows ever materialize in the plan) → one hash aggregation
+→ TakeOrderedAndProject. Payload lists of other terms are never read
+(column pruning + the term filter).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from solr_spark.index.codec import varint_decode
-from solr_spark.query.engine import SearchEngine
-
-_PAYSCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("p_sum", T.LongType(), False),
-        T.StructField("p_min", T.LongType(), False),
-        T.StructField("p_max", T.LongType(), False),
-        T.StructField("p_cnt", T.LongType(), False),
-    ]
-)
+from solr_spark.query.engine import SearchEngine, decode_blocks
 
 
-def _decode_batch(pdf):
-    """Batch-wide decode shared by the payload UDFs: concatenated LEB128
-    buffers decode in one pass each; docIDs rebuild with a segmented
-    cumsum reset at block starts (framed by n_docs) — no per-block
-    Python (same shape as the engine's block decoder)."""
-    if pdf["payloads_enc"].isna().any():
+def _payload_postings(engine: SearchEngine, term_text: str, caller: str) -> DataFrame:
+    """(term, doc_id, tf, dl, payloads) for ONE analyzed term."""
+    if not engine.config.with_payloads:
         raise ValueError(
             "index built without payloads; rebuild with with_payloads=True"
         )
-    n = pdf["n_docs"].to_numpy().astype(np.int64)
-    deltas = varint_decode(b"".join(pdf["doc_ids_enc"]))
-    starts = np.cumsum(n) - n
-    run = np.cumsum(deltas.astype(np.int64))
-    base = np.zeros(int(n.sum()), dtype=np.int64)
-    nz = starts[starts > 0]
-    base[nz] = run[nz - 1]
-    np.maximum.accumulate(base, out=base)
-    d = run - base
-    tf = varint_decode(b"".join(pdf["tfs_enc"])).astype(np.int64)
-    pay = varint_decode(b"".join(pdf["payloads_enc"])).astype(np.int64)
-    return d, tf, pay
-
-
-def _decode_payload_udf():
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            d, tf, pay = _decode_batch(pdf)
-            occ_starts = np.cumsum(tf) - tf
-            yield pd.DataFrame(
-                {
-                    "doc_id": d,
-                    "p_sum": np.add.reduceat(pay, occ_starts),
-                    "p_min": np.minimum.reduceat(pay, occ_starts),
-                    "p_max": np.maximum.reduceat(pay, occ_starts),
-                    "p_cnt": tf,
-                }
-            )
-
-    return dec
+    toks = engine.analyze_query(term_text)
+    if len(toks) != 1:
+        raise ValueError(f"{caller} takes a single term")
+    return decode_blocks(engine._blocks_for(toks), "payloads")
 
 
 def payload_score(
@@ -92,20 +49,15 @@ def payload_score(
     """
     if func not in ("sum", "max", "min", "avg"):
         raise ValueError(f"unknown payload func {func!r}")
-    toks = engine.analyze_query(term_text)
-    if len(toks) != 1:
-        raise ValueError("payload_score takes a single term")
-    blocks = engine._blocks_for(toks)
-    per_block = blocks.select("n_docs", "doc_ids_enc", "tfs_enc", "payloads_enc").mapInPandas(
-        _decode_payload_udf(), schema=_PAYSCORE_SCHEMA
-    )
+    post = _payload_postings(engine, term_text, "payload_score")
+    pay = F.col("payloads")
     # a doc occurs in exactly one block per term, but salted/incremental
     # layouts may split it — merge associatively then derive the score
-    agg = per_block.groupBy("doc_id").agg(
-        F.sum("p_sum").alias("s"),
-        F.min("p_min").alias("mn"),
-        F.max("p_max").alias("mx"),
-        F.sum("p_cnt").alias("c"),
+    agg = post.groupBy("doc_id").agg(
+        F.sum(F.aggregate(pay, F.lit(0).cast("long"), lambda a, x: a + x)).alias("s"),
+        F.min(F.array_min(pay)).alias("mn"),
+        F.max(F.array_max(pay)).alias("mx"),
+        F.sum("tf").alias("c"),
     )
     score = {
         "sum": F.col("s").cast("double"),
@@ -125,32 +77,12 @@ def payload_check(
 ) -> DataFrame:
     """payload_check analog: docs where the term occurs with the exact
     payload at least once (matched-occurrence count as score)."""
-    toks = engine.analyze_query(term_text)
-    if len(toks) != 1:
-        raise ValueError("payload_check takes a single term")
-    blocks = engine._blocks_for(toks)
-
+    post = _payload_postings(engine, term_text, "payload_check")
     target = int(payload)
-
-    def dec(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            d, tf, pay = _decode_batch(pdf)
-            occ_starts = np.cumsum(tf) - tf
-            hit = (pay == target).astype(np.int64)
-            yield pd.DataFrame({"doc_id": d, "n_hits": np.add.reduceat(hit, occ_starts)})
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("n_hits", T.LongType(), False),
-        ]
-    )
-    per_block = blocks.select("n_docs", "doc_ids_enc", "tfs_enc", "payloads_enc").mapInPandas(dec, schema=schema)
+    hits = F.size(F.filter("payloads", lambda x: x == F.lit(target)))
     return (
-        per_block.groupBy("doc_id")
-        .agg(F.sum("n_hits").alias("n_hits"))
+        post.groupBy("doc_id")
+        .agg(F.sum(hits).cast("long").alias("n_hits"))
         .where(F.col("n_hits") > 0)
         .orderBy(F.desc("n_hits"), F.asc("doc_id"))
         .limit(k)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -52,3 +52,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """DataFrame over driver-side ``rows`` (tuples or Rows, in ``schema``
+    column order) as a JVM ``LocalRelation``: the rows travel once as an
+    Arrow table, so collecting the frame runs no Spark job and starts no
+    Python worker. ``spark.createDataFrame(list)`` instead builds a Python
+    RDD whose every collect is a job on a Python worker. For small,
+    driver-made frames only (result windows, offset tables, broadcast
+    maps): the table is held in the driver and shipped inside the plan.
+    """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    struct = T.StructType.fromDDL(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.table(
+        {
+            f.name: pa.array(list(c), type=to_arrow_type(f.dataType))
+            for f, c in zip(struct.fields, cols)
+        }
+    )
+    return spark.createDataFrame(table, struct)

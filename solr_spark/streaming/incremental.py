@@ -35,6 +35,10 @@ Spark's batch+streaming model:
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage manifests
   + ``commit_state.json``: a killed commit leaves the previous
   manifests intact and re-running ``commit()`` redoes the merge stages.
+- a directory written by ``build_index`` holds its docs and postings as
+  unpartitioned files, which a reader of ``batch=<id>`` partitions does
+  not see; the indexer moves them into a ``batch=<id>`` partition of
+  their own (already merged) before it touches the directory.
 """
 
 from __future__ import annotations
@@ -55,9 +59,11 @@ from solr_spark.index.build import (
     _stage_term_dict,
     _stage_blocks,
     _write_manifest,
-    assign_doc_ids,
+    analyze_docs,
     build_postings,
+    with_doc_ids,
 )
+from solr_spark.session import local_frame
 
 
 class IncrementalIndexer:
@@ -68,7 +74,37 @@ class IncrementalIndexer:
         self.dir = out_dir
         self.config = config or IndexConfig()
         os.makedirs(out_dir, exist_ok=True)
+        self._adopt_base()
         self._next_doc_id = self._read_next_doc_id()
+
+    def _adopt_base(self) -> None:
+        """Move the unpartitioned stage files of a ``build_index``
+        directory into a ``batch=<id>`` partition, recorded as merged (its
+        blocks are built). Spark's reader sees only the partitions once
+        one exists, so left in place these docs would vanish from every
+        read and from every compaction. File moves are renames; a run cut
+        short is finished by the next one."""
+        loose = {
+            stage: [
+                n for n in os.listdir(_stage_dir(self.dir, stage))
+                if n.endswith((".parquet", ".parquet.crc"))
+            ]
+            for stage in ("analyzed", "segments")
+            if os.path.isdir(_stage_dir(self.dir, stage))
+        }
+        if not any(loose.values()):
+            return
+        ids = self._batch_ids()
+        base = ids[0] - 1 if ids else 0
+        for stage, names in loose.items():
+            sdir = _stage_dir(self.dir, stage)
+            os.makedirs(os.path.join(sdir, f"batch={base}"), exist_ok=True)
+            for n in names:
+                os.replace(os.path.join(sdir, n), os.path.join(sdir, f"batch={base}", n))
+        if os.path.exists(_manifest_path(self.dir, "blocks")):
+            state = self._commit_state()
+            merged = set(state.get("merged_batches", [])) | {base}
+            self._write_commit_state({**state, "merged_batches": sorted(merged)})
 
     def _read_next_doc_id(self) -> int:
         adir = _stage_dir(self.dir, "analyzed")
@@ -120,22 +156,10 @@ class IncrementalIndexer:
         if batch_id is None:
             ids = self._batch_ids()
             batch_id = (ids[-1] + 1) if ids else 0
-        chain = self.config.chain()
-        if id_col is not None:
-            with_ids = docs.withColumn("doc_id", F.col(id_col).cast("long"))
-            if id_col != "doc_id":
-                with_ids = with_ids.drop(id_col)
-        else:
-            with_ids = assign_doc_ids(docs, sort_cols or ["repo", "path", "commit"])
+        with_ids, held = with_doc_ids(docs, id_col, sort_cols or ["repo", "path", "commit"])
+        if id_col is None:
             with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(self._next_doc_id))
-        meta_cols = [c for c in with_ids.columns if c not in (text_col, "doc_id")]
-        analyzed = (
-            with_ids.withColumn("content_sha256", F.sha2(F.col(text_col), 256))
-            .withColumn("tokens", chain.tokens(text_col))
-            .withColumn("doc_len", F.size("tokens").cast("int"))
-            .withColumn("stored_text", F.col(text_col))
-            .select("doc_id", *meta_cols, "content_sha256", "doc_len", "stored_text", "tokens")
-        )
+        analyzed = analyze_docs(with_ids, self.config, text_col)
         analyzed = analyzed.persist()  # one materialization feeds both writes
         n = analyzed.count()
         sub = f"batch={int(batch_id)}"
@@ -147,6 +171,8 @@ class IncrementalIndexer:
             os.path.join(_stage_dir(self.dir, "segments"), sub)
         )
         analyzed.unpersist()
+        if held is not None:
+            held.unpersist()
         if id_col is None:
             self._next_doc_id += int(n)
         else:  # explicit ids may exceed the counter — refresh from disk
@@ -156,7 +182,7 @@ class IncrementalIndexer:
     # ------------------------------------------------------------------
     def delete_by_ids(self, doc_ids: list[int]) -> int:
         """Record delete-by-id tombstones (applied at the next commit)."""
-        df = self.spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
+        df = local_frame(self.spark, [(int(d),) for d in doc_ids], "doc_id long")
         df.write.mode("append").parquet(_stage_dir(self.dir, "tombstones"))
         return len(doc_ids)
 

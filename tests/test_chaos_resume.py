@@ -54,7 +54,7 @@ def _blocks_fingerprint(idx):
         idx.blocks.select(
             F.xxhash64(
                 "term", "salt", "block_no", "n_docs", "min_doc_id",
-                "max_doc_id", "doc_ids_enc", "tfs_enc", "dls_enc",
+                "max_doc_id", "doc_offsets", "tfs", "dls",
             )
             .cast("decimal(38,0)")  # summing 64-bit hashes overflows long
             .alias("h")

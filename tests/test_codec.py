@@ -48,9 +48,11 @@ def test_delta_compression_wins():
 
 
 def test_vectorized_block_encoder_byte_identical_to_reference():
-    """_encode_blocks_vec (production, one segmented varint pass per
-    stream) must produce byte-identical blocks to the per-block
-    reference encoder for every stream, including positions/payloads."""
+    """_encode_blocks_vec (production, one vectorized cut per batch) must
+    produce the same blocks as the per-block reference encoder for every
+    column, including nested positions/payloads, on a sliced input table
+    (the streaming carry hands the encoder slices) and on sparse doc ids
+    whose offsets would overflow int32 inside one block."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -59,10 +61,13 @@ def test_vectorized_block_encoder_byte_identical_to_reference():
 
     rng = np.random.default_rng(42)
     rows = []
-    for term in ["alpha", "beta", "gamma"]:
+    for term in ["alpha", "beta", "gamma", "sparse"]:
         for salt in ([0, 1] if term == "beta" else [0]):
             n = int(rng.integers(1, 300))
-            doc_ids = np.sort(rng.choice(np.arange(10_000), size=n, replace=False))
+            if term == "sparse":
+                doc_ids = np.sort(rng.choice(np.arange(10**4), size=n, replace=False)) * 10**8
+            else:
+                doc_ids = np.sort(rng.choice(np.arange(10_000), size=n, replace=False))
             for d in doc_ids:
                 tf = int(rng.integers(1, 5))
                 positions = np.sort(
@@ -71,13 +76,18 @@ def test_vectorized_block_encoder_byte_identical_to_reference():
                 payloads = [int(x) for x in rng.integers(0, 8, tf)]
                 rows.append((term, salt, int(d), tf, int(rng.integers(tf, 600)),
                              positions, payloads))
+    head = pd.DataFrame(
+        [("aaa", 0, 1, 1, 1, [0], [0])] * 7,
+        columns=["term", "salt", "doc_id", "tf", "doc_len", "positions", "payloads"],
+    )
     pdf = pd.DataFrame(
         rows, columns=["term", "salt", "doc_id", "tf", "doc_len", "positions", "payloads"]
     )
     ref = _encode_group_rows(pdf, block_size=64, with_positions=True, with_payloads=True)
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    got = _encode_blocks_vec(tbl, 64, True, True).to_pandas()
-    assert len(ref) == len(got)
-    for col in ref.columns:
-        a, b = ref[col].tolist(), got[col].tolist()
-        assert a == b, f"column {col} differs"
+    assert (ref["term"] == "sparse").sum() > (ref["term"] == "alpha").sum()
+    tbl = pa.Table.from_pandas(
+        pd.concat([head, pdf], ignore_index=True), preserve_index=False
+    ).combine_chunks().slice(len(head))
+    got = _encode_blocks_vec(tbl, 64, True, True)
+    assert got.to_pylist() == ref.to_dict("records")
+    assert max(max(x) for x in got.column("doc_offsets").to_pylist()) < 2**31

@@ -17,7 +17,13 @@ from __future__ import annotations
 
 import pytest
 
+from solr_spark.plans import execute_query
 from solr_spark.query.engine import SearchEngine
+
+#: plan nodes that run Python workers — none may appear on the BM25 path
+_PYTHON_NODES = (
+    "MapInPandas", "MapInArrow", "PythonMapInArrow", "BatchEvalPython", "ArrowEvalPython",
+)
 
 
 def _job_count(spark, name: str, fn) -> int:
@@ -85,3 +91,54 @@ def test_repeat_query_reuses_memoized_stats(warm, spark):
     eng.topk("server parse", k=10).collect()
     n = _job_count(spark, "ja_rep", lambda: eng.topk("server json", k=10).collect())
     assert 1 <= n <= 3, f"warm-engine query launched {n} jobs (budget 3)"
+
+
+def test_search_miss_job_budget(warm, spark):
+    """A result-cache miss runs the top-k and hands its rows back as a
+    local relation: collecting them adds no job (a Python-RDD frame
+    would add one)."""
+    eng = SearchEngine(warm)
+    n = _job_count(spark, "ja_search", lambda: eng.search("server client", k=10).collect())
+    assert 1 <= n <= 3, f"search miss + collect launched {n} jobs (budget 3)"
+
+
+@pytest.fixture
+def action_plans(warm, monkeypatch):
+    """Optimized plans of every ``collect`` run while the fixture is live
+    (the engine's stats lookup and θ seed are collects too)."""
+    seen: list[str] = []
+    frame_cls = type(warm.blocks)  # the session's concrete DataFrame class
+    collect = frame_cls.collect
+
+    def spy(self):
+        seen.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    return seen
+
+
+@pytest.mark.parametrize(
+    "shape",
+    ["or", "and", "single_term", "theta", "search", "lucene_terms"],
+)
+def test_bm25_path_runs_no_python(warm, action_plans, shape):
+    """Every action of a BM25 query (stats lookup, θ seed, decode, score,
+    top-k, result rows) plans without a Python node: blocks decode in the
+    JVM and driver rows are local relations."""
+    eng = SearchEngine(warm)
+    if shape == "theta":
+        eng._PRUNE_MIN_POSTINGS = 1  # force the θ seed at test scale
+    run = {
+        "or": lambda: eng.topk("server client", k=10),
+        "and": lambda: eng.topk("server client", k=10, mode="AND"),
+        "single_term": lambda: eng.topk("import", k=10),
+        "theta": lambda: eng.topk("server client", k=10),
+        "search": lambda: eng.search("server client", k=10),
+        "lucene_terms": lambda: execute_query(eng, "server client", k=10),
+    }[shape]
+    run().collect()
+    assert action_plans
+    for plan in action_plans:
+        found = [node for node in _PYTHON_NODES if node in plan]
+        assert not found, f"{shape}: {found} in\n{plan}"

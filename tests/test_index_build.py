@@ -12,7 +12,11 @@ from pyspark.sql import functions as F
 
 from solr_spark.corpus import synth_corpus
 from solr_spark.index.build import IndexConfig, build_index
-from solr_spark.index.codec import delta_varint_decode, varint_decode
+
+
+def _lists(cells):
+    """Nested Python lists of a toPandas array column (numpy cells)."""
+    return [c.tolist() if c.dtype != object else _lists(c) for c in cells]
 
 
 def test_meta(index, oracle):
@@ -63,9 +67,8 @@ def test_blocks_decode_to_postings(index, oracle, test_config):
         blocks = index.blocks.where(F.col("term") == term).collect()
         got = {}
         for b in blocks:
-            ids = delta_varint_decode(bytes(b["doc_ids_enc"]))
-            tfs = varint_decode(bytes(b["tfs_enc"]))
-            dls = varint_decode(bytes(b["dls_enc"]))
+            ids = [b["min_doc_id"] + o for o in b["doc_offsets"]]
+            tfs, dls = b["tfs"], b["dls"]
             assert len(ids) == b["n_docs"] == len(tfs) == len(dls)
             assert int(ids[0]) == b["min_doc_id"] and int(ids[-1]) == b["max_doc_id"]
             assert b["n_docs"] <= test_config.block_size
@@ -98,8 +101,8 @@ def test_block_bound_metadata_is_sound(index):
     idf = {r["term"]: r["idf"] for r in index.term_dict.collect()}
     sample = index.blocks.limit(200).collect()
     for blk in sample:
-        tfs = varint_decode(bytes(blk["tfs_enc"])).astype(np.float64)
-        dls = varint_decode(bytes(blk["dls_enc"])).astype(np.float64)
+        tfs = np.asarray(blk["tfs"], dtype=np.float64)
+        dls = np.asarray(blk["dls"], dtype=np.float64)
         assert int(tfs.max()) == blk["max_tf"]
         assert int(dls.min()) == blk["min_dl"]
         impacts = idf[blk["term"]] * tfs / (tfs + k1 * (1 - b + b * dls / avgdl))
@@ -141,8 +144,20 @@ def test_resume_skips_completed_stages(spark, index, test_config, tmp_path):
     assert len(before_pd) == len(after_pd)
     for col in ["term", "salt", "block_no", "n_docs", "min_doc_id", "max_doc_id"]:
         assert list(before_pd[col]) == list(after_pd[col]), col
-    for col in ["doc_ids_enc", "tfs_enc", "dls_enc"]:
-        assert [bytes(x) for x in before_pd[col]] == [bytes(x) for x in after_pd[col]], col
+    for col in ["doc_offsets", "tfs", "dls", "positions"]:
+        assert _lists(before_pd[col]) == _lists(after_pd[col]), col
+
+
+def test_build_keeps_caller_caches(spark, test_config, tmp_path):
+    """build_index releases only the frame it persisted: a DataFrame the
+    caller persisted stays cached across the build."""
+    from pyspark import StorageLevel
+
+    mine = synth_corpus(spark, 60).persist()
+    mine.count()
+    build_index(spark, synth_corpus(spark, 80), str(tmp_path / "cache_idx"), test_config)
+    assert mine.storageLevel != StorageLevel.NONE
+    mine.unpersist()
 
 
 def test_parallelism_invariance(spark, index, test_config, tmp_path):
@@ -157,8 +172,9 @@ def test_parallelism_invariance(spark, index, test_config, tmp_path):
     b = idx3.blocks.orderBy("term", "salt", "block_no").toPandas()
     assert len(a) == len(b)
     assert list(a["term"]) == list(b["term"])
-    assert [bytes(x) for x in a["doc_ids_enc"]] == [bytes(x) for x in b["doc_ids_enc"]]
-    assert [bytes(x) for x in a["tfs_enc"]] == [bytes(x) for x in b["tfs_enc"]]
+    assert list(a["min_doc_id"]) == list(b["min_doc_id"])
+    for col in ["doc_offsets", "tfs", "positions"]:
+        assert _lists(a[col]) == _lists(b[col]), col
 
 
 def test_xxhash64_py_matches_spark(spark):

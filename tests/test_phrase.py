@@ -111,11 +111,13 @@ def test_phrase_slop_widens_match_set(engine):
 def test_phrase_plan_has_no_per_doc_python_groups(engine):
     """The verify stage must be a single mapInPandas over doc-partitioned
     flat postings — no FlatMapGroupsInPandas (per-doc applyInPandas) and
-    no per-posting Python tuples (VERDICT.md What's wrong #4)."""
+    no per-posting Python tuples (VERDICT.md What's wrong #4). Decode is
+    JVM-side: Generate nodes (postings, then positions), not Python."""
     df = phrase_topk(engine, "import os", k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
-    assert plan.count("MapInPandas") >= 2  # decode + verify stages
+    assert plan.count("MapInPandas") == 1  # verify only
+    assert plan.count("Generate ") >= 2  # decode: postings + positions
 
 
 def test_phrase_requires_adjacency(engine, oracle_corpus):
@@ -148,15 +150,9 @@ def test_near_unordered_matches_python_oracle(engine, oracle_corpus):
             exp[row["doc_id"]] = pf
     got_df = near_topk(engine, words, window=window, k=10**6)
     # recompute pf from the verifier directly for exact comparison
-    from solr_spark.query.phrase import (
-        _POS_FLAT_SCHEMA, _PF_SCHEMA, _decode_pos_flat_udf, _make_near_verify,
-    )
+    from solr_spark.query.phrase import _PF_SCHEMA, _make_near_verify, occurrences
     uniq = sorted(set(words))
-    blocks = engine._blocks_for(uniq)
-    flat = blocks.select(
-        "term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc", "pos_enc"
-    ).mapInPandas(_decode_pos_flat_udf(), schema=_POS_FLAT_SCHEMA)
-    pf_df = flat.repartition("doc_id").mapInPandas(
+    pf_df = occurrences(engine, uniq).repartition("doc_id").mapInPandas(
         _make_near_verify(words, window), schema=_PF_SCHEMA)
     got = {r["doc_id"]: r["pf"] for r in pf_df.collect()}
     assert got == exp

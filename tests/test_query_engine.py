@@ -55,17 +55,13 @@ def test_single_term_plan_has_no_shuffle(engine, index):
     fast = engine.score_all(stats).orderBy("doc_id").collect()
     from pyspark.sql import functions as F
 
-    decoded = engine.index.blocks.where(
+    from solr_spark.query.engine import decode_blocks
+
+    blocks = engine.index.blocks.where(
         F.col("term").isin([s.term for s in stats])
     )
     generic = (
-        engine._score_decoded(
-            decoded.select("term", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc").mapInPandas(
-                __import__("solr_spark.query.engine", fromlist=["x"])._decode_blocks_udf(),
-                schema=__import__("solr_spark.query.engine", fromlist=["x"])._DECODED_SCHEMA,
-            ),
-            stats,
-        )
+        engine._score_decoded(decode_blocks(blocks), stats)
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score_raw"), F.count("*").alias("n_terms"))
         .orderBy("doc_id")
@@ -446,10 +442,10 @@ def test_executor_stream_empty_raises(engine):
 
 def _is_local_relation(df):
     # a cache hit comes back as a driver-local relation: no parquet scan
-    # of the index, no exchange — just the materialized rows
+    # of the index, no exchange, no RDD — just the materialized rows
     plan = df._jdf.queryExecution().executedPlan().toString()
     return (
-        ("LocalTableScan" in plan or "Scan ExistingRDD" in plan)
+        "LocalTableScan" in plan
         and "Exchange" not in plan
         and "parquet" not in plan.lower()
     )
@@ -462,10 +458,11 @@ def test_search_cache_hit_is_local_relation(index):
     assert first == eng.topk("server client", k=10).collect()
     sc.setJobGroup("qcache_hit", "cache-hit probe")
     again = eng.search("server client", k=10)  # serving = zero jobs
+    rows = again.collect()  # and so is collecting the hit
     sc.setJobGroup("idle", "idle")
     assert sc.statusTracker().getJobIdsForGroup("qcache_hit") == []
     assert _is_local_relation(again)
-    assert again.collect() == first
+    assert rows == first
 
 
 def test_search_window_serves_smaller_k(index):

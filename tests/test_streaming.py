@@ -178,14 +178,12 @@ def test_changed_bucket_commit_matches_full_rebuild(spark, corpus_df, test_confi
     from solr_spark.index.build import _stage_blocks
     sel = idx.blocks.select(
         "term", "salt", "block_no", "n_docs", "max_tf", "min_dl",
-        F.sha2(F.col("doc_ids_enc"), 256).alias("h_ids"),
-        F.sha2(F.col("tfs_enc"), 256).alias("h_tfs"),
+        "min_doc_id", "doc_offsets", "tfs", "dls",
     ).collect()
     _stage_blocks(spark, d_sel, test_config, only_buckets=None)  # full rebuild
     fullb = idx.refresh().blocks.select(  # fresh handle: blocks were rewritten
         "term", "salt", "block_no", "n_docs", "max_tf", "min_dl",
-        F.sha2(F.col("doc_ids_enc"), 256).alias("h_ids"),
-        F.sha2(F.col("tfs_enc"), 256).alias("h_tfs"),
+        "min_doc_id", "doc_offsets", "tfs", "dls",
     ).collect()
     key = lambda r: (r["term"], r["salt"], r["block_no"])
     assert sorted(map(tuple, sel), key=lambda t: t[:3]) == \
@@ -278,3 +276,46 @@ def test_doc_expiration_ttl(spark):
     # boundary: expire_at == now is expired (strictly-after survives)
     edge = purge_expired(stamped, "2024-01-22 12:00:00")
     assert edge.count() == 0
+
+
+def test_commit_on_build_index_dir_keeps_base_docs(spark, test_config):
+    """An indexer opened on a directory written by ``build_index`` (base
+    docs in unpartitioned files) must keep those docs through append +
+    delete + commit: answers equal the oracle over the surviving docs."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.oracle import BruteForceIndex
+
+    d = f"{BASE}/base_then_nrt"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(260)
+    pdf["doc_id"] = range(len(pdf))
+    base, new = pdf.iloc[:220], pdf.iloc[220:]
+    build_index(spark, spark.createDataFrame(base), d, test_config, id_col="doc_id")
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(new), id_col="doc_id")
+    dead = [3, 50, 221]
+    inc.delete_by_ids(dead)
+    idx = inc.commit()
+
+    survivors = pdf[~pdf["doc_id"].isin(dead)]
+    oracle = BruteForceIndex(survivors)
+    assert idx.n_docs == len(survivors)
+    assert idx.docs.count() == len(survivors)
+    eng = SearchEngine(idx)
+    for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
+        got = eng.topk(q, k=10, mode=mode).collect()
+        exp = oracle.topk(q, k=10, mode=mode)
+        assert [r["doc_id"] for r in got] == list(exp["doc_id"]), (q, mode)
+        for r, es in zip(got, exp["score"]):
+            assert abs(r["score"] - float(es)) <= 1e-5 * max(1.0, abs(es)), q
+
+
+def test_append_batch_releases_its_cache(spark, test_config):
+    """append_batch persists the doc-id frame while it assigns ids; it
+    must leave no persistent RDD behind."""
+    d = f"{BASE}/no_leak"
+    shutil.rmtree(d, ignore_errors=True)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    IncrementalIndexer(spark, d, test_config).append_batch(synth_corpus(spark, 80))
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
