@@ -1,7 +1,1 @@
-from solr_spark.index.codec import (  # noqa: F401
-    varint_encode,
-    varint_decode,
-    delta_varint_encode,
-    delta_varint_decode,
-)
 from solr_spark.index.build import IndexConfig, InvertedIndex, build_index  # noqa: F401

@@ -54,9 +54,9 @@ Scale notes (100 TB / 10^12 docs):
   packing is an exchange format only; the written blocks are int
   arrays. Measured at 240k docs/local[4]: shuffle bytes 1070 MB →
   247 MB (4.3x), wall 15-25% faster locally; on a real cluster the 4.3x
-  is network traffic off the build's only wide exchange. Identical
-  blocks to the row-level exchange (tested, positions+payloads
-  included).
+  is network traffic off the build's only wide exchange. The blocks
+  equal the reference encoder's (``_encode_group_rows``) over the
+  same salted postings (tested, positions+payloads included).
 - the term_dict↔segments join is keyed on term: Catalyst/AQE broadcasts
   it when small, else it folds into the same exchange.
 - blocks land partitioned by ``term_bucket = pmod(xxhash64(term), B)``
@@ -607,46 +607,10 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
     return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLS)
 
 
-def _encode_stream_arrow(block_size: int, with_positions: bool, with_payloads: bool = False):
-    """Streaming Arrow block encoder over sorted partition input: one
-    pass, groups spanning batch boundaries carried forward as an Arrow
-    table slice (carry bounded by the largest (term, salt) group, which
-    hot-term salting bounds by design)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def enc(batches):
-        carry = None  # pa.Table
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None and carry.num_rows:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            carry = None
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            tcodes = np.asarray(pc.dictionary_encode(tbl.column("term").combine_chunks()).indices)
-            s = np.asarray(tbl.column("salt"))
-            change = (tcodes[1:] != tcodes[:-1]) | (s[1:] != s[:-1])
-            starts = np.flatnonzero(change)
-            if len(starts) == 0:
-                carry = tbl  # single (possibly incomplete) group
-                continue
-            last_start = int(starts[-1]) + 1
-            carry = tbl.slice(last_start)
-            yield _encode_blocks_vec(
-                tbl.slice(0, last_start), block_size, with_positions, with_payloads
-            )
-        if carry is not None and carry.num_rows:
-            yield _encode_blocks_vec(carry, block_size, with_positions, with_payloads)
-
-    return enc
-
-
 def _encode_group_rows(pdf: pd.DataFrame, block_size: int, with_positions: bool, with_payloads: bool = False) -> pd.DataFrame:
-    """REFERENCE implementation (per-block loop) kept for the equivalence
-    test against :func:`_encode_blocks_vec` — the production path is the
-    vectorized Arrow encoder above.
+    """REFERENCE implementation (per-block loop) for the equivalence
+    tests of :func:`_encode_blocks_vec` and of the whole blocks exchange —
+    the production path is the vectorized Arrow encoder above.
 
     Cut a run of (term, salt, doc_id)-sorted postings into blocks of
     plain Python int lists: a new block every ``block_size`` docs into the
@@ -921,11 +885,11 @@ def _runs_to_postings_tbl(tbl, with_positions: bool, with_payloads: bool):
 
 def _encode_stream_runs(block_size: int, with_positions: bool, with_payloads: bool = False):
     """Streaming block encoder over (term, salt, min_doc)-sorted RUN
-    input: same carry discipline as :func:`_encode_stream_arrow`, but the
-    carry holds runs (one row per mapper region per group — bounded by
-    salting), and each complete region is flattened then encoded by the
-    shared vectorized encoder, so block bytes are identical to the
-    row-level path (tested)."""
+    input, the build's one carry loop: a (term, salt) group spanning
+    batch boundaries is carried forward as an Arrow slice of its runs
+    (one row per mapper region per group — bounded by salting), and each
+    complete region is flattened by :func:`_runs_to_postings_tbl` and cut
+    into blocks by :func:`_encode_blocks_vec`."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -961,6 +925,46 @@ def _encode_stream_runs(block_size: int, with_positions: bool, with_payloads: bo
     return enc
 
 
+def _salted_postings(
+    segments: DataFrame,
+    term_dict: DataFrame,
+    config: IndexConfig,
+    only_buckets: list[int] | None = None,
+) -> DataFrame:
+    """Posting rows (term, salt, doc_id, tf, doc_len, term_bucket[,
+    positions][, payloads]) with each hot term's postings salted into
+    ``n_salts`` sub-streams and every row tagged with its term_bucket —
+    the input of the blocks exchange, restricted to ``only_buckets``."""
+    # Salt assignment needs only HOTNESS, not the full dictionary.
+    # Joining segments (O(total postings)) against the whole term_dict
+    # (O(vocabulary) — billions of distinct identifiers in code at 10^12
+    # files) would be a sort-merge join: a second full shuffle of the
+    # posting stream. The hot set is tiny BY CONSTRUCTION — at most
+    # total_postings / hot_df_threshold terms, in practice the Zipf head
+    # ('import', 'def', 'return') — so broadcast it and left-join: the
+    # posting stream is touched map-side only, and the one real shuffle
+    # stays the (term_bucket, salt) block exchange.
+    hot = F.broadcast(
+        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
+    )
+    p = segments.join(hot, "term", "left")
+    p = p.withColumn(
+        "salt",
+        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
+    ).drop("_hot")
+    p = p.withColumn(
+        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
+    )
+    if only_buckets is not None:
+        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
+    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
+    if config.with_positions:
+        cols.append("positions")
+    if config.with_payloads:
+        cols.append("payloads")
+    return p.select(*cols)
+
+
 def _blocks_shuffle_input(
     segments: DataFrame,
     term_dict: DataFrame,
@@ -970,80 +974,18 @@ def _blocks_shuffle_input(
     """The salted, bucketed, sorted shuffle input the block encoder
     consumes — factored out so tests can assert the skew property
     (a hot term's postings span >1 shuffle partition) on the real path."""
-    # Salt assignment needs only HOTNESS, not the full dictionary.
-    # Joining segments (O(total postings)) against the whole term_dict
-    # (O(vocabulary) — billions of distinct identifiers in code at 10^12
-    # files) would be a sort-merge join: a second full shuffle of the
-    # posting stream. The hot set is tiny BY CONSTRUCTION — at most
-    # total_postings / hot_df_threshold terms, in practice the Zipf head
-    # ('import', 'def', 'return') — so broadcast it and left-join: the
-    # posting stream is touched map-side only, and the one real shuffle
-    # stays the (term_bucket, salt) block exchange below.
-    hot = F.broadcast(
-        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
-    )
-    p = segments.join(hot, "term", "left")
-    p = p.withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
-    ).drop("_hot")
-    p = p.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-    )
-    if only_buckets is not None:
-        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
-    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
-    if config.with_positions:
-        cols.append("positions")
-    if config.with_payloads:
-        cols.append("payloads")
     n_parts = config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
     # Pack postings into per-(term, salt) RUNS before the exchange: the
     # shuffle ships O(runs) array rows instead of O(postings) scalar rows
     # and the reducer sorts runs by (term, salt, min_doc) — concatenation
     # of disjoint doc ranges replaces the posting-level sort entirely.
-    runs = p.select(*cols).mapInArrow(
+    runs = _salted_postings(segments, term_dict, config, only_buckets).mapInArrow(
         _pack_runs_arrow(config.with_positions, config.with_payloads),
         schema=_run_schema(config.with_positions, config.with_payloads),
     )
     return (
         runs.repartition(n_parts, "term_bucket", "salt")
         .sortWithinPartitions("term", "salt", "min_doc")
-    )
-
-
-def _blocks_shuffle_input_rows(
-    segments: DataFrame,
-    term_dict: DataFrame,
-    config: IndexConfig,
-    only_buckets: list[int] | None = None,
-) -> DataFrame:
-    """ROW-LEVEL exchange (one shuffled row per posting) — the pre-pack
-    formulation, kept as the equivalence oracle for the run-packed path:
-    both must encode byte-identical blocks (tested)."""
-    hot = F.broadcast(
-        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
-    )
-    p = segments.join(hot, "term", "left")
-    p = p.withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
-    ).drop("_hot")
-    p = p.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-    )
-    if only_buckets is not None:
-        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
-    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
-    if config.with_positions:
-        cols.append("positions")
-    if config.with_payloads:
-        cols.append("payloads")
-    n_parts = config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
-    return (
-        p.select(*cols)
-        .repartition(n_parts, "term_bucket", "salt")
-        .sortWithinPartitions("term", "salt", "doc_id")
     )
 
 
@@ -1131,6 +1073,12 @@ class InvertedIndex:
         with open(os.path.join(out_dir, "meta.json")) as f:
             self.meta = json.load(f)
         self.config = IndexConfig(**self.meta["config"])
+        if self.config.format_version < 3:
+            raise ValueError(
+                f"index at {out_dir} has format_version "
+                f"{self.config.format_version}; this engine reads format 3 "
+                "(int-array blocks, term_dict_rev) — rebuild it with build_index"
+            )
 
     @functools.cached_property
     def docs(self) -> DataFrame:
@@ -1149,25 +1097,8 @@ class InvertedIndex:
 
     @functools.cached_property
     def term_dict_rev(self) -> DataFrame:
-        """Dictionary sorted by reversed term (leading-wildcard seeks).
-        Indexes built before the stage existed are lazily backfilled
-        (one dictionary-sized write); if the directory is read-only the
-        column derives on the fly instead (correct, just not
-        range-pruned)."""
-        rev_dir = _stage_dir(self.dir, "term_dict_rev")
-        if not os.path.isdir(rev_dir):
-            try:
-                (self.term_dict
-                 .withColumn("term_rev", F.reverse(F.col("term")))
-                 .repartitionByRange(
-                     max(1, self.spark.sparkContext.defaultParallelism // 4),
-                     "term_rev")
-                 .sortWithinPartitions("term_rev")
-                 .write.mode("overwrite").parquet(rev_dir))
-            except Exception:
-                return self.term_dict.withColumn(
-                    "term_rev", F.reverse(F.col("term")))
-        return self.spark.read.parquet(rev_dir)
+        """Dictionary sorted by reversed term (leading-wildcard seeks)."""
+        return self.spark.read.parquet(_stage_dir(self.dir, "term_dict_rev"))
 
     @functools.cached_property
     def blocks(self) -> DataFrame:

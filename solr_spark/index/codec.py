@@ -5,8 +5,16 @@ variable-byte/FOR packing — see e.g. the Lucene postings format docs; the
 reference selects codecs per field via Solr ``core/SchemaCodecFactory.java:
 102-119``) re-derived from first principles for an Arrow/numpy world. The
 index build packs each per-(term, salt) posting run it shuffles with it
-(``build._pack_runs_arrow``) and decodes the runs on the reducer; the
-written posting blocks are plain Parquet int arrays, not varint bytes.
+and decodes the runs on the reducer; the written posting blocks are plain
+Parquet int arrays, not varint bytes. The exchange uses three functions:
+
+- :func:`varint_encode_segmented` (mapper, ``build._pack_runs_arrow``):
+  one pass over a whole region, framed per run; doc ids and positions go
+  in as gaps whose first value per run (per doc, for positions) is
+  absolute;
+- :func:`positions_decode` (reducer, ``build._runs_to_postings_tbl``):
+  the segmented-delta inverse, resetting at every run;
+- :func:`varint_decode` (reducer): the plain streams (tf, dl, payloads).
 
 Everything here is numpy-vectorized — the encode/decode loops iterate over
 BYTE POSITIONS (≤10) not over values, so cost is O(10) numpy kernels per
@@ -37,20 +45,9 @@ def _varint_sizes(values: np.ndarray) -> np.ndarray:
 
 
 def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a non-negative int array → bytes (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if len(v) == 0:
-        return b""
-    sizes = _varint_sizes(v)
-    offsets = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-    out = np.zeros(int(sizes.sum()), dtype=np.uint8)
-    max_size = int(sizes.max())
-    for j in range(max_size):
-        mask = sizes > j
-        byte = (v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)
-        cont = (sizes[mask] > j + 1).astype(np.uint8) << 7
-        out[offsets[mask] + j] = byte.astype(np.uint8) | cont
-    return out.tobytes()
+    """LEB128-encode a non-negative int array → bytes (one segment of
+    :func:`varint_encode_segmented`)."""
+    return varint_encode_segmented(values, np.zeros(0, dtype=np.int64))[0]
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
@@ -71,29 +68,6 @@ def varint_decode(buf: bytes) -> np.ndarray:
     payload = (b & 0x7F).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
     np.add.at(vals, group, payload)
     return vals
-
-
-def delta_varint_encode(sorted_values: np.ndarray) -> bytes:
-    """Delta-code a strictly-increasing int array, then varint-pack.
-
-    First element is stored absolute; the rest as gaps (Lucene docID-gap
-    layout). Caller guarantees monotonicity (block build sorts by doc_id).
-    """
-    v = np.asarray(sorted_values, dtype=np.uint64)
-    if len(v) == 0:
-        return b""
-    deltas = np.empty(len(v), dtype=np.uint64)
-    deltas[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=deltas[1:])
-    return varint_encode(deltas)
-
-
-def delta_varint_decode(buf: bytes) -> np.ndarray:
-    """Inverse of :func:`delta_varint_encode`."""
-    deltas = varint_decode(buf)
-    if len(deltas) == 0:
-        return deltas
-    return np.cumsum(deltas, dtype=np.uint64)
 
 
 def positions_decode(buf: bytes, lens: np.ndarray) -> np.ndarray:
@@ -123,10 +97,10 @@ def varint_encode_segmented(
     ``(buffer, byte_offsets)`` where ``byte_offsets[i]:byte_offsets[i+1]``
     frames segment i (segments begin at value indexes ``seg_starts``).
 
-    Byte-identical to concatenating per-segment :func:`varint_encode`
-    calls (LEB128 is per-value independent) — this is the batch form the
-    block encoder uses to replace tens of thousands of tiny per-block
-    numpy calls with one pass over the whole Arrow batch.
+    LEB128 is per-value independent, so a segment's bytes are exactly
+    that segment encoded alone — this is the batch form the exchange
+    packer uses to replace tens of thousands of tiny per-run numpy calls
+    with one pass over the whole Arrow batch.
     """
     v = np.asarray(values, dtype=np.uint64)
     seg_starts = np.asarray(seg_starts, dtype=np.int64)

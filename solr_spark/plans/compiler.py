@@ -33,12 +33,11 @@ matching scoring leaf, × all enclosing group boosts.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, decode_blocks
+from solr_spark.query.engine import SearchEngine, decode_blocks, no_hits, rank_topk
 from solr_spark.query.extras import _expansion_stats
 from solr_spark.query.parser import (
     BoolQ,
@@ -380,9 +379,8 @@ def execute_ast(
     ctx = _Ctx(engine, max_expansions, [], [], [])
     spec = _compile(ctx, ast, 1.0)
 
-    empty = local_frame(engine.spark, [], "doc_id long, score float")
     if spec == _FALSE and not (ctx.term_rows or ctx.phrase_leaves or ctx.filter_leaves):
-        return empty
+        return no_hits(engine.spark)
 
     srcs: list[DataFrame] = []
     if ctx.term_rows:
@@ -391,12 +389,7 @@ def execute_ast(
         wmap = local_frame(
             engine.spark, ctx.term_rows, "term string, leaf_id int, wfactor double"
         )
-        tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-        contrib = F.col("wfactor") * tf / (
-            tf
-            + F.lit(engine.k1)
-            * (F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl))
-        )
+        contrib = engine.bm25(F.col("wfactor"), F.col("tf"), F.col("dl"))
         srcs.append(
             decoded.join(F.broadcast(wmap), "term").select(
                 "doc_id", "leaf_id", contrib.alias("contrib")
@@ -406,18 +399,10 @@ def execute_ast(
         from solr_spark.query.phrase import phrase_match_pf
 
         for lid, text, slop, b in ctx.phrase_leaves:
-            pfd = phrase_match_pf(engine, text, slop=slop)
+            pfd, idf_total = phrase_match_pf(engine, text, slop=slop)
             if pfd is None:
                 continue
-            toks = engine.analyze_query(text)
-            idf = {s.term: s.idf for s in engine._term_stats(sorted(set(toks)))}
-            idf_total = float(sum(idf[t] for t in toks)) * b
-            pf, dl = F.col("pf").cast("double"), F.col("dl").cast("double")
-            contrib = F.lit(idf_total) * pf / (
-                pf
-                + F.lit(engine.k1)
-                * (F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl))
-            )
+            contrib = engine.bm25(F.lit(idf_total * b), F.col("pf"), F.col("dl"))
             srcs.append(
                 pfd.select("doc_id", F.lit(lid).alias("leaf_id"), contrib.alias("contrib"))
             )
@@ -428,7 +413,7 @@ def execute_ast(
             )
         )
     if not srcs:
-        return empty
+        return no_hits(engine.spark)
 
     allrows = srcs[0]
     for s in srcs[1:]:
@@ -442,9 +427,4 @@ def execute_ast(
         score = score + F.when(
             _spec_to_column(cspec, F.col("flags")), F.lit(float(cval))
         ).otherwise(F.lit(0.0))
-    return (
-        agg.where(cond)
-        .select("doc_id", score.cast("float").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return rank_topk(agg.where(cond).select("doc_id", score.cast("float").alias("score")), k)

@@ -51,11 +51,10 @@ per engine, so repeated queries pay no stats round-trips at all.
 
 from __future__ import annotations
 
-import math
 from collections import Counter
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.functions.hashing import xxhash64_py
@@ -82,6 +81,17 @@ def decode_blocks(blocks: DataFrame, *per_doc: str) -> DataFrame:
         F.col("dls").alias("dl"),
         *per_doc,
     )
+
+
+def rank_topk(df: DataFrame, k: int) -> DataFrame:
+    """The one ranking tail: (score desc, doc_id asc), first ``k`` rows —
+    Spark's TakeOrderedAndProject, Solr's ``mergeIds`` priority queue."""
+    return df.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+
+def no_hits(spark) -> DataFrame:
+    """The empty ranked result (doc_id long, score float)."""
+    return local_frame(spark, [], "doc_id long, score float")
 
 
 @dataclass
@@ -205,16 +215,30 @@ class SearchEngine:
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def _score_decoded(self, decoded: DataFrame, stats: list[TermStats]) -> DataFrame:
-        """Per-posting BM25 contribution (float64, JVM expressions)."""
-        idf_map = F.create_map(
+    def length_norm(self, dl: Column) -> Column:
+        """BM25 doc-length normalization ``1-b+b·dl/avgdl`` (float64)."""
+        return F.lit(1.0 - self.b) + F.lit(self.b) * dl.cast("double") / F.lit(self.avgdl)
+
+    def bm25(self, weight: Column | None, x: Column, dl: Column) -> Column:
+        """The one BM25 kernel: ``weight·x / (x + k1·norm(dl))`` in float64
+        (``x / (…)`` when ``weight`` is None). Every term, phrase and
+        block-bound score goes through it. The tree is ``(w·x)/den``,
+        never ``w·(x/den)``: the float32-quantized ranking depends on it."""
+        x = x.cast("double")
+        den = x + F.lit(self.k1) * self.length_norm(dl)
+        return (x if weight is None else weight * x) / den
+
+    @staticmethod
+    def _widf_map(stats: list[TermStats]) -> Column:
+        """term → idf·weight as a map literal."""
+        return F.create_map(
             *[x for s in stats for x in (F.lit(s.term), F.lit(s.idf * s.weight))]
         )
-        tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-        contrib = idf_map[F.col("term")] * tf / (
-            tf + F.lit(self.k1) * (F.lit(1.0 - self.b) + F.lit(self.b) * dl / F.lit(self.avgdl))
-        )
-        return decoded.withColumn("contrib", contrib)
+
+    def _score_decoded(self, decoded: DataFrame, stats: list[TermStats]) -> DataFrame:
+        """Per-posting BM25 contribution (float64, JVM expressions)."""
+        w = self._widf_map(stats)[F.col("term")]
+        return decoded.withColumn("contrib", self.bm25(w, F.col("tf"), F.col("dl")))
 
     # ------------------------------------------------------------------
     def topk(
@@ -345,14 +369,13 @@ class SearchEngine:
         ``exclude_doc`` drops one doc pre-limit (the MLT seed-doc filter,
         ``MoreLikeThisComponent``).
         """
-        empty = local_frame(self.spark, [], "doc_id long, score float")
         n_required = len(stats)
         min_match = min(min_match, n_required) if n_required else min_match
         if n_query_terms is None:
             n_query_terms = n_required
         # conjunction over a term absent from the index matches nothing
         if not stats or (mode == "AND" and n_required < n_query_terms):
-            return empty
+            return no_hits(self.spark)
         if mode == "AND" and prune and n_required > 1:
             blocks = self._and_pruned_blocks(stats, k)
         elif (
@@ -377,10 +400,8 @@ class SearchEngine:
             agg = agg.where(F.col("n_terms") >= F.lit(min_match))
         if exclude_doc is not None:
             agg = agg.where(F.col("doc_id") != F.lit(exclude_doc))
-        return (
-            agg.select("doc_id", F.col("score_raw").cast("float").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
+        return rank_topk(
+            agg.select("doc_id", F.col("score_raw").cast("float").alias("score")), k
         )
 
     # ------------------------------------------------------------------
@@ -392,23 +413,10 @@ class SearchEngine:
     # impact under the CURRENT global stats — blocks never go stale when
     # N/avgdl/idf drift between commits.
     # ------------------------------------------------------------------
-    def _bound_py(self, idf: float, max_tf: int, min_dl: int) -> float:
-        tf, dl = float(max_tf), float(min_dl)
-        return idf * tf / (tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-
-    def _g_col(self) -> "F.Column":
+    def _g_col(self) -> Column:
         """Stats-independent block impact factor g = tf_sat(max_tf, min_dl):
         the block bound is idf·g, monotone ↑ in max_tf and ↓ in min_dl."""
-        tf = F.col("max_tf").cast("double")
-        dl = F.col("min_dl").cast("double")
-        return tf / (
-            tf + F.lit(self.k1) * (F.lit(1.0 - self.b) + F.lit(self.b) * dl / F.lit(self.avgdl))
-        )
-
-    def _bound_col(self, idf) -> "F.Column":
-        """Column form of the block impact bound (idf: Column or float)."""
-        idf_c = F.lit(idf) if isinstance(idf, float) else idf
-        return idf_c * self._g_col()
+        return self.bm25(None, F.col("max_tf"), F.col("min_dl"))
 
     #: skip the θ seed pass for huge k (pruning can't pay; the partial
     #: top-k would collect k rows to the driver)
@@ -450,11 +458,8 @@ class SearchEngine:
         need_g = [t for t in uniq if t not in gcache]
 
         blocks = self._blocks_for(uniq)
-        widf_map = F.create_map(
-            *[x for s in stats for x in (F.lit(s.term), F.lit(s.idf * s.weight))]
-        )
         meta = blocks.select("term", "salt", "block_no", "max_tf", "min_dl").withColumn(
-            "wbound", widf_map[F.col("term")] * self._g_col()
+            "wbound", self._widf_map(stats)[F.col("term")] * self._g_col()
         )
         seed = (
             meta.orderBy(F.desc("wbound"))
@@ -510,16 +515,11 @@ class SearchEngine:
         gcache = self.__dict__.setdefault("_g_cache", {})
         wg = {s.term: s.idf * s.weight * gcache.get(s.term, 0.0) for s in stats}
         total = sum(wg.values())
-        widf_map = F.create_map(
-            *[x for s in stats for x in (F.lit(s.term), F.lit(s.idf * s.weight))]
-        )
         slack_map = F.create_map(
             *[x for t in wg for x in (F.lit(t), F.lit(total - wg[t]))]
         )
-        return blocks.where(
-            self._bound_col(widf_map[F.col("term")]) + slack_map[F.col("term")]
-            >= F.lit(theta)
-        )
+        bound = self._widf_map(stats)[F.col("term")] * self._g_col()
+        return blocks.where(bound + slack_map[F.col("term")] >= F.lit(theta))
 
     def _and_pruned_blocks(self, stats: list[TermStats], k: int) -> DataFrame:
         """Conjunctive pruning: candidates live only in the rarest term's

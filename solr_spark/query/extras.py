@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from solr_spark.query.engine import SearchEngine, TermStats, decode_blocks
+from solr_spark.query.engine import SearchEngine, TermStats, decode_blocks, no_hits, rank_topk
 from solr_spark.session import local_frame
 
 
@@ -146,15 +146,14 @@ def maxscore_topk(engine: SearchEngine, query: str, k: int = 10) -> DataFrame:
     the OR path; only the aggregate changes."""
     stats = engine._term_stats(engine.analyze_query(query))
     if not stats:
-        return local_frame(engine.spark, [], "doc_id long, score float")
+        return no_hits(engine.spark)
     decoded = decode_blocks(engine._blocks_for([s.term for s in stats]))
     scored = engine._score_decoded(decoded, stats)
-    return (
+    return rank_topk(
         scored.groupBy("doc_id")
         .agg(F.max("contrib").alias("score_raw"))
-        .select("doc_id", F.col("score_raw").cast("float").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .select("doc_id", F.col("score_raw").cast("float").alias("score")),
+        k,
     )
 
 
@@ -235,7 +234,7 @@ def mlt_topk(engine: SearchEngine, seed_doc_id: int, k: int = 10, max_terms: int
         .collect()
     )
     if not seed_rows:
-        return local_frame(engine.spark, [], "doc_id long, score float")
+        return no_hits(engine.spark)
     tf_by_term = Counter(engine.analyze_query(seed_rows[0]["stored_text"]))
     stats = engine._term_stats(list(tf_by_term))
     ranked = sorted(stats, key=lambda s: (-tf_by_term[s.term] * s.idf, s.term))[:max_terms]
@@ -281,11 +280,7 @@ def rerank_topk(
             (_f32(F.col("s1")) + F.lit(weight) * F.coalesce(_f32(F.col("s2")), F.lit(0.0))).cast("float"),
         )
     )
-    return (
-        combined.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return rank_topk(combined.select("doc_id", "score"), k)
 
 
 def boost_topk(
@@ -298,12 +293,11 @@ def boost_topk(
     """Boost-by-function: score × boost(doc). ``boost_df`` carries
     (doc_id, <boost_col> double); final = f32(f32(bm25) · boost)."""
     scores = engine.score_all(engine._term_stats(engine.analyze_query(query)))
-    return (
+    return rank_topk(
         scores.join(boost_df, "doc_id")
         .withColumn("score", (_f32(F.col("score_raw").cast("float")) * F.col(boost_col)).cast("float"))
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .select("doc_id", "score"),
+        k,
     )
 
 
@@ -326,11 +320,10 @@ def dismax_topk(
     total = cols[0]
     for c in cols[1:]:
         total = total + c
-    return (
+    return rank_topk(
         joined.withColumn("score", (mx + F.lit(tie) * (total - mx)).cast("float"))
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .select("doc_id", "score"),
+        k,
     )
 
 
@@ -396,16 +389,10 @@ def edismax_topk(
         from solr_spark.query.phrase import phrase_match_pf
 
         eng = engines[fname]
-        pfd = phrase_match_pf(eng, query, slop=0)
+        pfd, idf_total = phrase_match_pf(eng, query, slop=0)
         if pfd is None:
             continue
-        toks = eng.analyze_query(query)
-        idf = {s.term: s.idf for s in eng._term_stats(sorted(set(toks)))}
-        idf_total = float(sum(idf[t] for t in toks))
-        pfc, dl = F.col("pf").cast("double"), F.col("dl").cast("double")
-        praw = F.lit(idf_total) * pfc / (
-            pfc + F.lit(eng.k1) * (F.lit(1.0 - eng.b) + F.lit(eng.b) * dl / F.lit(eng.avgdl))
-        )
+        praw = eng.bm25(F.lit(idf_total), F.col("pf"), F.col("dl"))
         pcol = f"p_{fname}"
         joined = joined.join(
             pfd.select("doc_id", praw.cast("float").alias(pcol)), "doc_id", "left"
@@ -426,12 +413,7 @@ def edismax_topk(
         bf_col = [c for c in bf.columns if c != "doc_id"][0]
         score = score + F.coalesce(F.col(bf_col).cast("double"), F.lit(0.0))
 
-    return (
-        joined.withColumn("score", score.cast("float"))
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return rank_topk(joined.withColumn("score", score.cast("float")).select("doc_id", "score"), k)
 
 
 def rrf_topk(
@@ -618,11 +600,7 @@ def rank_feature(
         F.col(feature_col), function,
         weight=weight, pivot=k_param, scaling_factor=a_param, exponent=exponent,
     )
-    return (
-        df.select(F.col(id_col).alias("doc_id"), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return rank_topk(df.select(F.col(id_col).alias("doc_id"), score.alias("score")), k)
 
 
 def rank_boost_topk(
@@ -650,16 +628,15 @@ def rank_boost_topk(
         weight=weight, pivot=pivot, scaling_factor=scaling_factor, exponent=exponent,
     )
     feat = feature_df.select("doc_id", rank.cast("float").alias("_rank"))
-    return (
+    return rank_topk(
         scores.join(feat, "doc_id", "left")
         .withColumn(
             "score",
             (_f32(F.col("score_raw").cast("float"))
              + F.coalesce(_f32(F.col("_rank")), F.lit(0.0))).cast("float"),
         )
-        .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .select("doc_id", "score"),
+        k,
     )
 
 
@@ -1044,11 +1021,10 @@ def ltr_linear_rescore(
         + F.lit(w_dl) * F.col("f_dl")
         + F.lit(w_nc) * F.col("f_nc")
     ).cast("float")
-    return (
+    return rank_topk(
         feats.withColumn("score", score)
-        .select("doc_id", "score", "f_orig", "f_sub", "f_dl", "f_nc")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
+        .select("doc_id", "score", "f_orig", "f_sub", "f_dl", "f_nc"),
+        k,
     )
 
 
@@ -1427,17 +1403,13 @@ def relevance_functions(
     tf_raw = F.size(
         F.filter(chain.tokens("stored_text"), lambda t: t == F.lit(probe))
     ).cast("long")
-    dl = F.col("doc_len").cast("double")
-    norm = F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl)
+    dl = F.col("doc_len")
+    norm = engine.length_norm(dl)
     return docs.select(
         "doc_id",
         tf_raw.alias("termfreq"),
         F.lit(int(df_v)).cast("long").alias("docfreq"),
         F.round(F.lit(float(idf_v)), 6).alias("idf"),
-        F.round(
-            (tf_raw.cast("double") / (tf_raw.cast("double") + F.lit(engine.k1) * norm))
-            .cast("float").cast("double"),
-            6,
-        ).alias("tf"),
+        F.round(engine.bm25(None, tf_raw, dl).cast("float").cast("double"), 6).alias("tf"),
         F.round(norm.cast("float").cast("double"), 6).alias("norm"),
     ).orderBy("doc_id")

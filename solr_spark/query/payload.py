@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, decode_blocks
+from solr_spark.query.engine import SearchEngine, decode_blocks, rank_topk
 
 
 def _payload_postings(engine: SearchEngine, term_text: str, caller: str) -> DataFrame:
@@ -65,11 +65,7 @@ def payload_score(
         "min": F.col("mn").cast("double"),
         "avg": F.col("s").cast("double") / F.col("c").cast("double"),
     }[func]
-    return (
-        agg.select("doc_id", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return rank_topk(agg.select("doc_id", score.alias("score")), k)
 
 
 def payload_check(

@@ -40,6 +40,7 @@ Execution (one shuffle, no per-row/per-doc Python):
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -48,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from solr_spark.query.engine import SearchEngine, decode_blocks
+from solr_spark.query.engine import SearchEngine, decode_blocks, no_hits, rank_topk
 from solr_spark.session import local_frame
 
 _PF_SCHEMA = T.StructType(
@@ -76,9 +77,13 @@ def occurrences(engine: SearchEngine, terms: list[str]) -> DataFrame:
     return post.select("term", "doc_id", F.explode("positions").alias("pos"), "dl")
 
 
-def _make_verify(terms: list[str], slop: int) -> Callable:
-    """Partition-level chain verifier (see module docstring step 4)."""
-    n = len(terms)
+def _pf_verifier(pad: int, hits_of: Callable) -> Callable:
+    """Partition-level verifier (module docstring step 4), shared by the
+    ordered-chain and unordered-near matchers: occurrences become int64
+    keys ``doc_id·shift + pos`` (``shift`` = max pos + ``pad``, so a key
+    plus the match span stays inside its doc), ``hits_of(key, tok,
+    shift)`` returns one key per matching start, and pf = starts per
+    doc, joined with each doc's dl."""
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [p for p in batches if len(p)]
@@ -88,11 +93,29 @@ def _make_verify(terms: list[str], slop: int) -> Callable:
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         doc = pdf["doc_id"].to_numpy(np.int64)
         pos = pdf["pos"].to_numpy(np.int64)
-        tok = pdf["term"].to_numpy()
-        shift = int(pos.max()) + 2  # pos < shift, strictly
+        shift = int(pos.max()) + pad
         if doc.max() >= (2**62) // shift:  # survives PYTHONOPTIMIZE (-O)
             raise ValueError("doc_id·shift would overflow int64 key packing")
-        key = doc * shift + pos
+        hits = hits_of(doc * shift + pos, pdf["term"].to_numpy(), shift)
+        if len(hits) == 0:
+            yield _EMPTY_PF
+            return
+        docs_u, counts = np.unique(hits // shift, return_counts=True)
+        out = pd.DataFrame({"doc_id": docs_u, "pf": counts.astype(np.int32)})
+        dl_map = pdf.drop_duplicates("doc_id")[["doc_id", "dl"]]
+        yield out.merge(dl_map, on="doc_id", how="left").astype(
+            {"doc_id": "int64", "pf": "int32", "dl": "int32"}
+        )
+
+    return verify
+
+
+def _make_verify(terms: list[str], slop: int) -> Callable:
+    """Ordered-chain verifier: the earliest-next-occurrence chain per
+    start, one ``searchsorted`` per phrase ordinal."""
+    n = len(terms)
+
+    def chain_starts(key: np.ndarray, tok: np.ndarray, shift: int) -> np.ndarray:
         # per-ordinal sorted key arrays (repeated phrase terms share one)
         by_term = {t: np.sort(key[tok == t]) for t in set(terms)}
         start = by_term[terms[0]]
@@ -107,39 +130,9 @@ def _make_verify(terms: list[str], slop: int) -> Callable:
             valid &= ok
             end = np.where(ok, nxt, end)
         valid &= (end - start) <= (n - 1 + slop)
-        hits = start[valid]
-        if len(hits) == 0:
-            yield _EMPTY_PF
-            return
-        docs_u, counts = np.unique(hits // shift, return_counts=True)
-        out = pd.DataFrame({"doc_id": docs_u, "pf": counts.astype(np.int32)})
-        dl_map = pdf.drop_duplicates("doc_id")[["doc_id", "dl"]]
-        yield out.merge(dl_map, on="doc_id", how="left").astype(
-            {"doc_id": "int64", "pf": "int32", "dl": "int32"}
-        )
+        return start[valid]
 
-    return verify
-
-
-def phrase_match_pf(engine: SearchEngine, phrase: str, slop: int = 0) -> DataFrame | None:
-    """(doc_id, pf, dl) for every doc matching the phrase within ``slop``.
-
-    Returns None when a phrase term is absent from the index (no doc can
-    match). The building block for :func:`phrase_topk` and the edismax
-    ``pf`` phrase boost.
-    """
-    if not engine.config.with_positions:
-        raise ValueError("index built without positions; rebuild with with_positions=True")
-    terms = engine.analyze_query(phrase)
-    if not terms:
-        return None
-    uniq = sorted(set(terms))
-    stats = engine._term_stats(uniq)
-    if len(stats) < len(uniq):
-        return None
-    return occurrences(engine, uniq).repartition("doc_id").mapInPandas(
-        _make_verify(terms, slop), schema=_PF_SCHEMA
-    )
+    return _pf_verifier(2, chain_starts)
 
 
 def _make_near_verify(terms: list[str], window: int) -> Callable:
@@ -149,19 +142,7 @@ def _make_near_verify(terms: list[str], window: int) -> Callable:
     vectorization as the ordered chain (searchsorted per term)."""
     uniq = sorted(set(terms))
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            yield _EMPTY_PF
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        doc = pdf["doc_id"].to_numpy(np.int64)
-        pos = pdf["pos"].to_numpy(np.int64)
-        tok = pdf["term"].to_numpy()
-        shift = int(pos.max()) + window + 2
-        if doc.max() >= (2**62) // shift:  # survives PYTHONOPTIMIZE (-O)
-            raise ValueError("doc_id·shift would overflow int64 key packing")
-        key = doc * shift + pos
+    def near_anchors(key: np.ndarray, tok: np.ndarray, shift: int) -> np.ndarray:
         by_term = {t: np.sort(key[tok == t]) for t in uniq}
         anchors = np.unique(key)
         anchor_doc = anchors // shift
@@ -172,18 +153,54 @@ def _make_near_verify(terms: list[str], window: int) -> Callable:
             valid = idx < len(keys_t)
             cand = keys_t[np.minimum(idx, len(keys_t) - 1)]
             ok &= valid & (cand <= anchors + window) & ((cand // shift) == anchor_doc)
-        hits = anchors[ok]
-        if len(hits) == 0:
-            yield _EMPTY_PF
-            return
-        docs_u, counts = np.unique(hits // shift, return_counts=True)
-        out = pd.DataFrame({"doc_id": docs_u, "pf": counts.astype(np.int32)})
-        dl_map = pdf.drop_duplicates("doc_id")[["doc_id", "dl"]]
-        yield out.merge(dl_map, on="doc_id", how="left").astype(
-            {"doc_id": "int64", "pf": "int32", "dl": "int32"}
-        )
+        return anchors[ok]
 
-    return verify
+    return _pf_verifier(window + 2, near_anchors)
+
+
+def _match_pf(
+    engine: SearchEngine, terms: list[str], verify: Callable
+) -> tuple[DataFrame | None, float]:
+    """(doc_id, pf, dl) of the docs ``verify`` matches over the
+    occurrences of ``terms``, and the phrase idf (Σ idf per term
+    INSTANCE). (None, 0.0) when a term is absent from the index."""
+    if not engine.config.with_positions:
+        raise ValueError("index built without positions; rebuild with with_positions=True")
+    if not terms:
+        return None, 0.0
+    uniq = sorted(set(terms))
+    stats = engine._term_stats(uniq)
+    if len(stats) < len(uniq):
+        return None, 0.0
+    idf = {s.term: s.idf for s in stats}
+    pf_df = occurrences(engine, uniq).repartition("doc_id").mapInPandas(
+        verify, schema=_PF_SCHEMA
+    )
+    return pf_df, float(sum(idf[t] for t in terms))
+
+
+def _phrase_topk(
+    engine: SearchEngine, pf_df: DataFrame | None, idf_total: float, k: int
+) -> DataFrame:
+    """Rank a (doc_id, pf, dl) match set by the phrase-shaped BM25."""
+    if pf_df is None:
+        return no_hits(engine.spark)
+    score = engine.bm25(F.lit(idf_total), F.col("pf"), F.col("dl"))
+    return rank_topk(pf_df.select("doc_id", score.cast("float").alias("score")), k)
+
+
+def phrase_match_pf(
+    engine: SearchEngine, phrase: str, slop: int = 0
+) -> tuple[DataFrame | None, float]:
+    """``(pf_df, idf_total)``: (doc_id, pf, dl) for every doc matching the
+    phrase within ``slop``, and the phrase's summed idf.
+
+    ``pf_df`` is None when a phrase term is absent from the index (no doc
+    can match). The building block for :func:`phrase_topk`, the
+    compiler's phrase leaves and the edismax ``pf`` phrase boost.
+    """
+    terms = engine.analyze_query(phrase)
+    return _match_pf(engine, terms, _make_verify(terms, slop))
 
 
 def near_topk(engine: SearchEngine, words: list[str], window: int, k: int = 10) -> DataFrame:
@@ -193,30 +210,8 @@ def near_topk(engine: SearchEngine, words: list[str], window: int, k: int = 10) 
     positions, any order. pf = distinct anchor positions (see
     :func:`_make_near_verify`); scoring = the phrase shape (idf summed
     per term instance, tf := pf)."""
-    if not engine.config.with_positions:
-        raise ValueError("index built without positions; rebuild with with_positions=True")
-    empty = local_frame(engine.spark, [], "doc_id long, score float")
     terms = [t for w in words for t in engine.analyze_query(w)]
-    if not terms:
-        return empty
-    uniq = sorted(set(terms))
-    stats = engine._term_stats(uniq)
-    if len(stats) < len(uniq):
-        return empty
-    idf_by_term = {s.term: s.idf for s in stats}
-    idf_total = float(sum(idf_by_term[t] for t in terms))
-    pf_df = occurrences(engine, uniq).repartition("doc_id").mapInPandas(
-        _make_near_verify(terms, window), schema=_PF_SCHEMA
-    )
-    pf, dl = F.col("pf").cast("double"), F.col("dl").cast("double")
-    score = F.lit(idf_total) * pf / (
-        pf + F.lit(engine.k1) * (F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl))
-    )
-    return (
-        pf_df.select("doc_id", score.cast("float").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _phrase_topk(engine, *_match_pf(engine, terms, _make_near_verify(terms, window)), k)
 
 
 def complex_phrase_pf(
@@ -275,8 +270,6 @@ def complex_phrase_pf(
         .collect()
     )
     union_df = {r["pos_ord"]: r["df"] for r in df_rows}
-    import math
-
     idf_total = 0.0
     for i in range(len(per_pos)):
         dfi = union_df.get(i, 0)
@@ -285,9 +278,7 @@ def complex_phrase_pf(
     # rewrite terms to position markers so the verifier treats any
     # expansion of ordinal i as "term i"
     markers = [f"\x00{i}" for i in range(len(per_pos))]
-    mapping = F.create_map(
-        *[x for i, ts in enumerate(per_pos) for t in ts for x in (F.lit(t), F.lit(markers[i]))]
-    )
+    # an array/filter, not a term→marker map: a term may match several ordinals
     marked = flat.select(
         F.explode(
             F.filter(
@@ -300,7 +291,6 @@ def complex_phrase_pf(
         ).alias("term"),
         "doc_id", "pos", "dl",
     )
-    del mapping  # the array/filter form handles terms shared by ordinals
     pf_df = marked.repartition("doc_id").mapInPandas(
         _make_verify(markers, slop), schema=_PF_SCHEMA
     )
@@ -312,39 +302,11 @@ def complex_phrase_topk(
 ) -> DataFrame:
     """Top-k for a wildcard-bearing phrase (ComplexPhraseQParserPlugin /
     SurroundQParserPlugin proximity surface)."""
-    empty = local_frame(engine.spark, [], "doc_id long, score float")
-    pf_df, idf_total = complex_phrase_pf(engine, phrase, slop=slop, max_expansions=max_expansions)
-    if pf_df is None:
-        return empty
-    pf, dl = F.col("pf").cast("double"), F.col("dl").cast("double")
-    score = F.lit(idf_total) * pf / (
-        pf + F.lit(engine.k1) * (F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl))
-    )
-    return (
-        pf_df.select("doc_id", score.cast("float").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    pf = complex_phrase_pf(engine, phrase, slop=slop, max_expansions=max_expansions)
+    return _phrase_topk(engine, *pf, k)
 
 
 def phrase_topk(engine: SearchEngine, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
     """Top-k for a phrase query ``"…"~slop`` (slop=0: exact adjacency).
     See module docstring for the frozen scoring semantics."""
-    empty = local_frame(engine.spark, [], "doc_id long, score float")
-    pf_df = phrase_match_pf(engine, phrase, slop=slop)
-    if pf_df is None:
-        return empty
-    terms = engine.analyze_query(phrase)
-    stats = engine._term_stats(sorted(set(terms)))
-    idf_by_term = {s.term: s.idf for s in stats}
-    idf_total = float(sum(idf_by_term[t] for t in terms))  # per term INSTANCE
-
-    pf, dl = F.col("pf").cast("double"), F.col("dl").cast("double")
-    score = F.lit(idf_total) * pf / (
-        pf + F.lit(engine.k1) * (F.lit(1.0 - engine.b) + F.lit(engine.b) * dl / F.lit(engine.avgdl))
-    )
-    return (
-        pf_df.select("doc_id", score.cast("float").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _phrase_topk(engine, *phrase_match_pf(engine, phrase, slop=slop), k)

@@ -4,17 +4,32 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from solr_spark.index.codec import (
-    delta_varint_decode,
-    delta_varint_encode,
+    positions_decode,
     varint_decode,
     varint_encode,
+    varint_encode_segmented,
 )
+
+
+def _gap_encode(runs: list[list[int]]) -> tuple[np.ndarray, np.ndarray]:
+    """The exchange packer's framing: each run's first value absolute, the
+    rest as gaps; returns (flat gaps, run start indexes)."""
+    flat = np.array([v for r in runs for v in r], dtype=np.int64)
+    starts = np.cumsum([0] + [len(r) for r in runs[:-1]]).astype(np.int64)
+    gaps = np.empty(len(flat), dtype=np.int64)
+    if len(flat):
+        gaps[0] = flat[0]
+        gaps[1:] = flat[1:] - flat[:-1]
+        gaps[starts] = flat[starts]
+    return gaps, starts
 
 
 def test_empty():
     assert varint_encode(np.array([], dtype=np.uint64)) == b""
     assert len(varint_decode(b"")) == 0
-    assert delta_varint_encode(np.array([], dtype=np.int64)) == b""
+    buf, offs = varint_encode_segmented(np.array([], dtype=np.int64), np.array([], dtype=np.int64))
+    assert buf == b"" and list(offs) == [0]
+    assert len(positions_decode(b"", np.array([], dtype=np.int64))) == 0
 
 
 def test_known_values():
@@ -25,26 +40,52 @@ def test_known_values():
     assert len(varint_encode(np.array([128]))) == 2
 
 
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
-@settings(max_examples=200, deadline=None)
-def test_varint_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert list(varint_decode(varint_encode(arr))) == vals
+_runs = st.lists(
+    st.lists(st.integers(min_value=0, max_value=2**63 - 1), min_size=1, max_size=60),
+    max_size=20,
+)
 
 
-@given(st.sets(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=400))
+@given(_runs)
 @settings(max_examples=200, deadline=None)
-def test_delta_roundtrip(vals):
-    arr = np.array(sorted(vals), dtype=np.int64)
-    out = delta_varint_decode(delta_varint_encode(arr))
-    assert list(out.astype(np.int64)) == sorted(vals)
+def test_varint_roundtrip(runs):
+    """Segmented encode → varint_decode (the tf/dl/payload streams): the
+    whole buffer decodes to the concatenation and each framed segment
+    decodes to its own run."""
+    flat = np.array([v for r in runs for v in r], dtype=np.uint64)
+    starts = np.cumsum([0] + [len(r) for r in runs[:-1]]).astype(np.int64)
+    buf, offs = varint_encode_segmented(flat, starts[: len(runs)])
+    assert list(varint_decode(buf)) == [v for r in runs for v in r]
+    assert len(offs) == len(runs) + 1 and offs[-1] == len(buf)
+    for r, lo, hi in zip(runs, offs[:-1], offs[1:]):
+        assert list(varint_decode(buf[lo:hi])) == r
+
+
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=60),
+        max_size=20,
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_delta_roundtrip(runs):
+    """Per-run gap coding → segmented encode → positions_decode (the doc
+    id and position streams): every run restarts from its absolute first
+    value, so the decode must reset its running sum at each run."""
+    runs = [sorted(r) for r in runs]
+    gaps, starts = _gap_encode(runs)
+    buf, _ = varint_encode_segmented(gaps, starts)
+    lens = np.array([len(r) for r in runs], dtype=np.int64)
+    out = positions_decode(buf, lens)
+    assert list(out.astype(np.int64)) == [v for r in runs for v in r]
 
 
 def test_delta_compression_wins():
     # dense sorted ids: gaps are tiny → ~1 byte per id regardless of magnitude
     ids = np.arange(10**9, 10**9 + 10_000, dtype=np.int64)
-    enc = delta_varint_encode(ids)
-    assert len(enc) < 10_000 + 10  # first abs value + 1 byte per gap
+    gaps, starts = _gap_encode([ids.tolist()])
+    buf, _ = varint_encode_segmented(gaps, starts)
+    assert len(buf) < 10_000 + 10  # first abs value + 1 byte per gap
 
 
 def test_vectorized_block_encoder_byte_identical_to_reference():

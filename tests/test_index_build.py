@@ -506,42 +506,55 @@ def test_hot_term_spans_multiple_shuffle_partitions(spark, index, test_config):
     assert split_groups == 0
 
 
-def test_run_packed_exchange_byte_identical_to_row_exchange(spark, index, test_config):
-    """The blocks exchange ships per-(term, salt) posting RUNS (one row
-    per mapper pack region per group) and the reducer concatenates
-    disjoint doc ranges instead of sorting per-posting rows. The packed
-    path must encode byte-identical blocks to the row-level exchange —
-    on the REAL build output, positions included."""
-    from solr_spark.index.build import (
-        _BLOCK_SCHEMA,
-        _blocks_shuffle_input,
-        _blocks_shuffle_input_rows,
-        _encode_stream_arrow,
-        _encode_stream_runs,
-    )
+def test_run_packed_exchange_matches_reference_encoder(spark, index, test_config, tmp_path):
+    """The written blocks — run packing, the (term_bucket, salt) exchange,
+    the reducer's run concat + segmented decode and the vectorized block
+    cut — equal the independent per-block reference encoder run over the
+    same salted postings sorted by (term, salt, doc_id). On the shared
+    test index (positions) and on a small with_payloads build."""
+    from solr_spark.index.build import _BLOCK_COLS, _encode_group_rows, _salted_postings
 
-    segments = spark.read.parquet(os.path.join(index.dir, "segments"))
-    cfg = test_config
-    new = (
-        _blocks_shuffle_input(segments, index.term_dict, cfg)
-        .mapInArrow(
-            _encode_stream_runs(cfg.block_size, cfg.with_positions, cfg.with_payloads),
-            schema=_BLOCK_SCHEMA,
-        )
+    pcfg = IndexConfig(
+        block_size=8, hot_df_threshold=100, n_salts=2, n_term_buckets=4,
+        with_payloads=True,
     )
-    old = (
-        _blocks_shuffle_input_rows(segments, index.term_dict, cfg)
-        .mapInArrow(
-            _encode_stream_arrow(cfg.block_size, cfg.with_positions, cfg.with_payloads),
-            schema=_BLOCK_SCHEMA,
+    pidx = build_index(spark, synth_corpus(spark, 300), str(tmp_path / "pidx"), pcfg)
+    for idx, cfg in [(index, test_config), (pidx, pcfg)]:
+        postings = (
+            _salted_postings(idx.segments, idx.term_dict, cfg)
+            .toPandas()
+            .sort_values(["term", "salt", "doc_id"], kind="stable")
+            .reset_index(drop=True)
         )
-    )
-    key = lambda r: (r["term"], r["salt"], r["block_no"])  # noqa: E731
-    a = sorted(new.collect(), key=key)
-    b = sorted(old.collect(), key=key)
-    assert len(a) == len(b) and len(a) > 0
-    for ra, rb in zip(a, b):
-        assert ra == rb
+        ref = _encode_group_rows(postings, cfg.block_size, cfg.with_positions, cfg.with_payloads)
+        key = lambda r: (r["term"], r["salt"], r["block_no"])  # noqa: E731
+        want = sorted(ref.to_dict("records"), key=key)
+        got = sorted(
+            (r.asDict() for r in idx.blocks.select(*_BLOCK_COLS).collect()), key=key
+        )
+        assert len(got) == len(want) and len(got) > 0
+        assert any(r["salt"] > 0 for r in got)  # hot-term salting exercised
+        for g, w in zip(got, want):
+            assert g == w, (g["term"], g["salt"], g["block_no"])
+
+
+def test_old_format_index_rejected_at_open(spark, index, tmp_path):
+    """A directory written before the int-array block format (v3) cannot
+    be queried — its blocks lack doc_offsets — so opening it fails with
+    a rebuild hint instead of deep inside a later Spark query."""
+    from solr_spark.index.build import InvertedIndex
+
+    old = str(tmp_path / "v2")
+    shutil.copytree(index.dir, old)
+    meta_path = os.path.join(old, "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["config"]["format_version"] = 2
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        InvertedIndex(spark, old)
+    assert InvertedIndex(spark, index.dir).config.format_version == 3
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

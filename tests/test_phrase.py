@@ -98,7 +98,7 @@ def test_phrase_slop_matches_python_oracle(engine, oracle_corpus):
 
     for phrase, slop in [("import os", 2), ("def return", 3), ("import os", 0)]:
         exp = _python_phrase_pf_slop(oracle_corpus, phrase, slop)
-        got = {r["doc_id"]: r["pf"] for r in phrase_match_pf(engine, phrase, slop=slop).collect()}
+        got = {r["doc_id"]: r["pf"] for r in phrase_match_pf(engine, phrase, slop=slop)[0].collect()}
         assert got == exp, (phrase, slop)
 
 

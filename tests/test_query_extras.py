@@ -292,47 +292,3 @@ def test_wordbreak_split_and_combine(engine, index):
     assert qx.wordbreak_combine(engine, ["zz"], n=5).columns == [
         "pos", "word1", "word2", "combined", "df"]
     assert qx.wordbreak_split(engine, "zzq", n=5).count() == 0
-
-
-def test_filter_and_queryresult_caches(spark):
-    """filterCache / queryResultCache analogs: keyed reuse (same fq ->
-    same persisted plan, no rebuild), LRU eviction unpersists, stats
-    match Solr's admin counters; repeat query-result lookups cost zero
-    Spark jobs."""
-    from pyspark.sql import functions as F
-
-    from solr_spark.query.caches import FilterCache, QueryResultCache
-
-    df = spark.range(100).select(F.col("id").alias("doc_id"))
-    builds = {"n": 0}
-
-    def build():
-        builds["n"] += 1
-        return df.where(F.col("doc_id") % 2 == 0)
-
-    fc = FilterCache(max_size=2)
-    a = fc.get("even", build)
-    b = fc.get("even", build)
-    assert a is b and builds["n"] == 1          # reuse, not rebuild
-    assert a.storageLevel.useMemory             # actually persisted
-    fc.get("k2", lambda: df.where(F.col("doc_id") > 10))
-    fc.get("k3", lambda: df.where(F.col("doc_id") > 20))  # evicts 'even'
-    assert fc.stats()["evictions"] == 1 and fc.stats()["size"] == 2
-    c = fc.get("even", build)                   # miss again after evict
-    assert builds["n"] == 2 and c.count() == 50
-    s = fc.stats()
-    assert (s["hits"], s["misses"]) == (1, 4) and s["hitratio"] == 0.2
-    fc.clear()
-    assert fc.stats()["size"] == 0
-
-    qrc = QueryResultCache(max_size=2)
-    runs = {"n": 0}
-
-    def run():
-        runs["n"] += 1
-        return [(1, 0.5), (2, 0.4)]
-
-    assert qrc.get(("q", "OR", 10), run) == [(1, 0.5), (2, 0.4)]
-    assert qrc.get(("q", "OR", 10), run) == [(1, 0.5), (2, 0.4)]
-    assert runs["n"] == 1                       # second lookup: no run
-    assert qrc.stats()["hitratio"] == 0.5
