@@ -13,7 +13,9 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    docIDs + compositeId shard routing, ``CompositeIdRouter.java:81``),
    tokenization (analysis chain), content sha256, doc length.
 2. ``segments``  — per-partition postings: (term, doc_id, tf, doc_len).
-   The analog of flushed in-memory segments before merge.
+   The analog of flushed in-memory segments before merge. Stages 1 and
+   2 are one batch write (:func:`_write_batch`) into ``batch=<id>``
+   partitions: a build is batch 0, each incremental append one more.
 3. ``term_dict`` — global term dictionary: df, cf, idf, hot flag.
    The analog of Solr's distributed exact stats cache
    (``search/stats/ExactStatsCache.java:62,192``) — global by
@@ -30,9 +32,10 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    owns a whole hot posting list — the skew answer demanded by code
    corpora where ``import``/``def``/``return`` appear in most docs.
 
-Resume = "skip any stage whose manifest exists and matches the config
-hash"; kill the build between stages and re-running yields a
-bit-identical index (tested).
+Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
+incremental commit share. Resume = "skip any stage whose manifest exists
+and matches the config hash"; kill the build between stages and
+re-running yields a bit-identical index (tested).
 
 Scale notes (100 TB / 10^12 docs):
 - ONE wide shuffle in the whole build: analyze is map-only after one
@@ -79,7 +82,7 @@ from dataclasses import asdict, dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -142,19 +145,13 @@ def _manifest_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, f"_MANIFEST_{stage}.json")
 
 
-def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, extra: dict | None = None) -> dict:
-    """Per-stage lineage: per-file row counts/bytes from Parquet footers.
-
-    This is the per-partition lineage + metrics record the north rule
-    requires: each output file (= one write task / partition) is listed
-    with its row count and size, plus stage wall time and the config hash
-    that produced it.
-    """
+def _parquet_files(sdir: str) -> list[dict]:
+    """(file, rows, bytes) of every Parquet file under ``sdir``, the row
+    counts read from the file footers."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
-    sdir = _stage_dir(out_dir, stage)
     paths = []
     for root, _dirs, names in os.walk(sdir):
         for n in sorted(names):
@@ -171,7 +168,19 @@ def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, ex
     # footer reads are I/O-bound and independent — a serial loop here is
     # pure driver-side dead time that a cluster build would pay per stage
     with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as ex:
-        files = list(ex.map(_one, paths))
+        return list(ex.map(_one, paths))
+
+
+def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, extra: dict | None = None) -> dict:
+    """Per-stage lineage: per-file row counts/bytes from Parquet footers.
+
+    This is the per-partition lineage + metrics record the north rule
+    requires: each output file (= one write task / partition) is listed
+    with its row count and size, plus stage wall time and the config hash
+    that produced it. Written aside and renamed into place, so a reader
+    sees the old manifest or the new one, never a truncated file.
+    """
+    files = _parquet_files(_stage_dir(out_dir, stage))
     manifest = {
         "stage": stage,
         "config_hash": config.config_hash(),
@@ -182,18 +191,24 @@ def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, ex
         "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         **(extra or {}),
     }
-    with open(_manifest_path(out_dir, stage), "w") as f:
+    path = _manifest_path(out_dir, stage)
+    with open(path + ".tmp", "w") as f:
         json.dump(manifest, f, indent=1)
+    os.replace(path + ".tmp", path)
     return manifest
 
 
-def _stage_done(out_dir: str, stage: str, config: IndexConfig) -> bool:
+def _read_manifest(out_dir: str, stage: str) -> dict | None:
     p = _manifest_path(out_dir, stage)
     if not os.path.exists(p):
-        return False
+        return None
     with open(p) as f:
-        m = json.load(f)
-    return m.get("config_hash") == config.config_hash()
+        return json.load(f)
+
+
+def _stage_done(out_dir: str, stage: str, config: IndexConfig) -> bool:
+    m = _read_manifest(out_dir, stage)
+    return m is not None and m.get("config_hash") == config.config_hash()
 
 
 def _clear_stage(out_dir: str, stage: str) -> None:
@@ -303,34 +318,53 @@ def analyze_docs(with_ids: DataFrame, config: IndexConfig, text_col: str) -> Dat
     )
 
 
-def _stage_analyze_and_segments(
-    spark: SparkSession,
+def _batch_ids(out_dir: str) -> list[int]:
+    """Ids of the ``batch=<id>`` partitions under ``segments/``, sorted."""
+    sdir = _stage_dir(out_dir, "segments")
+    if not os.path.isdir(sdir):
+        return []
+    return sorted(int(n.split("=", 1)[1]) for n in os.listdir(sdir) if n.startswith("batch="))
+
+
+def _write_batch(
     corpus_df: DataFrame,
     out_dir: str,
     config: IndexConfig,
     text_col: str,
     id_col: str | None,
     sort_cols: list[str],
+    batch_id: int,
+    first_doc_id: int,
 ) -> None:
-    """Fused analyze+segments: the tokens column — the build's largest
-    intermediate — never hits disk OR the block-manager cache. Each of
-    the two consumers (doc registry write, per-doc postings write)
-    recomputes tokenization from the id-bearing frame: tokenize is a
-    cheap map-side JVM pass (~6% of the unit, measured), while caching
-    the tokenized corpus costs an O(total tokens) columnar cache fill
-    that is BOTH slower at bench scale (interleaved A/B: cached 7.6s vs
-    recompute 6.6s at 20k docs) and a non-starter at 100 TB, where the
-    tokenized corpus cannot live in executor memory. Determinism is
-    anchored one level down: rank-assigned doc ids are frozen by the
-    persisted frame inside ``assign_doc_ids`` (or come from ``id_col``),
-    so both recomputes see identical ids (outputs verified
-    checksum-identical against the cached formulation). That frame is
-    the only cache this stage makes, and the only one it releases."""
+    """Stages 1+2 for one batch, the one write of both writers: doc ids
+    (``id_col``, else ranks over ``sort_cols`` starting at
+    ``first_doc_id``) → :func:`analyze_docs` → the doc registry and the
+    per-doc postings, each into its stage's ``batch=<id>`` partition with
+    overwrite semantics (a re-delivered batch replaces itself whole).
+
+    The tokens column — the largest intermediate — never hits disk OR
+    the block-manager cache. Each of the two writes recomputes
+    tokenization from the id-bearing frame: tokenize is a cheap map-side
+    JVM pass (~6% of the unit, measured), while caching the tokenized
+    corpus costs an O(total tokens) columnar cache fill that is BOTH
+    slower at bench scale (interleaved A/B: cached 7.6s vs recompute 6.6s
+    at 20k docs) and a non-starter at 100 TB, where the tokenized corpus
+    cannot live in executor memory. Determinism is anchored one level
+    down: rank-assigned doc ids are frozen by the persisted frame inside
+    ``assign_doc_ids`` (or come from ``id_col``), so both recomputes see
+    identical ids (outputs verified checksum-identical against the cached
+    formulation). That frame is the only cache this makes, and the only
+    one it releases."""
     ids, held = with_doc_ids(corpus_df, id_col, sort_cols)
+    if id_col is None and first_doc_id:
+        ids = ids.withColumn("doc_id", F.col("doc_id") + F.lit(first_doc_id))
     analyzed = analyze_docs(ids, config, text_col)
-    analyzed.drop("tokens").write.mode("overwrite").parquet(_stage_dir(out_dir, "analyzed"))
+    sub = f"batch={batch_id}"
+    analyzed.drop("tokens").write.mode("overwrite").parquet(
+        os.path.join(_stage_dir(out_dir, "analyzed"), sub)
+    )
     build_postings(analyzed, config).write.mode("overwrite").parquet(
-        _stage_dir(out_dir, "segments")
+        os.path.join(_stage_dir(out_dir, "segments"), sub)
     )
     if held is not None:
         held.unpersist()
@@ -925,6 +959,13 @@ def _encode_stream_runs(block_size: int, with_positions: bool, with_payloads: bo
     return enc
 
 
+def _term_bucket(config: IndexConfig) -> Column:
+    """``pmod(xxhash64(term), n_term_buckets)``: the blocks' directory
+    partition, and the unit an incremental commit rewrites
+    (``SearchEngine._term_buckets`` is its Python mirror)."""
+    return F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
+
+
 def _salted_postings(
     segments: DataFrame,
     term_dict: DataFrame,
@@ -952,9 +993,7 @@ def _salted_postings(
         "salt",
         F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
     ).drop("_hot")
-    p = p.withColumn(
-        "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-    )
+    p = p.withColumn("term_bucket", _term_bucket(config))
     if only_buckets is not None:
         p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
     cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
@@ -1027,9 +1066,7 @@ def _stage_blocks(
             _encode_stream_runs(config.block_size, config.with_positions, config.with_payloads),
             schema=_BLOCK_SCHEMA,
         )
-        .withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
-        )
+        .withColumn("term_bucket", _term_bucket(config))
     )
     bdir = _stage_dir(out_dir, "blocks")
     # zstd, not the session's snappy: the blocks are plain int arrays (no
@@ -1083,8 +1120,8 @@ class InvertedIndex:
     @functools.cached_property
     def docs(self) -> DataFrame:
         """Doc registry (no tokens — Parquet column pruning keeps it
-        cheap). The incremental indexer's ``batch=<id>`` partition column
-        is an ingestion detail, dropped here."""
+        cheap). The ``batch=<id>`` partition column is an ingestion
+        detail, dropped here."""
         return (
             self.spark.read.parquet(_stage_dir(self.dir, "analyzed"))
             .drop("tokens")
@@ -1115,13 +1152,8 @@ class InvertedIndex:
         return InvertedIndex(self.spark, self.dir)
 
     def manifests(self) -> dict[str, dict]:
-        out = {}
-        for s in _STAGES:
-            p = _manifest_path(self.dir, s)
-            if os.path.exists(p):
-                with open(p) as f:
-                    out[s] = json.load(f)
-        return out
+        ms = {s: _read_manifest(self.dir, s) for s in _STAGES}
+        return {s: m for s, m in ms.items() if m is not None}
 
     @property
     def n_docs(self) -> int:
@@ -1168,24 +1200,45 @@ def build_index(
         _clear_stage(out_dir, "analyzed")
         _clear_stage(out_dir, "segments")
         t0 = time.time()
-        _stage_analyze_and_segments(
-            spark, corpus_df, out_dir, config, text_col, id_col, sort_cols
-        )
+        _write_batch(corpus_df, out_dir, config, text_col, id_col, sort_cols, 0, 0)
         _write_manifest(out_dir, "analyzed", config, t0)
         _write_manifest(out_dir, "segments", config, t0)
+    _merge(spark, out_dir, config, None, resume)
+    return InvertedIndex(spark, out_dir)
 
-    stage_fns = {
-        "term_dict": lambda: _stage_term_dict(spark, out_dir, config),
-        "blocks": lambda: _stage_blocks(spark, out_dir, config),
-    }
-    for stage in ("term_dict", "blocks"):
+
+def _merge(
+    spark: SparkSession,
+    out_dir: str,
+    config: IndexConfig,
+    only_buckets: list[int] | None,
+    resume: bool,
+) -> None:
+    """Stages 3+4, the one merge step of both writers: term_dict (global
+    stats always refresh) then blocks — every bucket, or only
+    ``only_buckets`` — each followed by its manifest. The blocks manifest
+    records the batch ids its blocks cover (``batches``): the commit
+    record an incremental commit reads back. With ``resume`` a stage
+    whose manifest matches the config hash is skipped. Missing
+    analyzed/segments manifests are written first (an indexer's first
+    commit), so the directory reads as a complete build."""
+    for stage in ("analyzed", "segments"):
+        if _read_manifest(out_dir, stage) is None:
+            _write_manifest(out_dir, stage, config, time.time())
+    for stage, fn, extra in (
+        ("term_dict", lambda: _stage_term_dict(spark, out_dir, config), None),
+        ("blocks", lambda: _stage_blocks(spark, out_dir, config, only_buckets),
+         {"batches": _batch_ids(out_dir)}),
+    ):
         if resume and _stage_done(out_dir, stage, config):
             continue
-        _clear_stage(out_dir, stage)
+        # a changed-bucket rewrite keeps the other buckets and, until it
+        # completes, the previous commit record
+        if stage == "term_dict" or only_buckets is None:
+            _clear_stage(out_dir, stage)
         t0 = time.time()
-        stage_fns[stage]()
-        _write_manifest(out_dir, stage, config, t0)
-    return InvertedIndex(spark, out_dir)
+        fn()
+        _write_manifest(out_dir, stage, config, t0, extra)
 
 
 # ---------------------------------------------------------------------------

@@ -30,10 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 # stage name -> partition columns (mirrors the directory layout the
-# parquet build writes; identity transforms only)
+# parquet build writes: docs and postings in ``batch=<id>`` partitions —
+# 0 for build_index, one per incremental append — and blocks by term
+# bucket; identity transforms only)
 STAGE_PARTITIONING: dict[str, list[str]] = {
-    "analyzed": [],
-    "segments": [],
+    "analyzed": ["batch"],
+    "segments": ["batch"],
     "term_dict": [],
     "term_dict_rev": [],
     "blocks": ["term_bucket"],

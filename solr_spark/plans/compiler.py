@@ -45,7 +45,6 @@ from solr_spark.query.parser import (
     ExistsQ,
     FuzzyQ,
     MatchAllQ,
-    ParsedQuery,
     PhraseQ,
     RangeQ,
     RegexQ,
@@ -340,20 +339,13 @@ def _spec_to_column(spec, flags: Column) -> Column:
 
 def execute_query(
     engine: SearchEngine,
-    query: str | ParsedQuery,
+    query: str,
     k: int = 10,
     default_mode: str = "OR",
     max_expansions: int = 50,
 ) -> DataFrame:
     """Compile and run a lucene-syntax query. Returns (doc_id, score f32)
     ranked (score desc, doc_id asc), at most k rows."""
-    if isinstance(query, ParsedQuery):  # legacy callers: rebuild a string
-        parts = list(query.terms) + [f'"{p}"' for p in query.phrases]
-        parts += [f"-{t}" for t in query.prohibited]
-        parts += [f"{f}:{v}" for f, v in query.filters.items()]
-        parts += [f"{t}*" for t in query.prefix_terms]
-        query = (" AND " if query.mode == "AND" else " ").join(parts)
-        default_mode = "OR"
     return execute_ast(
         engine, parse_lucene(query, default_mode), k=k, max_expansions=max_expansions
     )

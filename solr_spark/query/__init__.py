@@ -1,2 +1,1 @@
 from solr_spark.query.engine import SearchEngine  # noqa: F401
-from solr_spark.query.parser import parse_query, ParsedQuery  # noqa: F401

@@ -25,10 +25,8 @@ handling: we use a conventional precedence grammar (NOT > AND > OR,
 implicit operator = q.op), and a multi-token analyzed word compiles to a
 conjunction of its tokens (autoGeneratePhraseQueries=false analog).
 
-Two entry points: :func:`parse_lucene` (full AST, executed by
-``plans.compiler.execute_query``) and the legacy flat
-:func:`parse_query` → :class:`ParsedQuery` (kept for the simple
-dismax-ish callers and tests).
+The entry point is :func:`parse_lucene`: query string → AST, executed
+by ``plans.compiler.execute_query``.
 """
 
 from __future__ import annotations
@@ -36,83 +34,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-_TOKEN_RE = re.compile(
-    r"""
-    \s*(?:
-        (?P<quoted>"[^"]*")
-      | (?P<op>AND|OR|NOT)\b
-      | (?P<plus>\+)
-      | (?P<minus>-)
-      | (?P<fielded>[A-Za-z_][A-Za-z0-9_]*:[^\s"]+)
-      | (?P<word>[^\s"+-][^\s"]*)
-    )
-    """,
-    re.VERBOSE,
-)
-
-# metadata columns addressable as fielded filters (fq analog)
-META_FIELDS = {"lang", "repo", "path", "commit"}
-
-
-@dataclass
-class ParsedQuery:
-    terms: list[str] = field(default_factory=list)          # should/must terms (raw words)
-    phrases: list[str] = field(default_factory=list)        # quoted phrases
-    prohibited: list[str] = field(default_factory=list)     # NOT / -terms
-    filters: dict[str, str] = field(default_factory=dict)   # metadata field → value
-    prefix_terms: list[str] = field(default_factory=list)   # trailing-* terms
-    mode: str = "OR"                                        # OR | AND
-
-
-def parse_query(q: str, default_mode: str = "OR") -> ParsedQuery:
-    out = ParsedQuery(mode=default_mode)
-    pending_minus = False
-    saw_and = False
-    pos = 0
-    while pos < len(q):
-        m = _TOKEN_RE.match(q, pos)
-        if not m or m.end() == pos:
-            pos += 1
-            continue
-        pos = m.end()
-        if m.group("quoted") is not None:
-            out.phrases.append(m.group("quoted").strip('"'))
-        elif m.group("op"):
-            op = m.group("op")
-            if op == "AND":
-                saw_and = True
-            elif op == "NOT":
-                pending_minus = True
-        elif m.group("plus"):
-            saw_and = True  # +term ⇒ conjunctive intent in v1
-        elif m.group("minus"):
-            pending_minus = True
-        elif m.group("fielded"):
-            fname, _, fval = m.group("fielded").partition(":")
-            if fname in META_FIELDS:
-                out.filters[fname] = fval
-            else:  # unknown field → treat value as a term
-                _add_word(out, fval, pending_minus)
-                pending_minus = False
-        elif m.group("word"):
-            _add_word(out, m.group("word"), pending_minus)
-            pending_minus = False
-    if saw_and:
-        out.mode = "AND"
-    return out
-
-
-def _add_word(out: ParsedQuery, w: str, negated: bool) -> None:
-    if negated:
-        out.prohibited.append(w)
-    elif w.endswith("*") and len(w) > 1:
-        out.prefix_terms.append(w[:-1])
-    else:
-        out.terms.append(w)
-
-
 # ===========================================================================
-# v2: full boolean AST (see module docstring)
+# AST
 # ===========================================================================
 
 

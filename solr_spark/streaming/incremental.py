@@ -17,13 +17,15 @@ Spark's batch+streaming model:
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
 - delete-by-id / delete-by-query (``update/UpdateLog.java:452``,
   ``solrj-streaming/.../io/stream/DeleteStream.java``) →
-  :meth:`delete_by_ids` / :meth:`delete_by_query` record tombstones;
+  :meth:`delete_by_ids` / :meth:`delete_by_query` record tombstones,
+  each deleted doc with the term buckets of its postings;
   :meth:`commit` applies them (Lucene applies deletes at merge): the
   analyzed/segments stages are compacted to the surviving docs and the
   affected term buckets are re-encoded.
 - hard commit (flush + merge) → :meth:`IncrementalIndexer.commit`
-  rebuilds term_dict (one aggregation — global stats N/avgdl/df/idf
-  always refresh) and re-encodes ONLY the term buckets whose postings
+  runs the build's own merge step (``build._merge``): it rebuilds
+  term_dict (one aggregation — global stats N/avgdl/df/idf always
+  refresh) and re-encodes ONLY the term buckets whose postings
   changed since the last commit (new batches' terms + deleted docs'
   terms) — the TieredMergePolicy analog. This is sound because block
   CONTENT is stats-independent (build.py ``_BLOCK_SCHEMA``: blocks
@@ -32,21 +34,19 @@ Spark's batch+streaming model:
   build that appends B1..Bn, deletes D and commits is
   **query-identical** to a batch build over the surviving corpus
   (oracle-gated against DuckDB).
-- tlog replay / recovery (``UpdateLog.java:178``) → the stage manifests
-  + ``commit_state.json``: a killed commit leaves the previous
-  manifests intact and re-running ``commit()`` redoes the merge stages.
-- a directory written by ``build_index`` holds its docs and postings as
-  unpartitioned files, which a reader of ``batch=<id>`` partitions does
-  not see; the indexer moves them into a ``batch=<id>`` partition of
-  their own (already merged) before it touches the directory.
+- tlog replay / recovery (``UpdateLog.java:178``) → the stage
+  manifests. The blocks manifest is the commit record: it lists the
+  batches its blocks cover, and it travels with snapshots. Tombstones
+  are removed only after it is written, so re-running ``commit()``
+  after a killed commit redoes it, deletes included.
+- ``build_index`` writes its docs as batch 0 of the same layout, so an
+  indexer continues a built directory as it is.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,14 +54,13 @@ from pyspark.sql import functions as F
 from solr_spark.index.build import (
     IndexConfig,
     InvertedIndex,
-    _manifest_path,
+    _batch_ids,
+    _merge,
+    _parquet_files,
+    _read_manifest,
     _stage_dir,
-    _stage_term_dict,
-    _stage_blocks,
-    _write_manifest,
-    analyze_docs,
-    build_postings,
-    with_doc_ids,
+    _term_bucket,
+    _write_batch,
 )
 from solr_spark.session import local_frame
 
@@ -73,38 +72,16 @@ class IncrementalIndexer:
         self.spark = spark
         self.dir = out_dir
         self.config = config or IndexConfig()
+        for stage in ("analyzed", "segments"):
+            sdir = _stage_dir(out_dir, stage)
+            if os.path.isdir(sdir) and any(n.endswith(".parquet") for n in os.listdir(sdir)):
+                raise ValueError(
+                    f"{sdir} holds Parquet files outside batch=<id> partitions "
+                    "(an older build_index layout); rebuild it with "
+                    "build_index(..., resume=False)"
+                )
         os.makedirs(out_dir, exist_ok=True)
-        self._adopt_base()
         self._next_doc_id = self._read_next_doc_id()
-
-    def _adopt_base(self) -> None:
-        """Move the unpartitioned stage files of a ``build_index``
-        directory into a ``batch=<id>`` partition, recorded as merged (its
-        blocks are built). Spark's reader sees only the partitions once
-        one exists, so left in place these docs would vanish from every
-        read and from every compaction. File moves are renames; a run cut
-        short is finished by the next one."""
-        loose = {
-            stage: [
-                n for n in os.listdir(_stage_dir(self.dir, stage))
-                if n.endswith((".parquet", ".parquet.crc"))
-            ]
-            for stage in ("analyzed", "segments")
-            if os.path.isdir(_stage_dir(self.dir, stage))
-        }
-        if not any(loose.values()):
-            return
-        ids = self._batch_ids()
-        base = ids[0] - 1 if ids else 0
-        for stage, names in loose.items():
-            sdir = _stage_dir(self.dir, stage)
-            os.makedirs(os.path.join(sdir, f"batch={base}"), exist_ok=True)
-            for n in names:
-                os.replace(os.path.join(sdir, n), os.path.join(sdir, f"batch={base}", n))
-        if os.path.exists(_manifest_path(self.dir, "blocks")):
-            state = self._commit_state()
-            merged = set(state.get("merged_batches", [])) | {base}
-            self._write_commit_state({**state, "merged_batches": sorted(merged)})
 
     def _read_next_doc_id(self) -> int:
         adir = _stage_dir(self.dir, "analyzed")
@@ -112,29 +89,6 @@ class IncrementalIndexer:
             return 0
         mx = self.spark.read.parquet(adir).agg(F.max("doc_id")).collect()[0][0]
         return int(mx) + 1 if mx is not None else 0
-
-    def _batch_ids(self) -> list[int]:
-        sdir = _stage_dir(self.dir, "segments")
-        if not os.path.isdir(sdir):
-            return []
-        return sorted(
-            int(n.split("=", 1)[1])
-            for n in os.listdir(sdir)
-            if n.startswith("batch=")
-        )
-
-    def _commit_state(self) -> dict:
-        p = os.path.join(self.dir, "commit_state.json")
-        if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
-        return {}
-
-    def _write_commit_state(self, state: dict) -> None:
-        tmp = os.path.join(self.dir, "commit_state.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=1)
-        os.replace(tmp, os.path.join(self.dir, "commit_state.json"))
 
     # ------------------------------------------------------------------
     def append_batch(
@@ -154,36 +108,24 @@ class IncrementalIndexer:
         Returns the number of docs appended.
         """
         if batch_id is None:
-            ids = self._batch_ids()
+            ids = _batch_ids(self.dir)
             batch_id = (ids[-1] + 1) if ids else 0
-        with_ids, held = with_doc_ids(docs, id_col, sort_cols or ["repo", "path", "commit"])
-        if id_col is None:
-            with_ids = with_ids.withColumn("doc_id", F.col("doc_id") + F.lit(self._next_doc_id))
-        analyzed = analyze_docs(with_ids, self.config, text_col)
-        analyzed = analyzed.persist()  # one materialization feeds both writes
-        n = analyzed.count()
-        sub = f"batch={int(batch_id)}"
-        # overwrite per-batch directories: re-delivery replaces, never dupes
-        analyzed.drop("tokens").write.mode("overwrite").parquet(
-            os.path.join(_stage_dir(self.dir, "analyzed"), sub)
+        _write_batch(
+            docs, self.dir, self.config, text_col, id_col,
+            sort_cols or ["repo", "path", "commit"], int(batch_id), self._next_doc_id,
         )
-        build_postings(analyzed, self.config).write.mode("overwrite").parquet(
-            os.path.join(_stage_dir(self.dir, "segments"), sub)
-        )
-        analyzed.unpersist()
-        if held is not None:
-            held.unpersist()
+        bdir = os.path.join(_stage_dir(self.dir, "analyzed"), f"batch={int(batch_id)}")
+        n = sum(f["rows"] for f in _parquet_files(bdir))
         if id_col is None:
-            self._next_doc_id += int(n)
+            self._next_doc_id += n
         else:  # explicit ids may exceed the counter — refresh from disk
             self._next_doc_id = self._read_next_doc_id()
-        return int(n)
+        return n
 
     # ------------------------------------------------------------------
     def delete_by_ids(self, doc_ids: list[int]) -> int:
         """Record delete-by-id tombstones (applied at the next commit)."""
-        df = local_frame(self.spark, [(int(d),) for d in doc_ids], "doc_id long")
-        df.write.mode("append").parquet(_stage_dir(self.dir, "tombstones"))
+        self._record_deletes(local_frame(self.spark, [(int(d),) for d in doc_ids], "doc_id long"))
         return len(doc_ids)
 
     def delete_by_query(self, pred: Column) -> int:
@@ -191,19 +133,31 @@ class IncrementalIndexer:
         Column over the doc registry) — the deleteByQuery analog."""
         adir = _stage_dir(self.dir, "analyzed")
         matched = self.spark.read.parquet(adir).where(pred).select("doc_id").distinct()
-        matched.write.mode("append").parquet(_stage_dir(self.dir, "tombstones"))
+        self._record_deletes(matched)
         return matched.count()
+
+    def _record_deletes(self, ids: DataFrame) -> None:
+        """Append one tombstone per (deleted doc_id, term bucket of its
+        postings); a doc without postings gets a null bucket. The buckets
+        are what the commit must re-encode, kept here because the
+        commit's compaction removes the postings they are read from."""
+        segs = self.spark.read.parquet(_stage_dir(self.dir, "segments"))
+        buckets = (
+            segs.join(F.broadcast(ids), "doc_id", "left_semi")
+            .select("doc_id", _term_bucket(self.config).alias("term_bucket"))
+            .distinct()
+        )
+        ids.join(buckets, "doc_id", "left").write.mode("append").parquet(
+            _stage_dir(self.dir, "tombstones")
+        )
 
     def _tombstones(self) -> DataFrame | None:
         tdir = _stage_dir(self.dir, "tombstones")
         if not os.path.isdir(tdir) or not os.listdir(tdir):
             return None
-        return self.spark.read.parquet(tdir).select("doc_id").distinct()
+        return self.spark.read.parquet(tdir)
 
-    def _bucket_expr(self) -> Column:
-        return F.pmod(F.xxhash64("term"), F.lit(self.config.n_term_buckets)).cast("int")
-
-    def _compact_stage(self, stage: str, tomb: DataFrame) -> None:
+    def _compact_stage(self, stage: str, dead: DataFrame) -> None:
         """Rewrite a stage excluding tombstoned doc_ids (swap via rename).
 
         At corpus scale the stages would be partitioned by doc range and
@@ -211,13 +165,10 @@ class IncrementalIndexer:
         pattern (write aside, atomic rename) is the same.
         """
         src = _stage_dir(self.dir, stage)
-        df = self.spark.read.parquet(src).join(F.broadcast(tomb), "doc_id", "left_anti")
+        df = self.spark.read.parquet(src).join(F.broadcast(dead), "doc_id", "left_anti")
         tmp = src + "__compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        if "batch" in df.columns:
-            writer = writer.partitionBy("batch")
-        writer.parquet(tmp)
+        df.write.mode("overwrite").partitionBy("batch").parquet(tmp)
         old = src + "__old"
         shutil.rmtree(old, ignore_errors=True)
         os.replace(src, old)
@@ -227,56 +178,28 @@ class IncrementalIndexer:
     # ------------------------------------------------------------------
     def commit(self) -> InvertedIndex:
         """Hard commit: apply tombstones, refresh term_dict/global stats,
-        re-encode only the CHANGED term buckets (new batches' terms +
-        deleted docs' terms). First commit builds all buckets."""
-        state = self._commit_state()
-        merged = set(state.get("merged_batches", []))
-        present = self._batch_ids()
-        new_batches = [b for b in present if b not in merged]
-        first_commit = not os.path.exists(_manifest_path(self.dir, "blocks"))
-
-        seg_dir = _stage_dir(self.dir, "segments")
-        changed: set[int] = set()
+        re-encode only the CHANGED term buckets (batches the blocks
+        manifest does not list + deleted docs' buckets). First commit
+        builds all buckets."""
+        record = _read_manifest(self.dir, "blocks")
         tomb = self._tombstones()
-        if not first_commit:
-            if new_batches:
-                segs = self.spark.read.parquet(seg_dir).where(
-                    F.col("batch").isin(new_batches)
-                )
-                changed |= {
-                    r["tb"]
-                    for r in segs.select(self._bucket_expr().alias("tb")).distinct().collect()
-                }
-            if tomb is not None:
-                dsegs = self.spark.read.parquet(seg_dir).join(
-                    F.broadcast(tomb), "doc_id", "left_semi"
-                )
-                changed |= {
-                    r["tb"]
-                    for r in dsegs.select(self._bucket_expr().alias("tb")).distinct().collect()
-                }
         if tomb is not None:
-            tomb = tomb.persist()
-            tomb.count()
-            self._compact_stage("analyzed", tomb)
-            self._compact_stage("segments", tomb)
-            tomb.unpersist()
-            shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)
-
-        only = None if first_commit else sorted(changed)
-        for stage, fn in (
-            ("term_dict", lambda: _stage_term_dict(self.spark, self.dir, self.config)),
-            ("blocks", lambda: _stage_blocks(self.spark, self.dir, self.config, only_buckets=only)),
-        ):
-            t0 = time.time()
-            fn()
-            _write_manifest(self.dir, stage, self.config, t0)
-        # analyzed/segments manifests so InvertedIndex resume logic sees a
-        # complete build
-        for stage in ("analyzed", "segments"):
-            if not os.path.exists(_manifest_path(self.dir, stage)):
-                _write_manifest(self.dir, stage, self.config, time.time())
-        self._write_commit_state({"merged_batches": sorted(set(present))})
+            dead = tomb.select("doc_id").distinct()
+            self._compact_stage("analyzed", dead)
+            self._compact_stage("segments", dead)
+        only = None
+        if record is not None:
+            new = sorted(set(_batch_ids(self.dir)) - set(record.get("batches", [])))
+            changed = (
+                self.spark.read.parquet(_stage_dir(self.dir, "segments"))
+                .where(F.col("batch").isin(new))
+                .select(_term_bucket(self.config).alias("term_bucket"))
+            )
+            if tomb is not None:
+                changed = changed.union(tomb.select("term_bucket"))
+            only = sorted(r[0] for r in changed.distinct().collect() if r[0] is not None)
+        _merge(self.spark, self.dir, self.config, only, False)
+        shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)
         return InvertedIndex(self.spark, self.dir)
 
 

@@ -114,6 +114,11 @@ def test_block_bound_metadata_is_sound(index):
 def test_manifests_lineage(index):
     ms = index.manifests()
     assert set(ms) == {"analyzed", "segments", "term_dict", "blocks"}
+    # the build writes its docs and postings as batch 0, the layout an
+    # incremental append adds to, and records that the blocks cover it
+    for stage in ("analyzed", "segments"):
+        assert os.listdir(os.path.join(index.dir, stage)) == ["batch=0"]
+    assert ms["blocks"]["batches"] == [0]
     for stage, m in ms.items():
         assert m["rows"] > 0
         assert m["n_files"] == len(m["files"])
@@ -359,6 +364,7 @@ def test_iceberg_catalog_gating(spark, index):
         cat.read_stage(spark, "ice", "solr", "blocks")
     # the stage->partition map matches the parquet layout the build writes
     assert cat.STAGE_PARTITIONING["blocks"] == ["term_bucket"]
+    assert cat.STAGE_PARTITIONING["analyzed"] == cat.STAGE_PARTITIONING["segments"] == ["batch"]
 
 
 def test_murmur3_routing_golden_vectors():
@@ -555,6 +561,29 @@ def test_old_format_index_rejected_at_open(spark, index, tmp_path):
     with pytest.raises(ValueError, match="rebuild"):
         InvertedIndex(spark, old)
     assert InvertedIndex(spark, index.dir).config.format_version == 3
+
+
+def test_loose_layout_rejected_by_indexer(spark, index, tmp_path):
+    """Docs and postings outside ``batch=<id>`` partitions (the stage
+    layout of older builds) still serve queries, but an indexer refuses
+    the directory with a rebuild hint: Spark reads no loose files next to
+    the partitions an append would add."""
+    from solr_spark.index.build import InvertedIndex
+    from solr_spark.query.engine import SearchEngine
+    from solr_spark.streaming import IncrementalIndexer
+
+    old = str(tmp_path / "loose")
+    shutil.copytree(index.dir, old)
+    for stage in ("analyzed", "segments"):
+        part = os.path.join(old, stage, "batch=0")
+        for n in os.listdir(part):
+            os.replace(os.path.join(part, n), os.path.join(old, stage, n))
+        os.rmdir(part)
+    with pytest.raises(ValueError, match="rebuild"):
+        IncrementalIndexer(spark, old, index.config)
+    q = "server data"
+    assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == \
+        SearchEngine(index).topk(q, k=10).collect()
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

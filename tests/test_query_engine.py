@@ -5,7 +5,6 @@ import numpy as np
 import pytest
 
 from solr_spark.query.engine import SearchEngine
-from solr_spark.query.parser import parse_query
 from pyspark.sql.functions import col as F_col
 from solr_spark.queryset import make_query_set
 
@@ -189,18 +188,6 @@ def test_randomized_queries_property(engine, oracle, index):
         q = " ".join(terms[i] for i in rng.integers(0, len(terms), n))
         mode = "AND" if rng.random() < 0.5 else "OR"
         _assert_rank_identical(engine, oracle, q, mode)
-
-
-def test_parser_basics():
-    p = parse_query("foo bar")
-    assert p.terms == ["foo", "bar"] and p.mode == "OR"
-    p = parse_query("foo AND bar")
-    assert p.mode == "AND"
-    p = parse_query('lang:python "exact phrase" -bad baz*')
-    assert p.filters == {"lang": "python"}
-    assert p.phrases == ["exact phrase"]
-    assert p.prohibited == ["bad"]
-    assert p.prefix_terms == ["baz"]
 
 
 # ---------------------------------------------------------------------------

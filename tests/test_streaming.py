@@ -279,9 +279,10 @@ def test_doc_expiration_ttl(spark):
 
 
 def test_commit_on_build_index_dir_keeps_base_docs(spark, test_config):
-    """An indexer opened on a directory written by ``build_index`` (base
-    docs in unpartitioned files) must keep those docs through append +
-    delete + commit: answers equal the oracle over the surviving docs."""
+    """An indexer opened on a directory written by ``build_index`` keeps
+    its base docs through append + delete + commit — by construction, as
+    the build writes them as batch 0 of the indexer's own layout: answers
+    equal the oracle over the surviving docs."""
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.oracle import BruteForceIndex
 
@@ -319,3 +320,58 @@ def test_append_batch_releases_its_cache(spark, test_config):
     before = set(jsc.getPersistentRDDs().keySet().toArray())
     IncrementalIndexer(spark, d, test_config).append_batch(synth_corpus(spark, 80))
     assert set(jsc.getPersistentRDDs().keySet().toArray()) <= before
+
+
+def test_killed_commit_keeps_its_deletes(spark, test_config, monkeypatch):
+    """A commit killed after it compacted the deleted docs away but
+    before it re-encoded their blocks must, when re-run, still drop
+    their postings from the blocks (commit replay includes deletes)."""
+    from solr_spark.index import build
+    from solr_spark.query.engine import decode_blocks
+
+    d = f"{BASE}/killed_commit"
+    shutil.rmtree(d, ignore_errors=True)
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(synth_corpus(spark, 200))
+    dead = [5, 17, 42]
+    terms = [r["term"] for r in inc.commit().segments.where(F.col("doc_id").isin(dead))
+             .select("term").distinct().limit(30).collect()]
+    inc.delete_by_ids(dead)
+
+    def killed(*_args, **_kwargs):
+        raise RuntimeError("killed in the blocks stage")
+
+    with monkeypatch.context() as m:
+        m.setattr(build, "_stage_blocks", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            inc.commit()
+    idx = inc.commit()  # re-run after the kill
+    assert idx.docs.where(F.col("doc_id").isin(dead)).count() == 0
+    assert decode_blocks(idx.blocks).where(F.col("doc_id").isin(dead)).count() == 0
+    hits = SearchEngine(idx).topk(" ".join(terms), k=200).collect()
+    assert hits and not {r["doc_id"] for r in hits} & set(dead)
+
+
+def test_restored_snapshot_recommits_pending_batch(spark, test_config):
+    """A snapshot taken between an append and its commit, once restored,
+    must not count that batch as merged: the next commit puts its
+    postings into the blocks."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index.build import create_snapshot, restore_snapshot
+    from solr_spark.query.engine import decode_blocks
+
+    d = f"{BASE}/snap_pending"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(240)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[:200]), id_col="doc_id")
+    inc.commit()
+    inc.append_batch(spark.createDataFrame(pdf.iloc[200:]), id_col="doc_id")
+    create_snapshot(d, "pending")
+    inc.commit()
+    restore_snapshot(d, "pending")
+    idx = inc.commit()
+    assert idx.docs.count() == 240
+    decoded = decode_blocks(idx.blocks).select("doc_id").distinct().collect()
+    assert {r["doc_id"] for r in decoded} == set(range(240))
