@@ -806,7 +806,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """append → commit → delete-by-query → commit must be
         query-identical to a batch oracle over the SURVIVING docs
         (UpdateLog.java:452 / DeleteStream.java; deletes applied at the
-        merge, second commit re-encodes only the affected term buckets)."""
+        merge, which the second commit runs over every term bucket)."""
         import shutil
 
         docs = _read(s, d, "documents")

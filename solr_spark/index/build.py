@@ -171,7 +171,7 @@ def _parquet_files(sdir: str) -> list[dict]:
         return list(ex.map(_one, paths))
 
 
-def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, extra: dict | None = None) -> dict:
+def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float) -> dict:
     """Per-stage lineage: per-file row counts/bytes from Parquet footers.
 
     This is the per-partition lineage + metrics record the north rule
@@ -189,7 +189,6 @@ def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float, ex
         "files": files,
         "wall_sec": round(time.time() - t0, 3),
         "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        **(extra or {}),
     }
     path = _manifest_path(out_dir, stage)
     with open(path + ".tmp", "w") as f:
@@ -354,7 +353,8 @@ def _write_batch(
     ``assign_doc_ids`` (or come from ``id_col``), so both recomputes see
     identical ids (outputs verified checksum-identical against the cached
     formulation). That frame is the only cache this makes, and the only
-    one it releases."""
+    one it releases. Explicit ids have no such anchor, so that path ends
+    with :func:`_check_batch`."""
     ids, held = with_doc_ids(corpus_df, id_col, sort_cols)
     if id_col is None and first_doc_id:
         ids = ids.withColumn("doc_id", F.col("doc_id") + F.lit(first_doc_id))
@@ -368,6 +368,38 @@ def _write_batch(
     )
     if held is not None:
         held.unpersist()
+    if id_col is not None:
+        _check_batch(corpus_df.sparkSession, out_dir, batch_id)
+
+
+def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
+    """Read back a batch written with explicit ids; if any id repeats in
+    it or is held by another batch, or its two writes saw different
+    sources, remove the batch and raise ``ValueError``. The writes agree
+    when Σ tf of its postings equals Σ doc_len of its docs (one posting
+    occurrence per token; ``doc_len > 0`` skips ``size(null)`` = −1)."""
+    sub = f"batch={batch_id}"
+    mine = F.col("batch") == batch_id
+    per_id = (
+        spark.read.parquet(_stage_dir(out_dir, "analyzed"))
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n"),
+            F.max(mine.cast("int")).alias("mine"),
+            F.sum(F.when(mine & (F.col("doc_len") > 0), F.col("doc_len"))).alias("dl"),
+        )
+        .where("mine = 1")
+    )
+    dup, dl = per_id.agg(F.sum((F.col("n") > 1).cast("int")), F.sum("dl")).collect()[0]
+    seg = os.path.join(_stage_dir(out_dir, "segments"), sub)
+    tf = spark.read.parquet(seg).agg(F.sum("tf")).collect()[0][0]
+    if dup or (dl or 0) != (tf or 0):
+        for stage in ("analyzed", "segments"):
+            shutil.rmtree(os.path.join(_stage_dir(out_dir, stage), sub), ignore_errors=True)
+        why = (f"{dup} of its doc ids repeat in it or are held by another batch" if dup else
+               f"its docs hold {dl or 0} tokens but its postings {tf or 0}: "
+               "the source gave its two writes different rows")
+        raise ValueError(f"{sub} rejected: {why}")
 
 
 # ---------------------------------------------------------------------------
@@ -541,9 +573,10 @@ _BLOCK_SCHEMA = T.StructType(
         # idf·tf/(tf+k1(1-b+b·dl/avgdl)) is monotonic in tf (up) and dl
         # (down), so (max_tf, min_dl) bounds every posting's impact under
         # WHATEVER the current global stats are. Storing these instead of
-        # a precomputed block_max keeps blocks immutable when N/avgdl/idf
-        # drift (incremental appends/deletes) — only buckets with changed
-        # postings ever need rewriting (TieredMergePolicy analog).
+        # a precomputed block_max keeps a block valid when N/avgdl/idf
+        # drift (incremental appends/deletes): a block depends only on
+        # its own postings, so blocks of postings that did not change
+        # could stay as written (a commit still re-encodes every bucket).
         T.StructField("max_tf", T.IntegerType(), False),
         T.StructField("min_dl", T.IntegerType(), False),
         # the postings, one element per doc: doc id minus min_doc_id
@@ -961,21 +994,15 @@ def _encode_stream_runs(block_size: int, with_positions: bool, with_payloads: bo
 
 def _term_bucket(config: IndexConfig) -> Column:
     """``pmod(xxhash64(term), n_term_buckets)``: the blocks' directory
-    partition, and the unit an incremental commit rewrites
-    (``SearchEngine._term_buckets`` is its Python mirror)."""
+    partition (``SearchEngine._term_buckets`` is its Python mirror)."""
     return F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
 
 
-def _salted_postings(
-    segments: DataFrame,
-    term_dict: DataFrame,
-    config: IndexConfig,
-    only_buckets: list[int] | None = None,
-) -> DataFrame:
+def _salted_postings(segments: DataFrame, term_dict: DataFrame, config: IndexConfig) -> DataFrame:
     """Posting rows (term, salt, doc_id, tf, doc_len, term_bucket[,
     positions][, payloads]) with each hot term's postings salted into
     ``n_salts`` sub-streams and every row tagged with its term_bucket —
-    the input of the blocks exchange, restricted to ``only_buckets``."""
+    the input of the blocks exchange."""
     # Salt assignment needs only HOTNESS, not the full dictionary.
     # Joining segments (O(total postings)) against the whole term_dict
     # (O(vocabulary) — billions of distinct identifiers in code at 10^12
@@ -994,8 +1021,6 @@ def _salted_postings(
         F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
     ).drop("_hot")
     p = p.withColumn("term_bucket", _term_bucket(config))
-    if only_buckets is not None:
-        p = p.where(F.col("term_bucket").isin([int(x) for x in only_buckets]))
     cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
     if config.with_positions:
         cols.append("positions")
@@ -1004,46 +1029,26 @@ def _salted_postings(
     return p.select(*cols)
 
 
-def _blocks_shuffle_input(
-    segments: DataFrame,
-    term_dict: DataFrame,
-    config: IndexConfig,
-    only_buckets: list[int] | None = None,
-) -> DataFrame:
+def _blocks_shuffle_input(segments: DataFrame, term_dict: DataFrame, config: IndexConfig) -> DataFrame:
     """The salted, bucketed, sorted shuffle input the block encoder
     consumes — factored out so tests can assert the skew property
     (a hot term's postings span >1 shuffle partition) on the real path."""
-    n_parts = config.n_term_buckets if only_buckets is None else max(1, len(only_buckets))
     # Pack postings into per-(term, salt) RUNS before the exchange: the
     # shuffle ships O(runs) array rows instead of O(postings) scalar rows
     # and the reducer sorts runs by (term, salt, min_doc) — concatenation
     # of disjoint doc ranges replaces the posting-level sort entirely.
-    runs = _salted_postings(segments, term_dict, config, only_buckets).mapInArrow(
+    runs = _salted_postings(segments, term_dict, config).mapInArrow(
         _pack_runs_arrow(config.with_positions, config.with_payloads),
         schema=_run_schema(config.with_positions, config.with_payloads),
     )
     return (
-        runs.repartition(n_parts, "term_bucket", "salt")
+        runs.repartition(config.n_term_buckets, "term_bucket", "salt")
         .sortWithinPartitions("term", "salt", "min_doc")
     )
 
 
-def _stage_blocks(
-    spark: SparkSession,
-    out_dir: str,
-    config: IndexConfig,
-    only_buckets: list[int] | None = None,
-) -> None:
-    """Encode posting blocks. ``only_buckets`` restricts the rebuild to
-    the given term_buckets (changed-bucket compaction at commit): the
-    scan filters to those buckets' terms, and the write replaces only
-    their partition directories (dynamic partition overwrite). Sound
-    because block CONTENT is stats-independent (see _BLOCK_SCHEMA): an
-    unchanged bucket's blocks are bit-identical to a full rebuild's
-    (each (term, salt) group is contiguous and whole inside one shuffle
-    partition, and the encode of a group is a pure function of its rows,
-    so block bytes do not depend on partition composition).
-    """
+def _stage_blocks(spark: SparkSession, out_dir: str, config: IndexConfig) -> None:
+    """Encode posting blocks into ``blocks/term_bucket=<b>``, every bucket."""
     segments = spark.read.parquet(_stage_dir(out_dir, "segments"))
     term_dict = spark.read.parquet(_stage_dir(out_dir, "term_dict")).select("term", "is_hot")
 
@@ -1061,30 +1066,21 @@ def _stage_blocks(
     # and block_no numbering is unchanged; the partitionBy("term_bucket")
     # write just gets ≤ n_salts files per bucket directory instead of 1.
     blocks = (
-        _blocks_shuffle_input(segments, term_dict, config, only_buckets)
+        _blocks_shuffle_input(segments, term_dict, config)
         .mapInArrow(
             _encode_stream_runs(config.block_size, config.with_positions, config.with_payloads),
             schema=_BLOCK_SCHEMA,
         )
         .withColumn("term_bucket", _term_bucket(config))
     )
-    bdir = _stage_dir(out_dir, "blocks")
     # zstd, not the session's snappy: the blocks are plain int arrays (no
     # varint packing of their own), and zstd's entropy stage packs the
     # small offsets/positions that snappy's byte matching leaves as is
     # (perfbench 400-doc corpus: snappy blocks 5% larger than the old
     # varint blocks, zstd blocks 6% smaller)
-    writer = blocks.write.option("compression", "zstd").partitionBy("term_bucket")
-    if only_buckets is None:
-        writer.mode("overwrite").parquet(bdir)
-    else:
-        # clear the changed buckets' directories first (a bucket whose
-        # postings were ALL deleted must end up empty), then append —
-        # untouched bucket directories are left exactly as committed.
-        for b in only_buckets:
-            shutil.rmtree(os.path.join(bdir, f"term_bucket={int(b)}"), ignore_errors=True)
-        if only_buckets:
-            writer.mode("append").parquet(bdir)
+    blocks.write.option("compression", "zstd").partitionBy("term_bucket").mode(
+        "overwrite"
+    ).parquet(_stage_dir(out_dir, "blocks"))
 
 
 # ---------------------------------------------------------------------------
@@ -1203,42 +1199,30 @@ def build_index(
         _write_batch(corpus_df, out_dir, config, text_col, id_col, sort_cols, 0, 0)
         _write_manifest(out_dir, "analyzed", config, t0)
         _write_manifest(out_dir, "segments", config, t0)
-    _merge(spark, out_dir, config, None, resume)
+    _merge(spark, out_dir, config, resume)
     return InvertedIndex(spark, out_dir)
 
 
-def _merge(
-    spark: SparkSession,
-    out_dir: str,
-    config: IndexConfig,
-    only_buckets: list[int] | None,
-    resume: bool,
-) -> None:
+def _merge(spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool) -> None:
     """Stages 3+4, the one merge step of both writers: term_dict (global
-    stats always refresh) then blocks — every bucket, or only
-    ``only_buckets`` — each followed by its manifest. The blocks manifest
-    records the batch ids its blocks cover (``batches``): the commit
-    record an incremental commit reads back. With ``resume`` a stage
-    whose manifest matches the config hash is skipped. Missing
-    analyzed/segments manifests are written first (an indexer's first
-    commit), so the directory reads as a complete build."""
+    stats) then the blocks of every term bucket, each stage cleared,
+    rewritten and followed by its manifest. With ``resume`` a stage whose
+    manifest matches the config hash is skipped. Missing analyzed/segments
+    manifests are written first (an indexer's first commit), so the
+    directory reads as a complete build."""
     for stage in ("analyzed", "segments"):
         if _read_manifest(out_dir, stage) is None:
             _write_manifest(out_dir, stage, config, time.time())
-    for stage, fn, extra in (
-        ("term_dict", lambda: _stage_term_dict(spark, out_dir, config), None),
-        ("blocks", lambda: _stage_blocks(spark, out_dir, config, only_buckets),
-         {"batches": _batch_ids(out_dir)}),
+    for stage, fn in (
+        ("term_dict", lambda: _stage_term_dict(spark, out_dir, config)),
+        ("blocks", lambda: _stage_blocks(spark, out_dir, config)),
     ):
         if resume and _stage_done(out_dir, stage, config):
             continue
-        # a changed-bucket rewrite keeps the other buckets and, until it
-        # completes, the previous commit record
-        if stage == "term_dict" or only_buckets is None:
-            _clear_stage(out_dir, stage)
+        _clear_stage(out_dir, stage)
         t0 = time.time()
         fn()
-        _write_manifest(out_dir, stage, config, t0, extra)
+        _write_manifest(out_dir, stage, config, t0)
 
 
 # ---------------------------------------------------------------------------
@@ -1257,7 +1241,7 @@ def create_snapshot(out_dir: str, name: str) -> str:
     Hard-links every stage's parquet files (copy fallback across
     filesystems) plus meta.json and the lineage manifests into
     ``<out_dir>/snapshots/<name>`` — the parquet files are immutable
-    once written (commits replace whole bucket directories), so
+    once written (commits replace whole stage directories), so
     hard-links give O(#files) snapshots of arbitrarily large indexes,
     exactly like Lucene's segment-file hard-link backups.
     """

@@ -13,7 +13,7 @@ redesign:
 | immutable stage files, overwrite-by-swap    | snapshot isolation (new snapshot per commit) |
 | per-stage JSON manifest (inputs, row counts, wall, lineage) | manifest files / snapshot summary metrics |
 | ``blocks/term_bucket=N`` directory partitioning | identity partition spec on ``term_bucket`` |
-| changed-bucket-only NRT commit              | ``overwritePartitions()`` row-level commit |
+| NRT commit rewrites every term bucket       | ``overwritePartitions()`` over every partition |
 | named snapshots + journaled restore         | time travel / ``rollback_to_snapshot`` |
 
 On a cluster where the Iceberg runtime IS on the classpath (any real

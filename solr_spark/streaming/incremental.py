@@ -17,28 +17,21 @@ Spark's batch+streaming model:
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
 - delete-by-id / delete-by-query (``update/UpdateLog.java:452``,
   ``solrj-streaming/.../io/stream/DeleteStream.java``) →
-  :meth:`delete_by_ids` / :meth:`delete_by_query` record tombstones,
-  each deleted doc with the term buckets of its postings;
-  :meth:`commit` applies them (Lucene applies deletes at merge): the
-  analyzed/segments stages are compacted to the surviving docs and the
-  affected term buckets are re-encoded.
+  :meth:`delete_by_ids` / :meth:`delete_by_query` record the deleted
+  doc ids as tombstones; :meth:`commit` applies them (Lucene applies
+  deletes at merge) by compacting the analyzed/segments stages to the
+  surviving docs.
 - hard commit (flush + merge) → :meth:`IncrementalIndexer.commit`
-  runs the build's own merge step (``build._merge``): it rebuilds
-  term_dict (one aggregation — global stats N/avgdl/df/idf always
-  refresh) and re-encodes ONLY the term buckets whose postings
-  changed since the last commit (new batches' terms + deleted docs'
-  terms) — the TieredMergePolicy analog. This is sound because block
-  CONTENT is stats-independent (build.py ``_BLOCK_SCHEMA``: blocks
-  store (max_tf, min_dl), not precomputed impacts): an untouched
-  bucket's blocks are bit-identical to a full rebuild's. An incremental
-  build that appends B1..Bn, deletes D and commits is
-  **query-identical** to a batch build over the surviving corpus
-  (oracle-gated against DuckDB).
+  runs the build's own merge step (``build._merge``) exactly as
+  ``build_index`` does: term_dict (global stats N/avgdl/df/idf) and the
+  blocks of every term bucket are rewritten from the segments. So an
+  incremental build that appends B1..Bn, deletes D and commits writes
+  the same term_dict and blocks as a batch build over the surviving
+  corpus (oracle-gated against DuckDB).
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
-  manifests. The blocks manifest is the commit record: it lists the
-  batches its blocks cover, and it travels with snapshots. Tombstones
-  are removed only after it is written, so re-running ``commit()``
-  after a killed commit redoes it, deletes included.
+  manifests. Tombstones are removed only after the blocks manifest is
+  written, so re-running ``commit()`` after a killed commit redoes it,
+  deletes included.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
   indexer continues a built directory as it is.
 """
@@ -57,9 +50,7 @@ from solr_spark.index.build import (
     _batch_ids,
     _merge,
     _parquet_files,
-    _read_manifest,
     _stage_dir,
-    _term_bucket,
     _write_batch,
 )
 from solr_spark.session import local_frame
@@ -104,7 +95,9 @@ class IncrementalIndexer:
         ``batch_id`` keys the batch's ``batch=<id>`` partition directory;
         passing the streaming source's micro-batch id makes at-least-once
         re-delivery idempotent (the whole directory is overwritten). New
-        doc_ids continue from max(doc_id)+1 when ``id_col`` is absent.
+        doc_ids continue from max(doc_id)+1 when ``id_col`` is absent;
+        ``id_col`` ids already held by another batch (a deleted doc too,
+        until its delete is committed) reject the batch with ValueError.
         Returns the number of docs appended.
         """
         if batch_id is None:
@@ -137,19 +130,8 @@ class IncrementalIndexer:
         return matched.count()
 
     def _record_deletes(self, ids: DataFrame) -> None:
-        """Append one tombstone per (deleted doc_id, term bucket of its
-        postings); a doc without postings gets a null bucket. The buckets
-        are what the commit must re-encode, kept here because the
-        commit's compaction removes the postings they are read from."""
-        segs = self.spark.read.parquet(_stage_dir(self.dir, "segments"))
-        buckets = (
-            segs.join(F.broadcast(ids), "doc_id", "left_semi")
-            .select("doc_id", _term_bucket(self.config).alias("term_bucket"))
-            .distinct()
-        )
-        ids.join(buckets, "doc_id", "left").write.mode("append").parquet(
-            _stage_dir(self.dir, "tombstones")
-        )
+        """Append the deleted doc ids to ``tombstones/``."""
+        ids.write.mode("append").parquet(_stage_dir(self.dir, "tombstones"))
 
     def _tombstones(self) -> DataFrame | None:
         tdir = _stage_dir(self.dir, "tombstones")
@@ -177,28 +159,14 @@ class IncrementalIndexer:
 
     # ------------------------------------------------------------------
     def commit(self) -> InvertedIndex:
-        """Hard commit: apply tombstones, refresh term_dict/global stats,
-        re-encode only the CHANGED term buckets (batches the blocks
-        manifest does not list + deleted docs' buckets). First commit
-        builds all buckets."""
-        record = _read_manifest(self.dir, "blocks")
+        """Hard commit: compact the tombstoned docs out of the analyzed and
+        segments stages, then run the build's merge over every bucket."""
         tomb = self._tombstones()
         if tomb is not None:
             dead = tomb.select("doc_id").distinct()
             self._compact_stage("analyzed", dead)
             self._compact_stage("segments", dead)
-        only = None
-        if record is not None:
-            new = sorted(set(_batch_ids(self.dir)) - set(record.get("batches", [])))
-            changed = (
-                self.spark.read.parquet(_stage_dir(self.dir, "segments"))
-                .where(F.col("batch").isin(new))
-                .select(_term_bucket(self.config).alias("term_bucket"))
-            )
-            if tomb is not None:
-                changed = changed.union(tomb.select("term_bucket"))
-            only = sorted(r[0] for r in changed.distinct().collect() if r[0] is not None)
-        _merge(self.spark, self.dir, self.config, only, False)
+        _merge(self.spark, self.dir, self.config, resume=False)
         shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)
         return InvertedIndex(self.spark, self.dir)
 

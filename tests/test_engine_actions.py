@@ -102,6 +102,27 @@ def test_search_miss_job_budget(warm, spark):
     assert 1 <= n <= 3, f"search miss + collect launched {n} jobs (budget 3)"
 
 
+def test_nrt_cycle_job_budget(spark, test_config):
+    """A delete only writes its tombstone ids (one job), and a commit
+    after a small append and delete costs no more than compaction plus
+    the build's merge."""
+    import shutil
+
+    from solr_spark.corpus import synth_corpus
+    from solr_spark.streaming import IncrementalIndexer
+
+    d = "/tmp/solr_spark_nrt_jobs"
+    shutil.rmtree(d, ignore_errors=True)
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(synth_corpus(spark, 200))
+    inc.commit()
+    inc.append_batch(synth_corpus(spark, 20))
+    n_del = _job_count(spark, "ja_nrt_delete", lambda: inc.delete_by_ids([3, 50, 99]))
+    n_commit = _job_count(spark, "ja_nrt_commit", inc.commit)
+    assert n_del <= 1, f"delete_by_ids launched {n_del} jobs (budget 1)"
+    assert n_commit <= 26, f"commit launched {n_commit} jobs (budget 26)"
+
+
 @pytest.fixture
 def action_plans(warm, monkeypatch):
     """Optimized plans of every ``collect`` run while the fixture is live

@@ -115,10 +115,9 @@ def test_manifests_lineage(index):
     ms = index.manifests()
     assert set(ms) == {"analyzed", "segments", "term_dict", "blocks"}
     # the build writes its docs and postings as batch 0, the layout an
-    # incremental append adds to, and records that the blocks cover it
+    # incremental append adds to
     for stage in ("analyzed", "segments"):
         assert os.listdir(os.path.join(index.dir, stage)) == ["batch=0"]
-    assert ms["blocks"]["batches"] == [0]
     for stage, m in ms.items():
         assert m["rows"] > 0
         assert m["n_files"] == len(m["files"])

@@ -130,7 +130,8 @@ def test_append_redelivery_is_idempotent(spark, corpus_df, test_config):
 def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_config):
     """append + delete + commit == batch build over the surviving docs
     (UpdateLog.java:452 / DeleteStream semantics: deletes applied at the
-    merge)."""
+    merge): same answers, and the same term_dict, blocks and global
+    stats row for row — commit runs the build's merge."""
     d_inc, d_batch = f"{BASE}/del_inc", f"{BASE}/del_batch"
     shutil.rmtree(d_inc, ignore_errors=True)
     shutil.rmtree(d_batch, ignore_errors=True)
@@ -145,49 +146,21 @@ def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_c
     inc.commit()  # first commit: all buckets
     n_del = inc.delete_by_query(F.pmod(F.col("doc_id"), 7) == 3)
     assert n_del > 0
-    idx = inc.commit()  # second commit: deletes applied, changed buckets only
+    idx = inc.commit()  # second commit: deletes applied, every bucket re-encoded
 
     survivors = full.where(F.pmod(F.col("doc_id"), 7) != 3)
     batch_idx = build_index(
         spark, survivors, d_batch, test_config, text_col="content", id_col="doc_id"
     )
-    assert idx.n_docs == batch_idx.n_docs
-    assert idx.avgdl == pytest.approx(batch_idx.avgdl)
+    assert (idx.n_docs, idx.avgdl) == (batch_idx.n_docs, batch_idx.avgdl)
     for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
         assert _topk(idx, q, mode) == _topk(batch_idx, q, mode)
     # deleted docs are gone from the registry too
     assert idx.docs.where(F.pmod(F.col("doc_id"), 7) == 3).count() == 0
-
-
-def test_changed_bucket_commit_matches_full_rebuild(spark, corpus_df, test_config):
-    """A selective (changed-bucket) commit must produce blocks
-    bit-identical to a full rebuild over the same segments."""
-    d_sel = f"{BASE}/sel"
-    shutil.rmtree(d_sel, ignore_errors=True)
-    full = corpus_df.withColumn(
-        "doc_id", F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(10**12))
-    )
-    inc = IncrementalIndexer(spark, d_sel, test_config)
-    inc.append_batch(full.where(F.pmod(F.col("doc_id"), 3) < 2),
-                     text_col="content", id_col="doc_id", batch_id=0)
-    inc.commit()
-    inc.append_batch(full.where(F.pmod(F.col("doc_id"), 3) == 2),
-                     text_col="content", id_col="doc_id", batch_id=1)
-    idx = inc.commit()  # selective: only buckets touched by batch 1
-
-    from solr_spark.index.build import _stage_blocks
-    sel = idx.blocks.select(
-        "term", "salt", "block_no", "n_docs", "max_tf", "min_dl",
-        "min_doc_id", "doc_offsets", "tfs", "dls",
-    ).collect()
-    _stage_blocks(spark, d_sel, test_config, only_buckets=None)  # full rebuild
-    fullb = idx.refresh().blocks.select(  # fresh handle: blocks were rewritten
-        "term", "salt", "block_no", "n_docs", "max_tf", "min_dl",
-        "min_doc_id", "doc_offsets", "tfs", "dls",
-    ).collect()
-    key = lambda r: (r["term"], r["salt"], r["block_no"])
-    assert sorted(map(tuple, sel), key=lambda t: t[:3]) == \
-           sorted(map(tuple, fullb), key=lambda t: t[:3])
+    for stage in ("term_dict", "blocks"):
+        got, want = getattr(idx, stage), getattr(batch_idx, stage)
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), stage
 
 
 def test_windowed_stream_matches_batch(spark):
@@ -375,3 +348,53 @@ def test_restored_snapshot_recommits_pending_batch(spark, test_config):
     assert idx.docs.count() == 240
     decoded = decode_blocks(idx.blocks).select("doc_id").distinct().collect()
     assert {r["doc_id"] for r in decoded} == set(range(240))
+
+
+def test_append_rejects_repeated_explicit_ids(spark, test_config):
+    """Explicit ids must be unique among the indexed docs: a batch whose
+    ids repeat inside it or are held by another batch is rejected whole
+    (the single-term fast path assumes unique (term, doc_id) postings)."""
+    from solr_spark.corpus import synth_corpus_pandas
+
+    d = f"{BASE}/dup_ids"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(250)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[:200]), id_col="doc_id", batch_id=0)
+    with pytest.raises(ValueError, match="repeat"):
+        inc.append_batch(spark.createDataFrame(pdf.iloc[150:]), id_col="doc_id", batch_id=1)
+    twice = pdf.iloc[200:].copy()
+    twice.iloc[1, twice.columns.get_loc("doc_id")] = 200
+    with pytest.raises(ValueError, match="repeat"):
+        inc.append_batch(spark.createDataFrame(twice), id_col="doc_id", batch_id=1)
+    for stage in ("analyzed", "segments"):
+        assert os.listdir(os.path.join(d, stage)) == ["batch=0"]
+    inc.append_batch(spark.createDataFrame(pdf.iloc[200:]), id_col="doc_id", batch_id=1)
+    idx = inc.commit()
+    assert idx.n_docs == 250
+    assert idx.docs.groupBy("doc_id").count().where("count > 1").count() == 0
+
+
+def test_append_rejects_a_source_that_changes_between_writes(spark, test_config, tmp_path):
+    """With explicit ids the batch's two writes each evaluate the source.
+    A source that answers differently the second time is rejected, not
+    indexed with postings that disagree with its docs."""
+    seen = str(tmp_path)
+
+    def content(doc_id):
+        # a doc's first evaluation gives one token, every later one two
+        try:
+            os.close(os.open(os.path.join(seen, str(doc_id)), os.O_CREAT | os.O_EXCL))
+            return "server"
+        except FileExistsError:
+            return "server client"
+
+    udf = F.udf(content, "string").asNondeterministic()
+    src = spark.range(40).select(F.col("id").alias("doc_id"), udf("id").alias("content"))
+    d = f"{BASE}/diverged"
+    shutil.rmtree(d, ignore_errors=True)
+    with pytest.raises(ValueError, match="different rows"):
+        IncrementalIndexer(spark, d, test_config).append_batch(src, id_col="doc_id")
+    for stage in ("analyzed", "segments"):
+        assert not os.path.exists(os.path.join(d, stage, "batch=0"))
