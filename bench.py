@@ -11,6 +11,11 @@ apache/solr/bench/{index/CloudIndexing,search/SimpleSearch}.java, restated):
 - index build over the driver's documents table at the SF dir
 - BM25 top-10 queries (hot single-term, AND, OR) + term-dict and facet
   queries, per-query wall seconds
+
+A dirty window — host steal above ``DIRTY_STEAL_FRAC``, or bracketing
+control probes more than ``DIRTY_CONTROL_SPREAD`` apart — is refused:
+the record carries ``"dirty": <reason>`` and the run exits non-zero, so
+a number timed through a host burst is never taken as the engine's.
 """
 
 from __future__ import annotations
@@ -22,6 +27,11 @@ import sys
 import time
 
 from pyspark.sql import functions as F
+
+#: window limits: steal fraction of the host's CPU ticks, and relative
+#: spread of the start/end 8-wide control probes (larger over smaller)
+DIRTY_STEAL_FRAC = 0.005
+DIRTY_CONTROL_SPREAD = 0.25
 
 
 def _cpu_ticks() -> tuple[int, int]:
@@ -206,10 +216,13 @@ def main() -> None:
     # tracks the control within ~10% across throttle windows (BASELINE.md
     # correlation evidence), so this ratio is comparable across BENCH
     # rows even when the host's bandwidth budget shifts between rounds.
-    ctrl_avg = (
-        control_start["sort_passes_per_sec_8w_agg"]
-        + control_end["sort_passes_per_sec_8w_agg"]
-    ) / 2.0
+    ctrl = (control_start["sort_passes_per_sec_8w_agg"], control_end["sort_passes_per_sec_8w_agg"])
+    ctrl_avg = sum(ctrl) / 2.0
+    dirty = []
+    if steal_frac > DIRTY_STEAL_FRAC:
+        dirty.append(f"steal {steal_frac:.4f} > {DIRTY_STEAL_FRAC}")
+    if min(ctrl) <= 0 or max(ctrl) / min(ctrl) - 1 > DIRTY_CONTROL_SPREAD:
+        dirty.append(f"controls {ctrl[0]} -> {ctrl[1]} differ by more than {DIRTY_CONTROL_SPREAD:.0%}")
     print(
         json.dumps(
             {
@@ -233,9 +246,13 @@ def main() -> None:
                 if ctrl_avg > 0
                 else None,
                 "scaling": scaling,
+                "dirty": "; ".join(dirty) or None,
             }
         )
     )
+    if dirty:
+        print("dirty window: " + "; ".join(dirty), file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -14,7 +14,13 @@ Writes RANKCHECK_r05.json at the repo root:
   {"n_docs": N, "queries": 100, "rank_mismatches": [...],
    "score_mismatches": [...], "walls": {...}}
 
-Usage: python scripts/rankcheck_scale.py [n_docs]
+With ``--nrt`` the index is committed by an ``IncrementalIndexer`` as a
+base (80% of the docs) plus two delta segments (10% each), each delta
+commit deleting 0.5% of the docs indexed so far; block-max θ pruning is
+forced on every query, and the oracle is built over the surviving docs.
+That record goes to RANKCHECK_nrt_<n_docs>.json.
+
+Usage: python scripts/rankcheck_scale.py [n_docs] [--nrt]
 """
 
 from __future__ import annotations
@@ -30,8 +36,40 @@ REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
 
+def _nrt_index(spark, pdf, out: str, cfg):
+    """Base + two delta segments with deletes; returns (index, survivors)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from solr_spark.streaming import IncrementalIndexer
+
+    n = len(pdf)
+    src = out + "_src"
+    shutil.rmtree(src, ignore_errors=True)
+    os.makedirs(src)
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), os.path.join(src, "part-0.parquet"))
+    docs = spark.read.parquet(src)
+    rng = np.random.default_rng(7)
+    inc = IncrementalIndexer(spark, out, cfg)
+    dead: list[int] = []
+    cuts = [0, int(n * 0.8), int(n * 0.9), n]
+    for lo, hi in zip(cuts, cuts[1:]):
+        inc.append_batch(docs.where(f"doc_id >= {lo} AND doc_id < {hi}"), id_col="doc_id")
+        if lo:
+            live = np.setdiff1d(np.arange(hi), dead)
+            ids = sorted(int(i) for i in rng.choice(live, max(1, n // 200), replace=False))
+            inc.delete_by_ids(ids)
+            dead += ids
+        index = inc.commit()
+    assert len(index.record[0]) == 3 and len(index.deleted) == 2, index.record
+    return index, pdf[~pdf["doc_id"].isin(dead)].reset_index(drop=True)
+
+
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 240_000
+    args = [a for a in sys.argv[1:] if a != "--nrt"]
+    nrt = "--nrt" in sys.argv[1:]
+    n_docs = int(args[0]) if args else 240_000
 
     from solr_spark.corpus import synth_corpus, synth_corpus_pandas
     from solr_spark.index.build import IndexConfig, build_index
@@ -45,11 +83,7 @@ def main() -> None:
     out = f"/tmp/solr_spark_rankcheck_{n_docs}"
     shutil.rmtree(out, ignore_errors=True)
 
-    t0 = time.time()
     cfg = IndexConfig(hot_df_threshold=max(1000, n_docs // 4), n_salts=8)
-    index = build_index(spark, synth_corpus(spark, n_docs), out, cfg, resume=False)
-    walls["index_build"] = round(time.time() - t0, 1)
-
     t0 = time.time()
     pdf = synth_corpus_pandas(n_docs)
     pdf = pdf.sort_values(["repo", "path", "commit"]).reset_index(drop=True)
@@ -57,10 +91,19 @@ def main() -> None:
     walls["oracle_datagen"] = round(time.time() - t0, 1)
 
     t0 = time.time()
+    if nrt:
+        index, pdf = _nrt_index(spark, pdf, out, cfg)
+    else:
+        index = build_index(spark, synth_corpus(spark, n_docs), out, cfg, resume=False)
+    walls["index_build"] = round(time.time() - t0, 1)
+
+    t0 = time.time()
     oracle = BruteForceIndex(pdf)
     walls["oracle_build"] = round(time.time() - t0, 1)
 
     engine = SearchEngine(index)
+    if nrt:
+        engine._PRUNE_MIN_POSTINGS = 1  # θ seed on every OR / single-term query
     term_df = index.term_dict.select("term", "df").toPandas()
     qs = make_query_set(term_df)
     assert len(qs) == 100, len(qs)
@@ -86,6 +129,9 @@ def main() -> None:
 
     rec = {
         "n_docs": n_docs,
+        "layout": ({"segments": {str(k): v for k, v in index.record[0].items()},
+                    "deleted_docs": sum(len(v) for v in index.deleted.values()),
+                    "theta_forced": True} if nrt else "build_index"),
         "queries": int(len(qs)),
         "rank_mismatches": rank_mism,
         "score_mismatches": score_mism,
@@ -93,13 +139,14 @@ def main() -> None:
         "total_postings_est": int(oracle.doc_len.sum()),
         "n_terms": len(oracle.postings),
     }
-    path = os.path.join(REPO, "RANKCHECK_r05.json")
+    path = os.path.join(REPO, f"RANKCHECK_nrt_{n_docs}.json" if nrt else "RANKCHECK_r05.json")
     with open(path, "w") as f:
         json.dump(rec, f, indent=1)
     print(json.dumps({k: rec[k] for k in
                       ("n_docs", "queries", "walls", "total_postings_est")}))
     print("rank mismatches:", len(rank_mism), "score mismatches:", len(score_mism))
     shutil.rmtree(out, ignore_errors=True)
+    shutil.rmtree(out + "_src", ignore_errors=True)
     sys.exit(1 if (rank_mism or score_mism) else 0)
 
 

@@ -103,8 +103,9 @@ def segments_info(index) -> DataFrame:
     ``handler/admin/SegmentsInfoRequestHandler.java``, test
     ``handler/admin/SegmentsInfoRequestHandlerTest.java``): one row per
     on-disk stage — ``(stage, n_files, n_dirs, bytes)`` — plus a row per
-    blocks term-bucket partition so merge/skew health is visible (the
-    reference reports per-segment sizes for the same reason).
+    blocks ``segment=<s>/term_bucket=<b>`` partition so merge/skew health
+    is visible per segment (the reference reports per-segment sizes for
+    the same reason).
 
     Driver-side directory walk, like the reference handler: it reads
     file METADATA (names + sizes), never file contents — O(files) on
@@ -126,16 +127,13 @@ def segments_info(index) -> DataFrame:
                 total += os.path.getsize(os.path.join(root, fn))
         rows.append((stage, n_files, n_dirs, total))
         if stage == "blocks":
-            for sub in sorted(os.listdir(p)):
-                sp = os.path.join(p, sub)
-                if not os.path.isdir(sp) or "=" not in sub:
+            for root, dirs, files in sorted(os.walk(p)):
+                if dirs or root == p:
                     continue
-                bf = bb = 0
-                for root, _, files in os.walk(sp):
-                    for fn in files:
-                        bf += 1
-                        bb += os.path.getsize(os.path.join(root, fn))
-                rows.append((f"blocks/{sub}", bf, 0, bb))
+                rows.append((
+                    "blocks/" + os.path.relpath(root, p), len(files), 0,
+                    sum(os.path.getsize(os.path.join(root, fn)) for fn in files),
+                ))
     return index.spark.createDataFrame(
         rows, "stage string, n_files long, n_dirs long, bytes long"
     )

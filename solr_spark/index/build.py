@@ -20,7 +20,8 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    The analog of Solr's distributed exact stats cache
    (``search/stats/ExactStatsCache.java:62,192``) — global by
    construction, so every partition scores with identical IDF.
-4. ``blocks``    — the merged index: fixed-size posting blocks per
+4. ``blocks``    — the merged index, one ``segment=<s>`` directory per
+   commit (a build writes segment 0): fixed-size posting blocks per
    (term, salt) stored as Parquet-native int arrays (doc ids as offsets
    from the block's min_doc_id, tf, dl, and per-doc position/payload
    lists), which Parquet's own encodings compress and the query side
@@ -33,9 +34,14 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    corpora where ``import``/``def``/``return`` appear in most docs.
 
 Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
-incremental commit share. Resume = "skip any stage whose manifest exists
-and matches the config hash"; kill the build between stages and
-re-running yields a bit-identical index (tested).
+incremental commit share: term_dict over the live docs, then one
+segment's blocks, then the blocks manifest — the commit point, mapping
+each segment to its batches and recording the deleted docs (the
+live-docs record every read applies, :meth:`InvertedIndex.live`). Each
+manifest also records its stage's Spark schema, so a stage opens with
+no schema-inference job (:func:`_read_stage`). Resume = "skip any stage
+whose manifest exists and matches the config hash"; kill the build
+between stages and re-running yields a bit-identical index (tested).
 
 Scale notes (100 TB / 10^12 docs):
 - ONE wide shuffle in the whole build: analyze is map-only after one
@@ -62,8 +68,9 @@ Scale notes (100 TB / 10^12 docs):
   same salted postings (tested, positions+payloads included).
 - the term_dict↔segments join is keyed on term: Catalyst/AQE broadcasts
   it when small, else it folds into the same exchange.
-- blocks land partitioned by ``term_bucket = pmod(xxhash64(term), B)``
-  and sorted by term within files → query-side term lookups do
+- blocks land partitioned by segment, then by
+  ``term_bucket = pmod(xxhash64(term), B)``, and sorted by term within
+  files → query-side term lookups do
   directory-level partition pruning + Parquet row-group pruning. At
   cluster scale B is set to a few × total cores (bucket skew is bounded
   because hot terms are salted before bucketing).
@@ -145,18 +152,19 @@ def _manifest_path(out_dir: str, stage: str) -> str:
     return os.path.join(out_dir, f"_MANIFEST_{stage}.json")
 
 
-def _parquet_files(sdir: str) -> list[dict]:
-    """(file, rows, bytes) of every Parquet file under ``sdir``, the row
-    counts read from the file footers."""
+def _parquet_files(sdir: str, parts: list[str] | None = None) -> list[dict]:
+    """(file, rows, bytes) of every Parquet file under ``sdir`` (only
+    under its ``parts`` subdirectories when given), sorted by path, the
+    row counts read from the file footers."""
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
     paths = []
-    for root, _dirs, names in os.walk(sdir):
-        for n in sorted(names):
-            if n.endswith(".parquet"):
-                paths.append(os.path.join(root, n))
+    for top in [sdir] if parts is None else [os.path.join(sdir, p) for p in parts]:
+        for root, _dirs, names in os.walk(top):
+            paths.extend(os.path.join(root, n) for n in names if n.endswith(".parquet"))
+    paths.sort()
 
     def _one(p: str) -> dict:
         return {
@@ -171,24 +179,57 @@ def _parquet_files(sdir: str) -> list[dict]:
         return list(ex.map(_one, paths))
 
 
-def _write_manifest(out_dir: str, stage: str, config: IndexConfig, t0: float) -> dict:
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(sdir: str, files: list[dict]) -> dict | None:
+    """The Spark schema a read of the stage infers, as StructType JSON:
+    the data columns Spark recorded in the first file's footer, then the
+    ``name=<int>`` partition columns of its path."""
+    if not files:
+        return None
+    import pyarrow.parquet as pq
+
+    first = files[0]["file"]
+    raw = (pq.read_metadata(os.path.join(sdir, first)).metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    schema = json.loads(raw)
+    for part in os.path.dirname(first).split(os.sep):
+        if "=" in part:
+            schema["fields"].append(
+                {"name": part.split("=", 1)[0], "type": "integer", "nullable": True, "metadata": {}}
+            )
+    return schema
+
+
+def _write_manifest(
+    out_dir: str, stage: str, config: IndexConfig, t0: float,
+    parts: list[str] | None = None, extra: dict | None = None,
+) -> dict:
     """Per-stage lineage: per-file row counts/bytes from Parquet footers.
 
     This is the per-partition lineage + metrics record the north rule
     requires: each output file (= one write task / partition) is listed
-    with its row count and size, plus stage wall time and the config hash
-    that produced it. Written aside and renamed into place, so a reader
+    with its row count and size, plus stage wall time, the config hash
+    that produced it and the stage's Spark schema (:func:`_read_stage`
+    passes it, so opening the stage runs no schema-inference job). Only
+    the ``parts`` subdirectories are listed when given; ``extra`` keys
+    join the record. Written aside and renamed into place, so a reader
     sees the old manifest or the new one, never a truncated file.
     """
-    files = _parquet_files(_stage_dir(out_dir, stage))
+    sdir = _stage_dir(out_dir, stage)
+    files = _parquet_files(sdir, parts)
     manifest = {
         "stage": stage,
         "config_hash": config.config_hash(),
         "rows": int(sum(f["rows"] for f in files)),
         "n_files": len(files),
         "files": files,
+        "schema": _spark_schema(sdir, files),
         "wall_sec": round(time.time() - t0, 3),
         "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        **(extra or {}),
     }
     path = _manifest_path(out_dir, stage)
     with open(path + ".tmp", "w") as f:
@@ -216,6 +257,72 @@ def _clear_stage(out_dir: str, stage: str) -> None:
         os.remove(_manifest_path(out_dir, stage))
     except FileNotFoundError:
         pass
+
+
+def _read_stage(
+    spark: SparkSession, out_dir: str, stage: str, paths: list[str] | None = None
+) -> DataFrame:
+    """A stage (only its ``paths`` subdirectories when given) as a
+    DataFrame, read with the schema its manifest recorded: no Spark job
+    until an action. A stage without a recorded schema is inferred."""
+    m = _read_manifest(out_dir, stage)
+    reader = spark.read
+    if m and m.get("schema"):
+        reader = reader.schema(T.StructType.fromJson(m["schema"]))
+    sdir = _stage_dir(out_dir, stage)
+    if paths is None:
+        return reader.parquet(sdir)
+    return reader.option("basePath", sdir).parquet(*[os.path.join(sdir, p) for p in paths])
+
+
+# ---------------------------------------------------------------------------
+# live docs: the committed deletes
+# ---------------------------------------------------------------------------
+
+
+def _commit_record(out_dir: str) -> tuple[dict[int, list[int]], dict[int, list[int]]] | None:
+    """(segments, deleted) of the committed blocks manifest, None for a
+    directory whose blocks carry no segment level (an older layout).
+
+    ``segments`` maps each segment id to the batch ids its blocks hold;
+    ``deleted`` maps a segment id ``u`` to the doc ids a commit deleted
+    from segment ``u`` and every earlier one. Segment ids grow with each
+    commit, so an id re-added after its delete was committed lands in a
+    later segment and stays live."""
+    m = _read_manifest(out_dir, "blocks")
+    if m is None or "segments" not in m:
+        return None
+    return (
+        {int(s): b for s, b in m["segments"].items()},
+        {int(u): ids for u, ids in m.get("deleted", {}).items()},
+    )
+
+
+def _dead_rows(deleted: dict[int, list[int]], segments: dict[int, list[int]], unit: str) -> Column | None:
+    """Rows of committed-deleted docs as a literal predicate over
+    ``doc_id`` and ``unit``: ``segment`` for decoded blocks, ``batch``
+    for the analyzed and segments stages (a batch no segment holds yet
+    is all live). None when nothing is deleted."""
+    conds = []
+    for u, ids in sorted(deleted.items()):
+        if unit == "segment":
+            scope = F.col("segment") <= F.lit(u)
+        else:
+            scope = F.col("batch").isin(sorted(b for s, bs in segments.items() if s <= u for b in bs))
+        conds.append(scope & F.col("doc_id").isin(ids))
+    return functools.reduce(lambda a, b: a | b, conds) if conds else None
+
+
+def _live(df: DataFrame, dead: Column | None) -> DataFrame:
+    """``df`` without the rows of ``dead`` (see :func:`_dead_rows`)."""
+    return df if dead is None else df.where(~dead)
+
+
+def _live_stage(spark: SparkSession, out_dir: str, stage: str, record) -> DataFrame:
+    """The live rows of a batch-partitioned stage (``analyzed`` or
+    ``segments``) under a commit ``record`` (None: every row)."""
+    dead = _dead_rows(record[1], record[0], "batch") if record else None
+    return _live(_read_stage(spark, out_dir, stage), dead)
 
 
 # ---------------------------------------------------------------------------
@@ -374,14 +481,14 @@ def _write_batch(
 
 def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
     """Read back a batch written with explicit ids; if any id repeats in
-    it or is held by another batch, or its two writes saw different
+    it or is held by another batch's live doc, or its two writes saw different
     sources, remove the batch and raise ``ValueError``. The writes agree
     when Σ tf of its postings equals Σ doc_len of its docs (one posting
     occurrence per token; ``doc_len > 0`` skips ``size(null)`` = −1)."""
     sub = f"batch={batch_id}"
     mine = F.col("batch") == batch_id
     per_id = (
-        spark.read.parquet(_stage_dir(out_dir, "analyzed"))
+        _live_stage(spark, out_dir, "analyzed", _commit_record(out_dir))
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n"),
@@ -506,8 +613,10 @@ def build_postings(analyzed: DataFrame, config: IndexConfig) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig) -> None:
-    analyzed = spark.read.parquet(_stage_dir(out_dir, "analyzed"))
+def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig, record=None) -> None:
+    """term_dict, term_dict_rev and meta.json over the live docs of the
+    commit ``record`` (see :func:`_commit_record`; None: every doc)."""
+    analyzed = _live_stage(spark, out_dir, "analyzed", record)
     # one job for both corpus stats (was two full passes: count + sum)
     stats_row = analyzed.agg(
         F.count("*").alias("n"), F.sum("doc_len").alias("s")
@@ -516,7 +625,7 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig) -> 
     sum_dl = stats_row["s"] or 0
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
 
-    segments = spark.read.parquet(_stage_dir(out_dir, "segments"))
+    segments = _live_stage(spark, out_dir, "segments", record)
     # idf = ln(1 + (N - df + 0.5)/(df + 0.5))   (Lucene BM25, frozen in FIXTURES.md)
     term_dict = (
         segments.groupBy("term")
@@ -538,7 +647,7 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig) -> 
     # term_rev, which parquet row-group min/max stats prune — instead of
     # an rlike over the whole vocabulary. The dictionary is O(vocabulary),
     # tiny next to postings, so the second sort order is cheap to keep.
-    (spark.read.parquet(_stage_dir(out_dir, "term_dict"))
+    (spark.read.schema(term_dict.schema).parquet(_stage_dir(out_dir, "term_dict"))
      .withColumn("term_rev", F.reverse(F.col("term")))
      .repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term_rev")
      .sortWithinPartitions("term_rev")
@@ -575,8 +684,8 @@ _BLOCK_SCHEMA = T.StructType(
         # WHATEVER the current global stats are. Storing these instead of
         # a precomputed block_max keeps a block valid when N/avgdl/idf
         # drift (incremental appends/deletes): a block depends only on
-        # its own postings, so blocks of postings that did not change
-        # could stay as written (a commit still re-encodes every bucket).
+        # its own postings, so a committed segment's blocks stay as
+        # written — a commit encodes only its new batches.
         T.StructField("max_tf", T.IntegerType(), False),
         T.StructField("min_dl", T.IntegerType(), False),
         # the postings, one element per doc: doc id minus min_doc_id
@@ -1029,10 +1138,17 @@ def _salted_postings(segments: DataFrame, term_dict: DataFrame, config: IndexCon
     return p.select(*cols)
 
 
-def _blocks_shuffle_input(segments: DataFrame, term_dict: DataFrame, config: IndexConfig) -> DataFrame:
+def _blocks_shuffle_input(
+    segments: DataFrame, term_dict: DataFrame, config: IndexConfig, whole: bool = True
+) -> DataFrame:
     """The salted, bucketed, sorted shuffle input the block encoder
     consumes — factored out so tests can assert the skew property
-    (a hot term's postings span >1 shuffle partition) on the real path."""
+    (a hot term's postings span >1 shuffle partition) on the real path.
+
+    A ``whole`` index (a build or a merge) gets one reducer per term
+    bucket, the build's file layout. A delta segment gets as many as its
+    size needs (AQE coalesces the exchange): each reducer is a Python
+    task with a fixed start-up cost, however few postings it gets."""
     # Pack postings into per-(term, salt) RUNS before the exchange: the
     # shuffle ships O(runs) array rows instead of O(postings) scalar rows
     # and the reducer sorts runs by (term, salt, min_doc) — concatenation
@@ -1042,15 +1158,21 @@ def _blocks_shuffle_input(segments: DataFrame, term_dict: DataFrame, config: Ind
         schema=_run_schema(config.with_positions, config.with_payloads),
     )
     return (
-        runs.repartition(config.n_term_buckets, "term_bucket", "salt")
+        runs.repartition(*([config.n_term_buckets] if whole else []), "term_bucket", "salt")
         .sortWithinPartitions("term", "salt", "min_doc")
     )
 
 
-def _stage_blocks(spark: SparkSession, out_dir: str, config: IndexConfig) -> None:
-    """Encode posting blocks into ``blocks/term_bucket=<b>``, every bucket."""
-    segments = spark.read.parquet(_stage_dir(out_dir, "segments"))
-    term_dict = spark.read.parquet(_stage_dir(out_dir, "term_dict")).select("term", "is_hot")
+def _stage_blocks(
+    spark: SparkSession, out_dir: str, config: IndexConfig, batches: list[int], segment: int,
+    whole: bool = True,
+) -> None:
+    """Encode the postings of ``batches`` into one segment,
+    ``blocks/segment=<segment>/term_bucket=<b>``, every bucket;
+    ``whole``: the segment is the whole index (see
+    :func:`_blocks_shuffle_input`)."""
+    segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
+    term_dict = _read_stage(spark, out_dir, "term_dict").select("term", "is_hot")
 
     # ONE shuffle: hash-repartition by (term_bucket, salt), sort runs
     # within partitions, stream-encode in a single Arrow pass. Replaces
@@ -1066,7 +1188,7 @@ def _stage_blocks(spark: SparkSession, out_dir: str, config: IndexConfig) -> Non
     # and block_no numbering is unchanged; the partitionBy("term_bucket")
     # write just gets ≤ n_salts files per bucket directory instead of 1.
     blocks = (
-        _blocks_shuffle_input(segments, term_dict, config)
+        _blocks_shuffle_input(segments, term_dict, config, whole)
         .mapInArrow(
             _encode_stream_runs(config.block_size, config.with_positions, config.with_payloads),
             schema=_BLOCK_SCHEMA,
@@ -1080,7 +1202,7 @@ def _stage_blocks(spark: SparkSession, out_dir: str, config: IndexConfig) -> Non
     # varint blocks, zstd blocks 6% smaller)
     blocks.write.option("compression", "zstd").partitionBy("term_bucket").mode(
         "overwrite"
-    ).parquet(_stage_dir(out_dir, "blocks"))
+    ).parquet(os.path.join(_stage_dir(out_dir, "blocks"), f"segment={segment}"))
 
 
 # ---------------------------------------------------------------------------
@@ -1093,11 +1215,11 @@ _STAGES = ["analyzed", "segments", "term_dict", "blocks"]
 class InvertedIndex:
     """Handle to a built index directory (docs / term_dict / blocks).
 
-    A handle is a SNAPSHOT: the stage DataFrames are memoized on first
-    access (``spark.read.parquet`` re-lists files and re-reads footers —
-    a driver job per access that showed up as ~2 extra jobs per query in
-    the r2 bench regression). After an incremental commit rewrites the
-    directory, use the fresh handle the committer returns.
+    A handle is a SNAPSHOT: the commit record (segments and deleted docs)
+    is read once at open, and the stage DataFrames are memoized on first
+    access, each read with the schema its manifest recorded, so opening
+    one runs no Spark job. After an incremental commit, use the fresh
+    handle the committer returns.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str):
@@ -1112,34 +1234,57 @@ class InvertedIndex:
                 f"{self.config.format_version}; this engine reads format 3 "
                 "(int-array blocks, term_dict_rev) — rebuild it with build_index"
             )
+        self.record = _commit_record(out_dir)
+        self.deleted = self.record[1] if self.record else {}
+
+    def live(self, df: DataFrame, unit: str) -> DataFrame:
+        """``df`` without the rows of committed-deleted docs, ``unit``
+        naming its ``segment`` (decoded blocks) or ``batch`` column: a
+        literal predicate, no job."""
+        if not self.deleted:
+            return df
+        return _live(df, _dead_rows(self.deleted, self.record[0], unit))
 
     @functools.cached_property
     def docs(self) -> DataFrame:
-        """Doc registry (no tokens — Parquet column pruning keeps it
+        """Live doc registry (no tokens — Parquet column pruning keeps it
         cheap). The ``batch=<id>`` partition column is an ingestion
         detail, dropped here."""
         return (
-            self.spark.read.parquet(_stage_dir(self.dir, "analyzed"))
+            _live_stage(self.spark, self.dir, "analyzed", self.record)
             .drop("tokens")
             .drop("batch")
         )
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
-        return self.spark.read.parquet(_stage_dir(self.dir, "term_dict"))
+        return _read_stage(self.spark, self.dir, "term_dict")
 
     @functools.cached_property
     def term_dict_rev(self) -> DataFrame:
         """Dictionary sorted by reversed term (leading-wildcard seeks)."""
-        return self.spark.read.parquet(_stage_dir(self.dir, "term_dict_rev"))
+        fields = self.term_dict.schema.fields + [T.StructField("term_rev", T.StringType())]
+        return self.spark.read.schema(T.StructType(fields)).parquet(
+            _stage_dir(self.dir, "term_dict_rev")
+        )
 
     @functools.cached_property
     def blocks(self) -> DataFrame:
-        return self.spark.read.parquet(_stage_dir(self.dir, "blocks"))
+        """Posting blocks of exactly the committed segments (a directory
+        a killed commit left behind is never read); an index written
+        before the segment level reads as segment 0."""
+        if self.record is not None:
+            return _read_stage(
+                self.spark, self.dir, "blocks", [f"segment={s}" for s in sorted(self.record[0])]
+            )
+        sdir = _stage_dir(self.dir, "blocks")
+        flat = sorted(n for n in os.listdir(sdir) if n.startswith("term_bucket="))
+        return _read_stage(self.spark, self.dir, "blocks", flat).withColumn("segment", F.lit(0))
 
     @property
     def segments(self) -> DataFrame:
-        return self.spark.read.parquet(_stage_dir(self.dir, "segments"))
+        """Live per-doc postings (the ``segments`` stage)."""
+        return _live_stage(self.spark, self.dir, "segments", self.record)
 
     def refresh(self) -> "InvertedIndex":
         """Fresh snapshot handle (re-reads meta + file listings) — use
@@ -1203,26 +1348,53 @@ def build_index(
     return InvertedIndex(spark, out_dir)
 
 
-def _merge(spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool) -> None:
+def _merge(
+    spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
+    record: tuple[dict[int, list[int]], dict[int, list[int]]] | None = None,
+    new: int | None = 0,
+) -> None:
     """Stages 3+4, the one merge step of both writers: term_dict (global
-    stats) then the blocks of every term bucket, each stage cleared,
-    rewritten and followed by its manifest. With ``resume`` a stage whose
-    manifest matches the config hash is skipped. Missing analyzed/segments
-    manifests are written first (an indexer's first commit), so the
-    directory reads as a complete build."""
+    stats over the live docs), then the blocks of segment ``new``, then
+    the blocks manifest, the commit point. ``record`` is the
+    ``(segments, deleted)`` pair the manifest commits (see
+    :func:`_commit_record`); a build passes none and gets segment 0 over
+    every batch, written into a cleared blocks stage. ``new=None``
+    encodes nothing (a commit of deletes alone). With ``resume`` a stage
+    whose manifest matches the config hash is skipped. Missing
+    analyzed/segments manifests are written first (an indexer's first
+    commit), so the directory reads as a complete build. Segment
+    directories the new manifest does not list are removed after it is
+    written."""
     for stage in ("analyzed", "segments"):
         if _read_manifest(out_dir, stage) is None:
             _write_manifest(out_dir, stage, config, time.time())
-    for stage, fn in (
-        ("term_dict", lambda: _stage_term_dict(spark, out_dir, config)),
-        ("blocks", lambda: _stage_blocks(spark, out_dir, config)),
-    ):
-        if resume and _stage_done(out_dir, stage, config):
-            continue
-        _clear_stage(out_dir, stage)
+    building = record is None
+    segments, deleted = record or ({0: _batch_ids(out_dir)}, {})
+    if not (resume and _stage_done(out_dir, "term_dict", config)):
+        _clear_stage(out_dir, "term_dict")
         t0 = time.time()
-        fn()
-        _write_manifest(out_dir, stage, config, t0)
+        _stage_term_dict(spark, out_dir, config, (segments, deleted))
+        _write_manifest(out_dir, "term_dict", config, t0)
+    if resume and _stage_done(out_dir, "blocks", config):
+        return
+    if building:
+        _clear_stage(out_dir, "blocks")
+    t0 = time.time()
+    if new is not None:
+        _stage_blocks(spark, out_dir, config, segments[new], new, len(segments) == 1)
+    listed = [f"segment={s}" for s in sorted(segments)]
+    _write_manifest(
+        out_dir, "blocks", config, t0, listed,
+        {"segments": {str(s): b for s, b in sorted(segments.items())},
+         "deleted": {str(u): ids for u, ids in sorted(deleted.items())}},
+    )
+    bdir = _stage_dir(out_dir, "blocks")
+    for name in set(os.listdir(bdir) if os.path.isdir(bdir) else ()) - set(listed):
+        path = os.path.join(bdir, name)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            os.remove(path)
 
 
 # ---------------------------------------------------------------------------
@@ -1241,7 +1413,8 @@ def create_snapshot(out_dir: str, name: str) -> str:
     Hard-links every stage's parquet files (copy fallback across
     filesystems) plus meta.json and the lineage manifests into
     ``<out_dir>/snapshots/<name>`` — the parquet files are immutable
-    once written (commits replace whole stage directories), so
+    once written (a commit adds a segment directory; merges and stage
+    rewrites replace whole directories), so
     hard-links give O(#files) snapshots of arbitrarily large indexes,
     exactly like Lucene's segment-file hard-link backups.
     """

@@ -12,8 +12,9 @@ redesign:
 |---------------------------------------------|--------------------|
 | immutable stage files, overwrite-by-swap    | snapshot isolation (new snapshot per commit) |
 | per-stage JSON manifest (inputs, row counts, wall, lineage) | manifest files / snapshot summary metrics |
-| ``blocks/term_bucket=N`` directory partitioning | identity partition spec on ``term_bucket`` |
-| NRT commit rewrites every term bucket       | ``overwritePartitions()`` over every partition |
+| ``blocks/segment=S/term_bucket=N`` directory partitioning | identity partition spec on ``(segment, term_bucket)`` |
+| NRT commit writes one new segment; the blocks manifest lists the live segments and deleted docs | append of the new ``segment`` partition + position deletes, one snapshot per commit |
+| merge policy merges every segment into one  | ``rewrite_data_files`` compaction |
 | named snapshots + journaled restore         | time travel / ``rollback_to_snapshot`` |
 
 On a cluster where the Iceberg runtime IS on the classpath (any real
@@ -31,14 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 # stage name -> partition columns (mirrors the directory layout the
 # parquet build writes: docs and postings in ``batch=<id>`` partitions —
-# 0 for build_index, one per incremental append — and blocks by term
-# bucket; identity transforms only)
+# 0 for build_index, one per incremental append — and blocks by segment
+# (one per commit, until a merge) then term bucket; identity transforms
+# only)
 STAGE_PARTITIONING: dict[str, list[str]] = {
     "analyzed": ["batch"],
     "segments": ["batch"],
     "term_dict": [],
     "term_dict_rev": [],
-    "blocks": ["term_bucket"],
+    "blocks": ["segment", "term_bucket"],
 }
 
 
@@ -83,8 +85,8 @@ def publish_index(index, catalog: str, namespace: str) -> list[str]:
     for stage, parts in STAGE_PARTITIONING.items():
         try:
             df: DataFrame = {
-                "analyzed": lambda: spark.read.parquet(
-                    f"{index.dir}/analyzed"
+                "analyzed": lambda: index.live(
+                    spark.read.parquet(f"{index.dir}/analyzed"), "batch"
                 ),
                 "segments": lambda: index.segments,
                 "term_dict": lambda: index.term_dict,

@@ -37,7 +37,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, decode_blocks, no_hits, rank_topk
+from solr_spark.query.engine import SearchEngine, no_hits, rank_topk
 from solr_spark.query.extras import _expansion_stats
 from solr_spark.query.parser import (
     BoolQ,
@@ -377,7 +377,7 @@ def execute_ast(
     srcs: list[DataFrame] = []
     if ctx.term_rows:
         terms = sorted({t for t, _, _ in ctx.term_rows})
-        decoded = decode_blocks(engine._blocks_for(terms))
+        decoded = engine.decode(engine._blocks_for(terms))
         wmap = local_frame(
             engine.spark, ctx.term_rows, "term string, leaf_id int, wfactor double"
         )

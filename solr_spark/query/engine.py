@@ -62,10 +62,11 @@ from solr_spark.index.build import InvertedIndex
 from solr_spark.session import local_frame
 
 
-def decode_blocks(blocks: DataFrame, *per_doc: str) -> DataFrame:
+def decode_blocks(blocks: DataFrame, *per_doc: str, carry: tuple[str, ...] = ()) -> DataFrame:
     """Posting blocks → one row per posting (term, doc_id, tf, dl), plus
     the per-doc list columns named in ``per_doc`` (``positions``,
-    ``payloads``) when a caller asks for them.
+    ``payloads``) when a caller asks for them, and the block columns
+    named in ``carry``.
 
     The query side's one decoder, and it runs in the JVM: ``inline`` over
     ``arrays_zip`` of the block's int arrays is a ``Generate`` that
@@ -74,12 +75,13 @@ def decode_blocks(blocks: DataFrame, *per_doc: str) -> DataFrame:
     (index built without it) yields no rows, so callers that need
     positions or payloads check the index config first."""
     arrays = ["doc_offsets", "tfs", "dls", *per_doc]
-    return blocks.select("term", "min_doc_id", F.inline(F.arrays_zip(*arrays))).select(
+    return blocks.select("term", "min_doc_id", *carry, F.inline(F.arrays_zip(*arrays))).select(
         "term",
         (F.col("min_doc_id") + F.col("doc_offsets")).alias("doc_id"),
         F.col("tfs").alias("tf"),
         F.col("dls").alias("dl"),
         *per_doc,
+        *carry,
     )
 
 
@@ -215,6 +217,12 @@ class SearchEngine:
             F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
+    def decode(self, blocks: DataFrame, *per_doc: str) -> DataFrame:
+        """:func:`decode_blocks` over the live docs: every query path
+        decodes through here, so committed deletes reach each of them."""
+        carry = ("segment",) if self.index.deleted else ()
+        return self.index.live(decode_blocks(blocks, *per_doc, carry=carry), "segment").drop(*carry)
+
     def length_norm(self, dl: Column) -> Column:
         """BM25 doc-length normalization ``1-b+b·dl/avgdl`` (float64)."""
         return F.lit(1.0 - self.b) + F.lit(self.b) * dl.cast("double") / F.lit(self.avgdl)
@@ -332,12 +340,14 @@ class SearchEngine:
             return local_frame(self.spark, [], "doc_id long, score_raw double, n_terms long")
         if blocks is None:
             blocks = self._blocks_for([s.term for s in stats])
-        scored = self._score_decoded(decode_blocks(blocks), stats)
+        scored = self._score_decoded(self.decode(blocks), stats)
         if len(stats) == 1:
             # Single distinct term: a doc_id appears at most ONCE across
-            # the term's posting streams (tf is per-doc aggregated at
-            # build time and salting routes a doc's postings for a term
-            # to exactly one salt stream), so the per-doc aggregation is
+            # the term's live posting streams (tf is per-doc aggregated at
+            # build time, salting routes a doc's postings for a term
+            # to exactly one salt stream, and an id re-added after its
+            # delete was committed has its old postings dropped by
+            # decode), so the per-doc aggregation is
             # an identity — emit scores map-side with NO exchange. The
             # downstream top-k then collapses to a shuffle-free
             # TakeOrderedAndProject: one job fewer per single-term query
@@ -458,15 +468,12 @@ class SearchEngine:
         need_g = [t for t in uniq if t not in gcache]
 
         blocks = self._blocks_for(uniq)
-        meta = blocks.select("term", "salt", "block_no", "max_tf", "min_dl").withColumn(
+        block_key = ["segment", "term", "salt", "block_no"]
+        meta = blocks.select(*block_key, "max_tf", "min_dl").withColumn(
             "wbound", self._widf_map(stats)[F.col("term")] * self._g_col()
         )
-        seed = (
-            meta.orderBy(F.desc("wbound"))
-            .limit(self._N_SEED_BLOCKS)
-            .select("term", "salt", "block_no")
-        )
-        decoded = decode_blocks(blocks.join(F.broadcast(seed), ["term", "salt", "block_no"]))
+        seed = meta.orderBy(F.desc("wbound")).limit(self._N_SEED_BLOCKS).select(*block_key)
+        decoded = self.decode(blocks.join(F.broadcast(seed), block_key))
         partial = (
             self._score_decoded(decoded, stats)
             .groupBy("doc_id")

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from solr_spark.query.engine import SearchEngine, TermStats, decode_blocks, no_hits, rank_topk
+from solr_spark.query.engine import SearchEngine, TermStats, no_hits, rank_topk
 from solr_spark.session import local_frame
 
 
@@ -147,7 +147,7 @@ def maxscore_topk(engine: SearchEngine, query: str, k: int = 10) -> DataFrame:
     stats = engine._term_stats(engine.analyze_query(query))
     if not stats:
         return no_hits(engine.spark)
-    decoded = decode_blocks(engine._blocks_for([s.term for s in stats]))
+    decoded = engine.decode(engine._blocks_for([s.term for s in stats]))
     scored = engine._score_decoded(decoded, stats)
     return rank_topk(
         scored.groupBy("doc_id")
@@ -1338,7 +1338,7 @@ def explain_scores(
             [], "doc_id long, term string, tf int, df long, idf double, contribution double",
         )
     hits = engine.topk(query, k=k, mode=mode).select("doc_id")
-    decoded = decode_blocks(engine._blocks_for([s.term for s in stats]))
+    decoded = engine.decode(engine._blocks_for([s.term for s in stats]))
     scored = engine._score_decoded(decoded, stats)
     df_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.df))])
     idf_map = F.create_map(*[x for s in stats for x in (F.lit(s.term), F.lit(s.idf))])

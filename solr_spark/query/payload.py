@@ -11,7 +11,7 @@ each matching doc with an aggregate (sum / max / min / avg) of the
 payloads at that term's positions.
 
 Execution: pruned block scan → the engine's JVM block decode
-(:func:`~solr_spark.query.engine.decode_blocks`) with each doc's payload
+(:meth:`~solr_spark.query.engine.SearchEngine.decode`) with each doc's payload
 list, REDUCED per doc by SQL array functions (``aggregate`` /
 ``array_min`` / ``array_max``, ``filter`` for payload_check — no
 per-occurrence rows ever materialize in the plan) → one hash aggregation
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from solr_spark.query.engine import SearchEngine, decode_blocks, rank_topk
+from solr_spark.query.engine import SearchEngine, rank_topk
 
 
 def _payload_postings(engine: SearchEngine, term_text: str, caller: str) -> DataFrame:
@@ -36,7 +36,7 @@ def _payload_postings(engine: SearchEngine, term_text: str, caller: str) -> Data
     toks = engine.analyze_query(term_text)
     if len(toks) != 1:
         raise ValueError(f"{caller} takes a single term")
-    return decode_blocks(engine._blocks_for(toks), "payloads")
+    return engine.decode(engine._blocks_for(toks), "payloads")
 
 
 def payload_score(

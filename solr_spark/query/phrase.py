@@ -25,7 +25,7 @@ Execution (one shuffle, no per-row/per-doc Python):
 1. prune the block scan to the phrase terms' buckets;
 2. decode postings WITH positions into a FLAT occurrence table
    (term, doc_id, pos, dl) in the JVM — the engine's
-   :func:`~solr_spark.query.engine.decode_blocks` plus one ``explode``
+   :meth:`~solr_spark.query.engine.SearchEngine.decode` plus one ``explode``
    of each doc's position list, one row per occurrence;
 3. hash-repartition by doc_id (the single shuffle — co-locates every
    occurrence of a doc);
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from solr_spark.query.engine import SearchEngine, decode_blocks, no_hits, rank_topk
+from solr_spark.query.engine import SearchEngine, no_hits, rank_topk
 from solr_spark.session import local_frame
 
 _PF_SCHEMA = T.StructType(
@@ -73,7 +73,7 @@ def occurrences(engine: SearchEngine, terms: list[str]) -> DataFrame:
     """Flat occurrence rows (term, doc_id, pos, dl) of ``terms``: the
     pruned block scan, decoded with positions, one ``explode`` per doc's
     position list — all JVM."""
-    post = decode_blocks(engine._blocks_for(terms), "positions")
+    post = engine.decode(engine._blocks_for(terms), "positions")
     return post.select("term", "doc_id", F.explode("positions").alias("pos"), "dl")
 
 

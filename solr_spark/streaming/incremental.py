@@ -18,26 +18,39 @@ Spark's batch+streaming model:
 - delete-by-id / delete-by-query (``update/UpdateLog.java:452``,
   ``solrj-streaming/.../io/stream/DeleteStream.java``) →
   :meth:`delete_by_ids` / :meth:`delete_by_query` record the deleted
-  doc ids as tombstones; :meth:`commit` applies them (Lucene applies
-  deletes at merge) by compacting the analyzed/segments stages to the
-  surviving docs.
+  doc ids as pending tombstones (``tombstones.json``, driver-side, no
+  Spark job); :meth:`commit` folds them into the committed live-docs
+  record (Lucene's liveDocs): the analyzed and segments stages are not
+  rewritten, and every read filters the deleted docs out with one
+  literal predicate (``InvertedIndex.live``).
 - hard commit (flush + merge) → :meth:`IncrementalIndexer.commit`
-  runs the build's own merge step (``build._merge``) exactly as
-  ``build_index`` does: term_dict (global stats N/avgdl/df/idf) and the
-  blocks of every term bucket are rewritten from the segments. So an
-  incremental build that appends B1..Bn, deletes D and commits writes
-  the same term_dict and blocks as a batch build over the surviving
-  corpus (oracle-gated against DuckDB).
+  encodes only the batches no segment holds yet, into one new segment
+  ``blocks/segment=<s>/`` (Lucene's flushed segment: old segments are
+  immutable, and blocks are stats-independent, so they stay valid when
+  N/avgdl/idf move), and recomputes term_dict and meta.json over the
+  live docs — df, N and avgdl stay exact, so an incremental index that
+  appends B1..Bn, deletes D and commits answers rank-identically to a
+  batch build over the surviving corpus (oracle-gated against DuckDB).
+  The blocks manifest is the commit point: it maps each segment to its
+  batches and holds the live-docs record; readers open exactly the
+  segments it lists.
+- segment merge (TieredMergePolicy, ``index/DefaultMergePolicyFactory.java:42``)
+  → the module constants ``MERGE_MAX_SEGMENTS`` / ``MERGE_MAX_DELETED_FRAC``:
+  past either, a commit compacts the deleted docs out of the analyzed
+  and segments stages and encodes every batch into one segment — the
+  build's own path; ``build_index`` is that path for batch 0.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
   manifests. Tombstones are removed only after the blocks manifest is
   written, so re-running ``commit()`` after a killed commit redoes it,
-  deletes included.
+  deletes included; the half-written segment directory of a killed
+  commit is never read, and the next commit overwrites it.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
   indexer continues a built directory as it is.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -48,12 +61,23 @@ from solr_spark.index.build import (
     IndexConfig,
     InvertedIndex,
     _batch_ids,
+    _commit_record,
+    _dead_rows,
+    _live_stage,
     _merge,
     _parquet_files,
+    _read_stage,
     _stage_dir,
     _write_batch,
 )
-from solr_spark.session import local_frame
+
+#: merge policy: a commit merges every segment into one, compacting the
+#: deleted docs away, when it would otherwise leave more than
+#: ``MERGE_MAX_SEGMENTS`` segments or more than ``MERGE_MAX_DELETED_FRAC``
+#: of the indexed docs deleted (module constants, not IndexConfig fields:
+#: the policy decides when blocks are rewritten, never what they hold)
+MERGE_MAX_SEGMENTS = 8
+MERGE_MAX_DELETED_FRAC = 0.2
 
 
 class IncrementalIndexer:
@@ -78,7 +102,7 @@ class IncrementalIndexer:
         adir = _stage_dir(self.dir, "analyzed")
         if not os.path.isdir(adir) or not os.listdir(adir):
             return 0
-        mx = self.spark.read.parquet(adir).agg(F.max("doc_id")).collect()[0][0]
+        mx = _read_stage(self.spark, self.dir, "analyzed").agg(F.max("doc_id")).collect()[0][0]
         return int(mx) + 1 if mx is not None else 0
 
     # ------------------------------------------------------------------
@@ -94,15 +118,21 @@ class IncrementalIndexer:
 
         ``batch_id`` keys the batch's ``batch=<id>`` partition directory;
         passing the streaming source's micro-batch id makes at-least-once
-        re-delivery idempotent (the whole directory is overwritten). New
-        doc_ids continue from max(doc_id)+1 when ``id_col`` is absent;
-        ``id_col`` ids already held by another batch (a deleted doc too,
-        until its delete is committed) reject the batch with ValueError.
+        re-delivery idempotent (the whole directory is overwritten) until
+        the batch is committed; a committed batch id is rejected with
+        ValueError. New doc_ids continue from max(doc_id)+1 when
+        ``id_col`` is absent; ``id_col`` ids already held by another
+        batch's live doc (a deleted doc too, until its delete is
+        committed) reject the batch with ValueError.
         Returns the number of docs appended.
         """
         if batch_id is None:
             ids = _batch_ids(self.dir)
             batch_id = (ids[-1] + 1) if ids else 0
+        record = _commit_record(self.dir)
+        for seg, batches in (record[0] if record else {}).items():
+            if int(batch_id) in batches:
+                raise ValueError(f"batch={batch_id} is already committed in segment {seg}")
         _write_batch(
             docs, self.dir, self.config, text_col, id_col,
             sort_cols or ["repo", "path", "commit"], int(batch_id), self._next_doc_id,
@@ -118,36 +148,51 @@ class IncrementalIndexer:
     # ------------------------------------------------------------------
     def delete_by_ids(self, doc_ids: list[int]) -> int:
         """Record delete-by-id tombstones (applied at the next commit)."""
-        self._record_deletes(local_frame(self.spark, [(int(d),) for d in doc_ids], "doc_id long"))
+        self._record_deletes([int(d) for d in doc_ids])
         return len(doc_ids)
 
     def delete_by_query(self, pred: Column) -> int:
-        """Record tombstones for every indexed doc matching ``pred`` (a
-        Column over the doc registry) — the deleteByQuery analog."""
-        adir = _stage_dir(self.dir, "analyzed")
-        matched = self.spark.read.parquet(adir).where(pred).select("doc_id").distinct()
-        self._record_deletes(matched)
-        return matched.count()
+        """Record tombstones for every live indexed doc matching ``pred``
+        (a Column over the doc registry) — the deleteByQuery analog."""
+        live = _live_stage(self.spark, self.dir, "analyzed", _commit_record(self.dir))
+        ids = [r[0] for r in live.where(pred).select("doc_id").distinct().collect()]
+        self._record_deletes(ids)
+        return len(ids)
 
-    def _record_deletes(self, ids: DataFrame) -> None:
-        """Append the deleted doc ids to ``tombstones/``."""
-        ids.write.mode("append").parquet(_stage_dir(self.dir, "tombstones"))
+    def _tombstone_path(self) -> str:
+        return os.path.join(self.dir, "tombstones.json")
 
-    def _tombstones(self) -> DataFrame | None:
+    def _record_deletes(self, ids: list[int]) -> None:
+        """Add the deleted doc ids to the pending tombstones (driver-side,
+        written aside and renamed into place)."""
+        path = self._tombstone_path()
+        with open(path + ".tmp", "w") as f:
+            json.dump(sorted(self._tombstones() | set(ids)), f)
+        os.replace(path + ".tmp", path)
+
+    def _tombstones(self) -> set[int]:
+        """Pending tombstone ids; a ``tombstones/`` Parquet directory of an
+        older layout is read too."""
+        ids: set[int] = set()
+        if os.path.exists(self._tombstone_path()):
+            with open(self._tombstone_path()) as f:
+                ids.update(json.load(f))
         tdir = _stage_dir(self.dir, "tombstones")
-        if not os.path.isdir(tdir) or not os.listdir(tdir):
-            return None
-        return self.spark.read.parquet(tdir)
+        if os.path.isdir(tdir) and os.listdir(tdir):
+            rows = self.spark.read.schema("doc_id long").parquet(tdir).collect()
+            ids.update(int(r[0]) for r in rows)
+        return ids
 
-    def _compact_stage(self, stage: str, dead: DataFrame) -> None:
-        """Rewrite a stage excluding tombstoned doc_ids (swap via rename).
+    def _compact_stage(self, stage: str, dead: Column) -> None:
+        """Rewrite a stage without the rows ``dead`` selects (swap via
+        rename).
 
         At corpus scale the stages would be partitioned by doc range and
         only partitions containing deleted ids rewritten; the swap
         pattern (write aside, atomic rename) is the same.
         """
         src = _stage_dir(self.dir, stage)
-        df = self.spark.read.parquet(src).join(F.broadcast(dead), "doc_id", "left_anti")
+        df = _read_stage(self.spark, self.dir, stage).where(~dead)
         tmp = src + "__compact"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").partitionBy("batch").parquet(tmp)
@@ -159,14 +204,41 @@ class IncrementalIndexer:
 
     # ------------------------------------------------------------------
     def commit(self) -> InvertedIndex:
-        """Hard commit: compact the tombstoned docs out of the analyzed and
-        segments stages, then run the build's merge over every bucket."""
-        tomb = self._tombstones()
-        if tomb is not None:
-            dead = tomb.select("doc_id").distinct()
-            self._compact_stage("analyzed", dead)
-            self._compact_stage("segments", dead)
-        _merge(self.spark, self.dir, self.config, resume=False)
+        """Hard commit: encode the batches no segment holds yet into one
+        new segment and fold the pending tombstones into the committed
+        live-docs record; term_dict and meta.json are recomputed over the
+        live docs. Old segments are never re-encoded, until the merge
+        policy merges them all into one (compacting the deleted docs out
+        of the analyzed and segments stages first), which is the build's
+        own path. The first commit of a directory whose blocks carry no
+        segment level (an older layout) is such a merge."""
+        record = _commit_record(self.dir)
+        segments, deleted = record or ({}, {})
+        covered = {b for bs in segments.values() for b in bs}
+        fresh = [b for b in _batch_ids(self.dir) if b not in covered]
+        dead = self._tombstones()
+        new = max(segments, default=-1) + 1
+        if fresh:
+            segments[new] = fresh
+        if dead:
+            u = max(segments)
+            deleted[u] = sorted(set(deleted.get(u, ())) | dead)
+        n_dead = sum(len(ids) for ids in deleted.values())
+        n_docs = sum(f["rows"] for f in _parquet_files(_stage_dir(self.dir, "analyzed")))
+        merge = (record is None or len(segments) > MERGE_MAX_SEGMENTS
+                 or n_dead > MERGE_MAX_DELETED_FRAC * n_docs)
+        if not (fresh or dead or merge):
+            return InvertedIndex(self.spark, self.dir)
+        if merge:
+            if deleted:
+                pred = _dead_rows(deleted, segments, "batch")
+                self._compact_stage("analyzed", pred)
+                self._compact_stage("segments", pred)
+            segments, deleted = {new: _batch_ids(self.dir)}, {}
+        _merge(self.spark, self.dir, self.config, False, (segments, deleted),
+               new if new in segments else None)
+        if os.path.exists(self._tombstone_path()):
+            os.remove(self._tombstone_path())
         shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)
         return InvertedIndex(self.spark, self.dir)
 

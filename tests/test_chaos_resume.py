@@ -14,6 +14,11 @@ Gated behind ``SPARK_GRAFT_CHAOS=1`` — it builds the 240k index three
 times (~5-8 min on local[8]); run explicitly:
 
     SPARK_GRAFT_CHAOS=1 python -m pytest tests/test_chaos_resume.py -x -q
+
+The incremental commit's kill test is small and runs in the default
+suite: a process that commits an append plus deletes is SIGKILLed while
+it writes its new segment, and re-running ``commit`` gives what an
+uninterrupted commit gives.
 """
 
 from __future__ import annotations
@@ -118,3 +123,68 @@ def test_sigkill_mid_blocks_then_resume_is_byte_identical(spark):
 
     shutil.rmtree(out_kill, ignore_errors=True)
     shutil.rmtree(out_ref, ignore_errors=True)
+
+
+_COMMIT_SNIPPET = """
+import sys
+sys.path.insert(0, {repo!r})
+from solr_spark.index.build import IndexConfig
+from solr_spark.session import get_spark
+from solr_spark.streaming import IncrementalIndexer
+
+spark = get_spark("commit_victim", master="local[2]", shuffle_partitions=2)
+IncrementalIndexer(spark, {out!r}, IndexConfig(**{cfg!r})).commit()
+print("COMMIT_DONE", flush=True)
+"""
+
+
+def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_config, tmp_path):
+    """SIGKILL a process mid-commit (its new segment's blocks in flight,
+    the commit point not yet written). Readers of the killed directory
+    see the last commit only; re-running ``commit`` gives the term_dict,
+    meta.json and top-k of an uninterrupted commit."""
+    import dataclasses
+    import json
+
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index.build import InvertedIndex
+    from solr_spark.query.engine import SearchEngine
+    from solr_spark.streaming import IncrementalIndexer
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    killed, ref = str(tmp_path / "killed"), str(tmp_path / "ref")
+    pdf = synth_corpus_pandas(700)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, killed, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[:400]), id_col="doc_id")
+    inc.commit()
+    inc.append_batch(spark.createDataFrame(pdf.iloc[400:]), id_col="doc_id")
+    inc.delete_by_ids([5, 17, 42, 450])
+    shutil.copytree(killed, ref)  # the same pending commit, run without a kill
+
+    snippet = _COMMIT_SNIPPET.format(repo=repo, out=killed, cfg=dataclasses.asdict(test_config))
+    proc = subprocess.Popen([sys.executable, "-c", snippet],
+                            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    new_segment = os.path.join(killed, "blocks", "segment=1")
+    deadline = time.time() + 120
+    while time.time() < deadline and proc.poll() is None and not os.path.isdir(new_segment):
+        time.sleep(0.02)
+    was_running = proc.poll() is None
+    os.kill(proc.pid, signal.SIGKILL)
+    proc.wait(timeout=60)
+    assert was_running and os.path.isdir(new_segment), "the commit ended before the kill"
+    with open(os.path.join(killed, "_MANIFEST_blocks.json")) as f:
+        assert json.load(f)["segments"] == {"0": [0]}  # the commit point was not written
+
+    before = InvertedIndex(spark, killed)
+    decoded = SearchEngine(before).decode(before.blocks).select("doc_id").distinct()
+    assert decoded.count() == 400  # the killed segment is never read
+
+    got = IncrementalIndexer(spark, killed, test_config).commit()
+    want = IncrementalIndexer(spark, ref, test_config).commit()
+    assert got.record == want.record
+    assert sorted(map(tuple, got.term_dict.collect())) == sorted(map(tuple, want.term_dict.collect()))
+    assert got.meta == want.meta
+    for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
+        assert SearchEngine(got).topk(q, k=10, mode=mode).collect() == \
+            SearchEngine(want).topk(q, k=10, mode=mode).collect(), (q, mode)

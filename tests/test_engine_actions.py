@@ -102,10 +102,33 @@ def test_search_miss_job_budget(warm, spark):
     assert 1 <= n <= 3, f"search miss + collect launched {n} jobs (budget 3)"
 
 
+def test_fresh_index_opens_and_plans_without_jobs(warm, spark):
+    """Every stage is read with the schema its manifest recorded: opening
+    a fresh index and planning a query over term_dict and blocks runs no
+    schema-inference job (nor any other)."""
+    from pyspark.sql import functions as F
+
+    from solr_spark.index.build import InvertedIndex
+    from solr_spark.query.engine import TermStats
+
+    def plan():
+        idx = InvertedIndex(spark, warm.dir)
+        eng = SearchEngine(idx)
+        stats = [TermStats("server", 10, 1.0, 1.0), TermStats("client", 10, 1.0, 1.0)]
+        for df in (
+            idx.term_dict.where(F.col("term").isin("server", "client")).select("df", "idf"),
+            eng.topk_from_stats(stats, k=10),
+            eng.topk_from_stats(stats, k=10, mode="AND"),
+        ):
+            df._jdf.queryExecution().executedPlan()
+
+    assert _job_count(spark, "ja_open", plan) == 0
+
+
 def test_nrt_cycle_job_budget(spark, test_config):
-    """A delete only writes its tombstone ids (one job), and a commit
-    after a small append and delete costs no more than compaction plus
-    the build's merge."""
+    """A delete only writes its tombstone ids (no job), and a commit
+    after a small append and delete costs term_dict over the live docs
+    plus one new segment's blocks."""
     import shutil
 
     from solr_spark.corpus import synth_corpus
@@ -119,8 +142,8 @@ def test_nrt_cycle_job_budget(spark, test_config):
     inc.append_batch(synth_corpus(spark, 20))
     n_del = _job_count(spark, "ja_nrt_delete", lambda: inc.delete_by_ids([3, 50, 99]))
     n_commit = _job_count(spark, "ja_nrt_commit", inc.commit)
-    assert n_del <= 1, f"delete_by_ids launched {n_del} jobs (budget 1)"
-    assert n_commit <= 26, f"commit launched {n_commit} jobs (budget 26)"
+    assert n_del == 0, f"delete_by_ids launched {n_del} jobs (budget 0)"
+    assert n_commit <= 12, f"commit launched {n_commit} jobs (budget 12)"
 
 
 @pytest.fixture

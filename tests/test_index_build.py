@@ -362,7 +362,7 @@ def test_iceberg_catalog_gating(spark, index):
     with pytest.raises(RuntimeError):
         cat.read_stage(spark, "ice", "solr", "blocks")
     # the stage->partition map matches the parquet layout the build writes
-    assert cat.STAGE_PARTITIONING["blocks"] == ["term_bucket"]
+    assert cat.STAGE_PARTITIONING["blocks"] == ["segment", "term_bucket"]
     assert cat.STAGE_PARTITIONING["analyzed"] == cat.STAGE_PARTITIONING["segments"] == ["batch"]
 
 
@@ -583,6 +583,42 @@ def test_loose_layout_rejected_by_indexer(spark, index, tmp_path):
     q = "server data"
     assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == \
         SearchEngine(index).topk(q, k=10).collect()
+
+
+def test_unsegmented_blocks_open_and_are_adopted(spark, index, tmp_path):
+    """Blocks without the segment level (``blocks/term_bucket=<b>``, the
+    layout of older builds) still serve queries; an indexer's first
+    commit adopts the directory by merging it into one segment, and no
+    directory of the old layout is left beside it."""
+    from solr_spark.index.build import InvertedIndex
+    from solr_spark.query.engine import SearchEngine
+    from solr_spark.streaming import IncrementalIndexer
+
+    old = str(tmp_path / "unsegmented")
+    shutil.copytree(index.dir, old)
+    seg = os.path.join(old, "blocks", "segment=0")
+    for n in os.listdir(seg):
+        os.replace(os.path.join(seg, n), os.path.join(old, "blocks", n))
+    os.rmdir(seg)
+    mpath = os.path.join(old, "_MANIFEST_blocks.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    for key in ("segments", "deleted", "schema"):
+        del m[key]
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    q = "server data"
+    want = SearchEngine(index).topk(q, k=10).collect()
+    assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == want
+
+    inc = IncrementalIndexer(spark, old, index.config)
+    inc.append_batch(synth_corpus(spark, 30))
+    idx = inc.commit()
+    assert os.listdir(os.path.join(old, "blocks")) == ["segment=0"]
+    assert idx.record == ({0: [0, 1]}, {})
+    assert idx.n_docs == index.n_docs + 30
+    eng = SearchEngine(idx)
+    assert eng.decode(idx.blocks).select("doc_id").distinct().count() == idx.n_docs
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

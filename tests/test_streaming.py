@@ -125,13 +125,22 @@ def test_append_redelivery_is_idempotent(spark, corpus_df, test_config):
     idx = inc.commit()
     assert idx.n_docs == full.count()
     assert idx.docs.groupBy("doc_id").count().where("count > 1").count() == 0
+    # once committed into a segment, a batch id is no longer re-deliverable
+    with pytest.raises(ValueError, match="already committed"):
+        inc.append_batch(b0, text_col="content", id_col="doc_id", batch_id=0)
 
 
-def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_config):
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_config, monkeypatch):
     """append + delete + commit == batch build over the surviving docs
-    (UpdateLog.java:452 / DeleteStream semantics: deletes applied at the
-    merge): same answers, and the same term_dict, blocks and global
-    stats row for row — commit runs the build's merge."""
+    (UpdateLog.java:452 / DeleteStream semantics): same answers, the same
+    term_dict and global stats; once the merge policy merges the index,
+    the same blocks row for row too — a merge runs the build's path."""
+    from solr_spark.streaming import incremental
+
     d_inc, d_batch = f"{BASE}/del_inc", f"{BASE}/del_batch"
     shutil.rmtree(d_inc, ignore_errors=True)
     shutil.rmtree(d_batch, ignore_errors=True)
@@ -143,10 +152,10 @@ def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_c
                      text_col="content", id_col="doc_id", batch_id=0)
     inc.append_batch(full.where(F.pmod(F.col("doc_id"), 2) == 1),
                      text_col="content", id_col="doc_id", batch_id=1)
-    inc.commit()  # first commit: all buckets
+    inc.commit()  # first commit: one segment
     n_del = inc.delete_by_query(F.pmod(F.col("doc_id"), 7) == 3)
     assert n_del > 0
-    idx = inc.commit()  # second commit: deletes applied, every bucket re-encoded
+    idx = inc.commit()  # second commit: deletes recorded as live docs
 
     survivors = full.where(F.pmod(F.col("doc_id"), 7) != 3)
     batch_idx = build_index(
@@ -157,10 +166,129 @@ def test_delete_then_commit_equals_batch_over_survivors(spark, corpus_df, test_c
         assert _topk(idx, q, mode) == _topk(batch_idx, q, mode)
     # deleted docs are gone from the registry too
     assert idx.docs.where(F.pmod(F.col("doc_id"), 7) == 3).count() == 0
-    for stage in ("term_dict", "blocks"):
-        got, want = getattr(idx, stage), getattr(batch_idx, stage)
-        assert got.columns == want.columns
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect())), stage
+    assert _rows(idx.term_dict) == _rows(batch_idx.term_dict)
+
+    monkeypatch.setattr(incremental, "MERGE_MAX_DELETED_FRAC", 0.0)
+    merged = inc.commit()  # the policy now merges: compaction + one segment
+    assert list(merged.record[0].values()) == [[0, 1]] and merged.deleted == {}
+    assert _rows(merged.term_dict) == _rows(batch_idx.term_dict)
+    got, want = merged.blocks.drop("segment"), batch_idx.blocks.drop("segment")
+    assert got.columns == want.columns
+    assert _rows(got) == _rows(want)
+
+
+def test_delta_commits_equal_batch_over_survivors(spark, test_config):
+    """A base plus two delta segments, each commit with deletes, equals a
+    batch build over the survivors: term_dict row for row, N and avgdl
+    exactly, the live decoded postings row for row, and top-k for OR,
+    AND, single-term, phrase and θ-forced queries. Only the new batch is
+    encoded: the base segment's files are not rewritten."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.query.phrase import phrase_topk
+
+    d_inc, d_batch = f"{BASE}/delta_inc", f"{BASE}/delta_batch"
+    shutil.rmtree(d_inc, ignore_errors=True)
+    shutil.rmtree(d_batch, ignore_errors=True)
+    pdf = synth_corpus_pandas(500)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, d_inc, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[:380]), id_col="doc_id")
+    inc.commit()
+    seg0 = os.path.join(d_inc, "blocks", "segment=0")
+
+    def mtimes():
+        return {os.path.join(r, n): os.stat(os.path.join(r, n)).st_mtime_ns
+                for r, _d, ns in os.walk(seg0) for n in ns}
+
+    base_files = mtimes()
+    dead = [3, 17, 200, 390]
+    inc.append_batch(spark.createDataFrame(pdf.iloc[380:450]), id_col="doc_id")
+    inc.delete_by_ids(dead[:3])
+    inc.commit()
+    inc.append_batch(spark.createDataFrame(pdf.iloc[450:]), id_col="doc_id")
+    inc.delete_by_ids(dead[3:])
+    idx = inc.commit()
+    assert sorted(idx.record[0]) == [0, 1, 2] and idx.deleted == {1: dead[:3], 2: dead[3:]}
+    assert mtimes() == base_files
+
+    survivors = pdf[~pdf["doc_id"].isin(dead)]
+    batch_idx = build_index(spark, spark.createDataFrame(survivors), d_batch, test_config,
+                            id_col="doc_id")
+    assert (idx.n_docs, idx.avgdl) == (batch_idx.n_docs, batch_idx.avgdl)
+    assert _rows(idx.term_dict) == _rows(batch_idx.term_dict)
+    eng, ref = SearchEngine(idx), SearchEngine(batch_idx)
+    assert _rows(eng.decode(idx.blocks, "positions")) == \
+        _rows(ref.decode(batch_idx.blocks, "positions"))
+    for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
+        assert _topk(idx, q, mode) == _topk(batch_idx, q, mode), (q, mode)
+    assert phrase_topk(eng, "import os", k=10).collect() == \
+        phrase_topk(ref, "import os", k=10).collect()
+    eng._PRUNE_MIN_POSTINGS = ref._PRUNE_MIN_POSTINGS = 1  # force θ pruning
+    for q in ("server client import", "import"):
+        assert eng.topk(q, k=5).collect() == ref.topk(q, k=5).collect(), q
+
+
+def test_readd_after_committed_delete(spark, test_config):
+    """Delete an explicit id, commit, re-add the same id with new
+    content, commit: the new content is found, the old is not, and a
+    term of both versions returns the id once."""
+    from solr_spark.corpus import synth_corpus_pandas
+
+    d = f"{BASE}/readd"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(120)
+    pdf["doc_id"] = range(len(pdf))
+    pdf.loc[7, "content"] = "zzoldversion zzshared " + pdf.loc[7, "content"]
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(pdf), id_col="doc_id")
+    inc.commit()
+    inc.delete_by_ids([7])
+    inc.commit()
+    again = pdf.iloc[[7]].copy()
+    again["content"] = "zznewversion zzshared"
+    inc.append_batch(spark.createDataFrame(again), id_col="doc_id")
+    idx = inc.commit()
+    assert idx.n_docs == 120
+    eng = SearchEngine(idx)
+    assert [r["doc_id"] for r in eng.topk("zznewversion", k=10).collect()] == [7]
+    assert eng.topk("zzoldversion", k=10).collect() == []
+    assert [r["doc_id"] for r in eng.topk("zzshared", k=10).collect()] == [7]
+    assert [r["stored_text"] for r in idx.docs.where("doc_id = 7").collect()] == \
+        ["zznewversion zzshared"]
+    assert idx.term_dict.where("term = 'zzshared'").select("df").collect()[0][0] == 1
+
+
+def test_policy_merge_equals_batch_build(spark, test_config, monkeypatch):
+    """When a commit would leave more segments than the merge policy
+    allows, it merges: the deleted docs are compacted out of the analyzed
+    and segments stages, and the one merged segment's blocks equal a
+    batch build's row for row."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.streaming import incremental
+
+    monkeypatch.setattr(incremental, "MERGE_MAX_SEGMENTS", 2)
+    d_inc, d_batch = f"{BASE}/policy_inc", f"{BASE}/policy_batch"
+    shutil.rmtree(d_inc, ignore_errors=True)
+    shutil.rmtree(d_batch, ignore_errors=True)
+    pdf = synth_corpus_pandas(180)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, d_inc, test_config)
+    for lo, hi in ((0, 100), (100, 150)):
+        inc.append_batch(spark.createDataFrame(pdf.iloc[lo:hi]), id_col="doc_id")
+        inc.commit()
+    inc.delete_by_ids([4, 120])
+    inc.append_batch(spark.createDataFrame(pdf.iloc[150:]), id_col="doc_id")
+    idx = inc.commit()
+    assert idx.record == ({2: [0, 1, 2]}, {})
+    assert os.listdir(os.path.join(d_inc, "blocks")) == ["segment=2"]
+    analyzed = spark.read.parquet(os.path.join(d_inc, "analyzed"))
+    assert analyzed.where(F.col("doc_id").isin(4, 120)).count() == 0
+
+    survivors = pdf[~pdf["doc_id"].isin([4, 120])]
+    batch_idx = build_index(spark, spark.createDataFrame(survivors), d_batch, test_config,
+                            id_col="doc_id")
+    assert _rows(idx.term_dict) == _rows(batch_idx.term_dict)
+    assert _rows(idx.blocks.drop("segment")) == _rows(batch_idx.blocks.drop("segment"))
 
 
 def test_windowed_stream_matches_batch(spark):
@@ -296,11 +424,11 @@ def test_append_batch_releases_its_cache(spark, test_config):
 
 
 def test_killed_commit_keeps_its_deletes(spark, test_config, monkeypatch):
-    """A commit killed after it compacted the deleted docs away but
-    before it re-encoded their blocks must, when re-run, still drop
-    their postings from the blocks (commit replay includes deletes)."""
+    """A commit killed after it recomputed term_dict over the live docs
+    but before it encoded its new segment must, when re-run, still drop
+    the deleted docs' postings from every query (commit replay includes
+    deletes)."""
     from solr_spark.index import build
-    from solr_spark.query.engine import decode_blocks
 
     d = f"{BASE}/killed_commit"
     shutil.rmtree(d, ignore_errors=True)
@@ -310,6 +438,7 @@ def test_killed_commit_keeps_its_deletes(spark, test_config, monkeypatch):
     terms = [r["term"] for r in inc.commit().segments.where(F.col("doc_id").isin(dead))
              .select("term").distinct().limit(30).collect()]
     inc.delete_by_ids(dead)
+    inc.append_batch(synth_corpus(spark, 20))
 
     def killed(*_args, **_kwargs):
         raise RuntimeError("killed in the blocks stage")
@@ -320,7 +449,9 @@ def test_killed_commit_keeps_its_deletes(spark, test_config, monkeypatch):
             inc.commit()
     idx = inc.commit()  # re-run after the kill
     assert idx.docs.where(F.col("doc_id").isin(dead)).count() == 0
-    assert decode_blocks(idx.blocks).where(F.col("doc_id").isin(dead)).count() == 0
+    decoded = SearchEngine(idx).decode(idx.blocks)
+    assert decoded.where(F.col("doc_id").isin(dead)).count() == 0
+    assert decoded.select("doc_id").distinct().count() == 217
     hits = SearchEngine(idx).topk(" ".join(terms), k=200).collect()
     assert hits and not {r["doc_id"] for r in hits} & set(dead)
 
@@ -331,7 +462,6 @@ def test_restored_snapshot_recommits_pending_batch(spark, test_config):
     postings into the blocks."""
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.index.build import create_snapshot, restore_snapshot
-    from solr_spark.query.engine import decode_blocks
 
     d = f"{BASE}/snap_pending"
     shutil.rmtree(d, ignore_errors=True)
@@ -346,7 +476,7 @@ def test_restored_snapshot_recommits_pending_batch(spark, test_config):
     restore_snapshot(d, "pending")
     idx = inc.commit()
     assert idx.docs.count() == 240
-    decoded = decode_blocks(idx.blocks).select("doc_id").distinct().collect()
+    decoded = SearchEngine(idx).decode(idx.blocks).select("doc_id").distinct().collect()
     assert {r["doc_id"] for r in decoded} == set(range(240))
 
 
