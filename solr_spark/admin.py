@@ -103,9 +103,9 @@ def segments_info(index) -> DataFrame:
     ``handler/admin/SegmentsInfoRequestHandler.java``, test
     ``handler/admin/SegmentsInfoRequestHandlerTest.java``): one row per
     on-disk stage — ``(stage, n_files, n_dirs, bytes)`` — plus a row per
-    blocks ``segment=<s>/term_bucket=<b>`` partition so merge/skew health
-    is visible per segment (the reference reports per-segment sizes for
-    the same reason).
+    ``segment=<s>/term_bucket=<b>`` partition of each committed segment,
+    so merge/skew health is visible per segment (the reference reports
+    per-segment sizes for the same reason).
 
     Driver-side directory walk, like the reference handler: it reads
     file METADATA (names + sizes), never file contents — O(files) on
@@ -126,13 +126,19 @@ def segments_info(index) -> DataFrame:
                 n_files += 1
                 total += os.path.getsize(os.path.join(root, fn))
         rows.append((stage, n_files, n_dirs, total))
-        if stage == "blocks":
-            for root, dirs, files in sorted(os.walk(p)):
-                if dirs or root == p:
-                    continue
+        if stage != "blocks":
+            continue
+        # the committed segments only: a directory a killed commit left
+        # behind is not part of the index
+        segs = [f"segment={s}" for s in sorted(index.record[0])] if index.record else [""]
+        for seg in segs:
+            sdir = os.path.join(p, seg)
+            for bucket in sorted(n for n in os.listdir(sdir) if n.startswith("term_bucket=")):
+                leaf = os.path.join(sdir, bucket)
+                files = os.listdir(leaf)
                 rows.append((
-                    "blocks/" + os.path.relpath(root, p), len(files), 0,
-                    sum(os.path.getsize(os.path.join(root, fn)) for fn in files),
+                    "blocks/" + os.path.join(seg, bucket), len(files), 0,
+                    sum(os.path.getsize(os.path.join(leaf, fn)) for fn in files),
                 ))
     return index.spark.createDataFrame(
         rows, "stage string, n_files long, n_dirs long, bytes long"

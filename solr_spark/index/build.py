@@ -35,11 +35,15 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
 
 Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
 incremental commit share: term_dict over the live docs, then one
-segment's blocks, then the blocks manifest — the commit point, mapping
-each segment to its batches and recording the deleted docs (the
-live-docs record every read applies, :meth:`InvertedIndex.live`). Each
-manifest also records its stage's Spark schema, so a stage opens with
-no schema-inference job (:func:`_read_stage`). Resume = "skip any stage
+segment's blocks, then ``meta.json`` — the commit point. It holds the
+global stats and the commit record: the commit's generation, which
+names its ``term_dict/commit=<c>`` and ``term_dict_rev/commit=<c>``
+directories, the segments and their batches, and the deleted docs (the
+live-docs record every read applies, :meth:`InvertedIndex.live`). A
+reader opens exactly what it names, so a killed commit leaves readers
+on the previous commit, stats and dictionary included. Each stage
+manifest records its stage's Spark schema, so a stage opens with no
+schema-inference job (:func:`_read_stage`). Resume = "skip any stage
 whose manifest exists and matches the config hash"; kill the build
 between stages and re-running yields a bit-identical index (tested).
 
@@ -205,7 +209,7 @@ def _spark_schema(sdir: str, files: list[dict]) -> dict | None:
 
 def _write_manifest(
     out_dir: str, stage: str, config: IndexConfig, t0: float,
-    parts: list[str] | None = None, extra: dict | None = None,
+    parts: list[str] | None = None, extra: dict | None = None, root: str | None = None,
 ) -> dict:
     """Per-stage lineage: per-file row counts/bytes from Parquet footers.
 
@@ -214,11 +218,13 @@ def _write_manifest(
     with its row count and size, plus stage wall time, the config hash
     that produced it and the stage's Spark schema (:func:`_read_stage`
     passes it, so opening the stage runs no schema-inference job). Only
-    the ``parts`` subdirectories are listed when given; ``extra`` keys
-    join the record. Written aside and renamed into place, so a reader
-    sees the old manifest or the new one, never a truncated file.
+    the ``parts`` subdirectories are listed when given; a ``root``
+    subdirectory is listed as the stage itself (a term_dict generation);
+    ``extra`` keys join the record. Written aside and renamed into
+    place, so a reader sees the old manifest or the new one, never a
+    truncated file.
     """
-    sdir = _stage_dir(out_dir, stage)
+    sdir = os.path.join(_stage_dir(out_dir, stage), root or "")
     files = _parquet_files(sdir, parts)
     manifest = {
         "stage": stage,
@@ -232,10 +238,16 @@ def _write_manifest(
         **(extra or {}),
     }
     path = _manifest_path(out_dir, stage)
-    with open(path + ".tmp", "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(path + ".tmp", path)
+    _write_json(path, manifest)
     return manifest
+
+
+def _write_json(path: str, obj: dict) -> None:
+    """Write aside and rename into place: a reader sees the old file or
+    the new one, never a truncated one."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(path + ".tmp", path)
 
 
 def _read_manifest(out_dir: str, stage: str) -> dict | None:
@@ -260,16 +272,18 @@ def _clear_stage(out_dir: str, stage: str) -> None:
 
 
 def _read_stage(
-    spark: SparkSession, out_dir: str, stage: str, paths: list[str] | None = None
+    spark: SparkSession, out_dir: str, stage: str, paths: list[str] | None = None,
+    root: str | None = None,
 ) -> DataFrame:
-    """A stage (only its ``paths`` subdirectories when given) as a
-    DataFrame, read with the schema its manifest recorded: no Spark job
-    until an action. A stage without a recorded schema is inferred."""
+    """A stage (only its ``paths`` subdirectories when given; its
+    ``root`` subdirectory read as the stage when given) as a DataFrame,
+    read with the schema its manifest recorded: no Spark job until an
+    action. A stage without a recorded schema is inferred."""
     m = _read_manifest(out_dir, stage)
     reader = spark.read
     if m and m.get("schema"):
         reader = reader.schema(T.StructType.fromJson(m["schema"]))
-    sdir = _stage_dir(out_dir, stage)
+    sdir = os.path.join(_stage_dir(out_dir, stage), root or "")
     if paths is None:
         return reader.parquet(sdir)
     return reader.option("basePath", sdir).parquet(*[os.path.join(sdir, p) for p in paths])
@@ -280,37 +294,71 @@ def _read_stage(
 # ---------------------------------------------------------------------------
 
 
-def _commit_record(out_dir: str) -> tuple[dict[int, list[int]], dict[int, list[int]]] | None:
-    """(segments, deleted) of the committed blocks manifest, None for a
-    directory whose blocks carry no segment level (an older layout).
+def _read_meta(out_dir: str) -> dict | None:
+    """``meta.json``, the commit point (None before the first commit)."""
+    p = os.path.join(out_dir, "meta.json")
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def _commit_record(meta: dict | None) -> tuple[dict[int, list[int]], dict[int, list[int]]] | None:
+    """(segments, deleted) of the commit ``meta`` (see :func:`_read_meta`),
+    None for a directory committed before the segment level (an older
+    layout) or not committed yet.
 
     ``segments`` maps each segment id to the batch ids its blocks hold;
     ``deleted`` maps a segment id ``u`` to the doc ids a commit deleted
     from segment ``u`` and every earlier one. Segment ids grow with each
     commit, so an id re-added after its delete was committed lands in a
     later segment and stays live."""
-    m = _read_manifest(out_dir, "blocks")
-    if m is None or "segments" not in m:
+    if meta is None or "segments" not in meta:
         return None
     return (
-        {int(s): b for s, b in m["segments"].items()},
-        {int(u): ids for u, ids in m.get("deleted", {}).items()},
+        {int(s): b for s, b in meta["segments"].items()},
+        {int(u): ids for u, ids in meta["deleted"].items()},
     )
+
+
+def _dict_root(commit: int | None) -> str | None:
+    """The ``term_dict``/``term_dict_rev`` subdirectory of commit
+    generation ``commit`` (None: an older layout's flat directory)."""
+    return None if commit is None else f"commit={commit}"
+
+
+def _write_meta(
+    out_dir: str, config: IndexConfig, stats: dict, commit: int,
+    segments: dict[int, list[int]], deleted: dict[int, list[int]],
+) -> None:
+    """Write ``meta.json``, the commit point: the global stats, the
+    config and the commit record (see :func:`_commit_record`); every
+    file a commit writes before it stays unread until it lands."""
+    _write_json(os.path.join(out_dir, "meta.json"), {
+        **{k: stats[k] for k in ("n_docs", "sum_doc_len", "avgdl")},
+        "config": asdict(config),
+        "config_hash": config.config_hash(),
+        "commit": commit,
+        "segments": {str(s): b for s, b in sorted(segments.items())},
+        "deleted": {str(u): ids for u, ids in sorted(deleted.items())},
+    })
 
 
 def _dead_rows(deleted: dict[int, list[int]], segments: dict[int, list[int]], unit: str) -> Column | None:
     """Rows of committed-deleted docs as a literal predicate over
     ``doc_id`` and ``unit``: ``segment`` for decoded blocks, ``batch``
     for the analyzed and segments stages (a batch no segment holds yet
-    is all live). None when nothing is deleted."""
+    is all live). None when nothing is deleted. Built as SQL text, one
+    py4j call however many ids it names (``Column.isin`` makes one per
+    id); Spark plans a long ``IN`` list as a hash-set lookup."""
     conds = []
     for u, ids in sorted(deleted.items()):
         if unit == "segment":
-            scope = F.col("segment") <= F.lit(u)
+            scope = f"segment <= {u}"
         else:
-            scope = F.col("batch").isin(sorted(b for s, bs in segments.items() if s <= u for b in bs))
-        conds.append(scope & F.col("doc_id").isin(ids))
-    return functools.reduce(lambda a, b: a | b, conds) if conds else None
+            scope = f"batch IN ({','.join(str(b) for s, bs in sorted(segments.items()) if s <= u for b in bs)})"
+        conds.append(f"({scope} AND doc_id IN ({','.join(map(str, ids))}))")
+    return F.expr(" OR ".join(conds)) if conds else None
 
 
 def _live(df: DataFrame, dead: Column | None) -> DataFrame:
@@ -488,7 +536,7 @@ def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
     sub = f"batch={batch_id}"
     mine = F.col("batch") == batch_id
     per_id = (
-        _live_stage(spark, out_dir, "analyzed", _commit_record(out_dir))
+        _live_stage(spark, out_dir, "analyzed", _commit_record(_read_meta(out_dir)))
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n"),
@@ -613,9 +661,12 @@ def build_postings(analyzed: DataFrame, config: IndexConfig) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig, record=None) -> None:
-    """term_dict, term_dict_rev and meta.json over the live docs of the
-    commit ``record`` (see :func:`_commit_record`; None: every doc)."""
+def _stage_term_dict(
+    spark: SparkSession, out_dir: str, config: IndexConfig, record, commit: int
+) -> dict:
+    """term_dict and term_dict_rev of commit generation ``commit`` over
+    the live docs of the commit ``record`` (see :func:`_commit_record`);
+    returns the global stats (n_docs, sum_doc_len, avgdl)."""
     analyzed = _live_stage(spark, out_dir, "analyzed", record)
     # one job for both corpus stats (was two full passes: count + sum)
     stats_row = analyzed.agg(
@@ -636,9 +687,10 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig, rec
         )
         .withColumn("is_hot", F.col("df") > F.lit(config.hot_df_threshold))
     )
+    td_dir = os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(commit))
     (term_dict.repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term")
      .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(_stage_dir(out_dir, "term_dict")))
+     .write.mode("overwrite").parquet(td_dir))
 
     # Reversed projection of the dictionary, range-sorted by the REVERSED
     # term (ReversedWildcardFilterFactory analog, ref
@@ -647,21 +699,13 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, config: IndexConfig, rec
     # term_rev, which parquet row-group min/max stats prune — instead of
     # an rlike over the whole vocabulary. The dictionary is O(vocabulary),
     # tiny next to postings, so the second sort order is cheap to keep.
-    (spark.read.schema(term_dict.schema).parquet(_stage_dir(out_dir, "term_dict"))
+    (spark.read.schema(term_dict.schema).parquet(td_dir)
      .withColumn("term_rev", F.reverse(F.col("term")))
      .repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term_rev")
      .sortWithinPartitions("term_rev")
-     .write.mode("overwrite").parquet(_stage_dir(out_dir, "term_dict_rev")))
-
-    meta = {
-        "n_docs": int(n_docs),
-        "sum_doc_len": int(sum_dl),
-        "avgdl": avgdl,
-        "config": asdict(config),
-        "config_hash": config.config_hash(),
-    }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+     .write.mode("overwrite").parquet(
+         os.path.join(_stage_dir(out_dir, "term_dict_rev"), _dict_root(commit))))
+    return {"n_docs": int(n_docs), "sum_doc_len": int(sum_dl), "avgdl": avgdl}
 
 
 # ---------------------------------------------------------------------------
@@ -1165,14 +1209,15 @@ def _blocks_shuffle_input(
 
 def _stage_blocks(
     spark: SparkSession, out_dir: str, config: IndexConfig, batches: list[int], segment: int,
-    whole: bool = True,
+    commit: int, whole: bool = True,
 ) -> None:
     """Encode the postings of ``batches`` into one segment,
-    ``blocks/segment=<segment>/term_bucket=<b>``, every bucket;
+    ``blocks/segment=<segment>/term_bucket=<b>``, every bucket, salting
+    the hot terms of commit generation ``commit``'s term_dict;
     ``whole``: the segment is the whole index (see
     :func:`_blocks_shuffle_input`)."""
     segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
-    term_dict = _read_stage(spark, out_dir, "term_dict").select("term", "is_hot")
+    term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "is_hot")
 
     # ONE shuffle: hash-repartition by (term_bucket, salt), sort runs
     # within partitions, stream-encode in a single Arrow pass. Replaces
@@ -1215,18 +1260,20 @@ _STAGES = ["analyzed", "segments", "term_dict", "blocks"]
 class InvertedIndex:
     """Handle to a built index directory (docs / term_dict / blocks).
 
-    A handle is a SNAPSHOT: the commit record (segments and deleted docs)
-    is read once at open, and the stage DataFrames are memoized on first
-    access, each read with the schema its manifest recorded, so opening
-    one runs no Spark job. After an incremental commit, use the fresh
-    handle the committer returns.
+    A handle is a SNAPSHOT: ``meta.json``, the commit point (stats,
+    term_dict generation, segments and deleted docs), is read once at
+    open, and the stage DataFrames are memoized on first access, each
+    read with the schema its manifest recorded, so opening one runs no
+    Spark job. After an incremental commit, use the fresh handle the
+    committer returns.
     """
 
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.dir = out_dir
-        with open(os.path.join(out_dir, "meta.json")) as f:
-            self.meta = json.load(f)
+        self.meta = _read_meta(out_dir)
+        if self.meta is None:
+            raise FileNotFoundError(f"no committed index at {out_dir} (meta.json missing)")
         self.config = IndexConfig(**self.meta["config"])
         if self.config.format_version < 3:
             raise ValueError(
@@ -1234,16 +1281,20 @@ class InvertedIndex:
                 f"{self.config.format_version}; this engine reads format 3 "
                 "(int-array blocks, term_dict_rev) — rebuild it with build_index"
             )
-        self.record = _commit_record(out_dir)
+        self.record = _commit_record(self.meta)
         self.deleted = self.record[1] if self.record else {}
+        self._dict_root = _dict_root(self.meta.get("commit"))
+        self._dead: dict[str, Column | None] = {}
 
     def live(self, df: DataFrame, unit: str) -> DataFrame:
         """``df`` without the rows of committed-deleted docs, ``unit``
         naming its ``segment`` (decoded blocks) or ``batch`` column: a
-        literal predicate, no job."""
+        literal predicate, no job, built once per handle and unit."""
         if not self.deleted:
             return df
-        return _live(df, _dead_rows(self.deleted, self.record[0], unit))
+        if unit not in self._dead:
+            self._dead[unit] = _dead_rows(self.deleted, self.record[0], unit)
+        return _live(df, self._dead[unit])
 
     @functools.cached_property
     def docs(self) -> DataFrame:
@@ -1251,21 +1302,22 @@ class InvertedIndex:
         cheap). The ``batch=<id>`` partition column is an ingestion
         detail, dropped here."""
         return (
-            _live_stage(self.spark, self.dir, "analyzed", self.record)
+            self.live(_read_stage(self.spark, self.dir, "analyzed"), "batch")
             .drop("tokens")
             .drop("batch")
         )
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
-        return _read_stage(self.spark, self.dir, "term_dict")
+        """The committed generation's dictionary."""
+        return _read_stage(self.spark, self.dir, "term_dict", root=self._dict_root)
 
     @functools.cached_property
     def term_dict_rev(self) -> DataFrame:
         """Dictionary sorted by reversed term (leading-wildcard seeks)."""
         fields = self.term_dict.schema.fields + [T.StructField("term_rev", T.StringType())]
         return self.spark.read.schema(T.StructType(fields)).parquet(
-            _stage_dir(self.dir, "term_dict_rev")
+            os.path.join(_stage_dir(self.dir, "term_dict_rev"), self._dict_root or "")
         )
 
     @functools.cached_property
@@ -1284,7 +1336,7 @@ class InvertedIndex:
     @property
     def segments(self) -> DataFrame:
         """Live per-doc postings (the ``segments`` stage)."""
-        return _live_stage(self.spark, self.dir, "segments", self.record)
+        return self.live(_read_stage(self.spark, self.dir, "segments"), "batch")
 
     def refresh(self) -> "InvertedIndex":
         """Fresh snapshot handle (re-reads meta + file listings) — use
@@ -1332,9 +1384,12 @@ def build_index(
 
     # fused unit: "analyzed" + "segments" are produced by ONE corpus pass
     # (separate manifests are still written — resume treats the pair as a
-    # unit: if either is missing/stale, both are rebuilt)
+    # unit: if either is missing/stale, both are rebuilt). Batches whose
+    # docs a commit deleted still hold them: no resume from those.
+    record = _commit_record(_read_meta(out_dir))
     if not (
         resume
+        and not (record and record[1])
         and _stage_done(out_dir, "analyzed", config)
         and _stage_done(out_dir, "segments", config)
     ):
@@ -1351,50 +1406,55 @@ def build_index(
 def _merge(
     spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
     record: tuple[dict[int, list[int]], dict[int, list[int]]] | None = None,
-    new: int | None = 0,
+    new: int | None = 0, commit: int = 0,
 ) -> None:
     """Stages 3+4, the one merge step of both writers: term_dict (global
-    stats over the live docs), then the blocks of segment ``new``, then
-    the blocks manifest, the commit point. ``record`` is the
-    ``(segments, deleted)`` pair the manifest commits (see
+    stats over the live docs) of commit generation ``commit``, then the
+    blocks of segment ``new``, then ``meta.json``, the commit point.
+    ``record`` is the ``(segments, deleted)`` pair it commits (see
     :func:`_commit_record`); a build passes none and gets segment 0 over
-    every batch, written into a cleared blocks stage. ``new=None``
-    encodes nothing (a commit of deletes alone). With ``resume`` a stage
-    whose manifest matches the config hash is skipped. Missing
+    every batch, written into cleared term_dict and blocks stages.
+    ``new=None`` encodes nothing (a commit of deletes alone). With
+    ``resume`` a stage whose manifest matches the config hash is skipped,
+    unless the directory holds another commit (an older layout's
+    included): resume continues this commit only. Missing
     analyzed/segments manifests are written first (an indexer's first
-    commit), so the directory reads as a complete build. Segment
-    directories the new manifest does not list are removed after it is
-    written."""
+    commit), so the directory reads as a complete build. Segment and
+    generation directories the commit does not name are removed after
+    it lands."""
     for stage in ("analyzed", "segments"):
         if _read_manifest(out_dir, stage) is None:
             _write_manifest(out_dir, stage, config, time.time())
     building = record is None
     segments, deleted = record or ({0: _batch_ids(out_dir)}, {})
+    meta = _read_meta(out_dir)
+    if meta is not None and (meta.get("commit") != commit or _commit_record(meta) != (segments, deleted)):
+        resume = False  # committed by another writer, or by an older layout
+    td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
-        _clear_stage(out_dir, "term_dict")
+        if building:
+            _clear_stage(out_dir, "term_dict")
         t0 = time.time()
-        _stage_term_dict(spark, out_dir, config, (segments, deleted))
-        _write_manifest(out_dir, "term_dict", config, t0)
-    if resume and _stage_done(out_dir, "blocks", config):
-        return
-    if building:
-        _clear_stage(out_dir, "blocks")
-    t0 = time.time()
-    if new is not None:
-        _stage_blocks(spark, out_dir, config, segments[new], new, len(segments) == 1)
+        stats = _stage_term_dict(spark, out_dir, config, (segments, deleted), commit)
+        td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
-    _write_manifest(
-        out_dir, "blocks", config, t0, listed,
-        {"segments": {str(s): b for s, b in sorted(segments.items())},
-         "deleted": {str(u): ids for u, ids in sorted(deleted.items())}},
-    )
-    bdir = _stage_dir(out_dir, "blocks")
-    for name in set(os.listdir(bdir) if os.path.isdir(bdir) else ()) - set(listed):
-        path = os.path.join(bdir, name)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            os.remove(path)
+    if not (resume and _stage_done(out_dir, "blocks", config)):
+        if building:
+            _clear_stage(out_dir, "blocks")
+        t0 = time.time()
+        if new is not None:
+            _stage_blocks(spark, out_dir, config, segments[new], new, commit, len(segments) == 1)
+        _write_manifest(out_dir, "blocks", config, t0, listed)
+    _write_meta(out_dir, config, td, commit, segments, deleted)
+    for stage, keep in (("term_dict", [_dict_root(commit)]), ("term_dict_rev", [_dict_root(commit)]),
+                        ("blocks", listed)):
+        sdir = _stage_dir(out_dir, stage)
+        for name in set(os.listdir(sdir) if os.path.isdir(sdir) else ()) - set(keep):
+            path = os.path.join(sdir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                os.remove(path)
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,7 @@ redesign:
 | immutable stage files, overwrite-by-swap    | snapshot isolation (new snapshot per commit) |
 | per-stage JSON manifest (inputs, row counts, wall, lineage) | manifest files / snapshot summary metrics |
 | ``blocks/segment=S/term_bucket=N`` directory partitioning | identity partition spec on ``(segment, term_bucket)`` |
-| NRT commit writes one new segment; the blocks manifest lists the live segments and deleted docs | append of the new ``segment`` partition + position deletes, one snapshot per commit |
+| NRT commit writes one new segment and term_dict generation; meta.json names them and the deleted docs | append of the new ``segment`` partition + position deletes, one snapshot per commit |
 | merge policy merges every segment into one  | ``rewrite_data_files`` compaction |
 | named snapshots + journaled restore         | time travel / ``rollback_to_snapshot`` |
 

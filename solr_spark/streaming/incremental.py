@@ -31,19 +31,22 @@ Spark's batch+streaming model:
   live docs — df, N and avgdl stay exact, so an incremental index that
   appends B1..Bn, deletes D and commits answers rank-identically to a
   batch build over the surviving corpus (oracle-gated against DuckDB).
-  The blocks manifest is the commit point: it maps each segment to its
-  batches and holds the live-docs record; readers open exactly the
-  segments it lists.
+  ``meta.json`` is the commit point: it holds N and avgdl, the commit
+  generation that names the ``term_dict/commit=<c>`` directory, each
+  segment's batches and the live-docs record; readers open exactly what
+  it names, so a killed commit leaves them on the previous commit.
 - segment merge (TieredMergePolicy, ``index/DefaultMergePolicyFactory.java:42``)
-  → the module constants ``MERGE_MAX_SEGMENTS`` / ``MERGE_MAX_DELETED_FRAC``:
-  past either, a commit compacts the deleted docs out of the analyzed
+  → :func:`merge_due` over the module constants ``MERGE_MAX_SEGMENTS``,
+  ``MERGE_MAX_DELETED_FRAC`` and ``MERGE_MAX_DELETED_DOCS``: past any of
+  them, a commit compacts the deleted docs out of the analyzed
   and segments stages and encodes every batch into one segment — the
   build's own path; ``build_index`` is that path for batch 0.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
-  manifests. Tombstones are removed only after the blocks manifest is
+  manifests. Tombstones are removed only after ``meta.json`` is
   written, so re-running ``commit()`` after a killed commit redoes it,
-  deletes included; the half-written segment directory of a killed
-  commit is never read, and the next commit overwrites it.
+  deletes included; the half-written term_dict generation and segment
+  directory of a killed commit are never read, and the next commit
+  overwrites them.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
   indexer continues a built directory as it is.
 """
@@ -66,6 +69,7 @@ from solr_spark.index.build import (
     _live_stage,
     _merge,
     _parquet_files,
+    _read_meta,
     _read_stage,
     _stage_dir,
     _write_batch,
@@ -73,11 +77,23 @@ from solr_spark.index.build import (
 
 #: merge policy: a commit merges every segment into one, compacting the
 #: deleted docs away, when it would otherwise leave more than
-#: ``MERGE_MAX_SEGMENTS`` segments or more than ``MERGE_MAX_DELETED_FRAC``
-#: of the indexed docs deleted (module constants, not IndexConfig fields:
-#: the policy decides when blocks are rewritten, never what they hold)
+#: ``MERGE_MAX_SEGMENTS`` segments, or more than ``MERGE_MAX_DELETED_FRAC``
+#: of the indexed docs or ``MERGE_MAX_DELETED_DOCS`` docs deleted (module
+#: constants, not IndexConfig fields: the policy decides when blocks are
+#: rewritten, never what they hold). Every query plans the live-docs
+#: predicate, one literal per deleted id; past about 1,000 ids its
+#: planning cost shows (measured, 400-doc index, local[2]: +0 cpu-s per
+#: query at 1,000 ids, +0.2 at 2,000, +1.7 at 10,000), hence the cap.
 MERGE_MAX_SEGMENTS = 8
 MERGE_MAX_DELETED_FRAC = 0.2
+MERGE_MAX_DELETED_DOCS = 1000
+
+
+def merge_due(n_segments: int, n_deleted: int, n_docs: int) -> bool:
+    """The merge policy: does a commit that would leave ``n_segments``
+    segments and ``n_deleted`` of ``n_docs`` indexed docs deleted merge?"""
+    return (n_segments > MERGE_MAX_SEGMENTS
+            or n_deleted > min(MERGE_MAX_DELETED_FRAC * n_docs, MERGE_MAX_DELETED_DOCS))
 
 
 class IncrementalIndexer:
@@ -129,7 +145,7 @@ class IncrementalIndexer:
         if batch_id is None:
             ids = _batch_ids(self.dir)
             batch_id = (ids[-1] + 1) if ids else 0
-        record = _commit_record(self.dir)
+        record = _commit_record(_read_meta(self.dir))
         for seg, batches in (record[0] if record else {}).items():
             if int(batch_id) in batches:
                 raise ValueError(f"batch={batch_id} is already committed in segment {seg}")
@@ -154,7 +170,7 @@ class IncrementalIndexer:
     def delete_by_query(self, pred: Column) -> int:
         """Record tombstones for every live indexed doc matching ``pred``
         (a Column over the doc registry) — the deleteByQuery analog."""
-        live = _live_stage(self.spark, self.dir, "analyzed", _commit_record(self.dir))
+        live = _live_stage(self.spark, self.dir, "analyzed", _commit_record(_read_meta(self.dir)))
         ids = [r[0] for r in live.where(pred).select("doc_id").distinct().collect()]
         self._record_deletes(ids)
         return len(ids)
@@ -210,9 +226,10 @@ class IncrementalIndexer:
         live docs. Old segments are never re-encoded, until the merge
         policy merges them all into one (compacting the deleted docs out
         of the analyzed and segments stages first), which is the build's
-        own path. The first commit of a directory whose blocks carry no
-        segment level (an older layout) is such a merge."""
-        record = _commit_record(self.dir)
+        own path. The first commit of a directory committed without
+        segments (an older layout) is such a merge."""
+        meta = _read_meta(self.dir)
+        record = _commit_record(meta)
         segments, deleted = record or ({}, {})
         covered = {b for bs in segments.values() for b in bs}
         fresh = [b for b in _batch_ids(self.dir) if b not in covered]
@@ -225,8 +242,7 @@ class IncrementalIndexer:
             deleted[u] = sorted(set(deleted.get(u, ())) | dead)
         n_dead = sum(len(ids) for ids in deleted.values())
         n_docs = sum(f["rows"] for f in _parquet_files(_stage_dir(self.dir, "analyzed")))
-        merge = (record is None or len(segments) > MERGE_MAX_SEGMENTS
-                 or n_dead > MERGE_MAX_DELETED_FRAC * n_docs)
+        merge = record is None or merge_due(len(segments), n_dead, n_docs)
         if not (fresh or dead or merge):
             return InvertedIndex(self.spark, self.dir)
         if merge:
@@ -236,7 +252,7 @@ class IncrementalIndexer:
                 self._compact_stage("segments", pred)
             segments, deleted = {new: _batch_ids(self.dir)}, {}
         _merge(self.spark, self.dir, self.config, False, (segments, deleted),
-               new if new in segments else None)
+               new if new in segments else None, meta["commit"] + 1 if record else 0)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
         shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)

@@ -139,13 +139,14 @@ print("COMMIT_DONE", flush=True)
 
 
 def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_config, tmp_path):
-    """SIGKILL a process mid-commit (its new segment's blocks in flight,
-    the commit point not yet written). Readers of the killed directory
-    see the last commit only; re-running ``commit`` gives the term_dict,
-    meta.json and top-k of an uninterrupted commit."""
+    """SIGKILL a process mid-commit (its new term_dict generation
+    written, its new segment's blocks in flight, the commit point not yet
+    written). Readers of the killed directory see the last commit only:
+    its meta.json, term_dict and segments; re-running ``commit`` gives
+    the term_dict, meta.json and top-k of an uninterrupted commit."""
     import dataclasses
-    import json
 
+    from solr_spark import admin
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.index.build import InvertedIndex
     from solr_spark.query.engine import SearchEngine
@@ -157,7 +158,8 @@ def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_confi
     pdf["doc_id"] = range(len(pdf))
     inc = IncrementalIndexer(spark, killed, test_config)
     inc.append_batch(spark.createDataFrame(pdf.iloc[:400]), id_col="doc_id")
-    inc.commit()
+    last = inc.commit()
+    last_meta, last_terms = last.meta, sorted(map(tuple, last.term_dict.collect()))
     inc.append_batch(spark.createDataFrame(pdf.iloc[400:]), id_col="doc_id")
     inc.delete_by_ids([5, 17, 42, 450])
     shutil.copytree(killed, ref)  # the same pending commit, run without a kill
@@ -173,12 +175,16 @@ def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_confi
     os.kill(proc.pid, signal.SIGKILL)
     proc.wait(timeout=60)
     assert was_running and os.path.isdir(new_segment), "the commit ended before the kill"
-    with open(os.path.join(killed, "_MANIFEST_blocks.json")) as f:
-        assert json.load(f)["segments"] == {"0": [0]}  # the commit point was not written
+    # the killed commit had written its own dictionary generation
+    assert os.path.isdir(os.path.join(killed, "term_dict", "commit=1"))
 
     before = InvertedIndex(spark, killed)
+    assert before.meta == last_meta  # stats and record of the last commit
+    assert sorted(map(tuple, before.term_dict.collect())) == last_terms
+    assert before.term_dict_rev.count() == len(last_terms)
     decoded = SearchEngine(before).decode(before.blocks).select("doc_id").distinct()
     assert decoded.count() == 400  # the killed segment is never read
+    assert not [r for r in admin.segments_info(before).collect() if "segment=1" in r["stage"]]
 
     got = IncrementalIndexer(spark, killed, test_config).commit()
     want = IncrementalIndexer(spark, ref, test_config).commit()

@@ -586,35 +586,51 @@ def test_loose_layout_rejected_by_indexer(spark, index, tmp_path):
 
 
 def test_unsegmented_blocks_open_and_are_adopted(spark, index, tmp_path):
-    """Blocks without the segment level (``blocks/term_bucket=<b>``, the
-    layout of older builds) still serve queries; an indexer's first
-    commit adopts the directory by merging it into one segment, and no
-    directory of the old layout is left beside it."""
+    """An index of the layout before segments and commit generations
+    (``blocks/term_bucket=<b>``, flat ``term_dict``/``term_dict_rev``, no
+    commit record in meta.json) still serves queries; a resumed build
+    and an indexer's first commit each adopt the directory by merging it
+    into one segment, and no directory or file of the old layout is left
+    beside it."""
     from solr_spark.index.build import InvertedIndex
     from solr_spark.query.engine import SearchEngine
     from solr_spark.streaming import IncrementalIndexer
 
     old = str(tmp_path / "unsegmented")
     shutil.copytree(index.dir, old)
-    seg = os.path.join(old, "blocks", "segment=0")
-    for n in os.listdir(seg):
-        os.replace(os.path.join(seg, n), os.path.join(old, "blocks", n))
-    os.rmdir(seg)
-    mpath = os.path.join(old, "_MANIFEST_blocks.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    for key in ("segments", "deleted", "schema"):
-        del m[key]
-    with open(mpath, "w") as f:
-        json.dump(m, f)
+    for stage, sub in (("blocks", "segment=0"), ("term_dict", "commit=0"),
+                       ("term_dict_rev", "commit=0")):
+        seg = os.path.join(old, stage, sub)
+        for n in os.listdir(seg):
+            os.replace(os.path.join(seg, n), os.path.join(old, stage, n))
+        os.rmdir(seg)
+    for name, keys in (("_MANIFEST_blocks.json", ("schema",)),
+                       ("_MANIFEST_term_dict.json", ("schema", "n_docs", "sum_doc_len", "avgdl")),
+                       ("meta.json", ("commit", "segments", "deleted"))):
+        with open(os.path.join(old, name)) as f:
+            m = json.load(f)
+        for key in keys:
+            del m[key]
+        with open(os.path.join(old, name), "w") as f:
+            json.dump(m, f)
     q = "server data"
     want = SearchEngine(index).topk(q, k=10).collect()
     assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == want
+
+    # a resumed build rebuilds the older layout's term_dict and blocks
+    # (its docs and postings stages resume: the tiny corpus is not read)
+    rebuilt = str(tmp_path / "rebuilt")
+    shutil.copytree(old, rebuilt)
+    idx = build_index(spark, synth_corpus(spark, 10), rebuilt, index.config, resume=True)
+    assert os.listdir(os.path.join(rebuilt, "blocks")) == ["segment=0"]
+    assert SearchEngine(idx).topk(q, k=10).collect() == want
 
     inc = IncrementalIndexer(spark, old, index.config)
     inc.append_batch(synth_corpus(spark, 30))
     idx = inc.commit()
     assert os.listdir(os.path.join(old, "blocks")) == ["segment=0"]
+    for stage in ("term_dict", "term_dict_rev"):
+        assert os.listdir(os.path.join(old, stage)) == ["commit=0"]
     assert idx.record == ({0: [0, 1]}, {})
     assert idx.n_docs == index.n_docs + 30
     eng = SearchEngine(idx)

@@ -291,6 +291,20 @@ def test_policy_merge_equals_batch_build(spark, test_config, monkeypatch):
     assert _rows(idx.blocks.drop("segment")) == _rows(batch_idx.blocks.drop("segment"))
 
 
+def test_merge_policy_bounds():
+    """A commit merges past 8 segments, or past 20% of the indexed docs
+    deleted, or past 1,000 deleted docs however large the index: every
+    query plans one literal per deleted id."""
+    from solr_spark.streaming.incremental import merge_due
+
+    assert not merge_due(8, 0, 10)
+    assert merge_due(9, 0, 10)
+    assert not merge_due(1, 20, 100)
+    assert merge_due(1, 21, 100)
+    assert not merge_due(1, 1000, 10**6)
+    assert merge_due(1, 1001, 10**6)
+
+
 def test_windowed_stream_matches_batch(spark):
     """Append-mode watermarked windows must equal the batch window
     aggregation for every finalized window. Emission lags one
@@ -410,6 +424,11 @@ def test_commit_on_build_index_dir_keeps_base_docs(spark, test_config):
         assert [r["doc_id"] for r in got] == list(exp["doc_id"]), (q, mode)
         for r, es in zip(got, exp["score"]):
             assert abs(r["score"] - float(es)) <= 1e-5 * max(1.0, abs(es)), q
+
+    # a build over the directory reads its corpus again: the batches
+    # still hold the deleted docs, so it does not resume from them
+    rebuilt = build_index(spark, spark.createDataFrame(survivors), d, test_config, id_col="doc_id")
+    assert rebuilt.n_docs == len(survivors) and rebuilt.record == ({0: [0]}, {})
 
 
 def test_append_batch_releases_its_cache(spark, test_config):
