@@ -130,8 +130,7 @@ def segments_info(index) -> DataFrame:
             continue
         # the committed segments only: a directory a killed commit left
         # behind is not part of the index
-        segs = [f"segment={s}" for s in sorted(index.record[0])] if index.record else [""]
-        for seg in segs:
+        for seg in (f"segment={s}" for s in sorted(index.record[0])):
             sdir = os.path.join(p, seg)
             for bucket in sorted(n for n in os.listdir(sdir) if n.startswith("term_bucket=")):
                 leaf = os.path.join(sdir, bucket)

@@ -43,9 +43,10 @@ live-docs record every read applies, :meth:`InvertedIndex.live`). A
 reader opens exactly what it names, so a killed commit leaves readers
 on the previous commit, stats and dictionary included. Each stage
 manifest records its stage's Spark schema, so a stage opens with no
-schema-inference job (:func:`_read_stage`). Resume = "skip any stage
-whose manifest exists and matches the config hash"; kill the build
-between stages and re-running yields a bit-identical index (tested).
+schema-inference job (:func:`_read_stage`). A resumed build continues
+only its own commit (:func:`build_index`) and skips any stage whose
+manifest exists and matches the config hash; kill the build between
+stages and re-running yields a bit-identical index (tested).
 
 Scale notes (100 TB / 10^12 docs):
 - ONE wide shuffle in the whole build: analyze is map-only after one
@@ -68,8 +69,8 @@ Scale notes (100 TB / 10^12 docs):
   arrays. Measured at 240k docs/local[4]: shuffle bytes 1070 MB →
   247 MB (4.3x), wall 15-25% faster locally; on a real cluster the 4.3x
   is network traffic off the build's only wide exchange. The blocks
-  equal the reference encoder's (``_encode_group_rows``) over the
-  same salted postings (tested, positions+payloads included).
+  equal a per-block reference encoder's (``tests/reference_encoder.py``)
+  over the same salted postings (tested, positions+payloads included).
 - the term_dict↔segments join is keyed on term: Catalyst/AQE broadcasts
   it when small, else it folds into the same exchange.
 - blocks land partitioned by segment, then by
@@ -92,7 +93,6 @@ import time
 from dataclasses import asdict, dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -305,15 +305,14 @@ def _read_meta(out_dir: str) -> dict | None:
 
 def _commit_record(meta: dict | None) -> tuple[dict[int, list[int]], dict[int, list[int]]] | None:
     """(segments, deleted) of the commit ``meta`` (see :func:`_read_meta`),
-    None for a directory committed before the segment level (an older
-    layout) or not committed yet.
+    None before the first commit.
 
     ``segments`` maps each segment id to the batch ids its blocks hold;
     ``deleted`` maps a segment id ``u`` to the doc ids a commit deleted
     from segment ``u`` and every earlier one. Segment ids grow with each
     commit, so an id re-added after its delete was committed lands in a
     later segment and stays live."""
-    if meta is None or "segments" not in meta:
+    if meta is None:
         return None
     return (
         {int(s): b for s, b in meta["segments"].items()},
@@ -321,10 +320,30 @@ def _commit_record(meta: dict | None) -> tuple[dict[int, list[int]], dict[int, l
     )
 
 
-def _dict_root(commit: int | None) -> str | None:
+def _dict_root(commit: int) -> str:
     """The ``term_dict``/``term_dict_rev`` subdirectory of commit
-    generation ``commit`` (None: an older layout's flat directory)."""
-    return None if commit is None else f"commit={commit}"
+    generation ``commit``."""
+    return f"commit={commit}"
+
+
+def _check_layout(out_dir: str) -> dict | None:
+    """``meta.json`` of ``out_dir`` (None before the first commit) if the
+    directory is of the layout this version writes, else ``ValueError``
+    with a rebuild hint: an earlier version's files are refused, not
+    read, as Lucene refuses a too-old index format. Reads no data, so
+    it runs no Spark job."""
+    meta = _read_meta(out_dir)
+    version = meta["config"].get("format_version", 0) if meta else 3
+    if os.path.isdir(_stage_dir(out_dir, "tombstones")):
+        why = "it holds a tombstones/ directory"
+    elif version < 3:
+        why = f"format_version {version}, not 3 (int-array blocks, term_dict_rev)"
+    elif meta is not None and not {"commit", "segments", "deleted"} <= meta.keys():
+        why = "its meta.json holds no commit record"
+    else:
+        return meta
+    raise ValueError(f"index at {out_dir} was written by an earlier version ({why}); "
+                     "rebuild it with build_index(..., resume=False)")
 
 
 def _write_meta(
@@ -489,12 +508,14 @@ def _write_batch(
     sort_cols: list[str],
     batch_id: int,
     first_doc_id: int,
-) -> None:
+) -> int:
     """Stages 1+2 for one batch, the one write of both writers: doc ids
     (``id_col``, else ranks over ``sort_cols`` starting at
     ``first_doc_id``) → :func:`analyze_docs` → the doc registry and the
     per-doc postings, each into its stage's ``batch=<id>`` partition with
-    overwrite semantics (a re-delivered batch replaces itself whole).
+    overwrite semantics (a re-delivered batch replaces itself whole),
+    then both stage manifests, so they list every batch the stages hold.
+    Returns the batch's doc count, read from the analyzed manifest.
 
     The tokens column — the largest intermediate — never hits disk OR
     the block-manager cache. Each of the two writes recomputes
@@ -510,6 +531,7 @@ def _write_batch(
     formulation). That frame is the only cache this makes, and the only
     one it releases. Explicit ids have no such anchor, so that path ends
     with :func:`_check_batch`."""
+    t0 = time.time()
     ids, held = with_doc_ids(corpus_df, id_col, sort_cols)
     if id_col is None and first_doc_id:
         ids = ids.withColumn("doc_id", F.col("doc_id") + F.lit(first_doc_id))
@@ -525,6 +547,9 @@ def _write_batch(
         held.unpersist()
     if id_col is not None:
         _check_batch(corpus_df.sparkSession, out_dir, batch_id)
+    analyzed_manifest = _write_manifest(out_dir, "analyzed", config, t0)
+    _write_manifest(out_dir, "segments", config, t0)
+    return sum(f["rows"] for f in analyzed_manifest["files"] if f["file"].startswith(sub + os.sep))
 
 
 def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
@@ -825,54 +850,6 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
          if with_payloads else pa.nulls(nb, nested)),
     ]
     return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLS)
-
-
-def _encode_group_rows(pdf: pd.DataFrame, block_size: int, with_positions: bool, with_payloads: bool = False) -> pd.DataFrame:
-    """REFERENCE implementation (per-block loop) for the equivalence
-    tests of :func:`_encode_blocks_vec` and of the whole blocks exchange —
-    the production path is the vectorized Arrow encoder above.
-
-    Cut a run of (term, salt, doc_id)-sorted postings into blocks of
-    plain Python int lists: a new block every ``block_size`` docs into the
-    group, and also wherever the next doc offset would pass the int32
-    range.
-    ``positions``/``payloads`` hold one list per doc, None when the index
-    is built without them.
-    """
-    t = pdf["term"].to_numpy()
-    s = pdf["salt"].to_numpy()
-    doc = pdf["doc_id"].to_numpy()
-    tf = pdf["tf"].to_numpy()
-    dl = pdf["doc_len"].to_numpy()
-    change = np.empty(len(t), dtype=bool)
-    change[0] = True
-    change[1:] = (t[1:] != t[:-1]) | (s[1:] != s[:-1])
-    g_starts = np.flatnonzero(change)
-    g_ends = np.append(g_starts[1:], len(t))
-
-    def _lists(col, lo, hi):
-        return [[int(x) for x in v] for v in pdf[col].iloc[lo:hi]]
-
-    rows = []
-    for gs, ge in zip(g_starts, g_ends):
-        cuts = [gs]
-        for i in range(gs + 1, ge):
-            if (i - gs) % block_size == 0 or int(doc[i]) - int(doc[cuts[-1]]) > _INT32_MAX:
-                cuts.append(i)
-        for b, (lo, hi) in enumerate(zip(cuts, cuts[1:] + [ge])):
-            ids = [int(d) for d in doc[lo:hi]]
-            rows.append(
-                (
-                    t[gs], int(s[gs]), b, hi - lo, ids[0], ids[-1],
-                    int(tf[lo:hi].max()), int(dl[lo:hi].min()),
-                    [d - ids[0] for d in ids],
-                    [int(x) for x in tf[lo:hi]],
-                    [int(x) for x in dl[lo:hi]],
-                    _lists("positions", lo, hi) if with_positions else None,
-                    _lists("payloads", lo, hi) if with_payloads else None,
-                )
-            )
-    return pd.DataFrame(rows, columns=_BLOCK_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -1271,19 +1248,13 @@ class InvertedIndex:
     def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.dir = out_dir
-        self.meta = _read_meta(out_dir)
+        self.meta = _check_layout(out_dir)
         if self.meta is None:
             raise FileNotFoundError(f"no committed index at {out_dir} (meta.json missing)")
         self.config = IndexConfig(**self.meta["config"])
-        if self.config.format_version < 3:
-            raise ValueError(
-                f"index at {out_dir} has format_version "
-                f"{self.config.format_version}; this engine reads format 3 "
-                "(int-array blocks, term_dict_rev) — rebuild it with build_index"
-            )
         self.record = _commit_record(self.meta)
-        self.deleted = self.record[1] if self.record else {}
-        self._dict_root = _dict_root(self.meta.get("commit"))
+        self.deleted = self.record[1]
+        self._dict_root = _dict_root(self.meta["commit"])
         self._dead: dict[str, Column | None] = {}
 
     def live(self, df: DataFrame, unit: str) -> DataFrame:
@@ -1317,21 +1288,16 @@ class InvertedIndex:
         """Dictionary sorted by reversed term (leading-wildcard seeks)."""
         fields = self.term_dict.schema.fields + [T.StructField("term_rev", T.StringType())]
         return self.spark.read.schema(T.StructType(fields)).parquet(
-            os.path.join(_stage_dir(self.dir, "term_dict_rev"), self._dict_root or "")
+            os.path.join(_stage_dir(self.dir, "term_dict_rev"), self._dict_root)
         )
 
     @functools.cached_property
     def blocks(self) -> DataFrame:
         """Posting blocks of exactly the committed segments (a directory
-        a killed commit left behind is never read); an index written
-        before the segment level reads as segment 0."""
-        if self.record is not None:
-            return _read_stage(
-                self.spark, self.dir, "blocks", [f"segment={s}" for s in sorted(self.record[0])]
-            )
-        sdir = _stage_dir(self.dir, "blocks")
-        flat = sorted(n for n in os.listdir(sdir) if n.startswith("term_bucket="))
-        return _read_stage(self.spark, self.dir, "blocks", flat).withColumn("segment", F.lit(0))
+        a killed commit left behind is never read)."""
+        return _read_stage(
+            self.spark, self.dir, "blocks", [f"segment={s}" for s in sorted(self.record[0])]
+        )
 
     @property
     def segments(self) -> DataFrame:
@@ -1374,73 +1340,58 @@ def build_index(
     global rank over ``sort_cols`` (default: the input-hint primary key
     (repo, path, commit)).
 
-    With ``resume=True`` any stage whose manifest exists with a matching
-    config hash is skipped — kill the job between stages and re-run to
-    continue from the last completed stage (tested to be bit-identical).
+    With ``resume=True`` a build continues only its own commit: if
+    ``meta.json`` is absent or names commit 0 (segment 0 over batch 0,
+    nothing deleted) and no indexer has appended or deleted since, each
+    stage whose manifest matches the config hash is skipped (kill the
+    job between stages and re-run: bit-identical, tested). Any other
+    directory is cleared and rebuilt from ``corpus_df``.
     """
     config = config or IndexConfig()
     sort_cols = sort_cols or ["repo", "path", "commit"]
     os.makedirs(out_dir, exist_ok=True)
 
+    meta = _read_meta(out_dir)
+    own = meta is None or {k: meta.get(k) for k in ("commit", "segments", "deleted")} == {
+        "commit": 0, "segments": {"0": [0]}, "deleted": {}}
+    resume = resume and own and set(_batch_ids(out_dir)) <= {0} and not any(
+        os.path.exists(os.path.join(out_dir, n)) for n in ("tombstones", "tombstones.json"))
+    if not resume:
+        for name in ("meta.json", "tombstones.json"):
+            if os.path.exists(os.path.join(out_dir, name)):
+                os.remove(os.path.join(out_dir, name))
+        for stage in (*_SNAP_STAGES, "tombstones"):
+            _clear_stage(out_dir, stage)
     # fused unit: "analyzed" + "segments" are produced by ONE corpus pass
     # (separate manifests are still written — resume treats the pair as a
-    # unit: if either is missing/stale, both are rebuilt). Batches whose
-    # docs a commit deleted still hold them: no resume from those.
-    record = _commit_record(_read_meta(out_dir))
-    if not (
-        resume
-        and not (record and record[1])
-        and _stage_done(out_dir, "analyzed", config)
-        and _stage_done(out_dir, "segments", config)
-    ):
-        _clear_stage(out_dir, "analyzed")
-        _clear_stage(out_dir, "segments")
-        t0 = time.time()
+    # unit: if either is missing/stale, batch 0 of both is rewritten)
+    if not (_stage_done(out_dir, "analyzed", config) and _stage_done(out_dir, "segments", config)):
         _write_batch(corpus_df, out_dir, config, text_col, id_col, sort_cols, 0, 0)
-        _write_manifest(out_dir, "analyzed", config, t0)
-        _write_manifest(out_dir, "segments", config, t0)
-    _merge(spark, out_dir, config, resume)
+    _merge(spark, out_dir, config, resume, ({0: [0]}, {}), 0, 0)
     return InvertedIndex(spark, out_dir)
 
 
 def _merge(
     spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
-    record: tuple[dict[int, list[int]], dict[int, list[int]]] | None = None,
-    new: int | None = 0, commit: int = 0,
+    record: tuple[dict[int, list[int]], dict[int, list[int]]], new: int | None, commit: int,
 ) -> None:
     """Stages 3+4, the one merge step of both writers: term_dict (global
     stats over the live docs) of commit generation ``commit``, then the
     blocks of segment ``new``, then ``meta.json``, the commit point.
     ``record`` is the ``(segments, deleted)`` pair it commits (see
-    :func:`_commit_record`); a build passes none and gets segment 0 over
-    every batch, written into cleared term_dict and blocks stages.
+    :func:`_commit_record`); a build commits segment 0 over batch 0.
     ``new=None`` encodes nothing (a commit of deletes alone). With
-    ``resume`` a stage whose manifest matches the config hash is skipped,
-    unless the directory holds another commit (an older layout's
-    included): resume continues this commit only. Missing
-    analyzed/segments manifests are written first (an indexer's first
-    commit), so the directory reads as a complete build. Segment and
-    generation directories the commit does not name are removed after
-    it lands."""
-    for stage in ("analyzed", "segments"):
-        if _read_manifest(out_dir, stage) is None:
-            _write_manifest(out_dir, stage, config, time.time())
-    building = record is None
-    segments, deleted = record or ({0: _batch_ids(out_dir)}, {})
-    meta = _read_meta(out_dir)
-    if meta is not None and (meta.get("commit") != commit or _commit_record(meta) != (segments, deleted)):
-        resume = False  # committed by another writer, or by an older layout
+    ``resume`` (a build continuing its own commit) a stage whose manifest
+    matches the config hash is skipped. Segment and generation
+    directories the commit does not name are removed after it lands."""
+    segments, deleted = record
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
-        if building:
-            _clear_stage(out_dir, "term_dict")
         t0 = time.time()
-        stats = _stage_term_dict(spark, out_dir, config, (segments, deleted), commit)
+        stats = _stage_term_dict(spark, out_dir, config, record, commit)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):
-        if building:
-            _clear_stage(out_dir, "blocks")
         t0 = time.time()
         if new is not None:
             _stage_blocks(spark, out_dir, config, segments[new], new, commit, len(segments) == 1)

@@ -17,12 +17,13 @@ Spark's batch+streaming model:
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
 - delete-by-id / delete-by-query (``update/UpdateLog.java:452``,
   ``solrj-streaming/.../io/stream/DeleteStream.java``) →
-  :meth:`delete_by_ids` / :meth:`delete_by_query` record the deleted
-  doc ids as pending tombstones (``tombstones.json``, driver-side, no
-  Spark job); :meth:`commit` folds them into the committed live-docs
-  record (Lucene's liveDocs): the analyzed and segments stages are not
-  rewritten, and every read filters the deleted docs out with one
-  literal predicate (``InvertedIndex.live``).
+  :meth:`delete_by_ids` / :meth:`delete_by_query` add the deleted doc
+  ids to the pending tombstones, ``tombstones.json`` (written on the
+  driver; only ``delete_by_query`` runs a Spark job, to find its ids);
+  :meth:`commit` folds them into the committed live-docs record
+  (Lucene's liveDocs), which every read applies as one literal
+  predicate (``InvertedIndex.live``). The analyzed and segments stages
+  keep the deleted docs until a policy merge compacts them out.
 - hard commit (flush + merge) → :meth:`IncrementalIndexer.commit`
   encodes only the batches no segment holds yet, into one new segment
   ``blocks/segment=<s>/`` (Lucene's flushed segment: old segments are
@@ -42,13 +43,14 @@ Spark's batch+streaming model:
   and segments stages and encodes every batch into one segment — the
   build's own path; ``build_index`` is that path for batch 0.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
-  manifests. Tombstones are removed only after ``meta.json`` is
-  written, so re-running ``commit()`` after a killed commit redoes it,
-  deletes included; the half-written term_dict generation and segment
-  directory of a killed commit are never read, and the next commit
-  overwrites them.
+  manifests, rewritten by every append and compaction, and
+  ``tombstones.json``, removed only after ``meta.json`` is written:
+  re-running ``commit()`` after a killed commit redoes it, deletes
+  included; the half-written term_dict generation and segment directory
+  of a killed commit are never read, and the next commit overwrites them.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
-  indexer continues a built directory as it is.
+  indexer continues a built directory as it is, and refuses one an
+  earlier version wrote (``build._check_layout``).
 """
 
 from __future__ import annotations
@@ -56,6 +58,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,15 +67,17 @@ from solr_spark.index.build import (
     IndexConfig,
     InvertedIndex,
     _batch_ids,
+    _check_layout,
     _commit_record,
     _dead_rows,
     _live_stage,
     _merge,
-    _parquet_files,
+    _read_manifest,
     _read_meta,
     _read_stage,
     _stage_dir,
     _write_batch,
+    _write_manifest,
 )
 
 #: merge policy: a commit merges every segment into one, compacting the
@@ -103,14 +108,7 @@ class IncrementalIndexer:
         self.spark = spark
         self.dir = out_dir
         self.config = config or IndexConfig()
-        for stage in ("analyzed", "segments"):
-            sdir = _stage_dir(out_dir, stage)
-            if os.path.isdir(sdir) and any(n.endswith(".parquet") for n in os.listdir(sdir)):
-                raise ValueError(
-                    f"{sdir} holds Parquet files outside batch=<id> partitions "
-                    "(an older build_index layout); rebuild it with "
-                    "build_index(..., resume=False)"
-                )
+        _check_layout(out_dir)
         os.makedirs(out_dir, exist_ok=True)
         self._next_doc_id = self._read_next_doc_id()
 
@@ -149,12 +147,10 @@ class IncrementalIndexer:
         for seg, batches in (record[0] if record else {}).items():
             if int(batch_id) in batches:
                 raise ValueError(f"batch={batch_id} is already committed in segment {seg}")
-        _write_batch(
+        n = _write_batch(
             docs, self.dir, self.config, text_col, id_col,
             sort_cols or ["repo", "path", "commit"], int(batch_id), self._next_doc_id,
         )
-        bdir = os.path.join(_stage_dir(self.dir, "analyzed"), f"batch={int(batch_id)}")
-        n = sum(f["rows"] for f in _parquet_files(bdir))
         if id_col is None:
             self._next_doc_id += n
         else:  # explicit ids may exceed the counter — refresh from disk
@@ -187,26 +183,21 @@ class IncrementalIndexer:
         os.replace(path + ".tmp", path)
 
     def _tombstones(self) -> set[int]:
-        """Pending tombstone ids; a ``tombstones/`` Parquet directory of an
-        older layout is read too."""
-        ids: set[int] = set()
-        if os.path.exists(self._tombstone_path()):
-            with open(self._tombstone_path()) as f:
-                ids.update(json.load(f))
-        tdir = _stage_dir(self.dir, "tombstones")
-        if os.path.isdir(tdir) and os.listdir(tdir):
-            rows = self.spark.read.schema("doc_id long").parquet(tdir).collect()
-            ids.update(int(r[0]) for r in rows)
-        return ids
+        """Pending tombstone ids."""
+        if not os.path.exists(self._tombstone_path()):
+            return set()
+        with open(self._tombstone_path()) as f:
+            return set(json.load(f))
 
     def _compact_stage(self, stage: str, dead: Column) -> None:
         """Rewrite a stage without the rows ``dead`` selects (swap via
-        rename).
+        rename), then its manifest.
 
         At corpus scale the stages would be partitioned by doc range and
         only partitions containing deleted ids rewritten; the swap
         pattern (write aside, atomic rename) is the same.
         """
+        t0 = time.time()
         src = _stage_dir(self.dir, stage)
         df = _read_stage(self.spark, self.dir, stage).where(~dead)
         tmp = src + "__compact"
@@ -217,6 +208,7 @@ class IncrementalIndexer:
         os.replace(src, old)
         os.replace(tmp, src)
         shutil.rmtree(old, ignore_errors=True)
+        _write_manifest(self.dir, stage, self.config, t0)
 
     # ------------------------------------------------------------------
     def commit(self) -> InvertedIndex:
@@ -226,8 +218,7 @@ class IncrementalIndexer:
         live docs. Old segments are never re-encoded, until the merge
         policy merges them all into one (compacting the deleted docs out
         of the analyzed and segments stages first), which is the build's
-        own path. The first commit of a directory committed without
-        segments (an older layout) is such a merge."""
+        own path. A directory's first commit is such a merge."""
         meta = _read_meta(self.dir)
         record = _commit_record(meta)
         segments, deleted = record or ({}, {})
@@ -241,7 +232,7 @@ class IncrementalIndexer:
             u = max(segments)
             deleted[u] = sorted(set(deleted.get(u, ())) | dead)
         n_dead = sum(len(ids) for ids in deleted.values())
-        n_docs = sum(f["rows"] for f in _parquet_files(_stage_dir(self.dir, "analyzed")))
+        n_docs = _read_manifest(self.dir, "analyzed")["rows"]
         merge = record is None or merge_due(len(segments), n_dead, n_docs)
         if not (fresh or dead or merge):
             return InvertedIndex(self.spark, self.dir)
@@ -255,7 +246,6 @@ class IncrementalIndexer:
                new if new in segments else None, meta["commit"] + 1 if record else 0)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
-        shutil.rmtree(_stage_dir(self.dir, "tombstones"), ignore_errors=True)
         return InvertedIndex(self.spark, self.dir)
 
 

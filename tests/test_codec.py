@@ -98,7 +98,8 @@ def test_vectorized_block_encoder_byte_identical_to_reference():
     import pandas as pd
     import pyarrow as pa
 
-    from solr_spark.index.build import _encode_blocks_vec, _encode_group_rows
+    from solr_spark.index.build import _encode_blocks_vec
+    from tests.reference_encoder import encode_group_rows
 
     rng = np.random.default_rng(42)
     rows = []
@@ -124,7 +125,7 @@ def test_vectorized_block_encoder_byte_identical_to_reference():
     pdf = pd.DataFrame(
         rows, columns=["term", "salt", "doc_id", "tf", "doc_len", "positions", "payloads"]
     )
-    ref = _encode_group_rows(pdf, block_size=64, with_positions=True, with_payloads=True)
+    ref = encode_group_rows(pdf, block_size=64, with_positions=True, with_payloads=True)
     assert (ref["term"] == "sparse").sum() > (ref["term"] == "alpha").sum()
     tbl = pa.Table.from_pandas(
         pd.concat([head, pdf], ignore_index=True), preserve_index=False

@@ -517,7 +517,8 @@ def test_run_packed_exchange_matches_reference_encoder(spark, index, test_config
     cut — equal the independent per-block reference encoder run over the
     same salted postings sorted by (term, salt, doc_id). On the shared
     test index (positions) and on a small with_payloads build."""
-    from solr_spark.index.build import _BLOCK_COLS, _encode_group_rows, _salted_postings
+    from solr_spark.index.build import _BLOCK_COLS, _salted_postings
+    from tests.reference_encoder import encode_group_rows
 
     pcfg = IndexConfig(
         block_size=8, hot_df_threshold=100, n_salts=2, n_term_buckets=4,
@@ -531,7 +532,7 @@ def test_run_packed_exchange_matches_reference_encoder(spark, index, test_config
             .sort_values(["term", "salt", "doc_id"], kind="stable")
             .reset_index(drop=True)
         )
-        ref = _encode_group_rows(postings, cfg.block_size, cfg.with_positions, cfg.with_payloads)
+        ref = encode_group_rows(postings, cfg.block_size, cfg.with_positions, cfg.with_payloads)
         key = lambda r: (r["term"], r["salt"], r["block_no"])  # noqa: E731
         want = sorted(ref.to_dict("records"), key=key)
         got = sorted(
@@ -543,98 +544,101 @@ def test_run_packed_exchange_matches_reference_encoder(spark, index, test_config
             assert g == w, (g["term"], g["salt"], g["block_no"])
 
 
-def test_old_format_index_rejected_at_open(spark, index, tmp_path):
-    """A directory written before the int-array block format (v3) cannot
-    be queried — its blocks lack doc_offsets — so opening it fails with
-    a rebuild hint instead of deep inside a later Spark query."""
-    from solr_spark.index.build import InvertedIndex
-
-    old = str(tmp_path / "v2")
-    shutil.copytree(index.dir, old)
-    meta_path = os.path.join(old, "meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta["config"]["format_version"] = 2
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    with pytest.raises(ValueError, match="rebuild"):
-        InvertedIndex(spark, old)
-    assert InvertedIndex(spark, index.dir).config.format_version == 3
+@pytest.fixture(scope="module")
+def small_index(spark, test_config, tmp_path_factory):
+    """A fresh current-layout build of a small corpus, and the corpus."""
+    corpus = synth_corpus(spark, 200)
+    out = str(tmp_path_factory.mktemp("small") / "idx")
+    return build_index(spark, corpus, out, test_config), corpus
 
 
-def test_loose_layout_rejected_by_indexer(spark, index, tmp_path):
-    """Docs and postings outside ``batch=<id>`` partitions (the stage
-    layout of older builds) still serve queries, but an indexer refuses
-    the directory with a rebuild hint: Spark reads no loose files next to
-    the partitions an append would add."""
-    from solr_spark.index.build import InvertedIndex
-    from solr_spark.query.engine import SearchEngine
-    from solr_spark.streaming import IncrementalIndexer
+def _earlier_layout(src: str, dst: str, layout: str) -> None:
+    """Copy the current-layout index ``src`` to ``dst`` as a writer of an
+    earlier version left it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    old = str(tmp_path / "loose")
-    shutil.copytree(index.dir, old)
-    for stage in ("analyzed", "segments"):
-        part = os.path.join(old, stage, "batch=0")
+    shutil.copytree(src, dst)
+    if layout == "tombstones_dir":
+        # an indexer that appended a batch and recorded a delete but never
+        # committed: no manifests, no meta.json, pending deletes as Parquet
+        for n in os.listdir(dst):
+            if n not in ("analyzed", "segments"):
+                p = os.path.join(dst, n)
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+        os.makedirs(os.path.join(dst, "tombstones"))
+        pq.write_table(pa.table({"doc_id": pa.array([3], pa.int64())}),
+                       os.path.join(dst, "tombstones", "part-00000.parquet"))
+        return
+    # before segments and commit generations: flat blocks and dictionaries,
+    # and no commit record in meta.json
+    subs = [("blocks", "segment=0"), ("term_dict", "commit=0"), ("term_dict_rev", "commit=0")]
+    if layout != "flat_blocks":  # before batches too: loose stage files
+        subs += [("analyzed", "batch=0"), ("segments", "batch=0")]
+    for stage, sub in subs:
+        part = os.path.join(dst, stage, sub)
         for n in os.listdir(part):
-            os.replace(os.path.join(part, n), os.path.join(old, stage, n))
+            os.replace(os.path.join(part, n), os.path.join(dst, stage, n))
         os.rmdir(part)
-    with pytest.raises(ValueError, match="rebuild"):
-        IncrementalIndexer(spark, old, index.config)
-    q = "server data"
-    assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == \
-        SearchEngine(index).topk(q, k=10).collect()
+    strip = {"meta.json": ("commit", "segments", "deleted"),
+             "_MANIFEST_term_dict.json": ("schema", "n_docs", "sum_doc_len", "avgdl")}
+    for name in os.listdir(dst):
+        if name.startswith("_MANIFEST_") or name == "meta.json":
+            path = os.path.join(dst, name)
+            with open(path) as f:
+                m = json.load(f)
+            for key in strip.get(name, ("schema",)):
+                del m[key]
+            if name == "meta.json" and layout == "format_v2":
+                m["config"]["format_version"] = 2
+            with open(path, "w") as f:
+                json.dump(m, f)
 
 
-def test_unsegmented_blocks_open_and_are_adopted(spark, index, tmp_path):
-    """An index of the layout before segments and commit generations
-    (``blocks/term_bucket=<b>``, flat ``term_dict``/``term_dict_rev``, no
-    commit record in meta.json) still serves queries; a resumed build
-    and an indexer's first commit each adopt the directory by merging it
-    into one segment, and no directory or file of the old layout is left
-    beside it."""
+#: each earlier layout, and the reason the refusal names
+_EARLIER_LAYOUTS = {
+    "format_v2": "format_version 2",
+    "loose_stages": "no commit record",
+    "flat_blocks": "no commit record",
+    "tombstones_dir": "tombstones/",
+}
+
+
+@pytest.mark.parametrize("layout", list(_EARLIER_LAYOUTS))
+def test_earlier_layout_refused_then_rebuilt(spark, small_index, tmp_path, layout):
+    """A directory an earlier version wrote (format v2; loose stage files;
+    flat blocks and dictionaries; pending deletes in a ``tombstones/``
+    Parquet directory) is refused by ``InvertedIndex`` and
+    ``IncrementalIndexer`` with a rebuild hint before any Spark job runs.
+    A resumed ``build_index`` rebuilds it from its corpus: it answers
+    like a fresh build and keeps nothing of the earlier layout."""
     from solr_spark.index.build import InvertedIndex
     from solr_spark.query.engine import SearchEngine
     from solr_spark.streaming import IncrementalIndexer
 
-    old = str(tmp_path / "unsegmented")
-    shutil.copytree(index.dir, old)
-    for stage, sub in (("blocks", "segment=0"), ("term_dict", "commit=0"),
-                       ("term_dict_rev", "commit=0")):
-        seg = os.path.join(old, stage, sub)
-        for n in os.listdir(seg):
-            os.replace(os.path.join(seg, n), os.path.join(old, stage, n))
-        os.rmdir(seg)
-    for name, keys in (("_MANIFEST_blocks.json", ("schema",)),
-                       ("_MANIFEST_term_dict.json", ("schema", "n_docs", "sum_doc_len", "avgdl")),
-                       ("meta.json", ("commit", "segments", "deleted"))):
-        with open(os.path.join(old, name)) as f:
-            m = json.load(f)
-        for key in keys:
-            del m[key]
-        with open(os.path.join(old, name), "w") as f:
-            json.dump(m, f)
+    ref, corpus = small_index
+    reason = _EARLIER_LAYOUTS[layout]
+    d = str(tmp_path / layout)
+    _earlier_layout(ref.dir, d, layout)
+    sc, group = spark.sparkContext, f"layout_{layout}"
+    sc.setJobGroup(group, group)
+    try:
+        if os.path.exists(os.path.join(d, "meta.json")):
+            with pytest.raises(ValueError, match=f"{reason}.*rebuild"):
+                InvertedIndex(spark, d)
+        with pytest.raises(ValueError, match=f"{reason}.*rebuild"):
+            IncrementalIndexer(spark, d, ref.config)
+    finally:
+        sc.setJobGroup("idle", "idle")
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    idx = build_index(spark, corpus, d, ref.config, resume=True)
     q = "server data"
-    want = SearchEngine(index).topk(q, k=10).collect()
-    assert SearchEngine(InvertedIndex(spark, old)).topk(q, k=10).collect() == want
-
-    # a resumed build rebuilds the older layout's term_dict and blocks
-    # (its docs and postings stages resume: the tiny corpus is not read)
-    rebuilt = str(tmp_path / "rebuilt")
-    shutil.copytree(old, rebuilt)
-    idx = build_index(spark, synth_corpus(spark, 10), rebuilt, index.config, resume=True)
-    assert os.listdir(os.path.join(rebuilt, "blocks")) == ["segment=0"]
-    assert SearchEngine(idx).topk(q, k=10).collect() == want
-
-    inc = IncrementalIndexer(spark, old, index.config)
-    inc.append_batch(synth_corpus(spark, 30))
-    idx = inc.commit()
-    assert os.listdir(os.path.join(old, "blocks")) == ["segment=0"]
-    for stage in ("term_dict", "term_dict_rev"):
-        assert os.listdir(os.path.join(old, stage)) == ["commit=0"]
-    assert idx.record == ({0: [0, 1]}, {})
-    assert idx.n_docs == index.n_docs + 30
-    eng = SearchEngine(idx)
-    assert eng.decode(idx.blocks).select("doc_id").distinct().count() == idx.n_docs
+    assert SearchEngine(idx).topk(q, k=10).collect() == SearchEngine(ref).topk(q, k=10).collect()
+    for stage, kept in (("analyzed", "batch=0"), ("segments", "batch=0"), ("blocks", "segment=0"),
+                        ("term_dict", "commit=0"), ("term_dict_rev", "commit=0")):
+        assert os.listdir(os.path.join(d, stage)) == [kept], stage
+    assert not os.path.exists(os.path.join(d, "tombstones"))
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

@@ -431,6 +431,67 @@ def test_commit_on_build_index_dir_keeps_base_docs(spark, test_config):
     assert rebuilt.n_docs == len(survivors) and rebuilt.record == ({0: [0]}, {})
 
 
+def test_stage_manifests_list_the_stage_files(spark, test_config):
+    """The analyzed and segments manifests list exactly the files their
+    stages hold: after an append and commit on a built directory (every
+    batch, every row), and after a policy merge compacts deleted docs
+    out."""
+    import json
+
+    from solr_spark.index.build import _parquet_files
+
+    d = f"{BASE}/manifests"
+    shutil.rmtree(d, ignore_errors=True)
+
+    def manifest(stage):
+        with open(os.path.join(d, f"_MANIFEST_{stage}.json")) as f:
+            m = json.load(f)
+        assert m["files"] == _parquet_files(os.path.join(d, stage)), stage
+        assert m["rows"] == sum(f["rows"] for f in m["files"]), stage
+        return m
+
+    build_index(spark, synth_corpus(spark, 200), d, test_config)
+    inc = IncrementalIndexer(spark, d, test_config)
+    assert inc.append_batch(synth_corpus(spark, 100)) == 100
+    idx = inc.commit()
+    analyzed = manifest("analyzed")
+    assert analyzed["rows"] == 300
+    assert {f["file"].split(os.sep)[0] for f in analyzed["files"]} == {"batch=0", "batch=1"}
+    assert manifest("segments")["rows"] == idx.segments.count()
+
+    inc.delete_by_ids(list(range(0, 300, 4)))  # 75 of 300 docs: past the 20% bound
+    idx = inc.commit()
+    assert idx.record == ({2: [0, 1]}, {})  # the policy merged
+    assert manifest("analyzed")["rows"] == 225
+    assert manifest("segments")["rows"] == idx.segments.count()
+
+
+def test_resumed_build_ignores_an_indexers_commit(spark, test_config):
+    """``build_index(resume=True)`` over a directory an indexer used
+    indexes the corpus it is given, not the indexer's batches too:
+    after a committed append, an uncommitted append, or a delete not
+    committed yet (which must not survive into the rebuilt index)."""
+    d = f"{BASE}/resume_foreign"
+    shutil.rmtree(d, ignore_errors=True)
+    corpus = synth_corpus(spark, 200)
+    build_index(spark, corpus, d, test_config)
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(synth_corpus(spark, 100))
+    inc.commit()
+    idx = build_index(spark, corpus, d, test_config, resume=True)
+    assert (idx.n_docs, idx.record) == (200, ({0: [0]}, {}))
+    assert idx.docs.count() == 200
+
+    IncrementalIndexer(spark, d, test_config).append_batch(synth_corpus(spark, 50))
+    idx = build_index(spark, corpus, d, test_config, resume=True)
+    assert (idx.n_docs, idx.docs.count()) == (200, 200)
+    assert os.listdir(os.path.join(d, "analyzed")) == ["batch=0"]
+
+    IncrementalIndexer(spark, d, test_config).delete_by_ids([0])
+    build_index(spark, corpus, d, test_config, resume=True)
+    assert not os.path.exists(os.path.join(d, "tombstones.json"))
+
+
 def test_append_batch_releases_its_cache(spark, test_config):
     """append_batch persists the doc-id frame while it assigns ids; it
     must leave no persistent RDD behind."""
