@@ -7,7 +7,8 @@ Apache Solr (reference checkout at /root/reference) in idiomatic Spark:
   e.g. text_general / text_en_splitting) as JVM-side column expressions and
   Arrow-vectorized pandas UDFs.
 - ``solr_spark.index``     — inverted-index build: postings, term dictionary,
-  delta+varint-compressed posting blocks with stats-independent pruning
+  posting blocks as Parquet int arrays (format v3: doc-id offsets, tf,
+  doc length, positions, payloads) with stats-independent pruning
   metadata (per-block max_tf / min_dl — impact bounds derived at query time),
   hot-term salting, per-partition lineage manifests, checkpoint/resume.
 - ``solr_spark.query``     — query parsing/compilation (boolean, phrase,
@@ -23,5 +24,3 @@ Apache Solr (reference checkout at /root/reference) in idiomatic Spark:
 """
 
 __version__ = "0.1.0"
-
-from solr_spark.session import get_spark  # noqa: F401

@@ -42,8 +42,11 @@ block-max metadata purely to skip blocks that cannot reach the top k):
   rarest term via a lazy broadcast non-equi semi-join
   (:meth:`SearchEngine._and_pruned_blocks`) — no driver collect.
 
-Driver round-trips per fresh query: OR/single-term = 2 actions (θ seed
-job + the final decode), AND = 2 (memoized stats + final decode).
+Spark jobs per fresh query, broadcast and AQE sub-jobs included, as
+``scripts/explain_audit.py`` measures them at sf0.01 (PLANS.md): single
+hot term 2, OR 3, AND 4, nested lucene 4, phrase 3. The engine's own
+blocking actions are the stats lookup and the final decode; the θ seed
+job adds a third only past ``_PRUNE_MIN_POSTINGS`` total postings.
 Term→bucket routing is pure Python (XXH64 mirror of the build's
 ``pmod(xxhash64(term), B)``) and term stats / block bounds are memoized
 per engine, so repeated queries pay no stats round-trips at all.

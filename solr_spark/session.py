@@ -3,7 +3,9 @@
 Local-mode settings mirror what we'd set on a real cluster: AQE on (runtime
 re-planning + skew-join handling), shuffle partitions sized to parallelism
 (not the 200 default), Arrow enabled for pandas-UDF exchange, UTC session
-timezone so results compare bit-for-bit against the DuckDB oracle.
+timezone so results compare bit-for-bit against the DuckDB oracle. On
+``local*`` masters Python workers start through ``solr_spark.worker_daemon``,
+which imports PySpark from its package directory instead of ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -47,6 +49,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config("spark.python.daemon.module", "solr_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -218,12 +218,16 @@ class IncrementalIndexer:
         live docs. Old segments are never re-encoded, until the merge
         policy merges them all into one (compacting the deleted docs out
         of the analyzed and segments stages first), which is the build's
-        own path. A directory's first commit is such a merge."""
+        own path. A directory's first commit is such a merge. Raises
+        ValueError when no batch was ever appended."""
+        batches = _batch_ids(self.dir)
+        if not batches:
+            raise ValueError(f"nothing to commit: no batch was appended to {self.dir}")
         meta = _read_meta(self.dir)
         record = _commit_record(meta)
         segments, deleted = record or ({}, {})
         covered = {b for bs in segments.values() for b in bs}
-        fresh = [b for b in _batch_ids(self.dir) if b not in covered]
+        fresh = [b for b in batches if b not in covered]
         dead = self._tombstones()
         new = max(segments, default=-1) + 1
         if fresh:

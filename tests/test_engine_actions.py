@@ -186,3 +186,36 @@ def test_bm25_path_runs_no_python(warm, action_plans, shape):
     for plan in action_plans:
         found = [node for node in _PYTHON_NODES if node in plan]
         assert not found, f"{shape}: {found} in\n{plan}"
+
+
+def test_python_worker_imports_pyspark_outside_archives(spark):
+    """A Python task of a local session imports pyspark from a package
+    directory and caches no importer of ``pyspark.zip`` or a jar, so the
+    per-task ``importlib.invalidate_caches()`` re-reads no archive
+    (``solr_spark.worker_daemon``)."""
+    import json
+    import os
+
+    import pyarrow as pa
+
+    def report(batches):
+        import sys
+
+        import pyspark
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "file": [pyspark.__file__],
+            "keys": [json.dumps(list(sys.path_importer_cache))],
+        })
+
+    row = spark.range(1, numPartitions=1).mapInArrow(report, "file string, keys string").first()
+
+    def in_archive(path):
+        return any(part.endswith((".zip", ".jar")) for part in path.split(os.sep))
+
+    assert not in_archive(row.file), row.file
+    keys = json.loads(row.keys)
+    bad = [k for k in keys if "pyspark.zip" in k or ".jar" in k]
+    assert not bad, bad

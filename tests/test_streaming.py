@@ -81,6 +81,20 @@ def test_commit_is_rerunnable(spark, test_config):
     assert _topk(idx2, "server") == r1
 
 
+def test_commit_with_nothing_appended_raises(spark, test_config):
+    """A commit on a directory no batch was appended to says so, pending
+    deletes or not, and writes no commit point."""
+    d = f"{BASE}/empty_commit"
+    shutil.rmtree(d, ignore_errors=True)
+    inc = IncrementalIndexer(spark, d, test_config)
+    with pytest.raises(ValueError, match="nothing to commit"):
+        inc.commit()
+    inc.delete_by_ids([1])
+    with pytest.raises(ValueError, match="nothing to commit"):
+        inc.commit()
+    assert not os.path.exists(os.path.join(d, "meta.json"))
+
+
 def test_stream_directory_checkpoint_no_redelivery(spark, test_config):
     """topic() analog: files dropped into the watch dir are indexed once;
     restarting the stream with the same checkpoint re-delivers nothing."""
