@@ -653,8 +653,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["query_regexp"] = lambda s, d: _rounded(
         execute_query(_engine(s, d), "/s[pt]ark/", k=10)
     )
-    # leading wildcard: prefix seek on the reversed dictionary
-    # (ReversedWildcardFilterFactory analog — see suffix_topk)
+    # leading wildcard: an endswith filter over the term dictionary's
+    # term column (Lucene's expansion without the reversed-token filter —
+    # see suffix_topk)
     q["query_leading_wildcard"] = lambda s, d: _rounded(
         execute_query(_engine(s, d), "*er", k=10)
     )

@@ -133,8 +133,9 @@ def truncate_tokens_sql(tt: str, length: int) -> str:
 
 
 def reverse_tokens(toks: Column) -> Column:
-    """Reverse each token (ReverseStringFilterFactory — the index-side
-    half of leading-wildcard support, pairing with term_dict_rev)."""
+    """Reverse each token (ReverseStringFilterFactory), an analysis-chain
+    filter. The index keeps no reversed dictionary: a leading wildcard
+    (``*suffix``) expands with ``endswith`` over term_dict."""
     return F.transform(toks, lambda t: F.reverse(t))
 
 

@@ -8,7 +8,8 @@ column expressions so the query compiler can reference them by name.
 
 The relevance accessors (docfreq/idf/tf/norm/numdocs/maxdoc/totaltermfreq)
 are NOT here — they are first-class columns of the engine's ``term_dict``
-/ ``postings`` / ``docs`` tables (SURVEY.md §2.7).
+/ ``postings`` / ``docs`` tables, idf the engine's one expression over df
+(``SearchEngine.idf``) (SURVEY.md §2.7).
 """
 
 from __future__ import annotations

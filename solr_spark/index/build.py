@@ -16,10 +16,13 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    The analog of flushed in-memory segments before merge. Stages 1 and
    2 are one batch write (:func:`_write_batch`) into ``batch=<id>``
    partitions: a build is batch 0, each incremental append one more.
-3. ``term_dict`` — global term dictionary: df, cf, idf, hot flag.
-   The analog of Solr's distributed exact stats cache
-   (``search/stats/ExactStatsCache.java:62,192``) — global by
-   construction, so every partition scores with identical IDF.
+3. ``term_dict`` — global term dictionary of pure counts: (term, df,
+   cf), range-sorted by term. The analog of Solr's distributed exact
+   stats cache (``search/stats/ExactStatsCache.java:62,192``) — global
+   by construction, so every partition scores with identical IDF. The
+   counts depend on neither N nor the config: idf is the engine's one
+   expression over df (``SearchEngine.idf``) and a hot term is one with
+   ``df > hot_df_threshold``.
 4. ``blocks``    — the merged index, one ``segment=<s>`` directory per
    commit (a build writes segment 0): fixed-size posting blocks per
    (term, salt) stored as Parquet-native int arrays (doc ids as offsets
@@ -37,11 +40,11 @@ Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
 incremental commit share: term_dict over the live docs, then one
 segment's blocks, then ``meta.json`` — the commit point. It holds the
 global stats and the commit record: the commit's generation, which
-names its ``term_dict/commit=<c>`` and ``term_dict_rev/commit=<c>``
-directories, the segments and their batches, and the deleted docs (the
-live-docs record every read applies, :meth:`InvertedIndex.live`). A
-reader opens exactly what it names, so a killed commit leaves readers
-on the previous commit, stats and dictionary included. Each stage
+names its ``term_dict/commit=<c>`` directory, the segments and their
+batches, and the deleted docs (the live-docs record every read
+applies, :meth:`InvertedIndex.live`). A reader opens exactly what it
+names, so a killed commit leaves readers on the previous commit, stats
+and dictionary included. Each stage
 manifest records its stage's Spark schema, so a stage opens with no
 schema-inference job (:func:`_read_stage`). A resumed build continues
 only its own commit (:func:`build_index`) and skips any stage whose
@@ -263,12 +266,12 @@ def _stage_done(out_dir: str, stage: str, config: IndexConfig) -> bool:
     return m is not None and m.get("config_hash") == config.config_hash()
 
 
-def _clear_stage(out_dir: str, stage: str) -> None:
-    shutil.rmtree(_stage_dir(out_dir, stage), ignore_errors=True)
-    try:
-        os.remove(_manifest_path(out_dir, stage))
-    except FileNotFoundError:
-        pass
+def _remove_except(d: str, keep: list[str]) -> None:
+    """Remove every entry of directory ``d`` (if it exists) not named in
+    ``keep``."""
+    for name in set(os.listdir(d) if os.path.isdir(d) else ()) - set(keep):
+        path = os.path.join(d, name)
+        shutil.rmtree(path, ignore_errors=True) if os.path.isdir(path) else os.remove(path)
 
 
 def _read_stage(
@@ -321,8 +324,7 @@ def _commit_record(meta: dict | None) -> tuple[dict[int, list[int]], dict[int, l
 
 
 def _dict_root(commit: int) -> str:
-    """The ``term_dict``/``term_dict_rev`` subdirectory of commit
-    generation ``commit``."""
+    """The ``term_dict`` subdirectory of commit generation ``commit``."""
     return f"commit={commit}"
 
 
@@ -337,7 +339,7 @@ def _check_layout(out_dir: str) -> dict | None:
     if os.path.isdir(_stage_dir(out_dir, "tombstones")):
         why = "it holds a tombstones/ directory"
     elif version < 3:
-        why = f"format_version {version}, not 3 (int-array blocks, term_dict_rev)"
+        why = f"format_version {version}, not 3 (int-array blocks)"
     elif meta is not None and not {"commit", "segments", "deleted"} <= meta.keys():
         why = "its meta.json holds no commit record"
     else:
@@ -686,12 +688,11 @@ def build_postings(analyzed: DataFrame, config: IndexConfig) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_term_dict(
-    spark: SparkSession, out_dir: str, config: IndexConfig, record, commit: int
-) -> dict:
-    """term_dict and term_dict_rev of commit generation ``commit`` over
-    the live docs of the commit ``record`` (see :func:`_commit_record`);
-    returns the global stats (n_docs, sum_doc_len, avgdl)."""
+def _stage_term_dict(spark: SparkSession, out_dir: str, record, commit: int) -> dict:
+    """term_dict of commit generation ``commit``: (term, df, cf) over
+    the live docs of the commit ``record`` (see :func:`_commit_record`),
+    range-sorted by term so a term lookup prunes row groups. Returns the
+    global stats (n_docs, sum_doc_len, avgdl)."""
     analyzed = _live_stage(spark, out_dir, "analyzed", record)
     # one job for both corpus stats (was two full passes: count + sum)
     stats_row = analyzed.agg(
@@ -701,35 +702,12 @@ def _stage_term_dict(
     sum_dl = stats_row["s"] or 0
     avgdl = float(sum_dl) / n_docs if n_docs else 0.0
 
-    segments = _live_stage(spark, out_dir, "segments", record)
-    # idf = ln(1 + (N - df + 0.5)/(df + 0.5))   (Lucene BM25, frozen in FIXTURES.md)
-    term_dict = (
-        segments.groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
-        .withColumn(
-            "idf",
-            F.log1p((F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))),
-        )
-        .withColumn("is_hot", F.col("df") > F.lit(config.hot_df_threshold))
-    )
-    td_dir = os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(commit))
-    (term_dict.repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term")
+    (_live_stage(spark, out_dir, "segments", record).groupBy("term")
+     .agg(F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
+     .repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term")
      .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(td_dir))
-
-    # Reversed projection of the dictionary, range-sorted by the REVERSED
-    # term (ReversedWildcardFilterFactory analog, ref
-    # solr/core/src/java/org/apache/solr/analysis/ReversedWildcardFilterFactory.java):
-    # a leading-wildcard expansion (*suffix) becomes a prefix scan on
-    # term_rev, which parquet row-group min/max stats prune — instead of
-    # an rlike over the whole vocabulary. The dictionary is O(vocabulary),
-    # tiny next to postings, so the second sort order is cheap to keep.
-    (spark.read.schema(term_dict.schema).parquet(td_dir)
-     .withColumn("term_rev", F.reverse(F.col("term")))
-     .repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term_rev")
-     .sortWithinPartitions("term_rev")
      .write.mode("overwrite").parquet(
-         os.path.join(_stage_dir(out_dir, "term_dict_rev"), _dict_root(commit))))
+         os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(commit))))
     return {"n_docs": int(n_docs), "sum_doc_len": int(sum_dl), "avgdl": avgdl}
 
 
@@ -1143,7 +1121,8 @@ def _salted_postings(segments: DataFrame, term_dict: DataFrame, config: IndexCon
     # posting stream is touched map-side only, and the one real shuffle
     # stays the (term_bucket, salt) block exchange.
     hot = F.broadcast(
-        term_dict.where(F.col("is_hot")).select("term", F.lit(True).alias("_hot"))
+        term_dict.where(F.col("df") > F.lit(config.hot_df_threshold))
+        .select("term", F.lit(True).alias("_hot"))
     )
     p = segments.join(hot, "term", "left")
     p = p.withColumn(
@@ -1194,7 +1173,7 @@ def _stage_blocks(
     ``whole``: the segment is the whole index (see
     :func:`_blocks_shuffle_input`)."""
     segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
-    term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "is_hot")
+    term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
 
     # ONE shuffle: hash-repartition by (term_bucket, salt), sort runs
     # within partitions, stream-encode in a single Arrow pass. Replaces
@@ -1269,27 +1248,17 @@ class InvertedIndex:
 
     @functools.cached_property
     def docs(self) -> DataFrame:
-        """Live doc registry (no tokens — Parquet column pruning keeps it
-        cheap). The ``batch=<id>`` partition column is an ingestion
-        detail, dropped here."""
-        return (
-            self.live(_read_stage(self.spark, self.dir, "analyzed"), "batch")
-            .drop("tokens")
-            .drop("batch")
-        )
+        """Live doc registry: one row per doc with its id, metadata,
+        ``stored_text`` and ``doc_len`` (the batch write keeps no tokens;
+        Parquet column pruning reads only what a caller selects). The
+        ``batch=<id>`` partition column is an ingestion detail, dropped
+        here."""
+        return self.live(_read_stage(self.spark, self.dir, "analyzed"), "batch").drop("batch")
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
         """The committed generation's dictionary."""
         return _read_stage(self.spark, self.dir, "term_dict", root=self._dict_root)
-
-    @functools.cached_property
-    def term_dict_rev(self) -> DataFrame:
-        """Dictionary sorted by reversed term (leading-wildcard seeks)."""
-        fields = self.term_dict.schema.fields + [T.StructField("term_rev", T.StringType())]
-        return self.spark.read.schema(T.StructType(fields)).parquet(
-            os.path.join(_stage_dir(self.dir, "term_dict_rev"), self._dict_root)
-        )
 
     @functools.cached_property
     def blocks(self) -> DataFrame:
@@ -1356,12 +1325,8 @@ def build_index(
         "commit": 0, "segments": {"0": [0]}, "deleted": {}}
     resume = resume and own and set(_batch_ids(out_dir)) <= {0} and not any(
         os.path.exists(os.path.join(out_dir, n)) for n in ("tombstones", "tombstones.json"))
-    if not resume:
-        for name in ("meta.json", "tombstones.json"):
-            if os.path.exists(os.path.join(out_dir, name)):
-                os.remove(os.path.join(out_dir, name))
-        for stage in (*_SNAP_STAGES, "tombstones"):
-            _clear_stage(out_dir, stage)
+    if not resume:  # every entry but the named snapshots, whatever wrote it
+        _remove_except(out_dir, ["snapshots"])
     # fused unit: "analyzed" + "segments" are produced by ONE corpus pass
     # (separate manifests are still written — resume treats the pair as a
     # unit: if either is missing/stale, batch 0 of both is rewritten)
@@ -1388,7 +1353,7 @@ def _merge(
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
         t0 = time.time()
-        stats = _stage_term_dict(spark, out_dir, config, record, commit)
+        stats = _stage_term_dict(spark, out_dir, record, commit)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):
@@ -1397,23 +1362,13 @@ def _merge(
             _stage_blocks(spark, out_dir, config, segments[new], new, commit, len(segments) == 1)
         _write_manifest(out_dir, "blocks", config, t0, listed)
     _write_meta(out_dir, config, td, commit, segments, deleted)
-    for stage, keep in (("term_dict", [_dict_root(commit)]), ("term_dict_rev", [_dict_root(commit)]),
-                        ("blocks", listed)):
-        sdir = _stage_dir(out_dir, stage)
-        for name in set(os.listdir(sdir) if os.path.isdir(sdir) else ()) - set(keep):
-            path = os.path.join(sdir, name)
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                os.remove(path)
+    _remove_except(_stage_dir(out_dir, "term_dict"), [_dict_root(commit)])
+    _remove_except(_stage_dir(out_dir, "blocks"), listed)
 
 
 # ---------------------------------------------------------------------------
 # snapshot / backup / restore (CoreAdmin BACKUPCORE / RESTORECORE analog)
 # ---------------------------------------------------------------------------
-
-_SNAP_STAGES = ("analyzed", "segments", "term_dict", "term_dict_rev", "blocks")
-
 
 def create_snapshot(out_dir: str, name: str) -> str:
     """Point-in-time snapshot of a built index (ref:
@@ -1446,7 +1401,7 @@ def create_snapshot(out_dir: str, name: str) -> str:
                     shutil.copy2(s, t)
 
     os.makedirs(snap, exist_ok=True)
-    for stage in _SNAP_STAGES:
+    for stage in _STAGES:
         sdir = _stage_dir(out_dir, stage)
         if os.path.isdir(sdir):
             _link_tree(sdir, os.path.join(snap, os.path.basename(sdir)))
@@ -1483,7 +1438,7 @@ def restore_snapshot(out_dir: str, name: str) -> None:
     # phase 1 (slow, non-destructive): materialize the whole restored
     # state under tmp_root via hard links
     staged: list[tuple[str, str]] = []  # (tmp path, live path) rename pairs
-    for stage in _SNAP_STAGES:
+    for stage in _STAGES:
         live = _stage_dir(out_dir, stage)
         src = os.path.join(snap, os.path.basename(live))
         if os.path.isdir(src):

@@ -39,7 +39,6 @@ STAGE_PARTITIONING: dict[str, list[str]] = {
     "analyzed": ["batch"],
     "segments": ["batch"],
     "term_dict": [],
-    "term_dict_rev": [],
     "blocks": ["segment", "term_bucket"],
 }
 
@@ -82,19 +81,14 @@ def publish_index(index, catalog: str, namespace: str) -> list[str]:
     spark = index.spark
     _require_iceberg(spark)
     created = []
+    frames: dict[str, DataFrame] = {
+        "analyzed": index.live(spark.read.parquet(f"{index.dir}/analyzed"), "batch"),
+        "segments": index.segments,
+        "term_dict": index.term_dict,
+        "blocks": index.blocks,
+    }
     for stage, parts in STAGE_PARTITIONING.items():
-        try:
-            df: DataFrame = {
-                "analyzed": lambda: index.live(
-                    spark.read.parquet(f"{index.dir}/analyzed"), "batch"
-                ),
-                "segments": lambda: index.segments,
-                "term_dict": lambda: index.term_dict,
-                "term_dict_rev": lambda: index.term_dict_rev,
-                "blocks": lambda: index.blocks,
-            }[stage]()
-        except Exception:
-            continue  # optional stage absent on this index
+        df = frames[stage]
         ident = f"{catalog}.{namespace}.{stage}"
         writer = df.writeTo(ident).using("iceberg")
         for p in parts:

@@ -250,7 +250,6 @@ def _compile(ctx: _Ctx, node, boost: float):
 
     # multi-term expansions against the term dictionary
     if isinstance(node, (WildQ, RegexQ, FuzzyQ, RangeQ)):
-        source = None
         if isinstance(node, WildQ):
             _check_field(eng, node)  # unknown field → text-dict expansion, loudly
             pat = node.pattern.lower()
@@ -259,12 +258,7 @@ def _compile(ctx: _Ctx, node, boost: float):
             if pat.endswith("*") and not pat.startswith("*") and plain_inner:
                 cond = F.col("term").startswith(inner)
             elif pat.startswith("*") and not pat.endswith("*") and plain_inner:
-                # leading wildcard → prefix seek on the REVERSED dictionary
-                # (ReversedWildcardFilterFactory analog): startswith on the
-                # range-sorted term_rev column is parquet-prunable, unlike
-                # an rlike over the whole vocabulary
-                cond = F.col("term_rev").startswith(inner[::-1])
-                source = ctx.engine.index.term_dict_rev
+                cond = F.col("term").endswith(inner)
             elif pat.startswith("*") and pat.endswith("*") and plain_inner and inner:
                 cond = F.col("term").contains(inner)
             else:
@@ -286,7 +280,7 @@ def _compile(ctx: _Ctx, node, boost: float):
                 cond = cond & (
                     F.col("term") <= node.hi.lower() if node.incl_hi else F.col("term") < node.hi.lower()
                 )
-        stats = _expansion_stats(ctx.engine, cond, ctx.max_expansions, source=source)
+        stats = _expansion_stats(ctx.engine, cond, ctx.max_expansions)
         if not stats:
             return _FALSE
         lid = ctx.new_leaf()

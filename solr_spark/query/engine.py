@@ -54,7 +54,7 @@ per engine, so repeated queries pay no stats round-trips at all.
 
 from __future__ import annotations
 
-from collections import Counter
+from collections import Counter, OrderedDict
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
@@ -117,19 +117,22 @@ class SearchEngine:
         self.k1 = index.config.k1
         self.b = index.config.b
         self.avgdl = index.avgdl or 1.0
+        # memos over the handle's snapshot: term → (df, idf) or None,
+        # term → max block factor g, query → materialized top-k window
+        self._stats_cache: dict[str, tuple[int, float] | None] = {}
+        self._g_cache: dict[str, float] = {}
+        self._qresult_cache: OrderedDict = OrderedDict()
 
     # ------------------------------------------------------------------
     def analyze_query(self, text: str) -> list[str]:
         return self.config.chain().tokenize_py(text)
 
-    def invalidate_caches(self) -> None:
-        """Drop the per-engine stats/g/query-result memos (call after the
-        underlying index directory is rewritten under this handle —
-        normally not needed: incremental commits return a FRESH
-        InvertedIndex)."""
-        self.__dict__.pop("_stats_cache", None)
-        self.__dict__.pop("_g_cache", None)
-        self.__dict__.pop("_qresult_cache", None)
+    def idf(self, df: Column) -> Column:
+        """BM25 idf ``ln(1 + (N - df + 0.5)/(df + 0.5))`` (Lucene,
+        frozen in FIXTURES.md) over this handle's N: the one idf
+        expression, evaluated in the JVM wherever a df is read."""
+        n = F.lit(float(self.index.n_docs))
+        return F.log1p((n - df + F.lit(0.5)) / (df + F.lit(0.5)))
 
     # ------------------------------------------------------------------
     _QUERY_CACHE_SIZE = 128   # queryResultCache entry cap (LRU)
@@ -148,17 +151,13 @@ class SearchEngine:
         within the window (k=10 after k=20) is also a pure hit —
         exactly Solr's window-rounding behavior. Snapshot-consistency is
         structural: the engine binds an immutable InvertedIndex handle
-        (NRT commits return a fresh index → fresh engine), and
-        :meth:`invalidate_caches` clears this cache with the stats memo.
-        LRU-capped at ``_QUERY_CACHE_SIZE`` entries (k rows each).
+        (NRT commits return a fresh index → fresh engine; a directory
+        rewritten otherwise gets :meth:`InvertedIndex.refresh` and a new
+        engine). LRU-capped at ``_QUERY_CACHE_SIZE`` entries (k rows each).
         """
-        from collections import OrderedDict
-
         terms = tuple(self.analyze_query(query_text))
         key = (terms, mode.upper())
-        cache: OrderedDict = self.__dict__.setdefault(
-            "_qresult_cache", OrderedDict()
-        )
+        cache = self._qresult_cache
         hit = cache.get(key)
         # a cached window serves any k within it; a window that came back
         # short (fewer matches than requested) is exhaustive for ALL k
@@ -188,12 +187,12 @@ class SearchEngine:
             return []
         mult = Counter(terms)
         uniq = sorted(mult)
-        cache = self.__dict__.setdefault("_stats_cache", {})
+        cache = self._stats_cache
         missing = [t for t in uniq if t not in cache]
         if missing:
             rows = (
                 self.index.term_dict.where(F.col("term").isin(missing))
-                .select("term", "df", "idf")
+                .select("term", "df", self.idf(F.col("df")).alias("idf"))
                 .collect()
             )
             for r in rows:
@@ -466,7 +465,7 @@ class SearchEngine:
         (handler/component/QueryComponent.java:448) — we keep exact top-k
         and use the bound only to SKIP provably useless blocks.
         """
-        gcache = self.__dict__.setdefault("_g_cache", {})
+        gcache = self._g_cache
         uniq = [s.term for s in stats]
         need_g = [t for t in uniq if t not in gcache]
 
@@ -522,8 +521,7 @@ class SearchEngine:
         scan as a JVM predicate — no driver metadata."""
         if theta is None or not stats:
             return blocks
-        gcache = self.__dict__.setdefault("_g_cache", {})
-        wg = {s.term: s.idf * s.weight * gcache.get(s.term, 0.0) for s in stats}
+        wg = {s.term: s.idf * s.weight * self._g_cache.get(s.term, 0.0) for s in stats}
         total = sum(wg.values())
         slack_map = F.create_map(
             *[x for t in wg for x in (F.lit(t), F.lit(total - wg[t]))]

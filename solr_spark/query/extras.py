@@ -45,16 +45,13 @@ from solr_spark.session import local_frame
 # ---------------------------------------------------------------------------
 
 
-def _expansion_stats(
-    engine: SearchEngine, cond, max_expansions: int, source=None
-) -> list[TermStats]:
+def _expansion_stats(engine: SearchEngine, cond, max_expansions: int) -> list[TermStats]:
     """Top ``max_expansions`` matching terms by (df desc, term asc) — the
     frozen MultiTermQuery rewrite. A filtered read of the sorted
-    term_dict (or ``source``, e.g. the reversed dictionary for leading
-    wildcards); collected stats are O(max_expansions)."""
+    term_dict; collected stats are O(max_expansions)."""
     rows = (
-        (source if source is not None else engine.index.term_dict).where(cond)
-        .select("term", "df", "idf")
+        engine.index.term_dict.where(cond)
+        .select("term", "df", engine.idf(F.col("df")).alias("idf"))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(max_expansions)
         .collect()
@@ -73,17 +70,11 @@ def prefix_topk(
 def suffix_topk(
     engine: SearchEngine, suffix: str, k: int = 10, max_expansions: int = 50
 ) -> DataFrame:
-    """``field:*suffix`` → scoring OR over the expanded terms, seeded by a
-    prefix seek on the REVERSED dictionary (ReversedWildcardFilterFactory
-    analog, ref analysis/ReversedWildcardFilterFactory.java): term_rev is
-    range-sorted at build time, so the filter prunes parquet row groups
-    instead of regex-scanning the vocabulary."""
-    stats = _expansion_stats(
-        engine,
-        F.col("term_rev").startswith(suffix[::-1].lower()),
-        max_expansions,
-        source=engine.index.term_dict_rev,
-    )
+    """``field:*suffix`` → scoring OR over the expanded terms. The
+    ``endswith`` filter is pushed to the term_dict scan but prunes no row
+    group: a leading wildcard reads the term column, as Lucene does for a
+    field without ReversedWildcardFilterFactory."""
+    stats = _expansion_stats(engine, F.col("term").endswith(suffix.lower()), max_expansions)
     return engine.topk_from_stats(stats, k=k, mode="OR", prune=False)
 
 

@@ -40,7 +40,6 @@ Execution (one shuffle, no per-row/per-doc Python):
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -247,10 +246,10 @@ def complex_phrase_pf(
     per_pos = [[t for t in ts if t in known] for ts in per_pos]
     if any(not ts for ts in per_pos):
         return None, 0.0
-    n_docs = engine.index.n_docs
 
     # df of a position = docs containing ANY of its terms (exact count
-    # from a distinct-doc aggregation over the pruned decode)
+    # from a distinct-doc aggregation over the pruned decode); every
+    # position holds a known term, so each has a df row
     flat = occurrences(engine, sorted({t for ts in per_pos for t in ts}))
     # union-df of EVERY position in ONE job (the r2 version ran one
     # driver .count() per multi-term position): broadcast the
@@ -260,20 +259,18 @@ def complex_phrase_pf(
         [(t, i) for i, ts in enumerate(per_pos) for t in ts],
         "term string, pos_ord int",
     )
-    df_rows = (
+    idf_rows = (
         flat.select("term", "doc_id")
         .join(F.broadcast(pos_map), "term")
         .select("pos_ord", "doc_id")
         .distinct()
         .groupBy("pos_ord")
-        .agg(F.count("*").alias("df"))
+        .agg(engine.idf(F.count("*")).alias("idf"))
         .collect()
     )
-    union_df = {r["pos_ord"]: r["df"] for r in df_rows}
     idf_total = 0.0
-    for i in range(len(per_pos)):
-        dfi = union_df.get(i, 0)
-        idf_total += math.log1p((n_docs - dfi + 0.5) / (dfi + 0.5))
+    for r in sorted(idf_rows, key=lambda r: r["pos_ord"]):  # in phrase order
+        idf_total += r["idf"]
 
     # rewrite terms to position markers so the verifier treats any
     # expansion of ordinal i as "term i"

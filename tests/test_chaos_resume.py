@@ -181,7 +181,6 @@ def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_confi
     before = InvertedIndex(spark, killed)
     assert before.meta == last_meta  # stats and record of the last commit
     assert sorted(map(tuple, before.term_dict.collect())) == last_terms
-    assert before.term_dict_rev.count() == len(last_terms)
     decoded = SearchEngine(before).decode(before.blocks).select("doc_id").distinct()
     assert decoded.count() == 400  # the killed segment is never read
     assert not [r for r in admin.segments_info(before).collect() if "segment=1" in r["stage"]]

@@ -116,7 +116,7 @@ def test_fresh_index_opens_and_plans_without_jobs(warm, spark):
         eng = SearchEngine(idx)
         stats = [TermStats("server", 10, 1.0, 1.0), TermStats("client", 10, 1.0, 1.0)]
         for df in (
-            idx.term_dict.where(F.col("term").isin("server", "client")).select("df", "idf"),
+            idx.term_dict.where(F.col("term").isin("server", "client")).select("df", eng.idf(F.col("df"))),
             eng.topk_from_stats(stats, k=10),
             eng.topk_from_stats(stats, k=10, mode="AND"),
         ):

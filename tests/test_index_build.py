@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from solr_spark.corpus import synth_corpus
 from solr_spark.index.build import IndexConfig, build_index
+from solr_spark.query.engine import SearchEngine
 
 
 def _lists(cells):
@@ -47,14 +48,20 @@ def test_doc_len_matches_oracle(index, oracle):
 
 
 def test_term_dict_matches_oracle(index, oracle):
+    """term_dict holds counts only, (term, df, cf); the engine's idf over
+    them matches the oracle's."""
     rows = index.term_dict.collect()
     assert len(rows) == len(oracle.postings)
+    assert index.term_dict.columns == ["term", "df", "cf"]
     for r in rows:
         t = r["term"]
         assert t in oracle.postings
         assert r["df"] == len(oracle.postings[t][0])
         assert r["cf"] == int(oracle.postings[t][1].sum())
-        assert abs(r["idf"] - oracle.idf(t)) < 1e-12
+    stats = SearchEngine(index)._term_stats(sorted(oracle.postings))
+    assert len(stats) == len(oracle.postings)
+    for s in stats:
+        assert abs(s.idf - oracle.idf(s.term)) < 1e-12
 
 
 def test_blocks_decode_to_postings(index, oracle, test_config):
@@ -80,7 +87,7 @@ def test_blocks_decode_to_postings(index, oracle, test_config):
 
 
 def test_hot_terms_are_salted(index, test_config):
-    hot = [r["term"] for r in index.term_dict.where("is_hot").collect()]
+    hot = [r["term"] for r in index.term_dict.where(F.col("df") > test_config.hot_df_threshold).collect()]
     assert hot, "test corpus must contain hot terms above threshold"
     n_salts = (
         index.blocks.where(F.col("term").isin(hot))
@@ -98,7 +105,8 @@ def test_block_bound_metadata_is_sound(index):
     dominate every decoded posting's impact (BMW soundness with
     stats-independent metadata)."""
     k1, b, avgdl = index.config.k1, index.config.b, index.avgdl
-    idf = {r["term"]: r["idf"] for r in index.term_dict.collect()}
+    idf = {r["term"]: r["idf"] for r in index.term_dict.select(
+        "term", SearchEngine(index).idf(F.col("df")).alias("idf")).collect()}
     sample = index.blocks.limit(200).collect()
     for blk in sample:
         tfs = np.asarray(blk["tfs"], dtype=np.float64)
@@ -483,7 +491,7 @@ def test_hot_term_spans_multiple_shuffle_partitions(spark, index, test_config):
     plan = shuffled._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    hot = [r["term"] for r in index.term_dict.where("is_hot").collect()]
+    hot = [r["term"] for r in index.term_dict.where(F.col("df") > test_config.hot_df_threshold).collect()]
     assert hot
     per_term = (
         shuffled.withColumn("pid", F.spark_partition_id())
@@ -572,7 +580,7 @@ def _earlier_layout(src: str, dst: str, layout: str) -> None:
         return
     # before segments and commit generations: flat blocks and dictionaries,
     # and no commit record in meta.json
-    subs = [("blocks", "segment=0"), ("term_dict", "commit=0"), ("term_dict_rev", "commit=0")]
+    subs = [("blocks", "segment=0"), ("term_dict", "commit=0")]
     if layout != "flat_blocks":  # before batches too: loose stage files
         subs += [("analyzed", "batch=0"), ("segments", "batch=0")]
     for stage, sub in subs:
@@ -636,9 +644,77 @@ def test_earlier_layout_refused_then_rebuilt(spark, small_index, tmp_path, layou
     q = "server data"
     assert SearchEngine(idx).topk(q, k=10).collect() == SearchEngine(ref).topk(q, k=10).collect()
     for stage, kept in (("analyzed", "batch=0"), ("segments", "batch=0"), ("blocks", "segment=0"),
-                        ("term_dict", "commit=0"), ("term_dict_rev", "commit=0")):
+                        ("term_dict", "commit=0")):
         assert os.listdir(os.path.join(d, stage)) == [kept], stage
     assert not os.path.exists(os.path.join(d, "tombstones"))
+
+
+def _dictionary_with_derived_columns(src: str, dst: str) -> None:
+    """Copy the index ``src`` to ``dst`` with the term dictionary an
+    earlier writer of format 3 left: ``idf`` and ``is_hot`` columns in
+    the ``term_dict`` generation (and its manifest schema), and a
+    ``term_dict_rev`` generation range-sorted by the reversed term."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    shutil.copytree(src, dst)
+    with open(os.path.join(dst, "meta.json")) as f:
+        meta = json.load(f)
+    n, hot = meta["n_docs"], meta["config"]["hot_df_threshold"]
+    gen = os.path.join(dst, "term_dict", "commit=0")
+    tables = []
+    for name in sorted(os.listdir(gen)):
+        if name.endswith(".parquet"):
+            t = pq.read_table(os.path.join(gen, name))
+            df = t.column("df").to_numpy().astype(np.float64)
+            t = t.append_column("idf", pa.array(np.log1p((n - df + 0.5) / (df + 0.5))))
+            t = t.append_column("is_hot", pc.greater(t.column("df"), hot))
+            pq.write_table(t, os.path.join(gen, name))
+            os.remove(os.path.join(gen, f".{name}.crc"))  # Hadoop's checksum of the old bytes
+            tables.append(t)
+    rev = pa.concat_tables(tables)
+    rev = rev.append_column("term_rev", pa.array([x[::-1] for x in rev.column("term").to_pylist()]))
+    os.makedirs(os.path.join(dst, "term_dict_rev", "commit=0"))
+    pq.write_table(rev.sort_by("term_rev"),
+                   os.path.join(dst, "term_dict_rev", "commit=0", "part-00000.parquet"))
+    path = os.path.join(dst, "_MANIFEST_term_dict.json")
+    with open(path) as f:
+        m = json.load(f)
+    m["schema"]["fields"] += [
+        {"name": "idf", "type": "double", "nullable": True, "metadata": {}},
+        {"name": "is_hot", "type": "boolean", "nullable": False, "metadata": {}},
+    ]
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+
+def test_index_with_derived_dictionary_columns_serves(spark, small_index, tmp_path):
+    """An index whose dictionary still carries the derived ``idf`` and
+    ``is_hot`` columns and a reversed copy (``term_dict_rev``) opens and
+    answers BM25 OR, AND and leading-wildcard queries as a fresh build
+    does. A ``build_index(resume=False)`` over it keeps no entry but
+    ``snapshots/``, so the reversed copy goes."""
+    from solr_spark.index.build import InvertedIndex, create_snapshot
+    from solr_spark.plans.compiler import execute_query
+
+    ref, corpus = small_index
+    d = str(tmp_path / "derived")
+    _dictionary_with_derived_columns(ref.dir, d)
+    idx = InvertedIndex(spark, d)
+    assert {"idf", "is_hot"} <= set(idx.term_dict.columns)
+    old, fresh = SearchEngine(idx), SearchEngine(ref)
+    for run in (lambda e: e.topk("server data", k=10),
+                lambda e: e.topk("server data", k=10, mode="AND"),
+                lambda e: execute_query(e, "*se", k=10)):
+        assert run(old).collect() == run(fresh).collect()
+    assert run(fresh).collect()
+
+    create_snapshot(d, "kept")
+    rebuilt = build_index(spark, corpus, d, ref.config, resume=False)
+    assert sorted(os.listdir(d)) == sorted(os.listdir(ref.dir) + ["snapshots"])
+    assert os.listdir(os.path.join(d, "snapshots")) == ["kept"]
+    assert rebuilt.term_dict.columns == ["term", "df", "cf"]
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

@@ -271,40 +271,25 @@ def test_execute_wildcard_equals_prefix_for_trailing_star(engine):
     assert [d for d, _ in w] == [d for d, _ in p]
 
 
-def test_leading_wildcard_reversed_dictionary(engine, index):
-    """``*suffix`` expands via a prefix seek on the reversed dictionary
-    (ReversedWildcardFilterFactory analog) — same terms as the regex scan,
-    and the filter is pushed to the parquet scan (prunable)."""
+def test_leading_wildcard_expansion(engine, index):
+    """``*suffix`` expands through an ``endswith`` filter on term_dict:
+    the same terms as the anchored regex scan, and ``*se`` through the
+    query compiler equals :func:`suffix_topk`."""
     from pyspark.sql import functions as F
     from solr_spark.query.extras import _expansion_stats, suffix_topk
 
-    via_rev = {
-        s.term
-        for s in _expansion_stats(
-            engine, F.col("term_rev").startswith("es"), 10**6,
-            source=index.term_dict_rev)
-    }
+    via_endswith = {s.term for s in _expansion_stats(engine, F.col("term").endswith("se"), 10**6)}
     via_rlike = {
         r["term"]
         for r in index.term_dict.where(F.col("term").rlike("^.*se$")).collect()
     }
-    assert via_rev and via_rev == via_rlike
+    assert via_endswith and via_endswith == via_rlike
 
-    # the executed query is unchanged vs the old full-vocabulary scan
     got = [(r["doc_id"], r["score"])
            for r in execute_query(engine, "*se", k=20).collect()]
     via_api = [(r["doc_id"], r["score"])
                for r in suffix_topk(engine, "se", k=20, max_expansions=50).collect()]
     assert got == via_api and got
-
-    # scale contract: startswith on term_rev reaches the scan as a pushed
-    # filter (row-group prunable); the old path was an unprunable RLIKE
-    plan = (index.term_dict_rev
-            .where(F.col("term_rev").startswith("es"))
-            ._sc._jvm.PythonSQLUtils.explainString(
-                index.term_dict_rev.where(F.col("term_rev").startswith("es"))
-                ._jdf.queryExecution(), "formatted"))
-    assert "StringStartsWith(term_rev,es)" in plan
 
 
 def test_execute_term_range_expands_dictionary(engine, index):
@@ -464,23 +449,21 @@ def test_search_cache_respects_mode_and_analysis(index):
     eng = SearchEngine(index)
     eng.search("server client", k=10, mode="OR")
     and_rows = eng.search("server client", k=10, mode="AND").collect()
-    assert len(eng.__dict__["_qresult_cache"]) == 2  # one key per mode
+    assert len(eng._qresult_cache) == 2  # one key per mode
     assert and_rows == eng.topk("server client", k=10, mode="AND").collect()
     # analysis-equivalent spellings share one key (analyzed-terms key)
-    key_count = len(eng.__dict__["_qresult_cache"])
+    key_count = len(eng._qresult_cache)
     eng.search("Server  CLIENT", k=10, mode="OR")
-    assert len(eng.__dict__["_qresult_cache"]) == key_count
+    assert len(eng._qresult_cache) == key_count
 
 
-def test_search_cache_invalidation_and_eviction(index):
+def test_search_cache_eviction(index):
     eng = SearchEngine(index)
     eng._QUERY_CACHE_SIZE = 2
     for q in ("import", "config", "server"):
         eng.search(q, k=5)
-    cache = eng.__dict__["_qresult_cache"]
-    assert len(cache) == 2  # LRU evicted the oldest entry
-    eng.invalidate_caches()
-    assert "_qresult_cache" not in eng.__dict__
+    assert len(eng._qresult_cache) == 2  # LRU evicted the oldest entry
+    assert [k[0] for k in eng._qresult_cache] == [("config",), ("server",)]
 
 
 def test_search_exhausted_short_window_serves_any_k(index):
