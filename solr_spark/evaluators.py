@@ -387,10 +387,13 @@ def chi_square(df: DataFrame, a: str, b: str) -> DataFrame:
     obs = df.groupBy(a, b).agg(F.count("*").cast("double").alias("o"))
     ra = obs.groupBy(a).agg(F.sum("o").alias("_ra"))
     cb = obs.groupBy(b).agg(F.sum("o").alias("_cb"))
-    tot = obs.agg(
-        F.sum("o").alias("_n"),
-        F.countDistinct(a).cast("double").alias("_ka"),
-        F.countDistinct(b).cast("double").alias("_kb"),
+    # the category counts are the row counts of the totals (count(col)
+    # skips a null group, as countDistinct does): two countDistinct in one
+    # agg plan an Expand whose printed plan varies between runs
+    tot = (
+        obs.agg(F.sum("o").alias("_n"))
+        .crossJoin(ra.agg(F.count(a).cast("double").alias("_ka")))
+        .crossJoin(cb.agg(F.count(b).cast("double").alias("_kb")))
     )
     j = (
         obs.join(F.broadcast(ra), a)

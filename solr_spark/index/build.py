@@ -16,13 +16,18 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    The analog of flushed in-memory segments before merge. Stages 1 and
    2 are one batch write (:func:`_write_batch`) into ``batch=<id>``
    partitions: a build is batch 0, each incremental append one more.
-3. ``term_dict`` — global term dictionary of pure counts: (term, df,
-   cf), range-sorted by term. The analog of Solr's distributed exact
-   stats cache (``search/stats/ExactStatsCache.java:62,192``) — global
-   by construction, so every partition scores with identical IDF. The
-   counts depend on neither N nor the config: idf is the engine's one
-   expression over df (``SearchEngine.idf``) and a hot term is one with
-   ``df > hot_df_threshold``.
+3. ``term_dict`` — the term dictionary of pure counts, (term, df, cf),
+   kept as one partial per commit (``term_dict/commit=<c>``) whose sum
+   is the global dictionary — Lucene's per-segment dictionaries summed
+   at query time (``TermStates``), made exact over the live docs as
+   Solr's distributed exact stats cache is
+   (``search/stats/ExactStatsCache.java:62,192``), so every partition
+   scores with identical IDF. A build or policy merge writes one full
+   partial, range-sorted by term; a delta commit writes the signed
+   change it makes (:func:`_stage_term_delta`). The counts depend on
+   neither N nor the config: idf is the engine's one expression over df
+   (``SearchEngine.idf``), and a segment salts the terms whose df in its
+   commit's own partial passes ``hot_df_threshold`` (:func:`_stage_blocks`).
 4. ``blocks``    — the merged index, one ``segment=<s>`` directory per
    commit (a build writes segment 0): fixed-size posting blocks per
    (term, salt) stored as Parquet-native int arrays (doc ids as offsets
@@ -37,19 +42,19 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    corpora where ``import``/``def``/``return`` appear in most docs.
 
 Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
-incremental commit share: term_dict over the live docs, then one
-segment's blocks, then ``meta.json`` — the commit point. It holds the
-global stats and the commit record: the commit's generation, which
-names its ``term_dict/commit=<c>`` directory, the segments and their
-batches, and the deleted docs (the live-docs record every read
-applies, :meth:`InvertedIndex.live`). A reader opens exactly what it
-names, so a killed commit leaves readers on the previous commit, stats
-and dictionary included. Each stage
-manifest records its stage's Spark schema, so a stage opens with no
-schema-inference job (:func:`_read_stage`). A resumed build continues
-only its own commit (:func:`build_index`) and skips any stage whose
-manifest exists and matches the config hash; kill the build between
-stages and re-running yields a bit-identical index (tested).
+incremental commit share: a term_dict partial, then one segment's
+blocks, then ``meta.json`` — the commit point. It holds the global
+stats and the commit record: the commit's generation, the generations
+whose ``term_dict/commit=<c>`` partials sum to its dictionary, the
+segments and their batches, and the deleted docs (the live-docs record
+every read applies, :meth:`InvertedIndex.live`). A reader opens exactly
+what it names, so a killed commit leaves readers on the previous
+commit, stats and dictionary included. Each stage manifest records its
+stage's Spark schema, so a stage opens with no schema-inference job
+(:func:`_read_stage`). A resumed build continues only its own commit
+(:func:`build_index`) and skips any stage whose manifest exists and
+matches the config hash; kill the build between stages and re-running
+yields a bit-identical index (tested).
 
 Scale notes (100 TB / 10^12 docs):
 - ONE wide shuffle in the whole build: analyze is map-only after one
@@ -90,9 +95,11 @@ import functools
 import hashlib
 import json
 import math
+import operator
 import os
 import shutil
 import time
+from collections import Counter
 from dataclasses import asdict, dataclass
 
 import numpy as np
@@ -222,7 +229,7 @@ def _write_manifest(
     that produced it and the stage's Spark schema (:func:`_read_stage`
     passes it, so opening the stage runs no schema-inference job). Only
     the ``parts`` subdirectories are listed when given; a ``root``
-    subdirectory is listed as the stage itself (a term_dict generation);
+    subdirectory is listed as the stage itself (a term_dict partial);
     ``extra`` keys join the record. Written aside and renamed into
     place, so a reader sees the old manifest or the new one, never a
     truncated file.
@@ -328,6 +335,14 @@ def _dict_root(commit: int) -> str:
     return f"commit={commit}"
 
 
+def _dict_gens(meta: dict) -> list[int]:
+    """The commit generations whose ``term_dict`` partials sum to the
+    dictionary of the commit ``meta``. A commit point that names none
+    (written before partials) names its own generation's full
+    dictionary."""
+    return meta.get("term_dicts", [meta["commit"]])
+
+
 def _check_layout(out_dir: str) -> dict | None:
     """``meta.json`` of ``out_dir`` (None before the first commit) if the
     directory is of the layout this version writes, else ``ValueError``
@@ -349,17 +364,19 @@ def _check_layout(out_dir: str) -> dict | None:
 
 
 def _write_meta(
-    out_dir: str, config: IndexConfig, stats: dict, commit: int,
+    out_dir: str, config: IndexConfig, stats: dict, commit: int, gens: list[int],
     segments: dict[int, list[int]], deleted: dict[int, list[int]],
 ) -> None:
     """Write ``meta.json``, the commit point: the global stats, the
-    config and the commit record (see :func:`_commit_record`); every
-    file a commit writes before it stays unread until it lands."""
+    config, the term_dict partials ``gens`` (see :func:`_dict_gens`)
+    and the commit record (see :func:`_commit_record`); every file a
+    commit writes before it stays unread until it lands."""
     _write_json(os.path.join(out_dir, "meta.json"), {
         **{k: stats[k] for k in ("n_docs", "sum_doc_len", "avgdl")},
         "config": asdict(config),
         "config_hash": config.config_hash(),
         "commit": commit,
+        "term_dicts": gens,
         "segments": {str(s): b for s, b in sorted(segments.items())},
         "deleted": {str(u): ids for u, ids in sorted(deleted.items())},
     })
@@ -373,13 +390,20 @@ def _dead_rows(deleted: dict[int, list[int]], segments: dict[int, list[int]], un
     py4j call however many ids it names (``Column.isin`` makes one per
     id); Spark plans a long ``IN`` list as a hash-set lookup."""
     conds = []
-    for u, ids in sorted(deleted.items()):
-        if unit == "segment":
-            scope = f"segment <= {u}"
-        else:
-            scope = f"batch IN ({','.join(str(b) for s, bs in sorted(segments.items()) if s <= u for b in bs)})"
+    for u, batches, ids in _dead_scopes(deleted, segments):
+        scope = f"segment <= {u}" if unit == "segment" else f"batch IN ({','.join(map(str, batches))})"
         conds.append(f"({scope} AND doc_id IN ({','.join(map(str, ids))}))")
     return F.expr(" OR ".join(conds)) if conds else None
+
+
+def _dead_scopes(deleted: dict[int, list[int]], segments: dict[int, list[int]]):
+    """(u, batches, ids) per entry of the live-docs record: the doc
+    ``ids`` deleted from segment ``u`` and every earlier one, which hold
+    ``batches``. The one statement of which rows a delete kills, for the
+    Spark predicate (:func:`_dead_rows`) and the driver-side one
+    (:func:`_doc_stats_delta`)."""
+    for u, ids in sorted(deleted.items()):
+        yield u, [b for s, bs in sorted(segments.items()) if s <= u for b in bs], ids
 
 
 def _live(df: DataFrame, dead: Column | None) -> DataFrame:
@@ -688,11 +712,19 @@ def build_postings(analyzed: DataFrame, config: IndexConfig) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_DICT_SCHEMA = "term string, df long, cf long"
+
+
+def _dict_paths(out_dir: str, gens: list[int]) -> list[str]:
+    return [os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(g)) for g in gens]
+
+
 def _stage_term_dict(spark: SparkSession, out_dir: str, record, commit: int) -> dict:
-    """term_dict of commit generation ``commit``: (term, df, cf) over
-    the live docs of the commit ``record`` (see :func:`_commit_record`),
-    range-sorted by term so a term lookup prunes row groups. Returns the
-    global stats (n_docs, sum_doc_len, avgdl)."""
+    """The full term_dict partial of commit generation ``commit`` (a build
+    or a policy merge): (term, df, cf) over the live docs of the commit
+    ``record`` (see :func:`_commit_record`), range-sorted by term so a
+    term lookup prunes row groups. Returns the global stats (n_docs,
+    sum_doc_len, avgdl)."""
     analyzed = _live_stage(spark, out_dir, "analyzed", record)
     # one job for both corpus stats (was two full passes: count + sum)
     stats_row = analyzed.agg(
@@ -709,6 +741,80 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, record, commit: int) -> 
      .write.mode("overwrite").parquet(
          os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(commit))))
     return {"n_docs": int(n_docs), "sum_doc_len": int(sum_dl), "avgdl": avgdl}
+
+
+def _stage_term_delta(
+    spark: SparkSession, out_dir: str, base: dict, record, commit: int, fold: bool,
+) -> tuple[dict, list[int]]:
+    """The term_dict partial of commit generation ``commit``, a delta
+    commit from the commit point ``base`` (see :func:`_read_meta`) to the
+    commit ``record``: the signed (term, df, cf) of the live postings of
+    the batches ``record`` adds, minus the postings of the docs it deletes
+    that were live under ``base``. A deleted id that is absent, already
+    deleted or in an added batch is subtracted nowhere. It aggregates
+    O(delta) postings; ``fold`` also sums ``base``'s partials in, so the
+    partial is full and the partials a reader sums stay bounded. Returns
+    the global stats of ``record`` (see :func:`_doc_stats_delta`) and the
+    generations whose partials sum to its dictionary."""
+    before = _commit_record(base)
+    covered = {b for bs in before[0].values() for b in bs}
+    fresh = sorted({b for bs in record[0].values() for b in bs} - covered)
+    dead = sorted({d for u, ids in record[1].items() for d in set(ids) - set(before[1].get(u, ()))})
+    # the rows of ``dead`` in the batches ``base`` holds
+    killed = ({max(before[0]): dead} if dead else {}, before[0])
+    stats = _doc_stats_delta(out_dir, base, record, fresh, killed)
+
+    gens = [commit] if fold else _dict_gens(base) + [commit]
+    signed = []
+    if fresh:
+        signed.append(_live_stage(spark, out_dir, "segments", record)
+                      .where(F.col("batch").isin(fresh))
+                      .select("term", F.lit(1).cast("long").alias("df"), F.col("tf").cast("long").alias("cf")))
+    if dead:
+        signed.append(_live_stage(spark, out_dir, "segments", before).where(_dead_rows(*killed, "batch"))
+                      .select("term", F.lit(-1).cast("long").alias("df"),
+                              (-F.col("tf")).cast("long").alias("cf")))
+    if fold:
+        signed.append(spark.read.schema(_DICT_SCHEMA).parquet(*_dict_paths(out_dir, _dict_gens(base))))
+    # one task sums the rows, so the aggregate needs no exchange: a delta
+    # commit's postings are few, and a fold's partials are dictionaries
+    rows = functools.reduce(DataFrame.unionByName, signed or [local_frame(spark, [], _DICT_SCHEMA)])
+    summed = rows.coalesce(1).groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    (summed.where(F.col("df") > 0 if fold else (F.col("df") != 0) | (F.col("cf") != 0))
+     .sortWithinPartitions("term")
+     .write.mode("overwrite").parquet(_dict_paths(out_dir, [commit])[0]))
+    return stats, gens
+
+
+def _doc_stats_delta(out_dir: str, base: dict, record, fresh: list[int], killed) -> dict:
+    """The global stats (n_docs, sum_doc_len, avgdl) of the commit
+    ``record``: those of the commit point ``base``, plus the live docs
+    of the batches ``fresh``, minus the docs of the deletes ``killed``
+    (a ``(deleted, segments)`` pair, see :func:`_commit_record`) that
+    were live under ``base``. Counted on the driver from the ``doc_len``
+    column of those docs' analyzed rows, read with pyarrow, which prunes
+    by batch directory and by the doc-id statistics of row groups: no
+    Spark job. A doc with no token counts in N as every doc does."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    def dead(deleted, segments):  # the pyarrow twin of _dead_rows(..., "batch")
+        return functools.reduce(operator.or_, (
+            ds.field("batch").isin(batches) & ds.field("doc_id").isin(ids)
+            for _u, batches, ids in _dead_scopes(deleted, segments)), ds.scalar(False))
+
+    before = _commit_record(base)
+    analyzed = ds.dataset(_stage_dir(out_dir, "analyzed"), format="parquet", partitioning="hive")
+    n_docs, sum_dl = base["n_docs"], base["sum_doc_len"]
+    for sign, rows in (
+        (1, ds.field("batch").isin(fresh) & ~dead(record[1], record[0])),
+        (-1, dead(*killed) & ~dead(before[1], before[0])),
+    ):
+        dl = analyzed.to_table(columns=["doc_len"], filter=rows).column("doc_len")
+        n_docs += sign * len(dl)
+        sum_dl += sign * (pc.sum(dl).as_py() or 0)
+    return {"n_docs": n_docs, "sum_doc_len": sum_dl,
+            "avgdl": float(sum_dl) / n_docs if n_docs else 0.0}
 
 
 # ---------------------------------------------------------------------------
@@ -1169,9 +1275,13 @@ def _stage_blocks(
 ) -> None:
     """Encode the postings of ``batches`` into one segment,
     ``blocks/segment=<segment>/term_bucket=<b>``, every bucket, salting
-    the hot terms of commit generation ``commit``'s term_dict;
-    ``whole``: the segment is the whole index (see
-    :func:`_blocks_shuffle_input`)."""
+    the hot terms of commit generation ``commit``'s own term_dict
+    partial: the whole dictionary for a build or a merge, the change a
+    delta commit makes for its delta segment. Salting spreads one
+    segment's long posting lists over reducers, so the df that matters
+    is the one of the postings the segment holds, and reading one
+    partial costs no aggregate. ``whole``: the segment is the whole
+    index (see :func:`_blocks_shuffle_input`)."""
     segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
     term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
 
@@ -1217,7 +1327,7 @@ class InvertedIndex:
     """Handle to a built index directory (docs / term_dict / blocks).
 
     A handle is a SNAPSHOT: ``meta.json``, the commit point (stats,
-    term_dict generation, segments and deleted docs), is read once at
+    term_dict partials, segments and deleted docs), is read once at
     open, and the stage DataFrames are memoized on first access, each
     read with the schema its manifest recorded, so opening one runs no
     Spark job. After an incremental commit, use the fresh handle the
@@ -1233,7 +1343,7 @@ class InvertedIndex:
         self.config = IndexConfig(**self.meta["config"])
         self.record = _commit_record(self.meta)
         self.deleted = self.record[1]
-        self._dict_root = _dict_root(self.meta["commit"])
+        self.dict_gens = _dict_gens(self.meta)
         self._dead: dict[str, Column | None] = {}
 
     def live(self, df: DataFrame, unit: str) -> DataFrame:
@@ -1257,8 +1367,36 @@ class InvertedIndex:
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
-        """The committed generation's dictionary."""
-        return _read_stage(self.spark, self.dir, "term_dict", root=self._dict_root)
+        """The committed dictionary as a lazy view of its partials: a
+        single partial (always a full one) is read as is; several are one
+        scan, a groupBy summing (df, cf), and ``df > 0``, so a term whose
+        docs are all deleted drops out."""
+        if len(self.dict_gens) == 1:
+            return _read_stage(self.spark, self.dir, "term_dict", root=_dict_root(self.dict_gens[0]))
+        return (
+            self.spark.read.schema(_DICT_SCHEMA).parquet(*_dict_paths(self.dir, self.dict_gens))
+            .groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .where(F.col("df") > 0)
+        )
+
+    @functools.cached_property
+    def _dict_datasets(self) -> list:
+        import pyarrow.dataset as ds
+
+        return [ds.dataset(p, format="parquet") for p in _dict_paths(self.dir, self.dict_gens)]
+
+    def doc_freqs(self, terms: list[str]) -> dict[str, int]:
+        """df of each of ``terms`` that a live doc holds, summed from the
+        committed partials on the driver with pyarrow: an ``isin`` read
+        that prunes the term-sorted row groups, and no Spark job."""
+        import pyarrow.dataset as ds
+
+        df: Counter = Counter()
+        for d in self._dict_datasets:
+            t = d.to_table(columns=["term", "df"], filter=ds.field("term").isin(terms))
+            for term, n in zip(t.column("term").to_pylist(), t.column("df").to_pylist()):
+                df[term] += n
+        return {term: n for term, n in df.items() if n > 0}
 
     @functools.cached_property
     def blocks(self) -> DataFrame:
@@ -1339,21 +1477,30 @@ def build_index(
 def _merge(
     spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
     record: tuple[dict[int, list[int]], dict[int, list[int]]], new: int | None, commit: int,
+    base: dict | None = None, fold: bool = False,
 ) -> None:
-    """Stages 3+4, the one merge step of both writers: term_dict (global
-    stats over the live docs) of commit generation ``commit``, then the
-    blocks of segment ``new``, then ``meta.json``, the commit point.
-    ``record`` is the ``(segments, deleted)`` pair it commits (see
-    :func:`_commit_record`); a build commits segment 0 over batch 0.
-    ``new=None`` encodes nothing (a commit of deletes alone). With
-    ``resume`` (a build continuing its own commit) a stage whose manifest
-    matches the config hash is skipped. Segment and generation
-    directories the commit does not name are removed after it lands."""
+    """Stages 3+4, the one merge step of both writers: the term_dict
+    partial of commit generation ``commit``, then the blocks of segment
+    ``new``, then ``meta.json``, the commit point. ``record`` is the
+    ``(segments, deleted)`` pair it commits (see :func:`_commit_record`);
+    a build commits segment 0 over batch 0. ``new=None`` encodes nothing
+    (a commit of deletes alone). ``base=None`` (a build or a policy
+    merge) writes one full partial over the live docs; a delta commit
+    from the commit point ``base`` writes the change since ``base``
+    (:func:`_stage_term_delta`, ``fold`` passed on). With ``resume`` (a
+    build continuing its own commit) a stage whose manifest matches the
+    config hash is skipped. Partial and segment directories the commit
+    does not name, and the reversed dictionary an earlier version kept,
+    are removed after it lands."""
     segments, deleted = record
+    gens = [commit]
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
         t0 = time.time()
-        stats = _stage_term_dict(spark, out_dir, record, commit)
+        if base is None:
+            stats = _stage_term_dict(spark, out_dir, record, commit)
+        else:
+            stats, gens = _stage_term_delta(spark, out_dir, base, record, commit, fold)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):
@@ -1361,9 +1508,10 @@ def _merge(
         if new is not None:
             _stage_blocks(spark, out_dir, config, segments[new], new, commit, len(segments) == 1)
         _write_manifest(out_dir, "blocks", config, t0, listed)
-    _write_meta(out_dir, config, td, commit, segments, deleted)
-    _remove_except(_stage_dir(out_dir, "term_dict"), [_dict_root(commit)])
+    _write_meta(out_dir, config, td, commit, gens, segments, deleted)
+    _remove_except(_stage_dir(out_dir, "term_dict"), [_dict_root(g) for g in gens])
     _remove_except(_stage_dir(out_dir, "blocks"), listed)
+    shutil.rmtree(_stage_dir(out_dir, "term_dict_rev"), ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -44,12 +44,13 @@ block-max metadata purely to skip blocks that cannot reach the top k):
 
 Spark jobs per fresh query, broadcast and AQE sub-jobs included, as
 ``scripts/explain_audit.py`` measures them at sf0.01 (PLANS.md): single
-hot term 2, OR 3, AND 4, nested lucene 4, phrase 3. The engine's own
-blocking actions are the stats lookup and the final decode; the θ seed
-job adds a third only past ``_PRUNE_MIN_POSTINGS`` total postings.
-Term→bucket routing is pure Python (XXH64 mirror of the build's
-``pmod(xxhash64(term), B)``) and term stats / block bounds are memoized
-per engine, so repeated queries pay no stats round-trips at all.
+hot term 1, OR 2, AND 3, nested lucene 3, phrase 2. The engine's own
+blocking action is the final decode; the θ seed job adds a second only
+past ``_PRUNE_MIN_POSTINGS`` total postings. Term stats are read on the
+driver from the dictionary partials (no Spark job), term→bucket routing
+is pure Python (XXH64 mirror of the build's ``pmod(xxhash64(term),
+B)``), and term stats / block bounds are memoized per engine, so
+repeated queries pay no stats reads at all.
 """
 
 from __future__ import annotations
@@ -134,6 +135,14 @@ class SearchEngine:
         n = F.lit(float(self.index.n_docs))
         return F.log1p((n - df + F.lit(0.5)) / (df + F.lit(0.5)))
 
+    def idf_value(self, df: int) -> float:
+        """:meth:`idf` of one driver-side df, bit-identical: the same
+        double arithmetic, then the ``java.lang.StrictMath.log1p`` that
+        Spark's ``log1p`` calls (Python's ``math.log1p`` differs from it
+        in the last bit on some arguments)."""
+        n = float(self.index.n_docs)
+        return self.spark._jvm.java.lang.StrictMath.log1p((n - df + 0.5) / (df + 0.5))
+
     # ------------------------------------------------------------------
     _QUERY_CACHE_SIZE = 128   # queryResultCache entry cap (LRU)
     _QUERY_WINDOW = 20        # queryResultWindowSize: round k up to this
@@ -180,8 +189,9 @@ class SearchEngine:
         """Global stats for the query terms — the ExactStatsCache analog.
 
         Memoized per engine (with negative caching of absent terms);
-        uncached terms cost one filtered read of term_dict (predicate
-        pushdown on the sorted term column), O(#query terms) rows.
+        uncached terms cost one driver-side read of the dictionary
+        partials (:meth:`InvertedIndex.doc_freqs`), O(#query terms) rows
+        per partial, and no Spark job.
         """
         if not terms:
             return []
@@ -190,13 +200,8 @@ class SearchEngine:
         cache = self._stats_cache
         missing = [t for t in uniq if t not in cache]
         if missing:
-            rows = (
-                self.index.term_dict.where(F.col("term").isin(missing))
-                .select("term", "df", self.idf(F.col("df")).alias("idf"))
-                .collect()
-            )
-            for r in rows:
-                cache[r["term"]] = (int(r["df"]), float(r["idf"]))
+            for t, df in self.index.doc_freqs(missing).items():
+                cache[t] = (df, self.idf_value(df))
             for t in missing:
                 cache.setdefault(t, None)  # negative-cache absent terms
         return [
@@ -265,8 +270,8 @@ class SearchEngine:
         Returns columns (doc_id long, score float) ranked by
         (score desc, doc_id asc), at most k rows.
 
-        Fast path: a fresh query costs TWO Spark actions — the memoized
-        stats lookup and the final decode. The θ seed job
+        Fast path: a fresh query costs ONE Spark action, the final
+        decode; its term stats are a driver-side read. The θ seed job
         (:meth:`_or_theta`) only engages past ``_PRUNE_MIN_POSTINGS``
         total postings, where the decode it prunes dwarfs its own cost.
         Conjunctive doc-range block pruning is a lazy broadcast

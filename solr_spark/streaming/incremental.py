@@ -10,8 +10,8 @@ Spark's batch+streaming model:
 - NRT soft commit (``DirectUpdateHandler2.java:157-175``: visibility
   without a full merge) → :meth:`IncrementalIndexer.append_batch`
   appends analyzed docs + raw postings — new docs are immediately
-  visible to segment-level readers (term_dict scans, significant-terms)
-  without touching the merged blocks. Each batch writes into its own
+  visible to segment-level readers (``InvertedIndex.segments``) without
+  touching the merged blocks. Each batch writes into its own
   ``batch=<id>`` partition directory with overwrite semantics, so
   at-least-once re-delivery of a micro-batch (foreachBatch crash/restart)
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
@@ -28,25 +28,34 @@ Spark's batch+streaming model:
   encodes only the batches no segment holds yet, into one new segment
   ``blocks/segment=<s>/`` (Lucene's flushed segment: old segments are
   immutable, and blocks are stats-independent, so they stay valid when
-  N/avgdl/idf move), and recomputes term_dict and meta.json over the
-  live docs — df, N and avgdl stay exact, so an incremental index that
-  appends B1..Bn, deletes D and commits answers rank-identically to a
-  batch build over the surviving corpus (oracle-gated against DuckDB).
-  ``meta.json`` is the commit point: it holds N and avgdl, the commit
-  generation that names the ``term_dict/commit=<c>`` directory, each
-  segment's batches and the live-docs record; readers open exactly what
-  it names, so a killed commit leaves them on the previous commit.
+  N/avgdl/idf move), and writes one term_dict partial,
+  ``term_dict/commit=<c>/``: the signed (term, df, cf) change of the
+  commit's new batches and deletes, aggregated over those postings only
+  (Lucene's per-segment dictionary, ``TermStates`` summing it at query
+  time). N and sum_doc_len move by the same change, counted on the
+  driver. df, N and avgdl stay exact over the live docs, so an
+  incremental index that appends B1..Bn, deletes D and commits answers
+  rank-identically to a batch build over the surviving corpus
+  (oracle-gated against DuckDB). ``meta.json`` is the commit point: it
+  holds N and avgdl, the commit generation, the partials that sum to
+  the dictionary, each segment's batches and the live-docs record;
+  readers open exactly what it names, so a killed commit leaves them on
+  the previous commit.
 - segment merge (TieredMergePolicy, ``index/DefaultMergePolicyFactory.java:42``)
   → :func:`merge_due` over the module constants ``MERGE_MAX_SEGMENTS``,
   ``MERGE_MAX_DELETED_FRAC`` and ``MERGE_MAX_DELETED_DOCS``: past any of
   them, a commit compacts the deleted docs out of the analyzed
   and segments stages and encodes every batch into one segment — the
-  build's own path; ``build_index`` is that path for batch 0.
+  build's own path; ``build_index`` is that path for batch 0. Commits of
+  deletes alone add partials but no segment, so a commit whose partial
+  would be the ``MERGE_MAX_SEGMENTS + 1``-th sums the others into it
+  instead, and rewrites no block: a reader sums at most
+  ``MERGE_MAX_SEGMENTS`` partials.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
   manifests, rewritten by every append and compaction, and
   ``tombstones.json``, removed only after ``meta.json`` is written:
   re-running ``commit()`` after a killed commit redoes it, deletes
-  included; the half-written term_dict generation and segment directory
+  included; the half-written term_dict partial and segment directory
   of a killed commit are never read, and the next commit overwrites them.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
   indexer continues a built directory as it is, and refuses one an
@@ -70,6 +79,7 @@ from solr_spark.index.build import (
     _check_layout,
     _commit_record,
     _dead_rows,
+    _dict_gens,
     _live_stage,
     _merge,
     _read_manifest,
@@ -89,6 +99,7 @@ from solr_spark.index.build import (
 #: predicate, one literal per deleted id; past about 1,000 ids its
 #: planning cost shows (measured, 400-doc index, local[2]: +0 cpu-s per
 #: query at 1,000 ids, +0.2 at 2,000, +1.7 at 10,000), hence the cap.
+#: ``MERGE_MAX_SEGMENTS`` also bounds the term_dict partials a reader sums.
 MERGE_MAX_SEGMENTS = 8
 MERGE_MAX_DELETED_FRAC = 0.2
 MERGE_MAX_DELETED_DOCS = 1000
@@ -214,12 +225,13 @@ class IncrementalIndexer:
     def commit(self) -> InvertedIndex:
         """Hard commit: encode the batches no segment holds yet into one
         new segment and fold the pending tombstones into the committed
-        live-docs record; term_dict and meta.json are recomputed over the
-        live docs. Old segments are never re-encoded, until the merge
-        policy merges them all into one (compacting the deleted docs out
-        of the analyzed and segments stages first), which is the build's
-        own path. A directory's first commit is such a merge. Raises
-        ValueError when no batch was ever appended."""
+        live-docs record; one term_dict partial holds the dictionary's
+        change and meta.json the stats moved by it, both O(delta). Old
+        segments are never re-encoded, until the merge policy merges them
+        all into one (compacting the deleted docs out of the analyzed and
+        segments stages first), which is the build's own path and writes
+        one full partial. A directory's first commit is such a merge.
+        Raises ValueError when no batch was ever appended."""
         batches = _batch_ids(self.dir)
         if not batches:
             raise ValueError(f"nothing to commit: no batch was appended to {self.dir}")
@@ -247,7 +259,9 @@ class IncrementalIndexer:
                 self._compact_stage("segments", pred)
             segments, deleted = {new: _batch_ids(self.dir)}, {}
         _merge(self.spark, self.dir, self.config, False, (segments, deleted),
-               new if new in segments else None, meta["commit"] + 1 if record else 0)
+               new if new in segments else None, meta["commit"] + 1 if record else 0,
+               base=None if merge else meta,
+               fold=not merge and len(_dict_gens(meta)) >= MERGE_MAX_SEGMENTS)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
         return InvertedIndex(self.spark, self.dir)

@@ -139,7 +139,7 @@ print("COMMIT_DONE", flush=True)
 
 
 def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_config, tmp_path):
-    """SIGKILL a process mid-commit (its new term_dict generation
+    """SIGKILL a process mid-commit (its new term_dict partial
     written, its new segment's blocks in flight, the commit point not yet
     written). Readers of the killed directory see the last commit only:
     its meta.json, term_dict and segments; re-running ``commit`` gives
@@ -175,7 +175,7 @@ def test_sigkill_mid_commit_then_recommit_equals_uninterrupted(spark, test_confi
     os.kill(proc.pid, signal.SIGKILL)
     proc.wait(timeout=60)
     assert was_running and os.path.isdir(new_segment), "the commit ended before the kill"
-    # the killed commit had written its own dictionary generation
+    # the killed commit had written its own dictionary partial
     assert os.path.isdir(os.path.join(killed, "term_dict", "commit=1"))
 
     before = InvertedIndex(spark, killed)

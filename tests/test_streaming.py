@@ -305,6 +305,162 @@ def test_policy_merge_equals_batch_build(spark, test_config, monkeypatch):
     assert _rows(idx.blocks.drop("segment")) == _rows(batch_idx.blocks.drop("segment"))
 
 
+def _assert_exact_stats(idx):
+    """The dictionary and global stats of ``idx`` equal a from-scratch
+    Spark aggregate over the live postings and docs of its committed
+    batches: the summed (df, cf)
+    of every term, the driver-side df and idf of every term (idf bit for
+    bit against Spark's over the from-scratch df), and N, sum_doc_len and
+    avgdl in ``meta.json``."""
+    eng = SearchEngine(idx)
+    committed = F.col("batch").isin([b for bs in idx.record[0].values() for b in bs])
+    agg = (idx.segments.where(committed)
+           .groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
+    want = {r["term"]: (r["df"], r["cf"], r["idf"])
+            for r in agg.select("*", eng.idf(F.col("df")).alias("idf")).collect()}
+    got = {r["term"]: (r["df"], r["cf"]) for r in idx.term_dict.select("term", "df", "cf").collect()}
+    assert got == {t: w[:2] for t, w in want.items()}
+    stats = eng._term_stats(sorted(want) + ["zznotaterm"])
+    assert {s.term: (s.df, s.idf) for s in stats} == {t: (w[0], w[2]) for t, w in want.items()}
+    docs = idx.live(idx.spark.read.parquet(os.path.join(idx.dir, "analyzed")), "batch")
+    n, sum_dl = docs.where(committed).agg(F.count("*"), F.sum("doc_len")).collect()[0]
+    assert (idx.meta["n_docs"], idx.meta["sum_doc_len"]) == (n, sum_dl)
+    assert idx.meta["avgdl"] == sum_dl / n
+
+
+def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config, monkeypatch):
+    """Each commit writes one dictionary partial and meta.json names the
+    partials that sum to the dictionary. After every step of an index's
+    life the summed dictionary, the driver-side term stats and N,
+    sum_doc_len and avgdl equal a from-scratch aggregate over the live
+    docs: a base commit; a commit of deletes alone; an append whose
+    deletes name an absent id, an already-deleted id, an id in the fresh
+    batch and zero-length docs; a killed commit (readers stay on the
+    previous commit); a snapshot restore; a policy merge; and commits of
+    deletes alone past the partial bound, which sum the partials into
+    one."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index import build
+    from solr_spark.index.build import InvertedIndex, create_snapshot, restore_snapshot
+    from solr_spark.streaming import incremental
+
+    d = f"{BASE}/partials"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(280)
+    pdf["doc_id"] = range(len(pdf))
+    pdf.loc[[3, 210, 211], "content"] = ""  # docs with no token
+    inc = IncrementalIndexer(spark, d, test_config)
+
+    def append(lo, hi):
+        inc.append_batch(spark.createDataFrame(pdf.iloc[lo:hi]), id_col="doc_id")
+
+    append(0, 200)
+    idx = inc.commit()
+    assert idx.dict_gens == [0]
+    _assert_exact_stats(idx)
+
+    inc.delete_by_ids([7, 8])
+    idx = inc.commit()
+    assert idx.dict_gens == [0, 1] and idx.n_docs == 198
+    _assert_exact_stats(idx)
+
+    append(200, 240)
+    inc.delete_by_ids([7, 10_000, 220, 211, 3, 12])
+    idx = inc.commit()
+    assert idx.dict_gens == [0, 1, 2] and idx.n_docs == 198 + 40 - 4
+    _assert_exact_stats(idx)
+
+    append(240, 260)
+    inc.delete_by_ids([15])
+
+    def killed(*_args, **_kwargs):
+        raise RuntimeError("killed in the blocks stage")
+
+    with monkeypatch.context() as m:
+        m.setattr(build, "_stage_blocks", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            inc.commit()
+    assert os.path.isdir(os.path.join(d, "term_dict", "commit=3"))
+    before = InvertedIndex(spark, d)
+    assert before.meta == idx.meta
+    _assert_exact_stats(before)
+    idx = inc.commit()
+    assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 234 + 20 - 1
+    _assert_exact_stats(idx)
+
+    create_snapshot(d, "four")
+    append(260, 280)
+    inc.delete_by_ids([16])
+    assert inc.commit().n_docs == 253 + 20 - 1
+    restore_snapshot(d, "four")
+    idx = InvertedIndex(spark, d)
+    assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 253
+    _assert_exact_stats(idx)
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "MERGE_MAX_DELETED_FRAC", 0.0)
+        inc.delete_by_ids([17])
+        idx = inc.commit()
+    assert idx.record[1] == {} and idx.dict_gens == [idx.meta["commit"]]
+    _assert_exact_stats(idx)
+
+    monkeypatch.setattr(incremental, "MERGE_MAX_SEGMENTS", 2)
+    for dead, n_gens in ((18, 2), (19, 1)):
+        inc.delete_by_ids([dead])
+        idx = inc.commit()
+        assert len(idx.dict_gens) == n_gens and idx.dict_gens[-1] == idx.meta["commit"]
+        assert sorted(os.listdir(os.path.join(d, "term_dict"))) == \
+            [f"commit={g}" for g in idx.dict_gens]
+        _assert_exact_stats(idx)
+
+
+def test_index_without_partials_opens_as_one_partial(spark, test_config):
+    """A commit point that names no partials (one full ``commit=<c>``
+    dictionary, as an earlier version wrote) opens as that single partial
+    and answers as it did; a delta commit on it keeps the stats exact."""
+    import json
+
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index.build import InvertedIndex
+
+    d = f"{BASE}/one_partial"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(220)
+    pdf["doc_id"] = range(len(pdf))
+    ref = build_index(spark, spark.createDataFrame(pdf.iloc[:200]), d, test_config, id_col="doc_id")
+    path = os.path.join(d, "meta.json")
+    with open(path) as f:
+        meta = json.load(f)
+    assert meta.pop("term_dicts") == [0]
+    with open(path, "w") as f:
+        json.dump(meta, f)
+    idx = InvertedIndex(spark, d)
+    assert idx.dict_gens == [0]
+    assert _rows(idx.term_dict) == _rows(ref.term_dict)
+    for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
+        assert _topk(idx, q, mode) == _topk(ref, q, mode), (q, mode)
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[200:]), id_col="doc_id")
+    inc.delete_by_ids([4])
+    idx = inc.commit()
+    assert idx.dict_gens == [0, 1]
+    _assert_exact_stats(idx)
+
+
+def test_commit_removes_a_reversed_dictionary(spark, test_config):
+    """A ``term_dict_rev/`` directory an earlier writer left is removed
+    by the next commit's cleanup."""
+    d = f"{BASE}/rev_dict"
+    shutil.rmtree(d, ignore_errors=True)
+    build_index(spark, synth_corpus(spark, 120), d, test_config)
+    rev = os.path.join(d, "term_dict_rev", "commit=0")
+    shutil.copytree(os.path.join(d, "term_dict", "commit=0"), rev)
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(synth_corpus(spark, 10))
+    inc.commit()
+    assert not os.path.exists(os.path.join(d, "term_dict_rev"))
+
+
 def test_merge_policy_bounds():
     """A commit merges past 8 segments, or past 20% of the indexed docs
     deleted, or past 1,000 deleted docs however large the index: every
@@ -518,8 +674,8 @@ def test_append_batch_releases_its_cache(spark, test_config):
 
 
 def test_killed_commit_keeps_its_deletes(spark, test_config, monkeypatch):
-    """A commit killed after it recomputed term_dict over the live docs
-    but before it encoded its new segment must, when re-run, still drop
+    """A commit killed after it wrote its term_dict partial but before
+    it encoded its new segment must, when re-run, still drop
     the deleted docs' postings from every query (commit replay includes
     deletes)."""
     from solr_spark.index import build
