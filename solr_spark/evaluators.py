@@ -387,13 +387,14 @@ def chi_square(df: DataFrame, a: str, b: str) -> DataFrame:
     obs = df.groupBy(a, b).agg(F.count("*").cast("double").alias("o"))
     ra = obs.groupBy(a).agg(F.sum("o").alias("_ra"))
     cb = obs.groupBy(b).agg(F.sum("o").alias("_cb"))
-    # the category counts are the row counts of the totals (count(col)
-    # skips a null group, as countDistinct does): two countDistinct in one
-    # agg plan an Expand whose printed plan varies between runs
-    tot = (
-        obs.agg(F.sum("o").alias("_n"))
-        .crossJoin(ra.agg(F.count(a).cast("double").alias("_ka")))
-        .crossJoin(cb.agg(F.count(b).cast("double").alias("_kb")))
+    # the category counts as the sizes of the category sets (collect_set
+    # skips nulls, as countDistinct does): two countDistinct in one agg
+    # plan an Expand whose printed plan varies between runs, and the sets
+    # are as small as the totals broadcast below
+    tot = obs.agg(
+        F.sum("o").alias("_n"),
+        F.size(F.collect_set(a)).cast("double").alias("_ka"),
+        F.size(F.collect_set(b)).cast("double").alias("_kb"),
     )
     j = (
         obs.join(F.broadcast(ra), a)

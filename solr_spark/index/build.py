@@ -743,19 +743,19 @@ def _stage_term_dict(spark: SparkSession, out_dir: str, record, commit: int) -> 
     return {"n_docs": int(n_docs), "sum_doc_len": int(sum_dl), "avgdl": avgdl}
 
 
-def _stage_term_delta(
-    spark: SparkSession, out_dir: str, base: dict, record, commit: int, fold: bool,
-) -> tuple[dict, list[int]]:
+def _stage_term_delta(spark: SparkSession, out_dir: str, base: dict, record, commit: int) -> dict:
     """The term_dict partial of commit generation ``commit``, a delta
     commit from the commit point ``base`` (see :func:`_read_meta`) to the
     commit ``record``: the signed (term, df, cf) of the live postings of
     the batches ``record`` adds, minus the postings of the docs it deletes
     that were live under ``base``. A deleted id that is absent, already
-    deleted or in an added batch is subtracted nowhere. It aggregates
-    O(delta) postings; ``fold`` also sums ``base``'s partials in, so the
-    partial is full and the partials a reader sums stay bounded. Returns
-    the global stats of ``record`` (see :func:`_doc_stats_delta`) and the
-    generations whose partials sum to its dictionary."""
+    deleted or in an added batch is subtracted nowhere. The added and the
+    subtracted postings of a term are summed apart, into a row each, so
+    the partial's rows with ``df > 0`` count the live postings the
+    commit's new segment holds (the terms :func:`_stage_blocks` salts).
+    It aggregates O(delta) postings, but scans the postings of every
+    batch ``base`` holds for the deleted docs. Returns the global stats of
+    ``record`` (see :func:`_doc_stats_delta`)."""
     before = _commit_record(base)
     covered = {b for bs in before[0].values() for b in bs}
     fresh = sorted({b for bs in record[0].values() for b in bs} - covered)
@@ -764,26 +764,32 @@ def _stage_term_delta(
     killed = ({max(before[0]): dead} if dead else {}, before[0])
     stats = _doc_stats_delta(out_dir, base, record, fresh, killed)
 
-    gens = [commit] if fold else _dict_gens(base) + [commit]
-    signed = []
+    signed, scanned = [], set()
     if fresh:
         signed.append(_live_stage(spark, out_dir, "segments", record)
                       .where(F.col("batch").isin(fresh))
-                      .select("term", F.lit(1).cast("long").alias("df"), F.col("tf").cast("long").alias("cf")))
+                      .select("term", F.lit(1).alias("sign"), F.col("tf").cast("long").alias("cf")))
+        scanned |= set(fresh)
     if dead:
         signed.append(_live_stage(spark, out_dir, "segments", before).where(_dead_rows(*killed, "batch"))
-                      .select("term", F.lit(-1).cast("long").alias("df"),
-                              (-F.col("tf")).cast("long").alias("cf")))
-    if fold:
-        signed.append(spark.read.schema(_DICT_SCHEMA).parquet(*_dict_paths(out_dir, _dict_gens(base))))
-    # one task sums the rows, so the aggregate needs no exchange: a delta
-    # commit's postings are few, and a fold's partials are dictionaries
-    rows = functools.reduce(DataFrame.unionByName, signed or [local_frame(spark, [], _DICT_SCHEMA)])
-    summed = rows.coalesce(1).groupBy("term").agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    (summed.where(F.col("df") > 0 if fold else (F.col("df") != 0) | (F.col("cf") != 0))
+                      .select("term", F.lit(-1).alias("sign"), (-F.col("tf")).cast("long").alias("cf")))
+        scanned |= covered
+    rows = functools.reduce(DataFrame.unionByName,
+                            signed or [local_frame(spark, [], "term string, sign int, cf long")])
+    # While the files it scans fit one of Spark's scan splits, one task
+    # sums the rows and the aggregate needs no exchange (the exchange
+    # costs a job of its own); past that, the scan runs in parallel
+    dirs = {f"batch={b}" for b in scanned}
+    size = sum(f["bytes"] for f in _read_manifest(out_dir, "segments")["files"]
+               if f["file"].split("/", 1)[0] in dirs)
+    if size <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
+        rows = rows.coalesce(1)
+    (rows.groupBy("term", "sign")
+     .agg(F.sum("sign").cast("long").alias("df"), F.sum("cf").alias("cf"))
+     .select("term", "df", "cf")
      .sortWithinPartitions("term")
      .write.mode("overwrite").parquet(_dict_paths(out_dir, [commit])[0]))
-    return stats, gens
+    return stats
 
 
 def _doc_stats_delta(out_dir: str, base: dict, record, fresh: list[int], killed) -> dict:
@@ -1275,13 +1281,15 @@ def _stage_blocks(
 ) -> None:
     """Encode the postings of ``batches`` into one segment,
     ``blocks/segment=<segment>/term_bucket=<b>``, every bucket, salting
-    the hot terms of commit generation ``commit``'s own term_dict
-    partial: the whole dictionary for a build or a merge, the change a
-    delta commit makes for its delta segment. Salting spreads one
-    segment's long posting lists over reducers, so the df that matters
-    is the one of the postings the segment holds, and reading one
-    partial costs no aggregate. ``whole``: the segment is the whole
-    index (see :func:`_blocks_shuffle_input`)."""
+    the terms whose df in commit generation ``commit``'s own term_dict
+    partial passes ``hot_df_threshold``; reading one partial costs no
+    aggregate. A delta partial's positive rows count the live postings
+    of the delta segment (see :func:`_stage_term_delta`); a full partial
+    counts every live posting, which is the segment's own for a build
+    or a merge, and a superset of them for a delta segment committed
+    with a full partial at the bound on partials (a needless salt only
+    splits a term's blocks). ``whole``: the segment is the whole index
+    (see :func:`_blocks_shuffle_input`)."""
     segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
     term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
 
@@ -1477,30 +1485,30 @@ def build_index(
 def _merge(
     spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
     record: tuple[dict[int, list[int]], dict[int, list[int]]], new: int | None, commit: int,
-    base: dict | None = None, fold: bool = False,
+    base: dict | None = None,
 ) -> None:
     """Stages 3+4, the one merge step of both writers: the term_dict
     partial of commit generation ``commit``, then the blocks of segment
     ``new``, then ``meta.json``, the commit point. ``record`` is the
     ``(segments, deleted)`` pair it commits (see :func:`_commit_record`);
     a build commits segment 0 over batch 0. ``new=None`` encodes nothing
-    (a commit of deletes alone). ``base=None`` (a build or a policy
-    merge) writes one full partial over the live docs; a delta commit
-    from the commit point ``base`` writes the change since ``base``
-    (:func:`_stage_term_delta`, ``fold`` passed on). With ``resume`` (a
+    (a commit of deletes alone). ``base=None`` (a build, a policy merge,
+    or a commit at the bound on partials) writes one full partial over
+    the live docs; a delta commit from the commit point ``base`` writes
+    the change since ``base`` (:func:`_stage_term_delta`). With ``resume`` (a
     build continuing its own commit) a stage whose manifest matches the
     config hash is skipped. Partial and segment directories the commit
     does not name, and the reversed dictionary an earlier version kept,
     are removed after it lands."""
     segments, deleted = record
-    gens = [commit]
+    gens = [commit] if base is None else _dict_gens(base) + [commit]
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
         t0 = time.time()
         if base is None:
             stats = _stage_term_dict(spark, out_dir, record, commit)
         else:
-            stats, gens = _stage_term_delta(spark, out_dir, base, record, commit, fold)
+            stats = _stage_term_delta(spark, out_dir, base, record, commit)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):

@@ -48,9 +48,9 @@ Spark's batch+streaming model:
   and segments stages and encodes every batch into one segment — the
   build's own path; ``build_index`` is that path for batch 0. Commits of
   deletes alone add partials but no segment, so a commit whose partial
-  would be the ``MERGE_MAX_SEGMENTS + 1``-th sums the others into it
-  instead, and rewrites no block: a reader sums at most
-  ``MERGE_MAX_SEGMENTS`` partials.
+  would be the ``MERGE_MAX_SEGMENTS + 1``-th writes one full partial
+  over the live docs instead, as a merge does, and rewrites no block: a
+  reader sums at most ``MERGE_MAX_SEGMENTS`` partials.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
   manifests, rewritten by every append and compaction, and
   ``tombstones.json``, removed only after ``meta.json`` is written:
@@ -230,7 +230,8 @@ class IncrementalIndexer:
         segments are never re-encoded, until the merge policy merges them
         all into one (compacting the deleted docs out of the analyzed and
         segments stages first), which is the build's own path and writes
-        one full partial. A directory's first commit is such a merge.
+        one full partial, as does a commit whose partial would pass the
+        bound on partials. A directory's first commit is such a merge.
         Raises ValueError when no batch was ever appended."""
         batches = _batch_ids(self.dir)
         if not batches:
@@ -260,8 +261,7 @@ class IncrementalIndexer:
             segments, deleted = {new: _batch_ids(self.dir)}, {}
         _merge(self.spark, self.dir, self.config, False, (segments, deleted),
                new if new in segments else None, meta["commit"] + 1 if record else 0,
-               base=None if merge else meta,
-               fold=not merge and len(_dict_gens(meta)) >= MERGE_MAX_SEGMENTS)
+               base=None if merge or len(_dict_gens(meta)) >= MERGE_MAX_SEGMENTS else meta)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
         return InvertedIndex(self.spark, self.dir)

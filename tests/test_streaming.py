@@ -337,8 +337,8 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
     deletes name an absent id, an already-deleted id, an id in the fresh
     batch and zero-length docs; a killed commit (readers stay on the
     previous commit); a snapshot restore; a policy merge; and commits of
-    deletes alone past the partial bound, which sum the partials into
-    one."""
+    deletes alone up to the bound on partials, where a commit writes one
+    full partial instead."""
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.index import build
     from solr_spark.index.build import InvertedIndex, create_snapshot, restore_snapshot
@@ -412,6 +412,47 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
         assert sorted(os.listdir(os.path.join(d, "term_dict"))) == \
             [f"commit={g}" for g in idx.dict_gens]
         _assert_exact_stats(idx)
+
+
+@pytest.mark.parametrize("split", [None, "1k"], ids=["one_task", "exchange"])
+def test_delta_segment_salts_the_terms_it_holds(spark, split):
+    """A delta commit's partial sums a term's added and subtracted
+    postings apart, and its segment salts the terms of which it holds
+    more than ``hot_df_threshold`` live postings: a term hot in the base
+    but rare in the batch is not salted there, and a term the batch adds
+    as often as its deletes remove is. Both plans of the aggregate (one
+    task while the scanned files fit one scan split, else an exchange)
+    keep the stats exact."""
+    from solr_spark.corpus import synth_corpus_pandas
+
+    cfg = IndexConfig(hot_df_threshold=5, n_salts=4, block_size=64, n_term_buckets=8)
+    d = f"{BASE}/delta_salt_{split}"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(80)
+    pdf["doc_id"] = range(len(pdf))
+    for lo, hi, term in ((0, 29, "zzbase"), (60, 62, "zzbase"), (0, 9, "zzchurn"), (60, 67, "zzchurn")):
+        pdf.loc[lo:hi, "content"] += f" {term}"
+    inc = IncrementalIndexer(spark, d, cfg)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[:60]), id_col="doc_id")
+    inc.commit()
+    inc.append_batch(spark.createDataFrame(pdf.iloc[60:]), id_col="doc_id")
+    inc.delete_by_ids(list(range(10)))
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    if split:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split)
+    try:
+        idx = inc.commit()
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert idx.dict_gens == [0, 1]
+    partial = spark.read.parquet(os.path.join(d, "term_dict", "commit=1"))
+    assert _rows(partial.where(F.col("term") == "zzchurn").select("df", "cf")) == [(-10, -10), (8, 8)]
+    salts = {(r["segment"], r["term"]): r["n"] for r in idx.blocks
+             .where(F.col("term").isin("zzbase", "zzchurn"))
+             .groupBy("segment", "term").agg(F.countDistinct("salt").alias("n")).collect()}
+    assert salts[(1, "zzbase")] == 1 and salts[(1, "zzchurn")] > 1
+    assert salts[(0, "zzbase")] > 1
+    _assert_exact_stats(idx)
 
 
 def test_index_without_partials_opens_as_one_partial(spark, test_config):
