@@ -22,12 +22,14 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    at query time (``TermStates``), made exact over the live docs as
    Solr's distributed exact stats cache is
    (``search/stats/ExactStatsCache.java:62,192``), so every partition
-   scores with identical IDF. A build or policy merge writes one full
-   partial, range-sorted by term; a delta commit writes the signed
-   change it makes (:func:`_stage_term_delta`). The counts depend on
-   neither N nor the config: idf is the engine's one expression over df
-   (``SearchEngine.idf``), and a segment salts the terms whose df in its
-   commit's own partial passes ``hot_df_threshold`` (:func:`_stage_blocks`).
+   scores with identical IDF. Each partial is the signed change its
+   commit makes from the commit point it starts from, sorted by term
+   within each file (:func:`_stage_term_delta`); a build or a policy
+   merge starts from the empty commit point, so its partial is the full
+   dictionary. The counts depend on neither N nor the config: idf is the
+   engine's one expression over df (``SearchEngine.idf``), and a segment
+   salts the terms whose df in its commit's own partial passes
+   ``hot_df_threshold`` (:func:`_stage_blocks`).
 4. ``blocks``    — the merged index, one ``segment=<s>`` directory per
    commit (a build writes segment 0): fixed-size posting blocks per
    (term, salt) stored as Parquet-native int arrays (doc ids as offsets
@@ -61,9 +63,11 @@ Scale notes (100 TB / 10^12 docs):
   range repartition; segments is MAP-ONLY (postings of a doc depend only
   on that doc — extracted with a vectorized numpy kernel per Arrow
   batch, no posexplode→groupBy shuffle); term_dict is a partial-agg
-  rollup of segments; blocks is the one shuffle, keyed term_bucket, with
-  an in-partition sort and a single streaming Arrow encode pass (no
-  window function, no collect_list).
+  rollup of segments, with N and sum_doc_len summed on the driver from
+  the docs' ``doc_len`` column (one int a doc: at corpus scale these
+  sums belong in the batch write's manifest); blocks is the one
+  shuffle, keyed term_bucket, with an in-partition sort and a single
+  streaming Arrow encode pass (no window function, no collect_list).
 - the blocks exchange ships per-(term, salt) posting RUNS, not postings:
   each map task packs ~512k-posting regions of its doc-ordered stream
   into one row per (term, salt) whose doc/tf/dl/position streams are
@@ -335,12 +339,8 @@ def _dict_root(commit: int) -> str:
     return f"commit={commit}"
 
 
-def _dict_gens(meta: dict) -> list[int]:
-    """The commit generations whose ``term_dict`` partials sum to the
-    dictionary of the commit ``meta``. A commit point that names none
-    (written before partials) names its own generation's full
-    dictionary."""
-    return meta.get("term_dicts", [meta["commit"]])
+#: the commit point before the first commit: no doc, partial or segment
+_EMPTY_COMMIT = {"n_docs": 0, "sum_doc_len": 0, "term_dicts": [], "segments": {}, "deleted": {}}
 
 
 def _check_layout(out_dir: str) -> dict | None:
@@ -357,6 +357,8 @@ def _check_layout(out_dir: str) -> dict | None:
         why = f"format_version {version}, not 3 (int-array blocks)"
     elif meta is not None and not {"commit", "segments", "deleted"} <= meta.keys():
         why = "its meta.json holds no commit record"
+    elif meta is not None and "term_dicts" not in meta:
+        why = "its meta.json names no term_dict partials"
     else:
         return meta
     raise ValueError(f"index at {out_dir} was written by an earlier version ({why}); "
@@ -368,9 +370,10 @@ def _write_meta(
     segments: dict[int, list[int]], deleted: dict[int, list[int]],
 ) -> None:
     """Write ``meta.json``, the commit point: the global stats, the
-    config, the term_dict partials ``gens`` (see :func:`_dict_gens`)
-    and the commit record (see :func:`_commit_record`); every file a
-    commit writes before it stays unread until it lands."""
+    config, the commit generations ``gens`` whose term_dict partials
+    sum to the dictionary, and the commit record (see
+    :func:`_commit_record`); every file a commit writes before it stays
+    unread until it lands."""
     _write_json(os.path.join(out_dir, "meta.json"), {
         **{k: stats[k] for k in ("n_docs", "sum_doc_len", "avgdl")},
         "config": asdict(config),
@@ -411,11 +414,15 @@ def _live(df: DataFrame, dead: Column | None) -> DataFrame:
     return df if dead is None else df.where(~dead)
 
 
-def _live_stage(spark: SparkSession, out_dir: str, stage: str, record) -> DataFrame:
+def _live_stage(
+    spark: SparkSession, out_dir: str, stage: str, record, batches: list[int] | None = None,
+) -> DataFrame:
     """The live rows of a batch-partitioned stage (``analyzed`` or
-    ``segments``) under a commit ``record`` (None: every row)."""
+    ``segments``) under a commit ``record`` (None: every row), read from
+    the ``batch=<id>`` directories of ``batches`` only when given."""
     dead = _dead_rows(record[1], record[0], "batch") if record else None
-    return _live(_read_stage(spark, out_dir, stage), dead)
+    paths = None if batches is None else [f"batch={b}" for b in batches]
+    return _live(_read_stage(spark, out_dir, stage, paths), dead)
 
 
 # ---------------------------------------------------------------------------
@@ -719,70 +726,48 @@ def _dict_paths(out_dir: str, gens: list[int]) -> list[str]:
     return [os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(g)) for g in gens]
 
 
-def _stage_term_dict(spark: SparkSession, out_dir: str, record, commit: int) -> dict:
-    """The full term_dict partial of commit generation ``commit`` (a build
-    or a policy merge): (term, df, cf) over the live docs of the commit
-    ``record`` (see :func:`_commit_record`), range-sorted by term so a
-    term lookup prunes row groups. Returns the global stats (n_docs,
-    sum_doc_len, avgdl)."""
-    analyzed = _live_stage(spark, out_dir, "analyzed", record)
-    # one job for both corpus stats (was two full passes: count + sum)
-    stats_row = analyzed.agg(
-        F.count("*").alias("n"), F.sum("doc_len").alias("s")
-    ).collect()[0]
-    n_docs = stats_row["n"]
-    sum_dl = stats_row["s"] or 0
-    avgdl = float(sum_dl) / n_docs if n_docs else 0.0
-
-    (_live_stage(spark, out_dir, "segments", record).groupBy("term")
-     .agg(F.count("*").cast("long").alias("df"), F.sum("tf").cast("long").alias("cf"))
-     .repartitionByRange(max(1, spark.sparkContext.defaultParallelism // 4), "term")
-     .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(
-         os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(commit))))
-    return {"n_docs": int(n_docs), "sum_doc_len": int(sum_dl), "avgdl": avgdl}
-
-
 def _stage_term_delta(spark: SparkSession, out_dir: str, base: dict, record, commit: int) -> dict:
-    """The term_dict partial of commit generation ``commit``, a delta
-    commit from the commit point ``base`` (see :func:`_read_meta`) to the
-    commit ``record``: the signed (term, df, cf) of the live postings of
-    the batches ``record`` adds, minus the postings of the docs it deletes
-    that were live under ``base``. A deleted id that is absent, already
-    deleted or in an added batch is subtracted nowhere. The added and the
-    subtracted postings of a term are summed apart, into a row each, so
-    the partial's rows with ``df > 0`` count the live postings the
-    commit's new segment holds (the terms :func:`_stage_blocks` salts).
-    It aggregates O(delta) postings, but scans the postings of every
-    batch ``base`` holds for the deleted docs. Returns the global stats of
-    ``record`` (see :func:`_doc_stats_delta`)."""
+    """The term_dict partial of commit generation ``commit``, the one
+    writer of every partial: the signed (term, df, cf) change from the
+    commit point ``base`` (see :func:`_read_meta`) to the commit
+    ``record``, the live postings of the batches ``record`` adds minus
+    the postings of the docs it deletes that were live under ``base``.
+    From :data:`_EMPTY_COMMIT` every batch is added and nothing
+    subtracted: the full dictionary. A deleted id that is absent,
+    already deleted or in an added batch is subtracted nowhere. The added
+    and the subtracted postings of a term are summed apart, into a row
+    each, so the rows with ``df > 0`` count the live postings of the
+    added batches (the terms :func:`_stage_blocks` salts). It scans only
+    the batches it adds and those that hold the docs it deletes. Returns
+    the global stats of ``record`` (see :func:`_doc_stats_delta`)."""
     before = _commit_record(base)
     covered = {b for bs in before[0].values() for b in bs}
     fresh = sorted({b for bs in record[0].values() for b in bs} - covered)
     dead = sorted({d for u, ids in record[1].items() for d in set(ids) - set(before[1].get(u, ()))})
     # the rows of ``dead`` in the batches ``base`` holds
-    killed = ({max(before[0]): dead} if dead else {}, before[0])
-    stats = _doc_stats_delta(out_dir, base, record, fresh, killed)
+    killed = ({max(before[0]): dead} if dead and before[0] else {}, before[0])
+    stats, hit = _doc_stats_delta(out_dir, base, record, fresh, killed)
 
-    signed, scanned = [], set()
+    signed = []
     if fresh:
-        signed.append(_live_stage(spark, out_dir, "segments", record)
-                      .where(F.col("batch").isin(fresh))
+        signed.append(_live_stage(spark, out_dir, "segments", record, fresh)
                       .select("term", F.lit(1).alias("sign"), F.col("tf").cast("long").alias("cf")))
-        scanned |= set(fresh)
-    if dead:
-        signed.append(_live_stage(spark, out_dir, "segments", before).where(_dead_rows(*killed, "batch"))
+    if hit:
+        signed.append(_live_stage(spark, out_dir, "segments", before, hit).where(_dead_rows(*killed, "batch"))
                       .select("term", F.lit(-1).alias("sign"), (-F.col("tf")).cast("long").alias("cf")))
-        scanned |= covered
     rows = functools.reduce(DataFrame.unionByName,
                             signed or [local_frame(spark, [], "term string, sign int, cf long")])
-    # While the files it scans fit one of Spark's scan splits, one task
-    # sums the rows and the aggregate needs no exchange (the exchange
-    # costs a job of its own); past that, the scan runs in parallel
-    dirs = {f"batch={b}" for b in scanned}
+    # While the files it scans fit one scan split of the size Spark
+    # computes (FilePartition.maxSplitBytes), one task sums the rows and
+    # the aggregate needs no exchange (the exchange costs a job of its
+    # own); past that, the scan runs in parallel
+    dirs = {f"batch={b}" for b in fresh + hit}
     size = sum(f["bytes"] for f in _read_manifest(out_dir, "segments")["files"]
                if f["file"].split("/", 1)[0] in dirs)
-    if size <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes():
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(),
+                max(conf.filesOpenCostInBytes(), size // spark.sparkContext.defaultParallelism))
+    if size <= split:
         rows = rows.coalesce(1)
     (rows.groupBy("term", "sign")
      .agg(F.sum("sign").cast("long").alias("df"), F.sum("cf").alias("cf"))
@@ -792,15 +777,16 @@ def _stage_term_delta(spark: SparkSession, out_dir: str, base: dict, record, com
     return stats
 
 
-def _doc_stats_delta(out_dir: str, base: dict, record, fresh: list[int], killed) -> dict:
+def _doc_stats_delta(out_dir: str, base: dict, record, fresh: list[int], killed) -> tuple[dict, list[int]]:
     """The global stats (n_docs, sum_doc_len, avgdl) of the commit
     ``record``: those of the commit point ``base``, plus the live docs
     of the batches ``fresh``, minus the docs of the deletes ``killed``
     (a ``(deleted, segments)`` pair, see :func:`_commit_record`) that
-    were live under ``base``. Counted on the driver from the ``doc_len``
-    column of those docs' analyzed rows, read with pyarrow, which prunes
-    by batch directory and by the doc-id statistics of row groups: no
-    Spark job. A doc with no token counts in N as every doc does."""
+    were live under ``base``; and the batches that hold those killed
+    docs. Counted on the driver from the ``doc_len`` column of those
+    docs' analyzed rows, read with pyarrow, which prunes by batch
+    directory and by the doc-id statistics of row groups: no Spark job.
+    A doc with no token counts in N as every doc does."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
@@ -809,18 +795,19 @@ def _doc_stats_delta(out_dir: str, base: dict, record, fresh: list[int], killed)
             ds.field("batch").isin(batches) & ds.field("doc_id").isin(ids)
             for _u, batches, ids in _dead_scopes(deleted, segments)), ds.scalar(False))
 
+    def docs(rows):
+        t = analyzed.to_table(columns=["doc_len", "batch"], filter=rows)
+        return t.num_rows, pc.sum(t.column("doc_len")).as_py() or 0, t.column("batch")
+
     before = _commit_record(base)
     analyzed = ds.dataset(_stage_dir(out_dir, "analyzed"), format="parquet", partitioning="hive")
-    n_docs, sum_dl = base["n_docs"], base["sum_doc_len"]
-    for sign, rows in (
-        (1, ds.field("batch").isin(fresh) & ~dead(record[1], record[0])),
-        (-1, dead(*killed) & ~dead(before[1], before[0])),
-    ):
-        dl = analyzed.to_table(columns=["doc_len"], filter=rows).column("doc_len")
-        n_docs += sign * len(dl)
-        sum_dl += sign * (pc.sum(dl).as_py() or 0)
-    return {"n_docs": n_docs, "sum_doc_len": sum_dl,
-            "avgdl": float(sum_dl) / n_docs if n_docs else 0.0}
+    n_added, dl_added, _ = docs(ds.field("batch").isin(fresh) & ~dead(record[1], record[0]))
+    n_gone, dl_gone, hit = docs(dead(*killed) & ~dead(before[1], before[0]))
+    n_docs = base["n_docs"] + n_added - n_gone
+    sum_dl = base["sum_doc_len"] + dl_added - dl_gone
+    return ({"n_docs": n_docs, "sum_doc_len": sum_dl,
+             "avgdl": float(sum_dl) / n_docs if n_docs else 0.0},
+            sorted(pc.unique(hit).to_pylist()))
 
 
 # ---------------------------------------------------------------------------
@@ -1283,13 +1270,13 @@ def _stage_blocks(
     ``blocks/segment=<segment>/term_bucket=<b>``, every bucket, salting
     the terms whose df in commit generation ``commit``'s own term_dict
     partial passes ``hot_df_threshold``; reading one partial costs no
-    aggregate. A delta partial's positive rows count the live postings
-    of the delta segment (see :func:`_stage_term_delta`); a full partial
-    counts every live posting, which is the segment's own for a build
-    or a merge, and a superset of them for a delta segment committed
-    with a full partial at the bound on partials (a needless salt only
-    splits a term's blocks). ``whole``: the segment is the whole index
-    (see :func:`_blocks_shuffle_input`)."""
+    aggregate. A partial's positive rows count the live postings of the
+    batches its commit adds (see :func:`_stage_term_delta`): the
+    segment's own for a delta commit, a build or a merge, and a superset
+    of them for a delta segment committed at the bound on partials,
+    whose partial starts from the empty commit point (a needless salt
+    only splits a term's blocks). ``whole``: the segment is the whole
+    index (see :func:`_blocks_shuffle_input`)."""
     segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
     term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
 
@@ -1351,7 +1338,7 @@ class InvertedIndex:
         self.config = IndexConfig(**self.meta["config"])
         self.record = _commit_record(self.meta)
         self.deleted = self.record[1]
-        self.dict_gens = _dict_gens(self.meta)
+        self.dict_gens = self.meta["term_dicts"]
         self._dead: dict[str, Column | None] = {}
 
     def live(self, df: DataFrame, unit: str) -> DataFrame:
@@ -1364,14 +1351,21 @@ class InvertedIndex:
             self._dead[unit] = _dead_rows(self.deleted, self.record[0], unit)
         return _live(df, self._dead[unit])
 
+    def _committed(self, stage: str) -> DataFrame:
+        """The live rows of a batch-partitioned stage in exactly the
+        committed batches (a batch appended since, or left by a killed
+        commit, is never read)."""
+        batches = sorted(b for bs in self.record[0].values() for b in bs)
+        return _live_stage(self.spark, self.dir, stage, self.record, batches)
+
     @functools.cached_property
     def docs(self) -> DataFrame:
-        """Live doc registry: one row per doc with its id, metadata,
-        ``stored_text`` and ``doc_len`` (the batch write keeps no tokens;
-        Parquet column pruning reads only what a caller selects). The
-        ``batch=<id>`` partition column is an ingestion detail, dropped
-        here."""
-        return self.live(_read_stage(self.spark, self.dir, "analyzed"), "batch").drop("batch")
+        """Live doc registry of the committed batches: one row per doc
+        with its id, metadata, ``stored_text`` and ``doc_len`` (the batch
+        write keeps no tokens; Parquet column pruning reads only what a
+        caller selects). The ``batch=<id>`` partition column is an
+        ingestion detail, dropped here."""
+        return self._committed("analyzed").drop("batch")
 
     @functools.cached_property
     def term_dict(self) -> DataFrame:
@@ -1416,8 +1410,9 @@ class InvertedIndex:
 
     @property
     def segments(self) -> DataFrame:
-        """Live per-doc postings (the ``segments`` stage)."""
-        return self.live(_read_stage(self.spark, self.dir, "segments"), "batch")
+        """Live per-doc postings of the committed batches (the
+        ``segments`` stage)."""
+        return self._committed("segments")
 
     def refresh(self) -> "InvertedIndex":
         """Fresh snapshot handle (re-reads meta + file listings) — use
@@ -1456,19 +1451,20 @@ def build_index(
     (repo, path, commit)).
 
     With ``resume=True`` a build continues only its own commit: if
-    ``meta.json`` is absent or names commit 0 (segment 0 over batch 0,
-    nothing deleted) and no indexer has appended or deleted since, each
-    stage whose manifest matches the config hash is skipped (kill the
-    job between stages and re-run: bit-identical, tested). Any other
-    directory is cleared and rebuilt from ``corpus_df``.
+    ``meta.json`` is absent or names commit 0 (term_dict partial 0,
+    segment 0 over batch 0, nothing deleted) and no indexer has appended
+    or deleted since, each stage whose manifest matches the config hash
+    is skipped (kill the job between stages and re-run: bit-identical,
+    tested). Any other directory is cleared and rebuilt from
+    ``corpus_df``.
     """
     config = config or IndexConfig()
     sort_cols = sort_cols or ["repo", "path", "commit"]
     os.makedirs(out_dir, exist_ok=True)
 
     meta = _read_meta(out_dir)
-    own = meta is None or {k: meta.get(k) for k in ("commit", "segments", "deleted")} == {
-        "commit": 0, "segments": {"0": [0]}, "deleted": {}}
+    own = meta is None or {k: meta.get(k) for k in ("commit", "term_dicts", "segments", "deleted")} == {
+        "commit": 0, "term_dicts": [0], "segments": {"0": [0]}, "deleted": {}}
     resume = resume and own and set(_batch_ids(out_dir)) <= {0} and not any(
         os.path.exists(os.path.join(out_dir, n)) for n in ("tombstones", "tombstones.json"))
     if not resume:  # every entry but the named snapshots, whatever wrote it
@@ -1492,23 +1488,21 @@ def _merge(
     ``new``, then ``meta.json``, the commit point. ``record`` is the
     ``(segments, deleted)`` pair it commits (see :func:`_commit_record`);
     a build commits segment 0 over batch 0. ``new=None`` encodes nothing
-    (a commit of deletes alone). ``base=None`` (a build, a policy merge,
-    or a commit at the bound on partials) writes one full partial over
-    the live docs; a delta commit from the commit point ``base`` writes
-    the change since ``base`` (:func:`_stage_term_delta`). With ``resume`` (a
-    build continuing its own commit) a stage whose manifest matches the
-    config hash is skipped. Partial and segment directories the commit
-    does not name, and the reversed dictionary an earlier version kept,
-    are removed after it lands."""
+    (a commit of deletes alone). The partial is the change from the
+    commit point ``base`` (:func:`_stage_term_delta`); ``base=None`` is
+    the empty commit point (a build, a policy merge, or a commit at the
+    bound on partials), from which the change is the full dictionary
+    over the live docs. With ``resume`` (a build continuing its own
+    commit) a stage whose manifest matches the config hash is skipped.
+    Partial and segment directories the commit does not name are
+    removed after it lands."""
     segments, deleted = record
-    gens = [commit] if base is None else _dict_gens(base) + [commit]
+    base = base or _EMPTY_COMMIT
+    gens = base["term_dicts"] + [commit]
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
         t0 = time.time()
-        if base is None:
-            stats = _stage_term_dict(spark, out_dir, record, commit)
-        else:
-            stats = _stage_term_delta(spark, out_dir, base, record, commit)
+        stats = _stage_term_delta(spark, out_dir, base, record, commit)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):
@@ -1519,7 +1513,6 @@ def _merge(
     _write_meta(out_dir, config, td, commit, gens, segments, deleted)
     _remove_except(_stage_dir(out_dir, "term_dict"), [_dict_root(g) for g in gens])
     _remove_except(_stage_dir(out_dir, "blocks"), listed)
-    shutil.rmtree(_stage_dir(out_dir, "term_dict_rev"), ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -82,7 +82,7 @@ def publish_index(index, catalog: str, namespace: str) -> list[str]:
     _require_iceberg(spark)
     created = []
     frames: dict[str, DataFrame] = {
-        "analyzed": index.live(spark.read.parquet(f"{index.dir}/analyzed"), "batch"),
+        "analyzed": index._committed("analyzed"),
         "segments": index.segments,
         "term_dict": index.term_dict,
         "blocks": index.blocks,

@@ -909,7 +909,7 @@ def term_vectors_matrix(
     The reference builds the matrix driver-side from search results; at
     scale the tf side here re-analyzes ONLY the selected docs' stored
     text (vectorized JVM chain) while df and N come straight from the
-    index's term dictionary and doc registry — no corpus-wide
+    index's term dictionary and commit point — no corpus-wide
     re-tokenization, and the tf side is the small side of the term join
     (AQE broadcasts it)."""
     idx = engine.index
@@ -920,26 +920,18 @@ def term_vectors_matrix(
         .groupBy("doc_id", "doc_len", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    n_docs = idx.docs.agg(F.count("*").alias("_n"))
-    out = (
+    n = F.lit(idx.n_docs)
+    return (
         tf.join(idx.term_dict.select("term", "df"), "term")
-        .crossJoin(F.broadcast(n_docs))
-        .where(
-            (F.col("df") >= F.lit(min_df))
-            & (F.col("df") <= F.lit(float(max_df_frac)) * F.col("_n"))
-        )
+        .where((F.col("df") >= F.lit(min_df)) & (F.col("df") <= F.lit(float(max_df_frac)) * n))
         .select(
             "doc_id",
             "term",
             "tf",
             "df",
-            (
-                (F.col("tf") / F.col("doc_len"))
-                * F.log(F.lit(1.0) + F.col("_n") / F.col("df"))
-            ).alias("tfidf"),
+            ((F.col("tf") / F.col("doc_len")) * F.log(F.lit(1.0) + n / F.col("df"))).alias("tfidf"),
         )
     )
-    return out
 
 
 def _ltr_features(
@@ -1274,20 +1266,15 @@ def cluster_results(
         .groupBy("doc_id", "doc_len", "term")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    n_total = idx.docs.agg(F.count("*").alias("_n"))
+    n = F.lit(idx.n_docs)
     tfidf = (
         tf.join(idx.term_dict.select("term", "df"), "term")
-        .crossJoin(F.broadcast(n_total))
-        .where(
-            (F.col("df") >= F.lit(min_df))
-            & (F.col("df") <= F.lit(float(max_df_frac)) * F.col("_n"))
-        )
+        .where((F.col("df") >= F.lit(min_df)) & (F.col("df") <= F.lit(float(max_df_frac)) * n))
         .select(
             "doc_id",
             "term",
             F.round(
-                ((F.col("tf") / F.col("doc_len"))
-                 * F.log(F.lit(1.0) + F.col("_n") / F.col("df")))
+                ((F.col("tf") / F.col("doc_len")) * F.log(F.lit(1.0) + n / F.col("df")))
                 .cast("float").cast("double"),
                 6,
             ).alias("tfidf_r"),

@@ -9,9 +9,10 @@ Spark's batch+streaming model:
   own file-source log, feeding ``foreachBatch`` into the indexer.
 - NRT soft commit (``DirectUpdateHandler2.java:157-175``: visibility
   without a full merge) → :meth:`IncrementalIndexer.append_batch`
-  appends analyzed docs + raw postings — new docs are immediately
-  visible to segment-level readers (``InvertedIndex.segments``) without
-  touching the merged blocks. Each batch writes into its own
+  appends analyzed docs + raw postings to the stage files without
+  touching the merged blocks; an index handle reads only the batches
+  its commit names (``InvertedIndex.docs``/``segments``), so new docs
+  reach readers at the next commit. Each batch writes into its own
   ``batch=<id>`` partition directory with overwrite semantics, so
   at-least-once re-delivery of a micro-batch (foreachBatch crash/restart)
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
@@ -30,11 +31,12 @@ Spark's batch+streaming model:
   immutable, and blocks are stats-independent, so they stay valid when
   N/avgdl/idf move), and writes one term_dict partial,
   ``term_dict/commit=<c>/``: the signed (term, df, cf) change of the
-  commit's new batches and deletes, aggregated over those postings only
-  (Lucene's per-segment dictionary, ``TermStates`` summing it at query
-  time). N and sum_doc_len move by the same change, counted on the
-  driver. df, N and avgdl stay exact over the live docs, so an
-  incremental index that appends B1..Bn, deletes D and commits answers
+  commit's new batches and deletes, aggregated over the postings of the
+  batches it adds or deletes from only (Lucene's per-segment
+  dictionary, ``TermStates`` summing it at query time). N and
+  sum_doc_len move by the same change, counted on the driver. df, N
+  and avgdl stay exact over the live docs, so an incremental index
+  that appends B1..Bn, deletes D and commits answers
   rank-identically to a batch build over the surviving corpus
   (oracle-gated against DuckDB). ``meta.json`` is the commit point: it
   holds N and avgdl, the commit generation, the partials that sum to
@@ -46,11 +48,12 @@ Spark's batch+streaming model:
   ``MERGE_MAX_DELETED_FRAC`` and ``MERGE_MAX_DELETED_DOCS``: past any of
   them, a commit compacts the deleted docs out of the analyzed
   and segments stages and encodes every batch into one segment — the
-  build's own path; ``build_index`` is that path for batch 0. Commits of
-  deletes alone add partials but no segment, so a commit whose partial
-  would be the ``MERGE_MAX_SEGMENTS + 1``-th writes one full partial
-  over the live docs instead, as a merge does, and rewrites no block: a
-  reader sums at most ``MERGE_MAX_SEGMENTS`` partials.
+  build's own path; ``build_index`` is that path for batch 0. Its
+  partial is the change from the empty commit point: the full
+  dictionary. Commits of deletes alone add partials but no segment, so
+  a commit whose partial would be the ``MERGE_MAX_SEGMENTS + 1``-th
+  starts from the empty commit point too, as a merge does, and rewrites
+  no block: a reader sums at most ``MERGE_MAX_SEGMENTS`` partials.
 - tlog replay / recovery (``UpdateLog.java:178``) → the stage
   manifests, rewritten by every append and compaction, and
   ``tombstones.json``, removed only after ``meta.json`` is written:
@@ -79,7 +82,6 @@ from solr_spark.index.build import (
     _check_layout,
     _commit_record,
     _dead_rows,
-    _dict_gens,
     _live_stage,
     _merge,
     _read_manifest,
@@ -202,7 +204,9 @@ class IncrementalIndexer:
 
     def _compact_stage(self, stage: str, dead: Column) -> None:
         """Rewrite a stage without the rows ``dead`` selects (swap via
-        rename), then its manifest.
+        rename), then its manifest. Every ``batch=<id>`` directory stays,
+        empty if none of its rows does: a merge commits the batches
+        ``segments/`` lists, and a doc without tokens has no row there.
 
         At corpus scale the stages would be partitioned by doc range and
         only partitions containing deleted ids rewritten; the swap
@@ -214,6 +218,9 @@ class IncrementalIndexer:
         tmp = src + "__compact"
         shutil.rmtree(tmp, ignore_errors=True)
         df.write.mode("overwrite").partitionBy("batch").parquet(tmp)
+        for name in os.listdir(src):
+            if name.startswith("batch="):
+                os.makedirs(os.path.join(tmp, name), exist_ok=True)
         old = src + "__old"
         shutil.rmtree(old, ignore_errors=True)
         os.replace(src, old)
@@ -229,9 +236,10 @@ class IncrementalIndexer:
         change and meta.json the stats moved by it, both O(delta). Old
         segments are never re-encoded, until the merge policy merges them
         all into one (compacting the deleted docs out of the analyzed and
-        segments stages first), which is the build's own path and writes
-        one full partial, as does a commit whose partial would pass the
-        bound on partials. A directory's first commit is such a merge.
+        segments stages first), which is the build's own path. A merge,
+        and a commit whose partial would pass the bound on partials, take
+        the change from the empty commit point (``base=None``): one full
+        partial. A directory's first commit is such a merge.
         Raises ValueError when no batch was ever appended."""
         batches = _batch_ids(self.dir)
         if not batches:
@@ -261,7 +269,7 @@ class IncrementalIndexer:
             segments, deleted = {new: _batch_ids(self.dir)}, {}
         _merge(self.spark, self.dir, self.config, False, (segments, deleted),
                new if new in segments else None, meta["commit"] + 1 if record else 0,
-               base=None if merge or len(_dict_gens(meta)) >= MERGE_MAX_SEGMENTS else meta)
+               base=None if merge or len(meta["term_dicts"]) >= MERGE_MAX_SEGMENTS else meta)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
         return InvertedIndex(self.spark, self.dir)

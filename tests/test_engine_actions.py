@@ -160,6 +160,26 @@ def test_nrt_cycle_job_budget(spark, test_config):
     assert n_commit <= 4, f"commit launched {n_commit} jobs (budget 4)"
 
 
+def test_build_dictionary_stage_job_budget(spark, test_config, monkeypatch, tmp_path):
+    """A build writes its dictionary partial, the change from the empty
+    commit point, in one job: N and sum_doc_len are counted on the
+    driver, and a test-scale build's postings fit one scan split, so one
+    task sums them with no exchange."""
+    from solr_spark.corpus import synth_corpus
+    from solr_spark.index import build
+
+    stage, jobs = build._stage_term_delta, []
+
+    def counted(*args):
+        out = []
+        jobs.append(_job_count(spark, "ja_build_dict", lambda: out.append(stage(*args))))
+        return out[0]
+
+    monkeypatch.setattr(build, "_stage_term_delta", counted)
+    build.build_index(spark, synth_corpus(spark, 200), str(tmp_path / "idx"), test_config)
+    assert jobs == [1], f"the build's dictionary stage launched {jobs} jobs (budget 1)"
+
+
 @pytest.fixture
 def action_plans(warm, monkeypatch):
     """Optimized plans of every ``collect`` run while the fixture is live

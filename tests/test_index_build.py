@@ -567,6 +567,21 @@ def _earlier_layout(src: str, dst: str, layout: str) -> None:
     import pyarrow.parquet as pq
 
     shutil.copytree(src, dst)
+    if layout in ("no_partials", "reversed_dict", "derived_dict"):
+        # one dictionary per commit, before meta.json named the partials
+        # that sum to it; earlier still, a reversed copy beside it, and
+        # before that, derived columns in it too
+        path = os.path.join(dst, "meta.json")
+        with open(path) as f:
+            meta = json.load(f)
+        del meta["term_dicts"]
+        with open(path, "w") as f:
+            json.dump(meta, f)
+        if layout != "no_partials":
+            _reversed_dictionary(dst)
+        if layout == "derived_dict":
+            _derived_dictionary_columns(dst)
+        return
     if layout == "tombstones_dir":
         # an indexer that appended a batch and recorded a delete but never
         # committed: no manifests, no meta.json, pending deletes as Parquet
@@ -609,6 +624,9 @@ _EARLIER_LAYOUTS = {
     "loose_stages": "no commit record",
     "flat_blocks": "no commit record",
     "tombstones_dir": "tombstones/",
+    "no_partials": "names no term_dict partials",
+    "reversed_dict": "names no term_dict partials",
+    "derived_dict": "names no term_dict partials",
 }
 
 
@@ -616,10 +634,12 @@ _EARLIER_LAYOUTS = {
 def test_earlier_layout_refused_then_rebuilt(spark, small_index, tmp_path, layout):
     """A directory an earlier version wrote (format v2; loose stage files;
     flat blocks and dictionaries; pending deletes in a ``tombstones/``
-    Parquet directory) is refused by ``InvertedIndex`` and
-    ``IncrementalIndexer`` with a rebuild hint before any Spark job runs.
-    A resumed ``build_index`` rebuilds it from its corpus: it answers
-    like a fresh build and keeps nothing of the earlier layout."""
+    Parquet directory; a meta.json that names no dictionary partials,
+    beside a reversed dictionary copy or derived ``idf``/``is_hot``
+    columns) is refused by ``InvertedIndex`` and ``IncrementalIndexer``
+    with a rebuild hint before any Spark job runs. A resumed
+    ``build_index`` rebuilds it from its corpus: it answers like a fresh
+    build and keeps nothing of the earlier layout but ``snapshots/``."""
     from solr_spark.index.build import InvertedIndex
     from solr_spark.query.engine import SearchEngine
     from solr_spark.streaming import IncrementalIndexer
@@ -640,30 +660,42 @@ def test_earlier_layout_refused_then_rebuilt(spark, small_index, tmp_path, layou
         sc.setJobGroup("idle", "idle")
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
+    os.makedirs(os.path.join(d, "snapshots", "kept"))
     idx = build_index(spark, corpus, d, ref.config, resume=True)
     q = "server data"
     assert SearchEngine(idx).topk(q, k=10).collect() == SearchEngine(ref).topk(q, k=10).collect()
+    assert sorted(os.listdir(d)) == sorted(os.listdir(ref.dir) + ["snapshots"])
+    assert os.listdir(os.path.join(d, "snapshots")) == ["kept"]
     for stage, kept in (("analyzed", "batch=0"), ("segments", "batch=0"), ("blocks", "segment=0"),
                         ("term_dict", "commit=0")):
         assert os.listdir(os.path.join(d, stage)) == [kept], stage
-    assert not os.path.exists(os.path.join(d, "tombstones"))
+    assert idx.term_dict.columns == ["term", "df", "cf"] and idx.dict_gens == [0]
 
 
-def _dictionary_with_derived_columns(src: str, dst: str) -> None:
-    """Copy the index ``src`` to ``dst`` with the term dictionary an
-    earlier writer of format 3 left: ``idf`` and ``is_hot`` columns in
-    the ``term_dict`` generation (and its manifest schema), and a
-    ``term_dict_rev`` generation range-sorted by the reversed term."""
+def _reversed_dictionary(d: str) -> None:
+    """Add the reversed dictionary copy an earlier writer kept:
+    ``term_dict_rev/commit=0``, range-sorted by the reversed term."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    t = ds.dataset(os.path.join(d, "term_dict", "commit=0"), format="parquet").to_table()
+    t = t.append_column("term_rev", pa.array([x[::-1] for x in t.column("term").to_pylist()]))
+    os.makedirs(os.path.join(d, "term_dict_rev", "commit=0"))
+    pq.write_table(t.sort_by("term_rev"), os.path.join(d, "term_dict_rev", "commit=0", "part-00000.parquet"))
+
+
+def _derived_dictionary_columns(d: str) -> None:
+    """Add the derived ``idf`` and ``is_hot`` columns an earlier writer
+    kept in the ``term_dict`` generation (and its manifest schema)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    shutil.copytree(src, dst)
-    with open(os.path.join(dst, "meta.json")) as f:
+    with open(os.path.join(d, "meta.json")) as f:
         meta = json.load(f)
     n, hot = meta["n_docs"], meta["config"]["hot_df_threshold"]
-    gen = os.path.join(dst, "term_dict", "commit=0")
-    tables = []
+    gen = os.path.join(d, "term_dict", "commit=0")
     for name in sorted(os.listdir(gen)):
         if name.endswith(".parquet"):
             t = pq.read_table(os.path.join(gen, name))
@@ -672,13 +704,7 @@ def _dictionary_with_derived_columns(src: str, dst: str) -> None:
             t = t.append_column("is_hot", pc.greater(t.column("df"), hot))
             pq.write_table(t, os.path.join(gen, name))
             os.remove(os.path.join(gen, f".{name}.crc"))  # Hadoop's checksum of the old bytes
-            tables.append(t)
-    rev = pa.concat_tables(tables)
-    rev = rev.append_column("term_rev", pa.array([x[::-1] for x in rev.column("term").to_pylist()]))
-    os.makedirs(os.path.join(dst, "term_dict_rev", "commit=0"))
-    pq.write_table(rev.sort_by("term_rev"),
-                   os.path.join(dst, "term_dict_rev", "commit=0", "part-00000.parquet"))
-    path = os.path.join(dst, "_MANIFEST_term_dict.json")
+    path = os.path.join(d, "_MANIFEST_term_dict.json")
     with open(path) as f:
         m = json.load(f)
     m["schema"]["fields"] += [
@@ -687,34 +713,6 @@ def _dictionary_with_derived_columns(src: str, dst: str) -> None:
     ]
     with open(path, "w") as f:
         json.dump(m, f)
-
-
-def test_index_with_derived_dictionary_columns_serves(spark, small_index, tmp_path):
-    """An index whose dictionary still carries the derived ``idf`` and
-    ``is_hot`` columns and a reversed copy (``term_dict_rev``) opens and
-    answers BM25 OR, AND and leading-wildcard queries as a fresh build
-    does. A ``build_index(resume=False)`` over it keeps no entry but
-    ``snapshots/``, so the reversed copy goes."""
-    from solr_spark.index.build import InvertedIndex, create_snapshot
-    from solr_spark.plans.compiler import execute_query
-
-    ref, corpus = small_index
-    d = str(tmp_path / "derived")
-    _dictionary_with_derived_columns(ref.dir, d)
-    idx = InvertedIndex(spark, d)
-    assert {"idf", "is_hot"} <= set(idx.term_dict.columns)
-    old, fresh = SearchEngine(idx), SearchEngine(ref)
-    for run in (lambda e: e.topk("server data", k=10),
-                lambda e: e.topk("server data", k=10, mode="AND"),
-                lambda e: execute_query(e, "*se", k=10)):
-        assert run(old).collect() == run(fresh).collect()
-    assert run(fresh).collect()
-
-    create_snapshot(d, "kept")
-    rebuilt = build_index(spark, corpus, d, ref.config, resume=False)
-    assert sorted(os.listdir(d)) == sorted(os.listdir(ref.dir) + ["snapshots"])
-    assert os.listdir(os.path.join(d, "snapshots")) == ["kept"]
-    assert rebuilt.term_dict.columns == ["term", "df", "cf"]
 
 
 def test_time_routed_partition_pruning(spark, tmp_path):

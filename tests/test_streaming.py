@@ -313,9 +313,7 @@ def _assert_exact_stats(idx):
     bit against Spark's over the from-scratch df), and N, sum_doc_len and
     avgdl in ``meta.json``."""
     eng = SearchEngine(idx)
-    committed = F.col("batch").isin([b for bs in idx.record[0].values() for b in bs])
-    agg = (idx.segments.where(committed)
-           .groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf")))
+    agg = idx.segments.groupBy("term").agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
     want = {r["term"]: (r["df"], r["cf"], r["idf"])
             for r in agg.select("*", eng.idf(F.col("df")).alias("idf")).collect()}
     got = {r["term"]: (r["df"], r["cf"]) for r in idx.term_dict.select("term", "df", "cf").collect()}
@@ -323,6 +321,7 @@ def _assert_exact_stats(idx):
     stats = eng._term_stats(sorted(want) + ["zznotaterm"])
     assert {s.term: (s.df, s.idf) for s in stats} == {t: (w[0], w[2]) for t, w in want.items()}
     docs = idx.live(idx.spark.read.parquet(os.path.join(idx.dir, "analyzed")), "batch")
+    committed = F.col("batch").isin([b for bs in idx.record[0].values() for b in bs])
     n, sum_dl = docs.where(committed).agg(F.count("*"), F.sum("doc_len")).collect()[0]
     assert (idx.meta["n_docs"], idx.meta["sum_doc_len"]) == (n, sum_dl)
     assert idx.meta["avgdl"] == sum_dl / n
@@ -455,51 +454,70 @@ def test_delta_segment_salts_the_terms_it_holds(spark, split):
     _assert_exact_stats(idx)
 
 
-def test_index_without_partials_opens_as_one_partial(spark, test_config):
-    """A commit point that names no partials (one full ``commit=<c>``
-    dictionary, as an earlier version wrote) opens as that single partial
-    and answers as it did; a delta commit on it keeps the stats exact."""
-    import json
-
-    from solr_spark.corpus import synth_corpus_pandas
-    from solr_spark.index.build import InvertedIndex
-
-    d = f"{BASE}/one_partial"
+def test_handle_reads_only_committed_batches(spark, test_config):
+    """A handle is a snapshot of its commit: a batch appended after it
+    opened, and not committed, shows in neither its doc registry nor its
+    postings."""
+    d = f"{BASE}/snapshot_handle"
     shutil.rmtree(d, ignore_errors=True)
-    pdf = synth_corpus_pandas(220)
-    pdf["doc_id"] = range(len(pdf))
-    ref = build_index(spark, spark.createDataFrame(pdf.iloc[:200]), d, test_config, id_col="doc_id")
-    path = os.path.join(d, "meta.json")
-    with open(path) as f:
-        meta = json.load(f)
-    assert meta.pop("term_dicts") == [0]
-    with open(path, "w") as f:
-        json.dump(meta, f)
-    idx = InvertedIndex(spark, d)
-    assert idx.dict_gens == [0]
-    assert _rows(idx.term_dict) == _rows(ref.term_dict)
-    for q, mode in (("server client", "OR"), ("parse json", "AND"), ("import", "OR")):
-        assert _topk(idx, q, mode) == _topk(ref, q, mode), (q, mode)
     inc = IncrementalIndexer(spark, d, test_config)
-    inc.append_batch(spark.createDataFrame(pdf.iloc[200:]), id_col="doc_id")
-    inc.delete_by_ids([4])
+    inc.append_batch(synth_corpus(spark, 60))
     idx = inc.commit()
-    assert idx.dict_gens == [0, 1]
+    inc.append_batch(synth_corpus(spark, 10))
+    assert idx.docs.count() == idx.n_docs == 60
+    assert idx.segments.agg(F.sum("tf")).first()[0] == idx.meta["sum_doc_len"]
+
+
+def test_delete_commit_scans_only_the_batches_it_deletes_from(spark, test_config, monkeypatch):
+    """A commit that deletes only docs of batch 0 reads the postings of
+    batch 0 alone to subtract them from the dictionary, however many
+    batches its base holds, and keeps the stats exact."""
+    from solr_spark.index import build
+
+    d = f"{BASE}/delete_scan"
+    shutil.rmtree(d, ignore_errors=True)
+    inc = IncrementalIndexer(spark, d, test_config)
+    for n in (60, 10, 10):
+        inc.append_batch(synth_corpus(spark, n))
+        inc.commit()
+    inc.delete_by_ids([3, 7])
+    read, reads = build._read_stage, []
+
+    def spy(spark, out_dir, stage, paths=None, root=None):
+        reads.append((stage, paths))
+        return read(spark, out_dir, stage, paths, root)
+
+    monkeypatch.setattr(build, "_read_stage", spy)
+    idx = inc.commit()
+    assert reads == [("segments", ["batch=0"])]
+    assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 78
     _assert_exact_stats(idx)
 
 
-def test_commit_removes_a_reversed_dictionary(spark, test_config):
-    """A ``term_dict_rev/`` directory an earlier writer left is removed
-    by the next commit's cleanup."""
-    d = f"{BASE}/rev_dict"
+def test_merge_keeps_a_batch_of_docs_without_tokens(spark, test_config, monkeypatch):
+    """A policy merge compacts the stages, which drops every row of a
+    batch from ``segments/`` when none of its docs has a token; the
+    merged commit still holds that batch, so N counts its docs and its
+    id is not handed out again."""
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index.build import _batch_ids
+    from solr_spark.streaming import incremental
+
+    d = f"{BASE}/empty_batch_merge"
     shutil.rmtree(d, ignore_errors=True)
-    build_index(spark, synth_corpus(spark, 120), d, test_config)
-    rev = os.path.join(d, "term_dict_rev", "commit=0")
-    shutil.copytree(os.path.join(d, "term_dict", "commit=0"), rev)
+    pdf = synth_corpus_pandas(53)
+    pdf["doc_id"] = range(len(pdf))
+    pdf.loc[50:, "content"] = ""
     inc = IncrementalIndexer(spark, d, test_config)
-    inc.append_batch(synth_corpus(spark, 10))
-    inc.commit()
-    assert not os.path.exists(os.path.join(d, "term_dict_rev"))
+    for lo, hi in ((0, 50), (50, 53)):
+        inc.append_batch(spark.createDataFrame(pdf.iloc[lo:hi]), id_col="doc_id")
+        inc.commit()
+    monkeypatch.setattr(incremental, "MERGE_MAX_DELETED_FRAC", 0.0)
+    inc.delete_by_ids([1])
+    idx = inc.commit()
+    assert idx.record == ({2: [0, 1]}, {}) and idx.n_docs == 52
+    assert _batch_ids(d) == [0, 1]
+    _assert_exact_stats(idx)
 
 
 def test_merge_policy_bounds():
