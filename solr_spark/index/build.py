@@ -12,10 +12,15 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
    (repo, path, commit) primary key — the analog of Lucene segment-local
    docIDs + compositeId shard routing, ``CompositeIdRouter.java:81``),
    tokenization (analysis chain), content sha256, doc length.
-2. ``segments``  — per-partition postings: (term, doc_id, tf, doc_len).
-   The analog of flushed in-memory segments before merge. Stages 1 and
-   2 are one batch write (:func:`_write_batch`) into ``batch=<id>``
-   partitions: a build is batch 0, each incremental append one more.
+2. ``segments``  — the staging area of per-doc postings: (term, doc_id,
+   tf, doc_len[, positions][, payloads]), the analog of Lucene's
+   buffered in-memory postings. Stages 1 and 2 are one batch write
+   (:func:`_write_batch`) into ``batch=<id>`` partitions: a build is
+   batch 0, each incremental append one more. A batch's staged postings
+   live only until the commit that encodes them lands: then the blocks
+   hold them, and :func:`_flush` drops the staged files (Lucene's flush,
+   where buffered postings become a segment). The stage manifest keeps
+   the postings count as the flush's lineage record.
 3. ``term_dict`` — the term dictionary of pure counts, (term, df, cf),
    kept as one partial per commit (``term_dict/commit=<c>``) whose sum
    is the global dictionary — Lucene's per-segment dictionaries summed
@@ -45,7 +50,12 @@ Spark stages, each writing a Parquet "table" + a JSON lineage manifest
 
 Stages 3 and 4 are the merge step (:func:`_merge`) that a build and an
 incremental commit share: a term_dict partial, then one segment's
-blocks, then ``meta.json`` — the commit point. It holds the global
+blocks, then ``meta.json`` — the commit point — then the flush of the
+committed batches' staged postings. A batch's postings are read from
+its staged files until it is committed, and decoded from its
+segment's blocks in the JVM after (:func:`_postings`): a policy merge
+re-encodes the live blocks, decoded once into the staging area.
+``meta.json`` holds the global
 stats and the commit record: the commit's generation, the generations
 whose ``term_dict/commit=<c>`` partials sum to its dictionary, the
 segments and their batches, and the deleted docs (the live-docs record
@@ -60,12 +70,13 @@ yields a bit-identical index (tested).
 
 Scale notes (100 TB / 10^12 docs):
 - ONE wide shuffle in the whole build: analyze is map-only after one
-  range repartition; segments is MAP-ONLY (postings of a doc depend only
-  on that doc — extracted with a vectorized numpy kernel per Arrow
-  batch, no posexplode→groupBy shuffle); term_dict is a partial-agg
-  rollup of segments, with N and sum_doc_len summed on the driver from
-  the docs' ``doc_len`` column (one int a doc: at corpus scale these
-  sums belong in the batch write's manifest); blocks is the one
+  range repartition; staging the postings is MAP-ONLY (postings of a
+  doc depend only on that doc — extracted with a vectorized numpy
+  kernel per Arrow batch, no posexplode→groupBy shuffle); term_dict is
+  a partial-agg rollup of the staged postings, with N and sum_doc_len
+  summed on the driver from the docs' ``doc_len`` column (one int a
+  doc: at corpus scale these sums belong in the batch write's
+  manifest); blocks is the one
   shuffle, keyed term_bucket, with an in-partition sort and a single
   streaming Arrow encode pass (no window function, no collect_list).
 - the blocks exchange ships per-(term, salt) posting RUNS, not postings:
@@ -105,6 +116,8 @@ import shutil
 import time
 from collections import Counter
 from dataclasses import asdict, dataclass
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -224,6 +237,7 @@ def _spark_schema(sdir: str, files: list[dict]) -> dict | None:
 def _write_manifest(
     out_dir: str, stage: str, config: IndexConfig, t0: float,
     parts: list[str] | None = None, extra: dict | None = None, root: str | None = None,
+    flushed: dict[str, int] | None = None,
 ) -> dict:
     """Per-stage lineage: per-file row counts/bytes from Parquet footers.
 
@@ -234,18 +248,22 @@ def _write_manifest(
     passes it, so opening the stage runs no schema-inference job). Only
     the ``parts`` subdirectories are listed when given; a ``root``
     subdirectory is listed as the stage itself (a term_dict partial);
-    ``extra`` keys join the record. Written aside and renamed into
-    place, so a reader sees the old manifest or the new one, never a
-    truncated file.
+    ``extra`` keys join the record. ``flushed`` (the segments stage
+    only) maps each committed segment to the postings its blocks hold,
+    whose staged files :func:`_flush` dropped; ``rows`` counts them too,
+    so it counts every posting the index holds or stages. Written aside
+    and renamed into place, so a reader sees the old manifest or the
+    new one, never a truncated file.
     """
     sdir = os.path.join(_stage_dir(out_dir, stage), root or "")
     files = _parquet_files(sdir, parts)
     manifest = {
         "stage": stage,
         "config_hash": config.config_hash(),
-        "rows": int(sum(f["rows"] for f in files)),
+        "rows": int(sum(f["rows"] for f in files)) + sum((flushed or {}).values()),
         "n_files": len(files),
         "files": files,
+        **({} if flushed is None else {"flushed": flushed}),
         "schema": _spark_schema(sdir, files),
         "wall_sec": round(time.time() - t0, 3),
         "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -525,8 +543,10 @@ def analyze_docs(with_ids: DataFrame, config: IndexConfig, text_col: str) -> Dat
 
 
 def _batch_ids(out_dir: str) -> list[int]:
-    """Ids of the ``batch=<id>`` partitions under ``segments/``, sorted."""
-    sdir = _stage_dir(out_dir, "segments")
+    """Ids of the ``batch=<id>`` partitions under ``analyzed/``, sorted:
+    every batch written, committed or not (its staged postings go at
+    the commit that encodes them)."""
+    sdir = _stage_dir(out_dir, "analyzed")
     if not os.path.isdir(sdir):
         return []
     return sorted(int(n.split("=", 1)[1]) for n in os.listdir(sdir) if n.startswith("batch="))
@@ -544,11 +564,12 @@ def _write_batch(
 ) -> int:
     """Stages 1+2 for one batch, the one write of both writers: doc ids
     (``id_col``, else ranks over ``sort_cols`` starting at
-    ``first_doc_id``) → :func:`analyze_docs` → the doc registry and the
-    per-doc postings, each into its stage's ``batch=<id>`` partition with
-    overwrite semantics (a re-delivered batch replaces itself whole),
-    then both stage manifests, so they list every batch the stages hold.
-    Returns the batch's doc count, read from the analyzed manifest.
+    ``first_doc_id``) → :func:`analyze_docs` → the doc registry (zstd)
+    and the staged per-doc postings, each into its stage's
+    ``batch=<id>`` partition with overwrite semantics (a re-delivered
+    batch replaces itself whole), then both stage manifests, so they
+    list every batch the stages hold. Returns the batch's doc count,
+    read from the analyzed manifest.
 
     The tokens column — the largest intermediate — never hits disk OR
     the block-manager cache. Each of the two writes recomputes
@@ -570,19 +591,46 @@ def _write_batch(
         ids = ids.withColumn("doc_id", F.col("doc_id") + F.lit(first_doc_id))
     analyzed = analyze_docs(ids, config, text_col)
     sub = f"batch={batch_id}"
-    analyzed.drop("tokens").write.mode("overwrite").parquet(
+    # zstd, not the session's snappy, as for the blocks: the doc store is
+    # mostly stored_text, which zstd packs about a third smaller at no
+    # more CPU (perfbench 400-doc corpus: 341 KB against 522 KB)
+    analyzed.drop("tokens").write.option("compression", "zstd").mode("overwrite").parquet(
         os.path.join(_stage_dir(out_dir, "analyzed"), sub)
     )
-    build_postings(analyzed, config).write.mode("overwrite").parquet(
-        os.path.join(_stage_dir(out_dir, "segments"), sub)
-    )
+    _stage_postings(analyzed, out_dir, config, batch_id)
     if held is not None:
         held.unpersist()
     if id_col is not None:
         _check_batch(corpus_df.sparkSession, out_dir, batch_id)
     analyzed_manifest = _write_manifest(out_dir, "analyzed", config, t0)
-    _write_manifest(out_dir, "segments", config, t0)
+    _write_manifest(out_dir, "segments", config, t0, flushed=_flushed(out_dir))
     return sum(f["rows"] for f in analyzed_manifest["files"] if f["file"].startswith(sub + os.sep))
+
+
+def _stage_postings(analyzed: DataFrame, out_dir: str, config: IndexConfig, batch_id: int) -> None:
+    """Write the per-doc postings of ``analyzed`` docs (with their
+    ``tokens``) as the staged ``segments/batch=<id>``, overwriting it."""
+    build_postings(analyzed, config).write.mode("overwrite").parquet(
+        os.path.join(_stage_dir(out_dir, "segments"), f"batch={batch_id}")
+    )
+
+
+def _restage(spark: SparkSession, out_dir: str, config: IndexConfig, batch_id: int) -> None:
+    """Stage a flushed batch's postings again, from its docs'
+    ``stored_text`` analyzed with the index's chain: the postings its
+    write staged, for a resumed build that must encode its one batch
+    again: no segment stays flushed."""
+    t0 = time.time()
+    docs = _read_stage(spark, out_dir, "analyzed", [f"batch={batch_id}"])
+    _stage_postings(docs.withColumn("tokens", config.chain().tokens("stored_text")),
+                    out_dir, config, batch_id)
+    _write_manifest(out_dir, "segments", config, t0, flushed={})
+
+
+def _flushed(out_dir: str) -> dict[str, int]:
+    """The postings per committed segment the segments manifest records
+    as flushed (see :func:`_write_manifest`); none before a flush."""
+    return (_read_manifest(out_dir, "segments") or {}).get("flushed", {})
 
 
 def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
@@ -616,7 +664,7 @@ def _check_batch(spark: SparkSession, out_dir: str, batch_id: int) -> None:
 
 
 # ---------------------------------------------------------------------------
-# stage 2: segments (raw postings)
+# stage 2: segments (staged raw postings, dropped at their commit)
 # ---------------------------------------------------------------------------
 
 
@@ -726,20 +774,28 @@ def _dict_paths(out_dir: str, gens: list[int]) -> list[str]:
     return [os.path.join(_stage_dir(out_dir, "term_dict"), _dict_root(g)) for g in gens]
 
 
-def _stage_term_delta(spark: SparkSession, out_dir: str, base: dict, record, commit: int) -> dict:
+def _stage_term_delta(
+    spark: SparkSession, out_dir: str, config: IndexConfig, base: dict, record, commit: int,
+    postings,
+) -> dict:
     """The term_dict partial of commit generation ``commit``, the one
     writer of every partial: the signed (term, df, cf) change from the
     commit point ``base`` (see :func:`_read_meta`) to the commit
-    ``record``, the live postings of the batches ``record`` adds minus
-    the postings of the docs it deletes that were live under ``base``.
-    From :data:`_EMPTY_COMMIT` every batch is added and nothing
-    subtracted: the full dictionary. A deleted id that is absent,
-    already deleted or in an added batch is subtracted nowhere. The added
-    and the subtracted postings of a term are summed apart, into a row
-    each, so the rows with ``df > 0`` count the live postings of the
-    added batches (the terms :func:`_stage_blocks` salts). It scans only
-    the batches it adds and those that hold the docs it deletes. Returns
-    the global stats of ``record`` (see :func:`_doc_stats_delta`)."""
+    ``record``, the live postings of the batches ``record`` adds
+    (``postings(batches)``, see :func:`_postings`) minus the postings of
+    the docs it deletes that were live under ``base``. From
+    :data:`_EMPTY_COMMIT` every batch is added and nothing subtracted:
+    the full dictionary. A deleted id that is absent, already deleted or
+    in an added batch is subtracted nowhere. The subtracted postings are
+    the deleted docs' ``stored_text`` analyzed again with the index's
+    chain, JVM expressions only: a row per token (cf −1) and a row per
+    distinct token (df −1), so its cost grows with the deletes, not the
+    index. The added and the subtracted postings of a term are summed
+    apart, into a row each, so the rows with ``df > 0`` count the live
+    postings of the added batches (the terms :func:`_stage_blocks`
+    salts). It scans only the batches it adds and the docs of those it
+    deletes from. Returns the global stats of ``record`` (see
+    :func:`_doc_stats_delta`)."""
     before = _commit_record(base)
     covered = {b for bs in before[0].values() for b in bs}
     fresh = sorted({b for bs in record[0].values() for b in bs} - covered)
@@ -750,30 +806,37 @@ def _stage_term_delta(spark: SparkSession, out_dir: str, base: dict, record, com
 
     signed = []
     if fresh:
-        signed.append(_live_stage(spark, out_dir, "segments", record, fresh)
-                      .select("term", F.lit(1).alias("sign"), F.col("tf").cast("long").alias("cf")))
+        signed.append(postings(fresh, False).select(
+            "term", F.lit(1).alias("sign"), F.lit(1).cast("long").alias("df"),
+            F.col("tf").cast("long").alias("cf")))
     if hit:
-        signed.append(_live_stage(spark, out_dir, "segments", before, hit).where(_dead_rows(*killed, "batch"))
-                      .select("term", F.lit(-1).alias("sign"), (-F.col("tf")).cast("long").alias("cf")))
+        def row(df: int, cf: int):
+            return lambda t: F.struct(t.alias("term"), F.lit(df).cast("long").alias("df"),
+                                      F.lit(cf).cast("long").alias("cf"))
+
+        toks = (_live_stage(spark, out_dir, "analyzed", before, hit).where(_dead_rows(*killed, "batch"))
+                .select(config.chain().tokens("stored_text").alias("t")))
+        signed.append(toks.select(F.inline(F.concat(
+            F.transform("t", row(0, -1)), F.transform(F.array_distinct("t"), row(-1, 0))
+        ))).select("term", F.lit(-1).alias("sign"), "df", "cf"))
     rows = functools.reduce(DataFrame.unionByName,
-                            signed or [local_frame(spark, [], "term string, sign int, cf long")])
+                            signed or [local_frame(spark, [], "term string, sign int, df long, cf long")])
     # While the files it scans fit one scan split of the size Spark
     # computes (FilePartition.maxSplitBytes), one task sums the rows and
     # the aggregate needs no exchange (the exchange costs a job of its
     # own); past that, the scan runs in parallel
-    dirs = {f"batch={b}" for b in fresh + hit}
-    size = sum(f["bytes"] for f in _read_manifest(out_dir, "segments")["files"]
-               if f["file"].split("/", 1)[0] in dirs)
+    size = _input_bytes(rows)
     conf = spark._jsparkSession.sessionState().conf()
     split = min(conf.filesMaxPartitionBytes(),
                 max(conf.filesOpenCostInBytes(), size // spark.sparkContext.defaultParallelism))
     if size <= split:
         rows = rows.coalesce(1)
     (rows.groupBy("term", "sign")
-     .agg(F.sum("sign").cast("long").alias("df"), F.sum("cf").alias("cf"))
+     .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
      .select("term", "df", "cf")
      .sortWithinPartitions("term")
-     .write.mode("overwrite").parquet(_dict_paths(out_dir, [commit])[0]))
+     .write.option("compression", "zstd").mode("overwrite")
+     .parquet(_dict_paths(out_dir, [commit])[0]))
     return stats
 
 
@@ -927,6 +990,76 @@ def _encode_blocks_vec(tbl, block_size: int, with_positions: bool, with_payloads
          if with_payloads else pa.nulls(nb, nested)),
     ]
     return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLS)
+
+
+def decode_blocks(blocks: DataFrame, *per_doc: str, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Posting blocks → one row per posting (term, doc_id, tf, dl), plus
+    the per-doc list columns named in ``per_doc`` (``positions``,
+    ``payloads``) when a caller asks for them, and the block columns
+    named in ``carry``.
+
+    The one decoder of the query side and of a merge, and it runs in the
+    JVM: ``inline`` over ``arrays_zip`` of the block's int arrays is a
+    ``Generate`` that whole-stage codegen fuses with the scan and the
+    scoring projection. doc_id = min_doc_id + offset. A block whose list
+    column is NULL (index built without it) yields no rows, so callers
+    that need positions or payloads check the index config first."""
+    arrays = ["doc_offsets", "tfs", "dls", *per_doc]
+    return blocks.select("term", "min_doc_id", *carry, F.inline(F.arrays_zip(*arrays))).select(
+        "term",
+        (F.col("min_doc_id") + F.col("doc_offsets")).alias("doc_id"),
+        F.col("tfs").alias("tf"),
+        F.col("dls").alias("dl"),
+        *per_doc,
+        *carry,
+    )
+
+
+def _input_bytes(df: DataFrame) -> int:
+    """Bytes of the files ``df`` scans, from its file listing: no job."""
+    return sum(os.path.getsize(url2pathname(urlparse(f).path)) for f in df.inputFiles())
+
+
+def _posting_lists(config: IndexConfig) -> list[str]:
+    """The per-doc list columns an index stores (a NULL list decodes to
+    no row, so only these are asked for)."""
+    return [c for c, on in (("positions", config.with_positions),
+                            ("payloads", config.with_payloads)) if on]
+
+
+def _live_postings(blocks: DataFrame, record, config: IndexConfig) -> DataFrame:
+    """The postings ``blocks`` hold of the docs live under the commit
+    ``record``, decoded in the JVM, with the staged postings' columns
+    (term, doc_id, tf, doc_len[, positions][, payloads]) and the
+    blocks' ``segment``."""
+    decoded = decode_blocks(blocks, *_posting_lists(config), carry=("segment",))
+    return _live(decoded.withColumnRenamed("dl", "doc_len"), _dead_rows(record[1], record[0], "segment"))
+
+
+def _postings(
+    spark: SparkSession, out_dir: str, config: IndexConfig, live, held: dict[int, list[int]],
+    batches: list[int], lists: bool = True,
+) -> DataFrame:
+    """(term, doc_id, tf, doc_len[, positions][, payloads]) of the docs
+    of ``batches`` live under the commit record ``live``: decoded from
+    the blocks of the committed segments ``held`` that hold them (whole
+    segments), read from the staged postings for the rest. Without
+    ``lists`` no position or payload list is read."""
+    cols = ["term", "doc_id", "tf", "doc_len", *(_posting_lists(config) if lists else [])]
+    segs = [s for s, bs in sorted(held.items()) if set(bs) & set(batches)]
+    staged = sorted(set(batches) - {b for s in segs for b in held[s]})
+    parts = []
+    if segs:
+        blocks = _read_stage(spark, out_dir, "blocks", [f"segment={s}" for s in segs])
+        # a segment holds a file per bucket and write task, and Spark
+        # scans each small file in a task of its own: a merge of many
+        # small segments would pay a Python task per file downstream
+        n = -(-_input_bytes(blocks) // spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+        decoded = _live_postings(blocks.coalesce(max(spark.sparkContext.defaultParallelism, n)), live, config)
+        parts.append(decoded.select(*cols))
+    if staged:
+        parts.append(_live_stage(spark, out_dir, "segments", live, staged).select(*cols))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 # ---------------------------------------------------------------------------
@@ -1205,13 +1338,14 @@ def _term_bucket(config: IndexConfig) -> Column:
     return F.pmod(F.xxhash64("term"), F.lit(config.n_term_buckets)).cast("int")
 
 
-def _salted_postings(segments: DataFrame, term_dict: DataFrame, config: IndexConfig) -> DataFrame:
+def _salted_postings(postings: DataFrame, term_dict: DataFrame | None, config: IndexConfig) -> DataFrame:
     """Posting rows (term, salt, doc_id, tf, doc_len, term_bucket[,
-    positions][, payloads]) with each hot term's postings salted into
-    ``n_salts`` sub-streams and every row tagged with its term_bucket —
-    the input of the blocks exchange."""
+    positions][, payloads]) with the postings of each hot term of
+    ``term_dict`` (None: no term is hot) salted into ``n_salts``
+    sub-streams and every row tagged with its term_bucket — the input
+    of the blocks exchange."""
     # Salt assignment needs only HOTNESS, not the full dictionary.
-    # Joining segments (O(total postings)) against the whole term_dict
+    # Joining the postings (O(total postings)) against the whole term_dict
     # (O(vocabulary) — billions of distinct identifiers in code at 10^12
     # files) would be a sort-merge join: a second full shuffle of the
     # posting stream. The hot set is tiny BY CONSTRUCTION — at most
@@ -1219,26 +1353,24 @@ def _salted_postings(segments: DataFrame, term_dict: DataFrame, config: IndexCon
     # ('import', 'def', 'return') — so broadcast it and left-join: the
     # posting stream is touched map-side only, and the one real shuffle
     # stays the (term_bucket, salt) block exchange.
-    hot = F.broadcast(
-        term_dict.where(F.col("df") > F.lit(config.hot_df_threshold))
-        .select("term", F.lit(True).alias("_hot"))
-    )
-    p = segments.join(hot, "term", "left")
-    p = p.withColumn(
-        "salt",
-        F.when(F.col("_hot").isNotNull(), F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
-    ).drop("_hot")
+    if term_dict is None:
+        p = postings.withColumn("salt", F.lit(0))
+    else:
+        hot = F.broadcast(
+            term_dict.where(F.col("df") > F.lit(config.hot_df_threshold))
+            .select("term", F.lit(True).alias("_hot"))
+        )
+        p = postings.join(hot, "term", "left").withColumn(
+            "salt",
+            F.when(F.col("_hot").isNotNull(),
+                   F.pmod(F.xxhash64("doc_id"), F.lit(config.n_salts)).cast("int")).otherwise(F.lit(0)),
+        )
     p = p.withColumn("term_bucket", _term_bucket(config))
-    cols = ["term", "salt", "doc_id", "tf", "doc_len", "term_bucket"]
-    if config.with_positions:
-        cols.append("positions")
-    if config.with_payloads:
-        cols.append("payloads")
-    return p.select(*cols)
+    return p.select("term", "salt", "doc_id", "tf", "doc_len", "term_bucket", *_posting_lists(config))
 
 
 def _blocks_shuffle_input(
-    segments: DataFrame, term_dict: DataFrame, config: IndexConfig, whole: bool = True
+    postings: DataFrame, term_dict: DataFrame | None, config: IndexConfig, whole: bool = True
 ) -> DataFrame:
     """The salted, bucketed, sorted shuffle input the block encoder
     consumes — factored out so tests can assert the skew property
@@ -1252,7 +1384,7 @@ def _blocks_shuffle_input(
     # shuffle ships O(runs) array rows instead of O(postings) scalar rows
     # and the reducer sorts runs by (term, salt, min_doc) — concatenation
     # of disjoint doc ranges replaces the posting-level sort entirely.
-    runs = _salted_postings(segments, term_dict, config).mapInArrow(
+    runs = _salted_postings(postings, term_dict, config).mapInArrow(
         _pack_runs_arrow(config.with_positions, config.with_payloads),
         schema=_run_schema(config.with_positions, config.with_payloads),
     )
@@ -1262,23 +1394,43 @@ def _blocks_shuffle_input(
     )
 
 
+def _max_df(out_dir: str, commit: int) -> float:
+    """The largest df in the term_dict partial of generation ``commit``,
+    read on the driver from its Parquet footer statistics (no Spark job);
+    infinite when a row group records no statistics."""
+    import pyarrow.parquet as pq
+
+    pdir = _dict_paths(out_dir, [commit])[0]
+    hi = 0
+    for f in _parquet_files(pdir):
+        meta = pq.read_metadata(os.path.join(pdir, f["file"]))
+        col = meta.schema.to_arrow_schema().get_field_index("df")
+        for g in range(meta.num_row_groups):
+            st = meta.row_group(g).column(col).statistics
+            hi = max(hi, st.max if st is not None and st.has_min_max else math.inf)
+    return hi
+
+
 def _stage_blocks(
-    spark: SparkSession, out_dir: str, config: IndexConfig, batches: list[int], segment: int,
+    spark: SparkSession, out_dir: str, config: IndexConfig, postings: DataFrame, segment: int,
     commit: int, whole: bool = True,
 ) -> None:
-    """Encode the postings of ``batches`` into one segment,
+    """Encode ``postings`` (see :func:`_postings`) into one segment,
     ``blocks/segment=<segment>/term_bucket=<b>``, every bucket, salting
     the terms whose df in commit generation ``commit``'s own term_dict
     partial passes ``hot_df_threshold``; reading one partial costs no
-    aggregate. A partial's positive rows count the live postings of the
+    aggregate, and when the largest df its Parquet footers record does
+    not pass the threshold (a small delta) no hot set is planned at all.
+    A partial's positive rows count the live postings of the
     batches its commit adds (see :func:`_stage_term_delta`): the
     segment's own for a delta commit, a build or a merge, and a superset
     of them for a delta segment committed at the bound on partials,
     whose partial starts from the empty commit point (a needless salt
     only splits a term's blocks). ``whole``: the segment is the whole
     index (see :func:`_blocks_shuffle_input`)."""
-    segments = _read_stage(spark, out_dir, "segments").where(F.col("batch").isin(batches))
-    term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
+    term_dict = None
+    if _max_df(out_dir, commit) > config.hot_df_threshold:
+        term_dict = _read_stage(spark, out_dir, "term_dict", root=_dict_root(commit)).select("term", "df")
 
     # ONE shuffle: hash-repartition by (term_bucket, salt), sort runs
     # within partitions, stream-encode in a single Arrow pass. Replaces
@@ -1294,7 +1446,7 @@ def _stage_blocks(
     # and block_no numbering is unchanged; the partitionBy("term_bucket")
     # write just gets ≤ n_salts files per bucket directory instead of 1.
     blocks = (
-        _blocks_shuffle_input(segments, term_dict, config, whole)
+        _blocks_shuffle_input(postings, term_dict, config, whole)
         .mapInArrow(
             _encode_stream_runs(config.block_size, config.with_positions, config.with_payloads),
             schema=_BLOCK_SCHEMA,
@@ -1410,9 +1562,13 @@ class InvertedIndex:
 
     @property
     def segments(self) -> DataFrame:
-        """Live per-doc postings of the committed batches (the
-        ``segments`` stage)."""
-        return self._committed("segments")
+        """Live per-doc postings of the committed segments, decoded from
+        their blocks in the JVM: the columns of the staged postings
+        (term, doc_id, tf, doc_len[, positions][, payloads]) and the
+        ``segment`` that holds each. A batch's staged postings are
+        dropped once its commit lands, so this view is what is left of
+        them."""
+        return _live_postings(self.blocks, self.record, self.config)
 
     def refresh(self) -> "InvertedIndex":
         """Fresh snapshot handle (re-reads meta + file listings) — use
@@ -1471,9 +1627,13 @@ def build_index(
         _remove_except(out_dir, ["snapshots"])
     # fused unit: "analyzed" + "segments" are produced by ONE corpus pass
     # (separate manifests are still written — resume treats the pair as a
-    # unit: if either is missing/stale, batch 0 of both is rewritten)
+    # unit: if either is missing/stale, batch 0 of both is rewritten). A
+    # finished build flushed its staged postings; a resume that encodes
+    # them again stages them again first
     if not (_stage_done(out_dir, "analyzed", config) and _stage_done(out_dir, "segments", config)):
         _write_batch(corpus_df, out_dir, config, text_col, id_col, sort_cols, 0, 0)
+    elif _flushed(out_dir) and not all(_stage_done(out_dir, s, config) for s in ("term_dict", "blocks")):
+        _restage(spark, out_dir, config, 0)
     _merge(spark, out_dir, config, resume, ({0: [0]}, {}), 0, 0)
     return InvertedIndex(spark, out_dir)
 
@@ -1481,38 +1641,85 @@ def build_index(
 def _merge(
     spark: SparkSession, out_dir: str, config: IndexConfig, resume: bool,
     record: tuple[dict[int, list[int]], dict[int, list[int]]], new: int | None, commit: int,
-    base: dict | None = None,
+    base: dict | None = None, live=None,
 ) -> None:
     """Stages 3+4, the one merge step of both writers: the term_dict
     partial of commit generation ``commit``, then the blocks of segment
-    ``new``, then ``meta.json``, the commit point. ``record`` is the
-    ``(segments, deleted)`` pair it commits (see :func:`_commit_record`);
-    a build commits segment 0 over batch 0. ``new=None`` encodes nothing
-    (a commit of deletes alone). The partial is the change from the
-    commit point ``base`` (:func:`_stage_term_delta`); ``base=None`` is
-    the empty commit point (a build, a policy merge, or a commit at the
-    bound on partials), from which the change is the full dictionary
-    over the live docs. With ``resume`` (a build continuing its own
-    commit) a stage whose manifest matches the config hash is skipped.
-    Partial and segment directories the commit does not name are
-    removed after it lands."""
+    ``new``, then ``meta.json``, the commit point, then the flush of the
+    committed batches' staged postings (:func:`_flush`). ``record`` is
+    the ``(segments, deleted)`` pair it commits (see
+    :func:`_commit_record`); a build commits segment 0 over batch 0.
+    ``new=None`` encodes nothing (a commit of deletes alone). The
+    postings are those of the docs live under the record ``live``
+    (default ``record``; a policy merge passes the record it merges
+    away, whose deletes it drops): decoded from the blocks of every
+    segment of ``live`` but ``new``, the staged ones for the rest (see
+    :func:`_postings`). The partial is the change from the commit point
+    ``base`` (:func:`_stage_term_delta`); ``base=None`` is the empty
+    commit point (a build, a policy merge, or a commit at the bound on
+    partials), from which the change is the full dictionary over the
+    live docs. With ``resume`` (a build continuing its own commit) a
+    stage whose manifest matches the config hash is skipped. Partial
+    and segment directories the commit does not name are removed after
+    it lands."""
     segments, deleted = record
     base = base or _EMPTY_COMMIT
+    live = live or record
+    held = {s: bs for s, bs in live[0].items() if s != new}
+    postings = functools.partial(_postings, spark, out_dir, config, live, held)
+    if new is not None and len(segments) == 1 and held:
+        # a policy merge reads every posting twice (the partial, the
+        # blocks): decode the live blocks once, into the staging area
+        merged = os.path.join(_stage_dir(out_dir, "segments"), f"merge={new}")
+        postings(segments[new]).write.mode("overwrite").parquet(merged)
+        staged = spark.read.schema(_segment_schema(config.with_positions, config.with_payloads)).parquet(merged)
+
+        def postings(_batches, lists=True):
+            return staged if lists else staged.drop(*_posting_lists(config))
     gens = base["term_dicts"] + [commit]
     td = _read_manifest(out_dir, "term_dict")
     if not (resume and _stage_done(out_dir, "term_dict", config)):
         t0 = time.time()
-        stats = _stage_term_delta(spark, out_dir, base, record, commit)
+        stats = _stage_term_delta(spark, out_dir, config, base, record, commit, postings)
         td = _write_manifest(out_dir, "term_dict", config, t0, extra=stats, root=_dict_root(commit))
     listed = [f"segment={s}" for s in sorted(segments)]
     if not (resume and _stage_done(out_dir, "blocks", config)):
         t0 = time.time()
         if new is not None:
-            _stage_blocks(spark, out_dir, config, segments[new], new, commit, len(segments) == 1)
+            _stage_blocks(spark, out_dir, config, postings(segments[new]), new, commit, len(segments) == 1)
         _write_manifest(out_dir, "blocks", config, t0, listed)
     _write_meta(out_dir, config, td, commit, gens, segments, deleted)
     _remove_except(_stage_dir(out_dir, "term_dict"), [_dict_root(g) for g in gens])
     _remove_except(_stage_dir(out_dir, "blocks"), listed)
+    _flush(out_dir, config, segments)
+
+
+def _flush(out_dir: str, config: IndexConfig, segments: dict[int, list[int]]) -> None:
+    """Drop the staged postings of every batch the landed commit's
+    ``segments`` hold, and a merge's decoded ones: their blocks hold
+    them now. The segments manifest
+    is written first, as the flush's lineage record: it lists the
+    batches still staged and, per committed segment, the postings its
+    blocks hold (``flushed``; counted from the blocks' ``n_docs`` on the
+    driver, once per segment). So a kill between the two leaves a
+    manifest that names no file it would not read."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    def held(s: int) -> int:
+        sdir = os.path.join(_stage_dir(out_dir, "blocks"), f"segment={s}")
+        return sum(pc.sum(pq.read_table(os.path.join(sdir, f["file"]), columns=["n_docs"])
+                          .column(0)).as_py() or 0 for f in _parquet_files(sdir))
+
+    t0 = time.time()
+    sdir = _stage_dir(out_dir, "segments")
+    done = {f"batch={b}" for bs in segments.values() for b in bs}
+    pending = sorted(n for n in (os.listdir(sdir) if os.path.isdir(sdir) else ())
+                     if n.startswith("batch=") and n not in done)
+    old = _flushed(out_dir)
+    flushed = {str(s): old[str(s)] if str(s) in old else held(s) for s in sorted(segments)}
+    _write_manifest(out_dir, "segments", config, t0, pending, flushed=flushed)
+    _remove_except(sdir, pending)  # a merge's decoded postings go too
 
 
 # ---------------------------------------------------------------------------

@@ -31,13 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 # stage name -> partition columns (mirrors the directory layout the
-# parquet build writes: docs and postings in ``batch=<id>`` partitions —
-# 0 for build_index, one per incremental append — and blocks by segment
-# (one per commit, until a merge) then term bucket; identity transforms
-# only)
+# parquet build writes: docs in ``batch=<id>`` partitions — 0 for
+# build_index, one per incremental append — and blocks by segment (one
+# per commit, until a merge) then term bucket; identity transforms only).
+# The postings are published as ``InvertedIndex.segments``, the live
+# postings decoded from the blocks (a batch's staged postings are gone
+# once its commit lands), so they are partitioned by segment too
 STAGE_PARTITIONING: dict[str, list[str]] = {
     "analyzed": ["batch"],
-    "segments": ["batch"],
+    "segments": ["segment"],
     "term_dict": [],
     "blocks": ["segment", "term_bucket"],
 }

@@ -62,31 +62,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from solr_spark.functions.hashing import xxhash64_py
-from solr_spark.index.build import InvertedIndex
+from solr_spark.index.build import InvertedIndex, decode_blocks
 from solr_spark.session import local_frame
-
-
-def decode_blocks(blocks: DataFrame, *per_doc: str, carry: tuple[str, ...] = ()) -> DataFrame:
-    """Posting blocks → one row per posting (term, doc_id, tf, dl), plus
-    the per-doc list columns named in ``per_doc`` (``positions``,
-    ``payloads``) when a caller asks for them, and the block columns
-    named in ``carry``.
-
-    The query side's one decoder, and it runs in the JVM: ``inline`` over
-    ``arrays_zip`` of the block's int arrays is a ``Generate`` that
-    whole-stage codegen fuses with the scan and the scoring projection.
-    doc_id = min_doc_id + offset. A block whose list column is NULL
-    (index built without it) yields no rows, so callers that need
-    positions or payloads check the index config first."""
-    arrays = ["doc_offsets", "tfs", "dls", *per_doc]
-    return blocks.select("term", "min_doc_id", *carry, F.inline(F.arrays_zip(*arrays))).select(
-        "term",
-        (F.col("min_doc_id") + F.col("doc_offsets")).alias("doc_id"),
-        F.col("tfs").alias("tf"),
-        F.col("dls").alias("dl"),
-        *per_doc,
-        *carry,
-    )
 
 
 def rank_topk(df: DataFrame, k: int) -> DataFrame:

@@ -9,10 +9,11 @@ Spark's batch+streaming model:
   own file-source log, feeding ``foreachBatch`` into the indexer.
 - NRT soft commit (``DirectUpdateHandler2.java:157-175``: visibility
   without a full merge) → :meth:`IncrementalIndexer.append_batch`
-  appends analyzed docs + raw postings to the stage files without
-  touching the merged blocks; an index handle reads only the batches
-  its commit names (``InvertedIndex.docs``/``segments``), so new docs
-  reach readers at the next commit. Each batch writes into its own
+  appends analyzed docs to the doc store and stages their raw postings
+  (Lucene's buffered postings) without touching the merged blocks; an
+  index handle reads only what its commit names
+  (``InvertedIndex.docs``/``segments``), so new docs reach readers at
+  the next commit. Each batch writes into its own
   ``batch=<id>`` partition directory with overwrite semantics, so
   at-least-once re-delivery of a micro-batch (foreachBatch crash/restart)
   is IDEMPOTENT — a half-written batch is simply overwritten whole.
@@ -23,17 +24,19 @@ Spark's batch+streaming model:
   driver; only ``delete_by_query`` runs a Spark job, to find its ids);
   :meth:`commit` folds them into the committed live-docs record
   (Lucene's liveDocs), which every read applies as one literal
-  predicate (``InvertedIndex.live``). The analyzed and segments stages
-  keep the deleted docs until a policy merge compacts them out.
+  predicate (``InvertedIndex.live``). The doc store and the blocks keep
+  the deleted docs until a policy merge drops them.
 - hard commit (flush + merge) → :meth:`IncrementalIndexer.commit`
   encodes only the batches no segment holds yet, into one new segment
   ``blocks/segment=<s>/`` (Lucene's flushed segment: old segments are
   immutable, and blocks are stats-independent, so they stay valid when
   N/avgdl/idf move), and writes one term_dict partial,
   ``term_dict/commit=<c>/``: the signed (term, df, cf) change of the
-  commit's new batches and deletes, aggregated over the postings of the
-  batches it adds or deletes from only (Lucene's per-segment
-  dictionary, ``TermStates`` summing it at query time). N and
+  commit's new batches and deletes, aggregated over the staged postings
+  of the batches it adds and the re-analyzed text of the docs it
+  deletes only (Lucene's per-segment dictionary, ``TermStates`` summing
+  it at query time). Once the commit lands, the staged postings of its
+  batches are dropped: the blocks are their only durable copy. N and
   sum_doc_len move by the same change, counted on the driver. df, N
   and avgdl stay exact over the live docs, so an incremental index
   that appends B1..Bn, deletes D and commits answers
@@ -46,9 +49,10 @@ Spark's batch+streaming model:
 - segment merge (TieredMergePolicy, ``index/DefaultMergePolicyFactory.java:42``)
   → :func:`merge_due` over the module constants ``MERGE_MAX_SEGMENTS``,
   ``MERGE_MAX_DELETED_FRAC`` and ``MERGE_MAX_DELETED_DOCS``: past any of
-  them, a commit compacts the deleted docs out of the analyzed
-  and segments stages and encodes every batch into one segment — the
-  build's own path; ``build_index`` is that path for batch 0. Its
+  them, a commit compacts the deleted docs out of the doc store,
+  decodes the live postings of every segment's blocks in the JVM and
+  encodes them, with the fresh batches, into one segment — the build's
+  own path; ``build_index`` is that path for batch 0. Its
   partial is the change from the empty commit point: the full
   dictionary. Commits of deletes alone add partials but no segment, so
   a commit whose partial would be the ``MERGE_MAX_SEGMENTS + 1``-th
@@ -59,7 +63,9 @@ Spark's batch+streaming model:
   ``tombstones.json``, removed only after ``meta.json`` is written:
   re-running ``commit()`` after a killed commit redoes it, deletes
   included; the half-written term_dict partial and segment directory
-  of a killed commit are never read, and the next commit overwrites them.
+  of a killed commit are never read, and the next commit overwrites
+  them. A batch's staged postings are dropped only after ``meta.json``
+  names it.
 - ``build_index`` writes its docs as batch 0 of the same layout, so an
   indexer continues a built directory as it is, and refuses one an
   earlier version wrote (``build._check_layout``).
@@ -204,9 +210,9 @@ class IncrementalIndexer:
 
     def _compact_stage(self, stage: str, dead: Column) -> None:
         """Rewrite a stage without the rows ``dead`` selects (swap via
-        rename), then its manifest. Every ``batch=<id>`` directory stays,
-        empty if none of its rows does: a merge commits the batches
-        ``segments/`` lists, and a doc without tokens has no row there.
+        rename), zstd as the batch write, then its manifest. Every
+        ``batch=<id>`` directory stays, empty if none of its rows does:
+        a merge commits the batches ``analyzed/`` lists.
 
         At corpus scale the stages would be partitioned by doc range and
         only partitions containing deleted ids rewritten; the swap
@@ -217,7 +223,7 @@ class IncrementalIndexer:
         df = _read_stage(self.spark, self.dir, stage).where(~dead)
         tmp = src + "__compact"
         shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").partitionBy("batch").parquet(tmp)
+        df.write.option("compression", "zstd").mode("overwrite").partitionBy("batch").parquet(tmp)
         for name in os.listdir(src):
             if name.startswith("batch="):
                 os.makedirs(os.path.join(tmp, name), exist_ok=True)
@@ -233,10 +239,12 @@ class IncrementalIndexer:
         """Hard commit: encode the batches no segment holds yet into one
         new segment and fold the pending tombstones into the committed
         live-docs record; one term_dict partial holds the dictionary's
-        change and meta.json the stats moved by it, both O(delta). Old
-        segments are never re-encoded, until the merge policy merges them
-        all into one (compacting the deleted docs out of the analyzed and
-        segments stages first), which is the build's own path. A merge,
+        change and meta.json the stats moved by it, both O(delta); then
+        the new batches' staged postings are dropped. Old segments are
+        never re-encoded, until the merge policy merges them all into
+        one: it compacts the deleted docs out of the doc store, and
+        encodes the live postings decoded from the old segments' blocks
+        with those of the new batches, the build's own path. A merge,
         and a commit whose partial would pass the bound on partials, take
         the change from the empty commit point (``base=None``): one full
         partial. A directory's first commit is such a merge.
@@ -261,15 +269,15 @@ class IncrementalIndexer:
         merge = record is None or merge_due(len(segments), n_dead, n_docs)
         if not (fresh or dead or merge):
             return InvertedIndex(self.spark, self.dir)
+        live = (segments, deleted)
         if merge:
             if deleted:
-                pred = _dead_rows(deleted, segments, "batch")
-                self._compact_stage("analyzed", pred)
-                self._compact_stage("segments", pred)
+                self._compact_stage("analyzed", _dead_rows(deleted, segments, "batch"))
             segments, deleted = {new: _batch_ids(self.dir)}, {}
         _merge(self.spark, self.dir, self.config, False, (segments, deleted),
                new if new in segments else None, meta["commit"] + 1 if record else 0,
-               base=None if merge or len(meta["term_dicts"]) >= MERGE_MAX_SEGMENTS else meta)
+               base=None if merge or len(meta["term_dicts"]) >= MERGE_MAX_SEGMENTS else meta,
+               live=live)
         if os.path.exists(self._tombstone_path()):
             os.remove(self._tombstone_path())
         return InvertedIndex(self.spark, self.dir)

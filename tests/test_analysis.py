@@ -258,9 +258,11 @@ def test_segments_info_physical_layout(index, test_config):
     from solr_spark import admin
 
     rows = {r["stage"]: r for r in admin.segments_info(index).collect()}
-    for stage in ("analyzed", "segments", "term_dict", "blocks"):
+    for stage in ("analyzed", "term_dict", "blocks"):
         assert stage in rows, stage
         assert rows[stage]["n_files"] > 0 and rows[stage]["bytes"] > 0
+    # the build's staged postings were flushed when its commit landed
+    assert rows["segments"]["n_files"] == 0
     buckets = [s for s in rows if s.startswith("blocks/")]
     assert len(buckets) == test_config.n_term_buckets
     assert sum(rows[b]["bytes"] for b in buckets) <= rows["blocks"]["bytes"]

@@ -123,13 +123,17 @@ def test_manifests_lineage(index):
     ms = index.manifests()
     assert set(ms) == {"analyzed", "segments", "term_dict", "blocks"}
     # the build writes its docs and postings as batch 0, the layout an
-    # incremental append adds to
-    for stage in ("analyzed", "segments"):
-        assert os.listdir(os.path.join(index.dir, stage)) == ["batch=0"]
+    # incremental append adds to; the staged postings are flushed once
+    # the build's commit lands, and the segments manifest keeps their
+    # count as the postings segment 0's blocks hold
+    assert os.listdir(os.path.join(index.dir, "analyzed")) == ["batch=0"]
+    assert os.listdir(os.path.join(index.dir, "segments")) == []
+    held = index.blocks.agg(F.sum("n_docs")).first()[0]
+    assert ms["segments"]["flushed"] == {"0": held} and ms["segments"]["files"] == []
     for stage, m in ms.items():
         assert m["rows"] > 0
         assert m["n_files"] == len(m["files"])
-        assert sum(f["rows"] for f in m["files"]) == m["rows"]
+        assert sum(f["rows"] for f in m["files"]) + sum(m.get("flushed", {}).values()) == m["rows"]
         assert m["config_hash"] == index.config.config_hash()
         assert m["wall_sec"] >= 0
 
@@ -158,6 +162,38 @@ def test_resume_skips_completed_stages(spark, index, test_config, tmp_path):
         assert list(before_pd[col]) == list(after_pd[col]), col
     for col in ["doc_offsets", "tfs", "dls", "positions"]:
         assert _lists(before_pd[col]) == _lists(after_pd[col]), col
+
+
+def test_resume_after_the_flush(spark, small_index, tmp_path):
+    """A finished build flushed its staged postings. A resume that must
+    write its dictionary partial again, or its blocks again, stages
+    batch 0's postings again from the doc store first (the wrong corpus
+    it is given is not read), writes them row for row as before, and
+    flushes them again."""
+    ref, _corpus = small_index
+    out = str(tmp_path / "flushed")
+    shutil.copytree(ref.dir, out)
+    wrong = synth_corpus(spark, 10)
+
+    def partial(d):
+        return sorted(map(tuple, spark.read.parquet(os.path.join(d, "term_dict", "commit=0")).collect()))
+
+    def blocks(idx):
+        return idx.blocks.drop("segment", "term_bucket").orderBy("term", "salt", "block_no").toPandas()
+
+    for stage in ("term_dict", "blocks"):
+        os.remove(os.path.join(out, f"_MANIFEST_{stage}.json"))
+        idx = build_index(spark, wrong, out, ref.config, resume=True)
+        assert (idx.n_docs, idx.meta["sum_doc_len"]) == (ref.n_docs, ref.meta["sum_doc_len"])
+        assert partial(out) == partial(ref.dir), stage
+        got, want = blocks(idx), blocks(ref)
+        assert list(got["term"]) == list(want["term"]) and list(got["salt"]) == list(want["salt"])
+        for col in ["block_no", "n_docs", "min_doc_id", "max_doc_id"]:
+            assert list(got[col]) == list(want[col]), (stage, col)
+        for col in ["doc_offsets", "tfs", "dls", "positions"]:
+            assert _lists(got[col]) == _lists(want[col]), (stage, col)
+        assert os.listdir(os.path.join(out, "segments")) == []
+        assert idx.manifests()["segments"]["rows"] == ref.manifests()["segments"]["rows"]
 
 
 def test_build_keeps_caller_caches(spark, test_config, tmp_path):
@@ -371,7 +407,9 @@ def test_iceberg_catalog_gating(spark, index):
         cat.read_stage(spark, "ice", "solr", "blocks")
     # the stage->partition map matches the parquet layout the build writes
     assert cat.STAGE_PARTITIONING["blocks"] == ["segment", "term_bucket"]
-    assert cat.STAGE_PARTITIONING["analyzed"] == cat.STAGE_PARTITIONING["segments"] == ["batch"]
+    assert cat.STAGE_PARTITIONING["analyzed"] == ["batch"]
+    # the postings are published as the live postings decoded from the blocks
+    assert cat.STAGE_PARTITIONING["segments"] == ["segment"] and "segment" in index.segments.columns
 
 
 def test_murmur3_routing_golden_vectors():
@@ -484,8 +522,7 @@ def test_hot_term_spans_multiple_shuffle_partitions(spark, index, test_config):
     100-TB straggler). Asserted on the real shuffle input builder."""
     from solr_spark.index.build import _blocks_shuffle_input
 
-    segments = spark.read.parquet(os.path.join(index.dir, "segments"))
-    shuffled = _blocks_shuffle_input(segments, index.term_dict, test_config)
+    shuffled = _blocks_shuffle_input(index.segments, index.term_dict, test_config)
     # hotness comes from a BROADCAST of the (tiny) hot set — never a
     # sort-merge join of the posting stream against the full vocabulary.
     plan = shuffled._jdf.queryExecution().executedPlan().toString()
@@ -600,6 +637,8 @@ def _earlier_layout(src: str, dst: str, layout: str) -> None:
         subs += [("analyzed", "batch=0"), ("segments", "batch=0")]
     for stage, sub in subs:
         part = os.path.join(dst, stage, sub)
+        if not os.path.isdir(part):  # the build's staged postings, flushed
+            continue
         for n in os.listdir(part):
             os.replace(os.path.join(part, n), os.path.join(dst, stage, n))
         os.rmdir(part)
@@ -666,9 +705,9 @@ def test_earlier_layout_refused_then_rebuilt(spark, small_index, tmp_path, layou
     assert SearchEngine(idx).topk(q, k=10).collect() == SearchEngine(ref).topk(q, k=10).collect()
     assert sorted(os.listdir(d)) == sorted(os.listdir(ref.dir) + ["snapshots"])
     assert os.listdir(os.path.join(d, "snapshots")) == ["kept"]
-    for stage, kept in (("analyzed", "batch=0"), ("segments", "batch=0"), ("blocks", "segment=0"),
-                        ("term_dict", "commit=0")):
-        assert os.listdir(os.path.join(d, stage)) == [kept], stage
+    for stage, kept in (("analyzed", ["batch=0"]), ("segments", []), ("blocks", ["segment=0"]),
+                        ("term_dict", ["commit=0"])):
+        assert os.listdir(os.path.join(d, stage)) == kept, stage
     assert idx.term_dict.columns == ["term", "df", "cf"] and idx.dict_gens == [0]
 
 

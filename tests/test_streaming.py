@@ -274,9 +274,10 @@ def test_readd_after_committed_delete(spark, test_config):
 
 def test_policy_merge_equals_batch_build(spark, test_config, monkeypatch):
     """When a commit would leave more segments than the merge policy
-    allows, it merges: the deleted docs are compacted out of the analyzed
-    and segments stages, and the one merged segment's blocks equal a
-    batch build's row for row."""
+    allows, it merges: the deleted docs are compacted out of the doc
+    store, and the one merged segment's blocks, encoded from the live
+    postings decoded from the old blocks, equal a batch build's row for
+    row."""
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.streaming import incremental
 
@@ -327,6 +328,19 @@ def _assert_exact_stats(idx):
     assert idx.meta["avgdl"] == sum_dl / n
 
 
+def _assert_flushed(idx):
+    """No staged postings file under ``segments/`` belongs to a batch the
+    commit of ``idx`` holds, and the segments manifest's rows count the
+    postings its committed blocks hold plus those still staged."""
+    from solr_spark.index.build import _parquet_files
+
+    committed = {b for bs in idx.record[0].values() for b in bs}
+    staged = _parquet_files(os.path.join(idx.dir, "segments"))
+    assert not {int(f["file"].split(os.sep)[0].split("=")[1]) for f in staged} & committed
+    held = idx.blocks.agg(F.sum("n_docs")).first()[0]
+    assert idx.manifests()["segments"]["rows"] == held + sum(f["rows"] for f in staged)
+
+
 def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config, monkeypatch):
     """Each commit writes one dictionary partial and meta.json names the
     partials that sum to the dictionary. After every step of an index's
@@ -337,7 +351,8 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
     batch and zero-length docs; a killed commit (readers stay on the
     previous commit); a snapshot restore; a policy merge; and commits of
     deletes alone up to the bound on partials, where a commit writes one
-    full partial instead."""
+    full partial instead. The postings are read from decoded blocks, and
+    after every step no staged postings of a committed batch are left."""
     from solr_spark.corpus import synth_corpus_pandas
     from solr_spark.index import build
     from solr_spark.index.build import InvertedIndex, create_snapshot, restore_snapshot
@@ -357,17 +372,20 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
     idx = inc.commit()
     assert idx.dict_gens == [0]
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     inc.delete_by_ids([7, 8])
     idx = inc.commit()
     assert idx.dict_gens == [0, 1] and idx.n_docs == 198
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     append(200, 240)
     inc.delete_by_ids([7, 10_000, 220, 211, 3, 12])
     idx = inc.commit()
     assert idx.dict_gens == [0, 1, 2] and idx.n_docs == 198 + 40 - 4
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     append(240, 260)
     inc.delete_by_ids([15])
@@ -383,9 +401,11 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
     before = InvertedIndex(spark, d)
     assert before.meta == idx.meta
     _assert_exact_stats(before)
+    _assert_flushed(before)
     idx = inc.commit()
     assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 234 + 20 - 1
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     create_snapshot(d, "four")
     append(260, 280)
@@ -395,6 +415,7 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
     idx = InvertedIndex(spark, d)
     assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 253
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     with monkeypatch.context() as m:
         m.setattr(incremental, "MERGE_MAX_DELETED_FRAC", 0.0)
@@ -402,6 +423,7 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
         idx = inc.commit()
     assert idx.record[1] == {} and idx.dict_gens == [idx.meta["commit"]]
     _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
     monkeypatch.setattr(incremental, "MERGE_MAX_SEGMENTS", 2)
     for dead, n_gens in ((18, 2), (19, 1)):
@@ -411,6 +433,55 @@ def test_dictionary_partials_stay_exact_through_the_lifecycle(spark, test_config
         assert sorted(os.listdir(os.path.join(d, "term_dict"))) == \
             [f"commit={g}" for g in idx.dict_gens]
         _assert_exact_stats(idx)
+        _assert_flushed(idx)
+
+
+def test_index_with_durable_segments_serves_then_flushes(spark, test_config):
+    """An index an earlier writer left, which kept the staged postings of
+    every committed batch under ``segments/`` (no flush record in the
+    manifest) and wrote a snappy doc store, opens and serves as it is at
+    the same ``format_version``; its next commit drops the committed
+    batches' staged postings and keeps the stats exact."""
+    import json
+    import time
+
+    from solr_spark.corpus import synth_corpus_pandas
+    from solr_spark.index import build
+    from solr_spark.index.build import InvertedIndex
+
+    d = f"{BASE}/durable_segments"
+    shutil.rmtree(d, ignore_errors=True)
+    pdf = synth_corpus_pandas(240)
+    pdf["doc_id"] = range(len(pdf))
+    inc = IncrementalIndexer(spark, d, test_config)
+    for lo, hi, dead in ((0, 200, []), (200, 220, [3])):
+        inc.append_batch(spark.createDataFrame(pdf.iloc[lo:hi]), id_col="doc_id")
+        inc.delete_by_ids(dead)
+        want = _topk(inc.commit(), "server client")
+
+    # the earlier writer's files: every committed batch staged, snappy docs
+    for b in (0, 1):
+        build._restage(spark, d, test_config, b)
+    docs = os.path.join(d, "analyzed")
+    spark.read.parquet(docs).write.option("compression", "snappy").partitionBy("batch").parquet(docs + "_snappy")
+    shutil.rmtree(docs)
+    os.replace(docs + "_snappy", docs)
+    build._write_manifest(d, "analyzed", test_config, time.time())
+    build._write_manifest(d, "segments", test_config, time.time())
+    with open(os.path.join(d, "_MANIFEST_segments.json")) as f:
+        assert "flushed" not in json.load(f)
+    assert sorted(os.listdir(os.path.join(d, "segments"))) == ["batch=0", "batch=1"]
+
+    idx = InvertedIndex(spark, d)
+    assert idx.config.format_version == 3 and _topk(idx, "server client") == want
+    inc = IncrementalIndexer(spark, d, test_config)
+    inc.append_batch(spark.createDataFrame(pdf.iloc[220:]), id_col="doc_id")
+    idx = inc.commit()
+    assert idx.record == ({0: [0], 1: [1], 2: [2]}, {1: [3]})
+    assert os.listdir(os.path.join(d, "segments")) == []
+    assert any(n.endswith(".snappy.parquet") for n in os.listdir(os.path.join(docs, "batch=0")))
+    _assert_exact_stats(idx)
+    _assert_flushed(idx)
 
 
 @pytest.mark.parametrize("split", [None, "1k"], ids=["one_task", "exchange"])
@@ -469,9 +540,9 @@ def test_handle_reads_only_committed_batches(spark, test_config):
 
 
 def test_delete_commit_scans_only_the_batches_it_deletes_from(spark, test_config, monkeypatch):
-    """A commit that deletes only docs of batch 0 reads the postings of
-    batch 0 alone to subtract them from the dictionary, however many
-    batches its base holds, and keeps the stats exact."""
+    """A commit that deletes only docs of batch 0 reads the docs of
+    batch 0 alone to subtract their postings from the dictionary,
+    however many batches its base holds, and keeps the stats exact."""
     from solr_spark.index import build
 
     d = f"{BASE}/delete_scan"
@@ -489,7 +560,8 @@ def test_delete_commit_scans_only_the_batches_it_deletes_from(spark, test_config
 
     monkeypatch.setattr(build, "_read_stage", spy)
     idx = inc.commit()
-    assert reads == [("segments", ["batch=0"])]
+    # the deleted docs' text, analyzed again: no staged postings are left
+    assert reads == [("analyzed", ["batch=0"])]
     assert idx.dict_gens == [0, 1, 2, 3] and idx.n_docs == 78
     _assert_exact_stats(idx)
 
@@ -663,8 +735,9 @@ def test_commit_on_build_index_dir_keeps_base_docs(spark, test_config):
 def test_stage_manifests_list_the_stage_files(spark, test_config):
     """The analyzed and segments manifests list exactly the files their
     stages hold: after an append and commit on a built directory (every
-    batch, every row), and after a policy merge compacts deleted docs
-    out."""
+    batch, every row; the committed postings are flushed, counted in
+    the segments manifest's rows), and after a policy merge compacts
+    deleted docs out."""
     import json
 
     from solr_spark.index.build import _parquet_files
@@ -676,7 +749,8 @@ def test_stage_manifests_list_the_stage_files(spark, test_config):
         with open(os.path.join(d, f"_MANIFEST_{stage}.json")) as f:
             m = json.load(f)
         assert m["files"] == _parquet_files(os.path.join(d, stage)), stage
-        assert m["rows"] == sum(f["rows"] for f in m["files"]), stage
+        # segments: the flushed postings of the committed segments count too
+        assert m["rows"] == sum(f["rows"] for f in m["files"]) + sum(m.get("flushed", {}).values()), stage
         return m
 
     build_index(spark, synth_corpus(spark, 200), d, test_config)
